@@ -97,22 +97,6 @@ object Variant {
     case other => sys.error(s"unknown variant tag $other")
   }
 
-  /** JVM-side [[encode]]: wrap a NATIVE value (as carried in streaming
-    * tuples) of the given kind into a variant row. */
-  def rowOfNative(x: Any, kind: ValueKind): Row = {
-    import ValueKind._
-    kind match {
-      case KVariant               => x.asInstanceOf[Row]
-      case KAid | KString | KUuid => Row(kind.tag, x, null, null, null, null, null)
-      case KBool                  => Row(kind.tag, null, null, x, null, null, null)
-      case KNumber | KEid | KInstant => Row(kind.tag, null, x, null, null, null, null)
-      case KReal                  => Row(kind.tag, null, null, null, x, null, null)
-      case KRational =>
-        val r = x.asInstanceOf[Row]
-        Row(kind.tag, null, null, null, null, r.get(0), r.get(1))
-    }
-  }
-
   /** Driver-side representation of a `Value` as a variant row, for comparing
     * collected results against expectations. */
   def rowOf(v: Value): Row = {

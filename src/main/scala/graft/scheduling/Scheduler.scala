@@ -4,32 +4,20 @@ import scala.collection.mutable
 
 import graft.engine.Engine
 
-/** Deferred-activation schedulers — the engine-driver analog of the
-  * reference's scheduling module (`src/scheduling/`): polling sources and
-  * periodic domain ticks defer their work onto a priority queue instead of
-  * busy-polling, and an event loop runs whatever has come due.
-  *
-  * [[RealtimeScheduler]] mirrors `realtime_scheduler.rs:19-160` (wall-clock
-  * deadlines + `Event::Tick`); [[FrontierScheduler]] mirrors
-  * `frontier_scheduler.rs:19-75` (activations gated on the computational
-  * frontier passing a time).
-  */
-trait AsScheduler {
-  /** True when at least one queued activation is ready to run
-    * (`AsScheduler::has_pending`). */
-  def hasPending: Boolean
-}
-
-/** Wall-clock scheduler: activations (thunks) and domain-tick events run
-  * once their deadline passes. The event loop calls [[step]] each
-  * iteration and may sleep [[untilNext]] when idle — the reference's
-  * polling-source backoff (`realtime_scheduler.rs:10-17`). */
-final class RealtimeScheduler(clock: () => Long = () => System.currentTimeMillis())
-    extends AsScheduler {
+/** Wall-clock deferred-activation scheduler — the engine-driver analog
+  * of the reference's scheduling module (`realtime_scheduler.rs:19-160`):
+  * polling sources and periodic domain ticks defer their work onto a
+  * priority queue instead of busy-polling, and activations (thunks) and
+  * domain-tick events run once their deadline passes. The event loop
+  * calls [[step]] each iteration and may sleep [[untilNext]] when idle —
+  * the reference's polling-source backoff (`realtime_scheduler.rs:10-17`). */
+final class RealtimeScheduler(clock: () => Long = () => System.currentTimeMillis()) {
 
   private final case class Timed(at: Long, action: Option[() => Unit], tick: Boolean)
   private val queue = mutable.PriorityQueue.empty[Timed](Ordering.by(-_.at))
 
+  /** True when at least one queued activation is ready to run
+    * (the reference scheduler's `has_pending`). */
   def hasPending: Boolean = queue.headOption.exists(_.at <= clock())
 
   /** Millis until the earliest queued activation (None when empty; 0 when
@@ -70,32 +58,6 @@ final class RealtimeScheduler(clock: () => Long = () => System.currentTimeMillis
       val t = queue.dequeue()
       if (t.tick) engine.handle(graft.server.Request.Tick)
       t.action.foreach(_.apply())
-      n += 1
-    }
-    n
-  }
-}
-
-/** Frontier-gated scheduler: activations run once the engine's frontier
-  * has advanced past their time — `frontier_scheduler.rs:45-75`, with the
-  * engine's epoch standing in for the timely probe frontier. */
-final class FrontierScheduler(engine: Engine) extends AsScheduler {
-
-  private final case class Gated(at: Long, action: () => Unit)
-  private val queue = mutable.PriorityQueue.empty[Gated](Ordering.by(-_.at))
-
-  def hasPending: Boolean =
-    queue.headOption.exists(_.at < engine.currentFrontier)
-
-  /** Run `action` once the frontier has passed `at` (`schedule_at`). */
-  def scheduleAt(at: Long)(action: => Unit): Unit =
-    queue.enqueue(Gated(at, () => action))
-
-  /** Run every activation whose gate time has completed. */
-  def step(): Int = {
-    var n = 0
-    while (hasPending) {
-      queue.dequeue().action.apply()
       n += 1
     }
     n

@@ -96,48 +96,39 @@ final class WsServer(engine: Engine, port: Int = 0,
     this
   }
 
-  /** Serve a STREAMING rule: a `StreamCompiler` frame (columns
-    * `c0..cn, t, diff`) maintained as one continuous query, each
-    * micro-batch rendered as `Output::QueryDiff(name, batch)` to every
-    * client interested in `name` — the reference's live-dataflow delivery
+  /** Serve a STREAMING rule: `iq` maintains it over a live datom stream
+    * (columns `a, e, v, t, diff`, the [[graft.streaming.IncrementalQuery.attach]]
+    * frame), and each completed time's diffs go out as one
+    * `Output::QueryDiff(name, batch)` to every client interested in
+    * `name` — the reference's live-dataflow delivery
     * (`server/src/main.rs:455-520`) driven by the stream itself instead of
-    * explicit AdvanceDomain requests. */
-  def serveStream(name: String, frame: org.apache.spark.sql.DataFrame,
-      kinds: Seq[ValueKind]): org.apache.spark.sql.streaming.StreamingQuery = {
+    * explicit AdvanceDomain requests. Wire types come from the query:
+    * its output kinds, and its explicit path-array marker for pull paths
+    * (never inferred from payload shape, as in [[flushDiffs]]). */
+  def serveStream(name: String, iq: graft.streaming.IncrementalQuery,
+      datoms: org.apache.spark.sql.DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
     synchronized { streamNames += name }
-    frame.writeStream.outputMode("append")
-      .queryName(s"graft-ws-stream-$name")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // No interested client ⇒ skip the collect + render entirely (the
-        // query keeps running so a later Interest picks up from there).
-        val anyInterested =
-          synchronized(clients.values.exists(_._2.contains(name)))
-        if (anyInterested) {
-          val rows = batch.collect()
-          if (rows.nonEmpty) {
-            val n = rows.head.length
-            val rendered = rows.toSeq.map { r =>
-              r.get(0) match {
-                // Pull path-array frames: the single array<variant> column
-                // IS the tuple — decode each element to its tagged Value.
-                case arr: scala.collection.Seq[_] if n == 3 =>
-                  (arr.map(e => graft.model.Variant.valueOf(
-                    e.asInstanceOf[org.apache.spark.sql.Row])).toSeq,
-                    r.getLong(1), r.getLong(2))
-                case _ =>
-                  ((0 until n - 2).map(i => asValue(r.get(i), kinds.lift(i))),
-                    r.getLong(n - 2), r.getLong(n - 1))
-              }
-            }
-            val msg = Wire.renderOutput(Output.QueryDiff(name, rendered))
-            synchronized {
-              for ((out, names) <- clients.values if names.contains(name))
-                send(out, msg)
-            }
-          }
+    val kinds = iq.outputKinds
+    val pathArray = iq.outputIsPathArray
+    iq.attach(datoms, s"graft-ws-stream-$name") { (t, diffs) =>
+      // No interested client ⇒ skip the collect + render entirely (the
+      // query keeps maintaining so a later Interest picks up from there).
+      if (synchronized(clients.values.exists(_._2.contains(name)))) {
+        val batch = diffs.collect().toSeq.map { r =>
+          val w = r.length - 1
+          val tuple =
+            if (pathArray) r.getSeq[org.apache.spark.sql.Row](0)
+              .map(graft.model.Variant.valueOf)
+            else (0 until w).map(i => asValue(r.get(i), kinds.lift(i)))
+          (tuple, t, r.getLong(w))
+        }
+        val msg = Wire.renderOutput(Output.QueryDiff(name, batch))
+        synchronized {
+          for ((out, names) <- clients.values if names.contains(name))
+            send(out, msg)
         }
       }
-      .start()
+    }
   }
 
   def stop(): Unit = {

@@ -224,8 +224,9 @@ object FileSources {
     * reference's poll/fuel/re-activation batching (`csv_file.rs:95-199`)
     * maps to `maxFilesPerTrigger`; event time is the ingest batch's
     * processing time unless a timestamp column offset is given
-    * (`timestamp_offset`, `csv_file.rs:30-31`). Feed the results through
-    * `DatomStreams.distinctSet`/`lastWriteWins` for input semantics. */
+    * (`timestamp_offset`, `csv_file.rs:30-31`). Union the results into one
+    * `(a, e, v, t, diff)` datom stream for [[graft.streaming.IncrementalQuery.attach]],
+    * whose distinct / LastWriteWins attributes give input semantics. */
   def streamCsv(
       spark: SparkSession,
       dir: String,
@@ -258,8 +259,8 @@ object FileSources {
     * `(e, v, t, diff)` update streams — [[streamCsv]] with the columnar
     * reader (per-branch column pruning holds under `readStream` too).
     * Event time comes from `tsColumn` when declared, else the ingest
-    * batch's processing time. Feed the results through
-    * `DatomStreams.distinctSet`/`lastWriteWins` for input semantics.
+    * batch's processing time. Union the results into one datom stream for
+    * [[graft.streaming.IncrementalQuery.attach]], as [[streamCsv]] does.
     *
     * Malformed COORDINATES (null/uncastable eid or timestamp) FAIL THE
     * STREAM — deliberate fail-stop: a silently-null coordinate would

@@ -14,8 +14,8 @@ import graft.kernel.RddKernel
 
 /** Incrementally maintained transitive closure over a streamed edge
   * attribute — the recursion slice of the reference's incrementally-
-  * maintained rules (differential's `iterate`), which the general
-  * [[StreamCompiler]] intentionally leaves to the batch engine.
+  * maintained rules (differential's `iterate`), and the closure node
+  * [[IncrementalQuery]] routes TC-shaped rules through.
   *
   * Per micro-batch of edge ADDITIONS at time `t`, emits the exact closure
   * diffs `((src, dst), t, +1)` — precisely the tuples in

@@ -2666,7 +2666,10 @@ class IncrementalQuery(
 
   // Processed-time frontier (the shared streaming-maintenance
   // discipline): regressing times would diff against state that already
-  // absorbed later deltas — fail loudly instead.
+  // absorbed later deltas — fail loudly instead. A time equal to the
+  // frontier is a later slice of the same time (one logical write split
+  // across micro-batch triggers) and advances on top of the earlier
+  // slice: the per-time sum of the emitted diffs stays exact.
   private var frontier: Long = Long.MinValue
 
   // Transaction-order sequence base for streamed LWW datoms: each
@@ -2679,7 +2682,7 @@ class IncrementalQuery(
 
   /** Structured Streaming integration: drain a datom stream (columns
     * `a: string, e: long, v, t: long, diff: long`) through [[advance]]
-    * per completed time, strictly advancing; each time's exact
+    * per completed time, never regressing; each time's exact
     * consolidated output diffs go to `onDiffs(t, frame)`. LastWriteWins
     * attributes ride too: the wire frame carries no transaction-order
     * seq, so one is synthesized per micro-batch (frame position on a
@@ -2707,27 +2710,25 @@ class IncrementalQuery(
           }
         batch.persist()
         try {
-          val times = batch.select("t").distinct().collect()
-            .map(_.getLong(0)).sorted
-          if (lwwAttrs.nonEmpty)
-            streamSeqBase += batch.count()
-          times.foreach { t =>
-            require(t > frontier,
-              s"input time $t does not advance the processed frontier " +
+          // ONE job reads which referenced attributes each time touches
+          // (and the frame's row count, the LWW sequence advance).
+          val present = batch.groupBy("t", "a").count().collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+          if (lwwAttrs.nonEmpty) streamSeqBase += present.map(_._3).sum
+          present.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (t, at) =>
+            require(t >= frontier,
+              s"input time $t is earlier than the processed frontier " +
                 s"$frontier; diffs against already-advanced state would " +
                 "be historically wrong")
             frontier = t
-            val att = batch.where(col("t") === t)
-            val byAttr: Map[String, DataFrame] = root.attrs.flatMap { a =>
-              val d =
-                if (lwwAttrs(a))
-                  att.where(col("a") === a)
-                    .select(col("e"), col("v"), col("t"), col("diff"),
-                      col("seq"))
-                else att.where(col("a") === a)
-                  .select(col("e"), col("v"), col("diff"))
-              if (d.isEmpty) None else Some(a -> d)
-            }.toMap
+            val cut = batch.where(col("t") === t)
+            val byAttr: Map[String, DataFrame] =
+              at.map(_._2).filter(root.attrs).map { a =>
+                val d = cut.where(col("a") === a)
+                a -> (if (lwwAttrs(a))
+                  d.select(col("e"), col("v"), col("t"), col("diff"), col("seq"))
+                else d.select(col("e"), col("v"), col("diff")))
+              }.toMap
             if (byAttr.nonEmpty) {
               // Lazy cut: the count gate's job materializes the
               // checkpoint (was eager-then-isEmpty — two jobs).
@@ -2960,9 +2961,7 @@ object IncrementalQuery {
   }
 
   /** Indexed grouped aggregate: state = key → (valueTuple → net weight);
-    * recomputes old/new aggregate rows for exactly the touched keys
-    * (the streaming analog of `aggregateMerge`, which remains the
-    * iterator form for IncrementalAggregate). */
+    * recomputes old/new aggregate rows for exactly the touched keys. */
   private[streaming] def aggregateAdvanceIdx(
       requireNonNeg: Boolean,
       aggRow: (Seq[Any], Iterable[(Seq[Any], Long)]) => Option[Seq[Any]])(
@@ -3248,60 +3247,5 @@ object IncrementalQuery {
       case Left(kp) => key(kp)
       case Right(i) => aggVals(i)
     })
-  }
-
-  /** THE grouped-aggregate merge for one partition — shared by
-    * [[IncrementalQuery]]'s AggregateNode and [[IncrementalAggregate]]
-    * (one code path for the state discipline): Left = surviving state
-    * entries, Right = output diff rows (`aggRowOf` values :+ weight). A
-    * key's whole support is partition-local (keyed by KEY), so old/new
-    * aggregates recompute narrowly for exactly the touched keys.
-    * `requireNonNeg` enforces the set-input contract (retraction below
-    * zero support fails loudly) for maintainers whose inputs promise it. */
-  private[streaming] def aggregateMerge[K, V](
-      sIt: Iterator[((K, V), Long)],
-      dIt: Iterator[((K, V), Long)],
-      requireNonNeg: Boolean,
-      aggRow: (K, Iterable[(V, Long)]) => Option[Seq[Any]]): Iterator[Either[((K, V), Long), Seq[Any]]] = {
-    val dm = new java.util.HashMap[(K, V), java.lang.Long]()
-    dIt.foreach { case (k, w) => dm.put(k, w) }
-    val touchedKeys = new java.util.HashSet[K]()
-    dm.keySet().iterator().asScala.foreach(kv => touchedKeys.add(kv._1))
-    type Support = mutable.ArrayBuffer[(V, Long)]
-    val oldRows = new java.util.HashMap[K, Support]()
-    val newRows = new java.util.HashMap[K, Support]()
-    def add(m: java.util.HashMap[K, Support], k: K, v: V, w: Long): Unit = {
-      var b = m.get(k)
-      if (b == null) { b = mutable.ArrayBuffer.empty; m.put(k, b) }
-      b += ((v, w))
-    }
-    val out = mutable.ArrayBuffer.empty[Either[((K, V), Long), Seq[Any]]]
-    sIt.foreach { case ((k, v), w) =>
-      if (!touchedKeys.contains(k)) out += Left(((k, v), w))
-      else {
-        add(oldRows, k, v, w)
-        val dw = dm.remove((k, v))
-        val nw = if (dw == null) w else w + dw.longValue
-        if (requireNonNeg) require(nw >= 0L,
-          s"retraction below zero support for key=$k value=$v ($nw)")
-        if (nw != 0L) { out += Left(((k, v), nw)); add(newRows, k, v, nw) }
-      }
-    }
-    dm.entrySet().iterator().asScala.foreach { e =>
-      val (k, v) = e.getKey
-      val w = e.getValue.longValue
-      if (requireNonNeg) require(w >= 0L,
-        s"retraction below zero support for key=$k value=$v ($w)")
-      if (w != 0L) { out += Left(((k, v), w)); add(newRows, k, v, w) }
-    }
-    touchedKeys.iterator().asScala.foreach { k =>
-      val o = Option(oldRows.get(k)).flatMap(aggRow(k, _))
-      val n = Option(newRows.get(k)).flatMap(aggRow(k, _))
-      if (o != n) {
-        o.foreach(a => out += Right(a :+ -1L))
-        n.foreach(a => out += Right(a :+ 1L))
-      }
-    }
-    out.iterator
   }
 }

@@ -2,19 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
 import graft.model.Plan._
 import graft.model.ValueKind._
 import graft.sources.FileSources
-import graft.streaming.StreamCompiler
+import graft.streaming.IncrementalQuery
 
-/** File source → streaming plan compiler, end to end: a watched CSV
-  * directory fans into per-attribute update streams that a compiled JOIN
-  * plan maintains incrementally — the streaming shape of the reference's
-  * CsvFile source feeding a registered rule. */
+/** File source → attached maintained rule, end to end: a watched CSV
+  * directory fans into per-attribute update streams, unioned into one
+  * datom stream that a JOIN plan maintains incrementally — the streaming
+  * shape of the reference's CsvFile source feeding a registered rule. */
 class CsvStreamIntegrationSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -30,17 +29,19 @@ class CsvStreamIntegrationSpec extends AnyFunSuite {
       schema = Seq(":c/name" -> (1, KString), ":c/age" -> (2, KNumber)))
       .map { case (aid, df, _) => aid -> df }.toMap
 
-    val compiler = new StreamCompiler(sources,
-      Map(":c/name" -> KString, ":c/age" -> KNumber))
+    val kinds = Map(":c/name" -> KString, ":c/age" -> KNumber)
     val plan = Join(Seq(0), MatchA(0, ":c/name", 1), MatchA(0, ":c/age", 2))
 
-    val query = compiler.compileToFrame(plan)
-      .writeStream.format("memory").queryName("csv_join_out")
-      .outputMode(OutputMode.Append()).start()
+    val delivered =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Long)]()
+    val query = new IncrementalQuery(spark, plan, kinds)
+      .attach(DatomStream.of(sources), "csv_join_out") { (_, df) =>
+        df.collect().foreach(r =>
+          delivered.add((r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))))
+      }
     try {
       def rows(): Seq[(Long, String, Long, Long)] =
-        spark.table("csv_join_out").collect().toSeq.map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4)))
+        delivered.toArray(Array.empty[(Long, String, Long, Long)]).toSeq
 
       Files.writeString(dir.toPath.resolve("batch1.csv"),
         "id,name,age\n1,alice,10\n2,bob,20\n")

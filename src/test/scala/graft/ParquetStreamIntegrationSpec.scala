@@ -9,15 +9,16 @@ import graft.model._
 import graft.model.Plan._
 import graft.model.ValueKind._
 import graft.sources.FileSources
-import graft.streaming.StreamCompiler
+import graft.streaming.IncrementalQuery
 
-/** Parquet directory source → streaming plan compiler, end to end — the
+/** Parquet directory source → attached maintained rule, end to end — the
   * columnar twin of [[CsvStreamIntegrationSpec]] (round-15 VERDICT item
   * #5): a watched directory of parquet files fans into per-attribute
-  * update streams (`FileSources.streamParquet`) that a compiled JOIN
-  * plan maintains incrementally, with `maxFilesPerTrigger` batching the
-  * arrivals one file per micro-batch, and a poisoned file (null entity
-  * coordinate) failing the stream loudly instead of corrupting state. */
+  * update streams (`FileSources.streamParquet`), unioned into one datom
+  * stream that a JOIN plan maintains incrementally, with
+  * `maxFilesPerTrigger` batching the arrivals one file per micro-batch,
+  * and a poisoned file (null entity coordinate) failing the stream
+  * loudly instead of corrupting state. */
 class ParquetStreamIntegrationSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -50,17 +51,19 @@ class ParquetStreamIntegrationSpec extends AnyFunSuite {
       maxFilesPerTrigger = 1)
       .map { case (aid, df, _) => aid -> df }.toMap
 
-    val compiler = new StreamCompiler(sources,
-      Map(":ps/name" -> KString, ":ps/age" -> KNumber))
+    val kinds = Map(":ps/name" -> KString, ":ps/age" -> KNumber)
     val plan = Join(Seq(0), MatchA(0, ":ps/name", 1), MatchA(0, ":ps/age", 2))
 
-    val query = compiler.compileToFrame(plan)
-      .writeStream.format("memory").queryName("pq_join_out")
-      .outputMode(OutputMode.Append()).start()
+    val delivered =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Long)]()
+    val query = new IncrementalQuery(spark, plan, kinds)
+      .attach(DatomStream.of(sources), "pq_join_out") { (_, df) =>
+        df.collect().foreach(r =>
+          delivered.add((r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))))
+      }
     try {
       def rows(): Seq[(Long, String, Long, Long)] =
-        spark.table("pq_join_out").collect().toSeq.map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(4)))
+        delivered.toArray(Array.empty[(Long, String, Long, Long)]).toSeq
 
       addFile(dir, "batch1.parquet",
         Seq((1L, "alice", 10L), (2L, "bob", 20L)))

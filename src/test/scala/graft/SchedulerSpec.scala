@@ -3,13 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
-import graft.model._
-import graft.model.Plan._
-import graft.scheduling.{FrontierScheduler, RealtimeScheduler}
+import graft.scheduling.RealtimeScheduler
 
-/** Scheduler module parity (`src/scheduling/realtime_scheduler.rs`,
-  * `frontier_scheduler.rs`): deadline-gated activations and ticks, and
-  * frontier-gated activations over the engine's epoch. */
+/** Scheduler module parity (`src/scheduling/realtime_scheduler.rs`):
+  * deadline-gated activations and ticks. */
 class SchedulerSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
@@ -68,23 +65,5 @@ class SchedulerSpec extends AnyFunSuite {
     assert(total == 3)
     assert(engine.currentFrontier == 3L)
     assert(sched.untilNext.contains(5L)) // next tick armed at t=40
-  }
-
-  test("frontier scheduler gates on the engine epoch") {
-    val engine = new Engine(spark)
-    engine.createAttribute(":x", AttributeConfig(InputSemantics.Distinct))
-    engine.register(Rule("q", matchA(0, ":x", 1)))
-    engine.interest("q")
-    val sched = new FrontierScheduler(engine)
-
-    var fired = false
-    sched.scheduleAt(5L) { fired = true }
-    engine.advance(3)
-    assert(!sched.hasPending && sched.step() == 0 && !fired)
-    engine.advance(5)
-    // Frontier 5 means time 5 itself is NOT yet complete.
-    assert(!sched.hasPending)
-    engine.advance(6)
-    assert(sched.hasPending && sched.step() == 1 && fired)
   }
 }

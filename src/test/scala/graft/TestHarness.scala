@@ -27,6 +27,20 @@ object TestSpark {
   }
 }
 
+/** One live datom stream in the shape `IncrementalQuery.attach` drains
+  * (`a, e, v, t, diff`), unioned from per-attribute `(e, v, t, diff)`
+  * streams. `v` travels as a string; `advance` casts it back to each
+  * attribute's kind. */
+object DatomStream {
+  def of(sources: Map[String, org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    sources.toSeq.map { case (a, df) =>
+      df.select(lit(a).as("a"), col("e"), col("v").cast("string").as("v"),
+        col("t"), col("diff"))
+    }.reduce(_ union _)
+  }
+}
+
 /** Port of the reference's universal end-to-end harness
   * (`tests/query_test.rs:17-114`): a Case is a plan (or rule set), a
   * sequence of transactions, and the exact multiset of output diffs

@@ -302,21 +302,18 @@ class WsServerSpec extends AnyFunSuite {
     import sp.implicits._
     import graft.model.Plan._
     import graft.model.ValueKind._
-    import graft.streaming.StreamCompiler
+    import graft.streaming.IncrementalQuery
 
     val names = MemoryStream[(Long, String, Long, Long)]
     val ages = MemoryStream[(Long, Long, Long, Long)]
-    val compiler = new StreamCompiler(
-      sources = Map(
-        ":name" -> names.toDF.toDF("e", "v", "t", "diff"),
-        ":age" -> ages.toDF.toDF("e", "v", "t", "diff")),
-      sourceKinds = Map(":name" -> KString, ":age" -> KNumber))
-    val frame = compiler.compileToFrame(Project(Seq(1, 3, 2),
-      Join(Seq(1), matchA(1, ":name", 3), matchA(1, ":age", 2))))
+    val iq = new IncrementalQuery(spark, Project(Seq(1, 3, 2),
+      Join(Seq(1), matchA(1, ":name", 3), matchA(1, ":age", 2))),
+      Map(":name" -> KString, ":age" -> KNumber))
 
     val server = new WsServer(new Engine(spark)).start()
-    val query = server.serveStream("live_join", frame,
-      Seq(KEid, KString, KNumber))
+    val query = server.serveStream("live_join", iq, DatomStream.of(Map(
+      ":name" -> names.toDF.toDF("e", "v", "t", "diff"),
+      ":age" -> ages.toDF.toDF("e", "v", "t", "diff"))))
     val client = new Client(server.boundPort)
     try {
       client.send("""{"Interest":{"name":"live_join","granularity":null}}""")
@@ -353,22 +350,20 @@ class WsServerSpec extends AnyFunSuite {
     import sp.implicits._
     import graft.model.Plan._
     import graft.model.ValueKind._
-    import graft.streaming.StreamCompiler
+    import graft.streaming.IncrementalQuery
 
     val refs = MemoryStream[(Long, Long, Long, Long)]
     val names = MemoryStream[(Long, String, Long, Long)]
-    val compiler = new StreamCompiler(
-      sources = Map(
-        ":p/child" -> refs.toDF.toDF("e", "v", "t", "diff"),
-        ":c/name" -> names.toDF.toDF("e", "v", "t", "diff")),
-      sourceKinds = Map(":p/child" -> KEid, ":c/name" -> KString))
-    val frame = compiler.compileToFrame(Pull(Seq.empty, Seq(
+    val iq = new IncrementalQuery(spark, Pull(Seq.empty, Seq(
       PullLevel(Seq.empty, matchA(0, ":p/child", 1), pullVariable = 1,
         pullAttributes = Seq(":c/name"), pathAttributes = Seq(":p/child"),
-        cardinalityMany = true))))
+        cardinalityMany = true))),
+      Map(":p/child" -> KEid, ":c/name" -> KString))
 
     val server = new WsServer(new Engine(spark)).start()
-    val query = server.serveStream("live_pull", frame, Seq(KVariant))
+    val query = server.serveStream("live_pull", iq, DatomStream.of(Map(
+      ":p/child" -> refs.toDF.toDF("e", "v", "t", "diff"),
+      ":c/name" -> names.toDF.toDF("e", "v", "t", "diff"))))
     val client = new Client(server.boundPort)
     try {
       client.send("""{"Interest":{"name":"live_pull","granularity":null}}""")
@@ -382,6 +377,59 @@ class WsServerSpec extends AnyFunSuite {
             Value.eid(200), Value.VAid(":c/name"), Value.str("Alice")), 0L, 1L)))
         case other => fail(s"expected a QueryDiff, got $other")
       }
+    } finally {
+      try query.stop() catch { case _: Throwable => () }
+      try client.close() catch { case _: Throwable => () }
+      server.stop()
+    }
+  }
+
+  test("stream-served transitive closure pushes exact diffs, retractions included") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val sp = spark
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+    import sp.implicits._
+    import graft.model.Plan._
+    import graft.model.ValueKind._
+    import graft.streaming.IncrementalQuery
+
+    // reach(x, y) :- edge(x, y).  reach(x, y) :- edge(x, z), reach(z, y).
+    val reach = Union(Seq(0, 1), Seq(
+      matchA(0, ":edge", 1),
+      Project(Seq(0, 1), Join(Seq(2),
+        matchA(0, ":edge", 2), NameExpr(Seq(2, 1), "reach")))))
+    val edges = MemoryStream[(Long, Long, Long, Long)]
+    val iq = new IncrementalQuery(spark, NameExpr(Seq(0, 1), "reach"),
+      Map(":edge" -> KEid), Map("reach" -> reach))
+
+    val server = new WsServer(new Engine(spark)).start()
+    val query = server.serveStream("live_reach", iq,
+      DatomStream.of(Map(":edge" -> edges.toDF.toDF("e", "v", "t", "diff"))))
+    val client = new Client(server.boundPort)
+    def batch(): Set[(Seq[Value], Long, Long)] =
+      Wire.parseOutput(client.next()) match {
+        case Output.QueryDiff(name, b) =>
+          assert(name == "live_reach")
+          b.toSet
+        case other => fail(s"expected a QueryDiff, got $other")
+      }
+    def path(x: Long, y: Long) = Seq(Value.eid(x), Value.eid(y))
+    try {
+      client.send("""{"Interest":{"name":"live_reach","granularity":null}}""")
+      edges.addData((1L, 2L, 0L, 1L), (2L, 3L, 0L, 1L))
+      query.processAllAvailable()
+      assert(batch() == Set((path(1, 2), 0L, 1L), (path(2, 3), 0L, 1L),
+        (path(1, 3), 0L, 1L)))
+      // A new edge extends every path that reaches its source.
+      edges.addData((3L, 4L, 1L, 1L))
+      query.processAllAvailable()
+      assert(batch() == Set((path(3, 4), 1L, 1L), (path(2, 4), 1L, 1L),
+        (path(1, 4), 1L, 1L)))
+      // Cutting the middle edge retracts every path through it.
+      edges.addData((2L, 3L, 2L, -1L))
+      query.processAllAvailable()
+      assert(batch() == Set((path(2, 3), 2L, -1L), (path(1, 3), 2L, -1L),
+        (path(2, 4), 2L, -1L), (path(1, 4), 2L, -1L)))
     } finally {
       try query.stop() catch { case _: Throwable => () }
       try client.close() catch { case _: Throwable => () }
