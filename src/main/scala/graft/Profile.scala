@@ -15,6 +15,19 @@ import org.apache.spark.scheduler._
   * Usage: SPARK_GRAFT_ONLY=q_a,q_b sbt "runMain graft.Profile"
   */
 object Profile {
+  /** Job callsite label: the first `graft.*` frame of the stage details
+    * (up to and including its `(File.scala:12)` position when the frame
+    * has one), else `fallback` (the stage name). */
+  private[graft] def siteLabel(details: String, fallback: String): String =
+    details.linesIterator
+      .find(l => l.contains("graft.") && !l.contains("Profile"))
+      .map { l =>
+        val frame = l.trim.stripPrefix("at ")
+        val cut = frame.indexOf(')')
+        if (cut < 0) frame else frame.substring(0, cut + 1)
+      }
+      .getOrElse(fallback)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -45,12 +58,7 @@ object Profile {
         // the stage NAME; the stage DETAILS carry the full callsite stack
         // — attribute the job to its first graft.* frame when one exists.
         val last = e.stageInfos.sortBy(_.stageId).lastOption
-        val site = last.map { si =>
-          si.details.linesIterator
-            .find(l => l.contains("graft.") && !l.contains("Profile"))
-            .map(_.trim.stripPrefix("at ").takeWhile(_ != ')') + ")")
-            .getOrElse(si.name)
-        }.getOrElse("?")
+        val site = last.map(si => siteLabel(si.details, si.name)).getOrElse("?")
         jobSites.computeIfAbsent(site, _ => new AtomicLong()).incrementAndGet()
         ()
       }

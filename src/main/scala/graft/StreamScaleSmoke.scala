@@ -122,8 +122,7 @@ object StreamScaleSmoke {
       spark.sparkContext.removeSparkListener(listener)
       val resMB = (inc.stateIndexMeasuredBytes(0) +
         inc.stateIndexMeasuredBytes(1)) / 1048576L
-      println(f"[scale] hector state residentMB=$resMB%d " +
-        f"(runs dial=${sys.props.getOrElse("graft.hector.runs", "on")}%s)")
+      println(f"[scale] hector state residentMB=$resMB%d")
     }
 
     // ----------------- 2b. hector probe coverage extensions (hector2)
@@ -606,12 +605,11 @@ object StreamScaleSmoke {
         f"asserted=$asserted%d sec=${secs(t0)}%.1f$ok")
     }
 
-    // -------- 7c. packed-run support cells: 1M -> 10M resident A/B (idx2)
-    // The threshold/distinct support class on both state backends: the
-    // packed-run cells must measure ≥2x smaller than the boxed trie at
-    // identical per-batch wall time (VERDICT #4's bar; the raw ratio is
-    // nearer 8-10x). SizeEstimator walks are real measurements, run
-    // once per growth step.
+    // -------- 7c. packed-run support cells: 1M -> 10M resident (idx2)
+    // The threshold/distinct support class and the group-index classes
+    // on the packed-run cells: resident bytes and per-batch wall time as
+    // state grows. SizeEstimator walks are real measurements, run once
+    // per growth step.
     if (section("idx2")) {
       import graft.streaming.IncrementalQuery
       val kinds2 = Map(":p2/a" -> ValueKind.KNumber,
@@ -624,88 +622,78 @@ object StreamScaleSmoke {
       val joinPlan2 = Plan.Join(Seq(1),
         Plan.Union(Seq(1, 2), Seq(Plan.MatchA(1, ":p2/a", 2))),
         Plan.MatchA(1, ":p2/b", 3))
-      for (dial <- Seq("on", "off")) {
-        val prev = sys.props.get("graft.iq.runs")
-        if (dial == "off") sys.props("graft.iq.runs") = "off"
-        else sys.props.remove("graft.iq.runs")
-        try {
-          val iq = new IncrementalQuery(spark, plan2, kinds2)
-          def delta(from: Long, n: Long) =
-            spark.range(from, from + n).select(col("id").as("e"),
-              (col("id") * 7L).as("v"),
-              org.apache.spark.sql.functions.lit(1L).as("diff"))
-          var grown = 0L
-          for (step <- Seq(1000000L, 4000000L, 5000000L)) {
-            var t0 = now()
-            iq.advance(Map(":p2/a" -> delta(grown, step))).count()
-            grown += step
-            val gsec = secs(t0)
-            t0 = now()
-            val out = iq.advance(
-              Map(":p2/a" -> delta(30000000L + grown, 5000L))).count()
-            val bsec = secs(t0)
-            val mb = iq.supportStateMeasuredBytes / 1048576L
-            println(f"[scale] idx2-threshold dial=$dial%s state=$grown%d " +
-              f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$out%d residentMB=$mb%d")
-          }
-          // Group-index classes at 5M rows per side: same dial A/B.
-          for ((label, plan3) <- Seq(
-              "idx2-join" -> joinPlan2, "idx2-agg" -> aggPlan2)) {
-            val iq3 = new IncrementalQuery(spark, plan3, kinds2)
-            def deltas(from: Long, n: Long) = Map(
-              ":p2/a" -> delta(from, n),
-              ":p2/b" -> spark.range(from, from + n).select(col("id").as("e"),
-                (col("id") * 11L).as("v"),
-                org.apache.spark.sql.functions.lit(1L).as("diff")))
-            var t0 = now()
-            iq3.advance(deltas(0L, 5000000L)).count()
-            val gsec = secs(t0)
-            t0 = now()
-            val out3 = iq3.advance(deltas(40000000L, 5000L)).count()
-            val bsec = secs(t0)
-            val mb = iq3.groupStateMeasuredBytes / 1048576L
-            println(f"[scale] $label%s dial=$dial%s state=5000000 " +
-              f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$out3%d residentMB=$mb%d")
-          }
-          // STRING-KEYED cells (round-11: dictionary-encoded packed
-          // columns) — a COUNT keyed by a string value and a pull over
-          // a string attribute, 5M rows each at ~1000 distinct strings:
-          // the packed side holds 8-byte codes + a 1000-entry
-          // dictionary where the boxed trie holds 5M string-bearing
-          // map entries.
-          val kindsS = Map(":p2/s" -> ValueKind.KString,
-            ":p2/n" -> ValueKind.KNumber)
-          def strDelta(from: Long, n: Long) = Map(
-            ":p2/s" -> spark.range(from, from + n).select(col("id").as("e"),
-              org.apache.spark.sql.functions
-                .concat_ws("-", org.apache.spark.sql.functions.lit("grp"),
-                  (col("id") % 1000L)).as("v"),
-              org.apache.spark.sql.functions.lit(1L).as("diff")),
-            ":p2/n" -> delta(from, n))
-          val aggPlanS = Plan.Aggregate(Seq(2, 1), Plan.MatchA(1, ":p2/s", 2),
-            Seq(AggregationFn.COUNT), Seq(2), Seq(1), Seq.empty)
-          val pullPlanS = Plan.PullLevel(Seq.empty,
-            Plan.Project(Seq(0), Plan.MatchA(0, ":p2/n", 1)),
-            pullVariable = 0, pullAttributes = Seq(":p2/s"),
-            pathAttributes = Seq.empty, cardinalityMany = false)
-          for ((label, planS) <- Seq(
-              "idx2-stragg" -> aggPlanS, "idx2-strpull" -> pullPlanS)) {
-            val iqS = new IncrementalQuery(spark, planS, kindsS)
-            var t0 = now()
-            iqS.advance(strDelta(0L, 5000000L)).count()
-            val gsec = secs(t0)
-            t0 = now()
-            val outS = iqS.advance(strDelta(40000000L, 5000L)).count()
-            val bsec = secs(t0)
-            val mb = (iqS.groupStateMeasuredBytes +
-              iqS.supportStateMeasuredBytes) / 1048576L
-            println(f"[scale] $label%s dial=$dial%s state=5000000 " +
-              f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$outS%d residentMB=$mb%d")
-          }
-        } finally prev match {
-          case Some(v) => sys.props("graft.iq.runs") = v
-          case None    => sys.props.remove("graft.iq.runs")
-        }
+      val iq = new IncrementalQuery(spark, plan2, kinds2)
+      def delta(from: Long, n: Long) =
+        spark.range(from, from + n).select(col("id").as("e"),
+          (col("id") * 7L).as("v"),
+          org.apache.spark.sql.functions.lit(1L).as("diff"))
+      var grown = 0L
+      for (step <- Seq(1000000L, 4000000L, 5000000L)) {
+        var t0 = now()
+        iq.advance(Map(":p2/a" -> delta(grown, step))).count()
+        grown += step
+        val gsec = secs(t0)
+        t0 = now()
+        val out = iq.advance(
+          Map(":p2/a" -> delta(30000000L + grown, 5000L))).count()
+        val bsec = secs(t0)
+        val mb = iq.supportStateMeasuredBytes / 1048576L
+        println(f"[scale] idx2-threshold state=$grown%d " +
+          f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$out%d residentMB=$mb%d")
+      }
+      // Group-index classes at 5M rows per side.
+      for ((label, plan3) <- Seq(
+          "idx2-join" -> joinPlan2, "idx2-agg" -> aggPlan2)) {
+        val iq3 = new IncrementalQuery(spark, plan3, kinds2)
+        def deltas(from: Long, n: Long) = Map(
+          ":p2/a" -> delta(from, n),
+          ":p2/b" -> spark.range(from, from + n).select(col("id").as("e"),
+            (col("id") * 11L).as("v"),
+            org.apache.spark.sql.functions.lit(1L).as("diff")))
+        var t0 = now()
+        iq3.advance(deltas(0L, 5000000L)).count()
+        val gsec = secs(t0)
+        t0 = now()
+        val out3 = iq3.advance(deltas(40000000L, 5000L)).count()
+        val bsec = secs(t0)
+        val mb = iq3.groupStateMeasuredBytes / 1048576L
+        println(f"[scale] $label%s state=5000000 " +
+          f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$out3%d residentMB=$mb%d")
+      }
+      // STRING-KEYED cells (round-11: dictionary-encoded packed
+      // columns) — a COUNT keyed by a string value and a pull over
+      // a string attribute, 5M rows each at ~1000 distinct strings:
+      // the packed side holds 8-byte codes + a 1000-entry
+      // dictionary where the boxed trie holds 5M string-bearing
+      // map entries.
+      val kindsS = Map(":p2/s" -> ValueKind.KString,
+        ":p2/n" -> ValueKind.KNumber)
+      def strDelta(from: Long, n: Long) = Map(
+        ":p2/s" -> spark.range(from, from + n).select(col("id").as("e"),
+          org.apache.spark.sql.functions
+            .concat_ws("-", org.apache.spark.sql.functions.lit("grp"),
+              (col("id") % 1000L)).as("v"),
+          org.apache.spark.sql.functions.lit(1L).as("diff")),
+        ":p2/n" -> delta(from, n))
+      val aggPlanS = Plan.Aggregate(Seq(2, 1), Plan.MatchA(1, ":p2/s", 2),
+        Seq(AggregationFn.COUNT), Seq(2), Seq(1), Seq.empty)
+      val pullPlanS = Plan.PullLevel(Seq.empty,
+        Plan.Project(Seq(0), Plan.MatchA(0, ":p2/n", 1)),
+        pullVariable = 0, pullAttributes = Seq(":p2/s"),
+        pathAttributes = Seq.empty, cardinalityMany = false)
+      for ((label, planS) <- Seq(
+          "idx2-stragg" -> aggPlanS, "idx2-strpull" -> pullPlanS)) {
+        val iqS = new IncrementalQuery(spark, planS, kindsS)
+        var t0 = now()
+        iqS.advance(strDelta(0L, 5000000L)).count()
+        val gsec = secs(t0)
+        t0 = now()
+        val outS = iqS.advance(strDelta(40000000L, 5000L)).count()
+        val bsec = secs(t0)
+        val mb = (iqS.groupStateMeasuredBytes +
+          iqS.supportStateMeasuredBytes) / 1048576L
+        println(f"[scale] $label%s state=5000000 " +
+          f"growSec=$gsec%.1f batch5k=$bsec%.2f out=$outS%d residentMB=$mb%d")
       }
     }
 
@@ -724,12 +712,11 @@ object StreamScaleSmoke {
     // is pinned to 1000 seeded chains, so ROUND work is flat while the
     // static side doubles — totals should grow only with the one-time
     // arrangement build (one shuffle of the static relation), never
-    // with per-round rescans. The final run A/Bs the Catalyst fallback
-    // (`graft.fixpoint.arrangement=off`) on the same data, same JVM.
+    // with per-round rescans.
     if (section("fixarr")) {
       import graft.compile.Compiler
       import graft.domain.Domain
-      def run(chains: Long, len: Int, label: String): Double = {
+      def run(chains: Long, len: Int, label: String): Unit = {
         val d = new Domain(spark)
         // The static side is PARQUET-BACKED (written once per size) —
         // the realistic 100 TB shape: a per-round Catalyst re-scan pays
@@ -762,7 +749,6 @@ object StreamScaleSmoke {
         val ok = if (n == want) "" else s" EXPECTED $want — FAILED"
         println(f"[scale] fixarr $label%s chains=$chains%d len=$len%d " +
           f"edges=${len * chains}%d out=$n%d sec=$dt%.1f$ok")
-        dt
       }
       // Flatness: per-round time (GRAFT_FIXPOINT_DEBUG) must stay flat
       // as the static side doubles past the broadcast gate.
@@ -774,13 +760,7 @@ object StreamScaleSmoke {
       // arrangement exists for (the Catalyst fallback re-plans and
       // re-scans per round; the arrangement pays one build, then
       // frontier-sized rounds).
-      val tArr = run(1000000L, 24, "arrangement-deep")
-      sys.props("graft.fixpoint.arrangement") = "off"
-      try {
-        val tCat = run(1000000L, 24, "catalyst-deep")
-        println(f"[scale] fixarr DEEP A/B at 24M edges, 24 rounds: " +
-          f"arrangement=$tArr%.1fs catalyst=$tCat%.1fs (${tCat / tArr}%.1f×)")
-      } finally sys.props.remove("graft.fixpoint.arrangement")
+      run(1000000L, 24, "arrangement-deep")
     }
 
     if (section("bi")) {

@@ -3,8 +3,18 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The correctness dump runs the engine's own session posture only: a
+    * `GRAFT_CONF` override would silently change what the oracle compare
+    * checks, so any override is refused, naming it. */
+  def requireNoOverrides(overrides: Seq[(String, String)]): Unit =
+    if (overrides.nonEmpty) throw new IllegalStateException(
+      "graft.Verify refuses to run with GRAFT_CONF overrides (" +
+        overrides.map { case (k, v) => s"$k=$v" }.mkString(";") +
+        "); unset GRAFT_CONF")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    requireNoOverrides(GraftSession.confOverrides)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shared session posture — see GraftSession.
     val spark = GraftSession.builder(cpus).getOrCreate()

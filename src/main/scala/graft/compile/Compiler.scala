@@ -398,8 +398,7 @@ class Compiler(
       // iterative RDD kernel instead: identical shuffle structure, zero
       // per-round Catalyst planning. Falls through to the general
       // DataFrame loop whenever the shape or size gates fail.
-      if (ordered.lengthCompare(1) == 0 && changed &&
-          !sys.props.get("graft.fixpoint.kernel").contains("off")) {
+      if (ordered.lengthCompare(1) == 0 && changed) {
         val r = ordered.head
         loopComp.kernelLinear(spark, r, derived(r), depEnv,
           template(r).get, delta(r).get,
@@ -717,10 +716,6 @@ class Compiler(
       // map-side k-hop batching) and probes partition-locally. Same
       // filters, same recipe, same dedup/subtract loop as the broadcast
       // path, so the two cannot diverge semantically.
-      // `-Dgraft.fixpoint.arrangement=off` forces the Catalyst fallback
-      // for A/B.
-      if (sys.props.get("graft.fixpoint.arrangement").contains("off"))
-        return None
       // Duplicates in the static index are harmless — every round's
       // candidates are deduped and subtracted — and positive-weight plans
       // skip the distinct pass entirely; anything that can emit negative
@@ -764,7 +759,6 @@ class Compiler(
       // round-0 delta is audited with one delta-sized scan like the
       // binary fast path's.
       val primOk = (template.kinds ++ sRel.kinds).forall(longKind) &&
-        !sys.props.get("graft.fixpoint.arrangement.packed").contains("off") &&
         (delta0.df.schema.fields.take(nColsA).forall(!_.nullable) ||
           delta0.df.where(delta0.df.columns.take(nColsA).toIndexedSeq
             .map(col(_).isNull).reduce(_ || _)).isEmpty)
@@ -976,7 +970,8 @@ class Compiler(
         sc.union(parts.map(_.map(p => Row.fromSeq(p._1 :+ 1L)))), total, pLoop))
     }
     val sArr = sDf.limit(rawCap).collect()
-    if (sArr.length > maxStaticRows) return None // arrangement dialled off
+    // raw ≤ cap ⇒ distinct ≤ cap; guards a source that grew between scans.
+    if (sArr.length > maxStaticRows) return None
     // Lazy: only the generic boxed path reads this index; the binary-long
     // fast path below builds its own primitive map from sArr directly.
     lazy val sMap: Map[Seq[Any], Array[Array[Any]]] = {
@@ -1013,13 +1008,11 @@ class Compiler(
     // @specialized on Long, so candidates, dedup sets, and shuffle keys
     // carry ZERO boxed allocations, where the generic path boxes every
     // field into an ArraySeq[Any] (at 100 TB the boxing, not the logic, is
-    // the memory-bandwidth bill). `-Dgraft.fixpoint.pairs=off` forces the
-    // generic path for A/B; nulls anywhere bail to it for exact Catalyst
-    // parity.
+    // the memory-bandwidth bill). Nulls anywhere bail to the generic path
+    // for exact Catalyst parity.
     if (nCols == 2 && recVars.length == 2 && sVars.length == 2 &&
         target.length == 1 && filterFns.isEmpty &&
         (template.kinds ++ sRel.kinds).forall(longKind) &&
-        !sys.props.get("graft.fixpoint.pairs").contains("off") &&
         !sArr.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
         (delta0.df.schema.fields.take(2).forall(!_.nullable) ||
           delta0.df.where(delta0.df.columns.take(2).map(col(_).isNull)

@@ -217,10 +217,9 @@ object Dedup {
     // iterative kernel pays a job per round — and the label table rides
     // back as a broadcast, exactly like any dimension-sized join side.
     // The distributed pointer-jumping kernel below is the scale path for
-    // pair sets past the gate. `-Dgraft.cc.driver=off` forces the kernel
-    // (A/B and the convergence spec).
-    if (bcBytes > 0 && nEdges * 32L <= bcBytes &&
-        !sys.props.get("graft.cc.driver").contains("off")) {
+    // pair sets past the gate (and every pair set when broadcasts are
+    // disabled).
+    if (bcBytes > 0 && nEdges * 32L <= bcBytes) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -595,7 +594,7 @@ object Dedup {
     * and its false positives die in the exact digest join that follows, so
     * the result stays exact while corpus-side shuffled bytes stay
     * ∝ duplicates + FP·corpus. The bloom path is the only sketch-based
-    * operator in the pipeline; `-Dgraft.dedup.bloom=on` forces it (specs). */
+    * operator in the pipeline. */
   def incrementalExact(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val spark = corpus.sparkSession
@@ -619,7 +618,7 @@ object Dedup {
     // ~72 bytes per broadcast-hash-relation row of one 32-char digest.
     val exactSetFits = bcBytes <= 0 || nDigests * 72L <= bcBytes
     val matches =
-      if (exactSetFits && !sys.props.get("graft.dedup.bloom").contains("on")) {
+      if (exactSetFits) {
         corpusD.join(broadcast(batchD.select(col("digest")).distinct()),
           Seq("digest"), "left_semi")
       } else {

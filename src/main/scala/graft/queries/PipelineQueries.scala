@@ -488,14 +488,8 @@ object PipelineQueries {
       // is EXACT-FIRST since round 13 (the direct scan was the worst
       // non-stale sf1 ratio at 6.3× — its n-gram collision mass grows
       // with duplication, which exact-first removes up front; rows are
-      // identical, `ExactFirstPropertySpec`). The direct scan stays
-      // behind `-Dgraft.contamination.naive` for A/B.
-      if (sys.props.contains("graft.contamination.naive")) {
-        val hp = docsHp(s, dir)
-        val bench = hp.where(pmod(col("id"), lit(20)) === 0)
-        val corpus = hp.where(pmod(col("id"), lit(20)) =!= 0)
-        longify(TextAnalysis.ngramOverlapFromHp(corpus, bench, 4))
-      } else contaminationExactFirst(s, dir)),
+      // identical, `ExactFirstPropertySpec`).
+      contaminationExactFirst(s, dir)),
 
     "q_contamination_exact_first" -> (contaminationExactFirst(_, _)),
 

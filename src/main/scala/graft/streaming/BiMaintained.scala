@@ -16,7 +16,7 @@ import graft.model._
   *  - The DATOM HISTORY lives ONCE, at FINE times, in a [[BiStore]]:
   *    driver-resident only while under the broadcast byte gate, then
   *    migrated into a [[StateCell]]-backed distributed store
-  *    ([[CellBiStore]]) — one [[BiVis]] index per partition,
+  *    ([[CellBiStore]]) — one [[BiPacked]] index per partition,
   *    hash-partitioned by view key. This matches the reference's split
   *    exactly: frontier bookkeeping is control-plane-sized and
   *    worker-local, the datoms live in distributed arrangements.
@@ -404,7 +404,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
   private def semanticsOf(a: String): InputSemantics =
     configs.getOrElse(a, AttributeConfig()).inputSemantics
 
-  private def semResolver: BiVisibility.Sem = {
+  private def semResolver: BiTime.Sem = {
     val m: Map[String, InputSemantics] = configs.iterator
       .map { case (a, c) => a -> c.inputSemantics }.toMap
     a => m.getOrElse(a, InputSemantics.Raw)
@@ -549,7 +549,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     *
     * Cost: 2 narrow scans of `df` (lattice, zip sizing) + 1 scan into
     * the ingest shuffle; per-partition ingest work is the same
-    * structural-sharing [[BiVis.ingest]] every transact runs. Drain
+    * structural-sharing [[BiPacked.ingest]] every transact runs. Drain
     * parity with the `Seq` path is `BiFrameIngestSpec`-pinned across
     * the semantics × plan zoo. */
   def transactFrame(df: DataFrame): Unit = {
@@ -1327,7 +1327,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * attached standing query. Sys-index entries dead for EVERY lane
     * (at or under the min processed bound) are pruned en route. */
   private def processTime(lane: Lane, t: BiTimePair,
-      sem: BiVisibility.Sem, laneInterests: Iterable[String]): Unit = {
+      sem: BiTime.Sem, laneInterests: Iterable[String]): Unit = {
     val t0 = System.nanoTime()
     // Lazy per-attribute views (round 17): the transition below only
     // aggregates attributes some attached standing READS — a registered
@@ -1446,7 +1446,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
 
   /** Under `-Dgraft.bi.slack=<n>`: once EVERY lane's processed fine-sys
     * bound passed `bound = min − slack`, consolidate the history behind
-    * it ([[BiVis.compact]] — per-event nets for Raw/Distinct, winner
+    * it ([[BiPacked.compact]] — per-event nets for Raw/Distinct, winner
     * staircases over the registered windows for LWW). Amortized: runs
     * when the resident record count grew ≥ 25% past the last
     * post-compaction count, so the O(resident) rewrite costs ≤ 4
@@ -1454,7 +1454,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * tight sawtooth under continuous ingest with bounded live
     * (key, event) structure. Dial unset (default): never — history is
     * immortal, exactly the pre-compaction behavior. */
-  private def maybeCompact(sem: BiVisibility.Sem): Unit =
+  private def maybeCompact(sem: BiTime.Sem): Unit =
     slack.orElse(sys.props.get("graft.bi.slack").map(_.toLong)).foreach { sl =>
       val minB =
         if (lanes.isEmpty) Long.MinValue

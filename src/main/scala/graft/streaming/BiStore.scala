@@ -13,14 +13,14 @@ import graft.model.ValueKind
   * maintained visible views. ONE store instance holds the FINE-grained
   * history shared by every Coarsen lane (lanes are view dimensions —
   * `transition`/`dump` take the lane id and window). Two siblings share
-  * the [[BiVis]] state machine:
+  * the [[BiPacked]] state machine:
   *
   *  - [[DriverBiStore]] — ONE instance driver-side, for histories under
   *    the broadcast byte gate (the same small-side economics as the
   *    closure maintainer's gated driver index). Transitions are
   *    incremental here too — no O(history) rescan per completed time.
   *  - [[CellBiStore]] — the history hash-partitioned by view key across
-  *    a [[StateCell]] (one [[BiVis]] per partition): ingest and
+  *    a [[StateCell]] (one [[BiPacked]] per partition): ingest and
   *    transitions are per-partition structural-sharing updates, the
   *    driver holds only the time lattices — the reference's split,
   *    where frontier bookkeeping is worker-local but datoms live in
@@ -41,7 +41,7 @@ private[streaming] sealed trait BiStore {
     * current lane. */
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, pruneUpTo: Long,
+      sem: BiTime.Sem, pruneUpTo: Long,
       kindOf: String => ValueKind,
       // Caller-known single-attribute domains (Some(a) = every emitted
       // row is attribute `a`): lets the distributed sibling skip the
@@ -60,7 +60,7 @@ private[streaming] sealed trait BiStore {
     * processed coarse time `t` — run BEFORE the late standing's replay
     * [[dump]]. */
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, attrs: Set[String]): Unit
+      sem: BiTime.Sem, attrs: Set[String]): Unit
 
   /** Lane `lane`'s full emitted view per attribute — replay for
     * late/rebuilt standing queries. */
@@ -74,9 +74,9 @@ private[streaming] sealed trait BiStore {
     * lattice reconstruction for a lane attached after transacts. */
   def coarseTimes(win: Option[(Long, Long)]): Seq[(Long, Long)]
 
-  /** Trace compaction behind `bound` — see [[BiVis.compact]]. */
+  /** Trace compaction behind `bound` — see [[BiPacked.compact]]. */
   def compact(bound: Long, wins: Seq[Option[(Long, Long)]],
-      sem: BiVisibility.Sem): Unit
+      sem: BiTime.Sem): Unit
 
   /** Resident datom records (shrinks at compaction). */
   def datomCount: Long
@@ -156,18 +156,18 @@ private[streaming] object BiStore {
     }
 }
 
-/** Driver-resident sibling: the whole history in one [[BiVis]].
+/** Driver-resident sibling: the whole history in one [[BiPacked]].
   * Bounded by [[BiMaintained]]'s byte gate — past it the state migrates
   * into the distributed sibling. */
 private[streaming] final class DriverBiStore(spark: SparkSession)
     extends BiStore {
-  private[streaming] var vis: BiVis = BiVis.empty
+  private[streaming] var vis: BiPacked = BiPacked.empty
 
   def ingest(recs: Seq[(BiKey, BiRec)]): Unit = vis = vis.ingest(recs)
 
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, pruneUpTo: Long,
+      sem: BiTime.Sem, pruneUpTo: Long,
       kindOf: String => ValueKind,
       attrHint: Option[String] = None,
       demand: Option[Set[String]] = None): BiStore.Frames = {
@@ -184,7 +184,7 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
   }
 
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, attrs: Set[String]): Unit =
+      sem: BiTime.Sem, attrs: Set[String]): Unit =
     vis = vis.backfill(lane, win, t, sem, attrs)
 
   def dump(lane: Int, kindOf: String => ValueKind): BiStore.Frames =
@@ -196,7 +196,7 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
     vis.coarseTimes(win).toSeq
 
   def compact(bound: Long, wins: Seq[Option[(Long, Long)]],
-      sem: BiVisibility.Sem): Unit = vis = vis.compact(bound, wins, sem)
+      sem: BiTime.Sem): Unit = vis = vis.compact(bound, wins, sem)
 
   def datomCount: Long = vis.datomCount
 
@@ -206,7 +206,7 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
     org.apache.spark.util.GraftSizeOf.estimate(vis)
 }
 
-/** Distributed sibling: the history lives as one [[BiVis]] per
+/** Distributed sibling: the history lives as one [[BiPacked]] per
   * partition inside a [[StateCell]] (hash-partitioned by view key).
   * Per-batch narrow work is O(delta + touched keys); per-completed-time
   * transition work is O(candidate keys of the toggled time slabs), and
@@ -216,8 +216,8 @@ private[streaming] final class CellBiStore(
     spark: SparkSession, partitions: Int) extends BiStore {
   private val sc = spark.sparkContext
   private val part = new HashPartitioner(partitions)
-  private val cell = new StateCell[BiVis](
-    sc, partitions, BiVis.maker(), _.estimatedBytes)
+  private val cell = new StateCell[BiPacked](
+    sc, partitions, () => BiPacked.empty, _.estimatedBytes)
   private var count = 0L
   // MEASURED resident bytes, summed from the per-partition states'
   // actual structure on every ingest (the round-10 accounting fix: no
@@ -230,7 +230,7 @@ private[streaming] final class CellBiStore(
   }
 
   /** DATA-SIZED ingest: one shuffle onto the view-key partitioning, then
-    * the same per-partition structural-sharing [[BiVis.ingest]] the
+    * the same per-partition structural-sharing [[BiPacked.ingest]] the
     * control-sized path runs — the batch never exists on the driver.
     * Returns the ingested record count (summed from the partitions, no
     * extra job — it rides the advance's output channel). */
@@ -247,22 +247,21 @@ private[streaming] final class CellBiStore(
   }
 
   /** Plant a split driver state into the cell partitions (gate flip). */
-  private[streaming] def plant(parts: IndexedSeq[BiVis]): Unit = {
+  private[streaming] def plant(parts: IndexedSeq[BiPacked]): Unit = {
     require(parts.length == partitions)
     count += parts.iterator.map(_.datomCount).sum
-    val maker = BiVis.maker()
     val delta = sc.parallelize(
         parts.zipWithIndex.map { case (s, i) => (i, s) }, 1)
       .partitionBy(new HashPartitioner(partitions)) // Int key i -> part i
     measuredBytes = cell.advance1(delta) { (_, it) =>
-      val planted = it.toSeq.headOption.map(_._2).getOrElse(maker())
+      val planted = it.toSeq.headOption.map(_._2).getOrElse(BiPacked.empty)
       (planted, Array(planted.estimatedBytes))
     }.fold(0L)(_ + _)
   }
 
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, pruneUpTo: Long,
+      sem: BiTime.Sem, pruneUpTo: Long,
       kindOf: String => ValueKind,
       // Caller-known single-attribute domains (Some(a) = every emitted
       // row is attribute `a`): lets the distributed sibling skip the
@@ -289,7 +288,7 @@ private[streaming] final class CellBiStore(
   }
 
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),
-      sem: BiVisibility.Sem, attrs: Set[String]): Unit =
+      sem: BiTime.Sem, attrs: Set[String]): Unit =
     measuredBytes = cell.advance1(
         sc.parallelize(Seq.empty[Int], partitions)) { (vis, _) =>
       val next = vis.backfill(lane, win, t, sem, attrs)
@@ -313,7 +312,7 @@ private[streaming] final class CellBiStore(
       cell.rdd.flatMap(_.coarseTimes(win)), win, "late-attach").toSeq
 
   def compact(bound: Long, wins: Seq[Option[(Long, Long)]],
-      sem: BiVisibility.Sem): Unit = {
+      sem: BiTime.Sem): Unit = {
     val stats = cell.advance1(
         sc.parallelize(Seq.empty[Int], partitions)) { (vis, _) =>
       val next = vis.compact(bound, wins, sem)

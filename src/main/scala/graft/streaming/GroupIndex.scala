@@ -10,7 +10,8 @@ import graft.model.ValueKind
   * pull-level nodes (`key → (row → net weight)`). Two backends:
   *
   *  - [[BoxedGroups]]: the original nested `immutable.HashMap` trie
-  *    (~240 B/entry measured) — structural sharing per batch;
+  *    (~240 B/entry measured) — structural sharing per batch; serves
+  *    the zero-width-row groups (no row columns to pack);
   *  - [[PackedGroups]]: records pack as `key ++ row ++ weight` strides
   *    into [[PackedRuns]] (~8·(kw+rw+1) B/entry), group reads are
   *    prefix scans over the key columns, and a batch appends one netted
@@ -22,7 +23,6 @@ import graft.model.ValueKind
   *    entry per DISTINCT value, not per record (the round-10 VERDICT's
   *    string-column gap). Arity-irregular records route to a boxed side
   *    map, so packing is an optimization, never a semantics change.
-  *    `-Dgraft.iq.runs=off` forces the boxed backend.
   *
   * Readers materialize a group's `WMap` per TOUCHED key per batch (the
   * advance functions' access pattern); reads always see the pre-batch
@@ -42,17 +42,13 @@ sealed trait GroupIndex extends Serializable {
 
 object GroupIndex {
   /** Backend factory, resolved ONCE on the DRIVER from the key/row
-    * column kinds and the `-Dgraft.iq.runs` dial. The returned thunk
-    * bakes the decision in: StateCell zero() closures execute inside
-    * executor tasks, where the driver's system properties are not
-    * visible — reading the dial there would silently ignore the A/B
-    * switch on any multi-JVM deployment. */
+    * column kinds: packed unless the rows have no columns. The returned
+    * thunk bakes the decision in for StateCell zero() closures, which
+    * execute inside executor tasks. */
   def maker(keyKinds: Seq[ValueKind], rowKinds: Seq[ValueKind]): () => GroupIndex = {
-    val packed = !sys.props.get("graft.iq.runs").contains("off") &&
-      rowKinds.nonEmpty
     val kw = keyKinds.length
     val rw = rowKinds.length
-    if (packed)
+    if (rowKinds.nonEmpty)
       () => PackedGroups(PackedRuns.empty(kw + rw), kw, rw,
         scala.collection.immutable.HashMap.empty)
     else

@@ -54,8 +54,7 @@ import graft.model._
   *    and stay flat as state grows (smoke: 2.0–3.2s/batch vs the
   *    Catalyst stream path's 3.5–4.8s-and-rising at 8M-row state).
   *    Everything else falls back per term to the batch Hector planner
-  *    against the index views (broadcast-delta plan, state streamed);
-  *    `-Dgraft.hector.probe=off` forces the fallback for A/B.
+  *    against the index views (broadcast-delta plan, state streamed).
   * Together these are the Spark analog of the arrangements the
   * reference keeps. Retractions flow exactly (signed weights multiply
   * through the joins); `Not` bindings are rejected — negation needs
@@ -137,15 +136,13 @@ class IncrementalHector(
   // v-prefix probes — ~24 B/entry vs the trie's ~200–240 B (SCALE_NOTES)
   // at unchanged per-batch cost (delta-run append + size-tiered merge is
   // the same O(delta)-amortized discipline as structural sharing).
-  // `-Dgraft.hector.runs=off` forces the hash cells for A/B.
-  private lazy val runsLive: Boolean =
-    !sys.props.get("graft.hector.runs").contains("off")
+  // Every other kind keeps the hash cells.
   private def runsBacked(i: Int): Boolean =
-    runsLive && (kinds(attrBindings(i).a) match {
+    kinds(attrBindings(i).a) match {
       case ValueKind.KNumber | ValueKind.KEid | ValueKind.KInstant |
           ValueKind.KReal => true
       case _ => false
-    })
+    }
   private lazy val runsEVCells: Seq[StateCell[LongRuns]] =
     attrBindings.map(_ => new StateCell[LongRuns](
       spark.sparkContext, nPartitions, () => LongRuns.empty, _.bytes))
@@ -332,7 +329,6 @@ class IncrementalHector(
   // per-batch state READS are O(delta × degree), never a stream of the
   // other bindings' full states. Falls back to the Catalyst term (with
   // its broadcast-delta plan) whenever `probePlans(i)` is None.
-  // `-Dgraft.hector.probe=off` forces the Catalyst path for A/B.
 
   import IncrementalHector.{ProbePlan, ProbeStep}
 
@@ -385,9 +381,7 @@ class IncrementalHector(
     m.toMap
   }
 
-  private lazy val probeLive: Boolean =
-    !sys.props.get("graft.hector.probe").contains("off") &&
-      probePlans.exists(_.isDefined)
+  private lazy val probeLive: Boolean = probePlans.exists(_.isDefined)
 
   /** Test hook: is the arrangement-probe executor live for this
     * conjunction (vs the Catalyst fallback)? Forces plan construction. */

@@ -245,17 +245,15 @@ class IncrementalQuery(
     * merged; the boxed Seq key's primitive `==` made a NaN key
     * unfindable). Output rows keep the original boxed values —
     * encoding exists only inside the key array, so no decode ever
-    * runs. The boxed path (mixed non-packable kinds, or the
-    * `-Dgraft.iq.runs=off` dial) applies the SAME encoded-key
-    * treatment to its KReal slots (round 17), so both dials share one
-    * key-equality semantics and `off` is purely a footprint A/B.
+    * runs. The boxed path (mixed non-packable kinds) applies the SAME
+    * encoded-key treatment to its KReal slots (round 17), so both
+    * backends share one key-equality semantics.
     * Emitted transition rows carry canon()-ed KReal samples on every
     * path, so cross-batch assert/retract pairs cancel under
     * java.lang.Double.equals in downstream accumulators. */
   private final class SupportCell(kinds: Seq[ValueKind]) {
     supportCells += this
-    private val packed = !sys.props.get("graft.iq.runs").contains("off") &&
-      kinds.nonEmpty &&
+    private val packed = kinds.nonEmpty &&
       kinds.forall(k => ValueKind.longBacked(k) || k == ValueKind.KReal)
     private val realCol: Array[Boolean] =
       kinds.map(_ == ValueKind.KReal).toArray
@@ -306,17 +304,14 @@ class IncrementalQuery(
         delta: RDD[(Seq[Any], Long)]): (RDD[(Seq[Any], Long)], Long) =
       if (!packed && !hasReal) wCell.advance1Counted(delta)(thresholdAdvanceIdx)
       else if (!packed) {
-        // Boxed path WITH real columns (mixed non-packable kinds, or the
-        // -Dgraft.iq.runs=off dial): Scala's `==` on boxed doubles is
-        // primitive comparison, so a NaN key was unfindable in the WMap —
-        // support could never accumulate across batches (round-16 VERDICT
-        // item: the off-dial was a footprint A/B, not a semantics oracle,
-        // on NaN-keyed rows; worse, MIXED kinds like (string, real) ride
-        // this path unconditionally). Fix = the same encoded-key netting
-        // the packed path uses: map keys carry encReal bits in KReal
-        // slots (long equality == SQL double equality), emissions carry
-        // the canonicalized boxed sample. Both dials now share one
-        // key-equality semantics; `off` is purely a footprint A/B.
+        // Boxed path WITH real columns (mixed non-packable kinds like
+        // (string, real)): Scala's `==` on boxed doubles is primitive
+        // comparison, so a NaN key was unfindable in the WMap — support
+        // could never accumulate across batches (round-16 VERDICT item).
+        // Fix = the same encoded-key netting the packed path uses: map
+        // keys carry encReal bits in KReal slots (long equality == SQL
+        // double equality), emissions carry the canonicalized boxed
+        // sample. Both backends share one key-equality semantics.
         // Only the REAL columns' indices — the r17 advisory: rebuilding
         // the whole key Seq (zipWithIndex + per-element tuple + boxed
         // Long) for every delta row taxes the mixed-kind path even when
@@ -1399,16 +1394,17 @@ class IncrementalQuery(
     }
 
     /** The kernel/arrangement expansion for the single-rule linear
-      * clique when it is available this phase, else None (rounds then
-      * take the per-round Catalyst plan path). Mirrors the dispatch in
-      * [[stepCandidates]]; resolved once per round BATCH — the static
-      * generation cannot change inside a phase's round loop. */
+      * clique, else None (rounds then take the per-round Catalyst plan
+      * path). Mirrors the dispatch in [[stepCandidates]]; resolved once
+      * per round BATCH — the static generation cannot change inside a
+      * phase's round loop. */
     private def expandFn(): Option[PSet => RDD[Seq[Any]]] =
-      linearShape.flatMap { sh =>
+      linearShape.map { sh =>
         kernelBroadcast() match {
-          case Some(bc) => Some((d: PSet) => kernelExpand(sh, d, bc))
+          case Some(bc) => (d: PSet) => kernelExpand(sh, d, bc)
           case None =>
-            kernelArrangement().map(arr => (d: PSet) => arrExpand(sh, d, arr))
+            val arr = kernelArrangement()
+            (d: PSet) => arrExpand(sh, d, arr)
         }
       }
 
@@ -1841,8 +1837,6 @@ class IncrementalQuery(
     // O(delta + touched keys) per advance, the StateCell discipline —
     // instead of invalidating it; derived static plans invalidate and
     // rebuild once per changed generation.
-    // `-Dgraft.recursion.arrangement=off` forces the old Catalyst
-    // fallback for A/B.
     import IncrementalQuery.{ArrIndex, sizedArr}
     private type StaticArr = RDD[org.apache.spark.util.GraftSizedValue[ArrIndex]]
     private var staticArrGen = -1L
@@ -1882,11 +1876,9 @@ class IncrementalQuery(
       mat
     }
 
-    private def kernelArrangement(): Option[StaticArr] = {
-      if (sys.props.get("graft.recursion.arrangement").contains("off"))
-        return None
+    private def kernelArrangement(): StaticArr = {
       val sh = linearShape.get
-      if (staticArrGen == staticGen) return staticArrVal
+      if (staticArrGen == staticGen) return staticArrVal.get
       staticArrGen = staticGen
       val env = inputs.map { case (n, _) =>
         n -> relOf(inputKinds(n), Seq(inputState(n)), isSmall = false)
@@ -1905,9 +1897,9 @@ class IncrementalQuery(
         tmp.forEach((k, vs) => b += k -> vs.toArray)
         Iterator.single(sizedArr(ArrIndex(b.result(), n), cols))
       }
-      commitArr(arr)
+      val built = commitArr(arr)
       rtrace(s"kernel static arrangement BUILT gen=$staticGen")
-      staticArrVal
+      built
     }
 
     /** Structural-sharing index maintenance for a bare-input static
@@ -2070,7 +2062,7 @@ class IncrementalQuery(
       * clique — zero Catalyst planning): broadcast static under the byte
       * gate, the partitioned arrangement past it (no ceiling); the
       * general delta-rule plan otherwise (the first round over input
-      * deltas, multi-rule cliques, or `arrangement=off`). */
+      * deltas, multi-rule cliques). */
     private def stepCandidates(
         r: String,
         roundDeltas: Seq[(String, Seq[ValueKind], PSet)],
@@ -2079,10 +2071,7 @@ class IncrementalQuery(
         case (Some(sh), Seq((dn, _, d))) if dn == target && r == target =>
           kernelBroadcast() match {
             case Some(bc) => Some(kernelExpand(sh, d, bc))
-            case None => kernelArrangement() match {
-              case Some(arr) => Some(arrExpand(sh, d, arr))
-              case None      => roundStep(r, roundDeltas, env)
-            }
+            case None     => Some(arrExpand(sh, d, kernelArrangement()))
           }
         case _ => roundStep(r, roundDeltas, env)
       }

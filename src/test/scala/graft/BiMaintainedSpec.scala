@@ -136,37 +136,20 @@ class BiMaintainedSpec extends AnyFunSuite {
     }
   }
 
-  test("boxed BiVisibility backend drains identically (graft.bi.packed=off)") {
-    // Cross-BACKEND parity: the packed sorted-run store (default) and
-    // the boxed reference implementation must produce multiset-equal
-    // drains against BiEngine, on BOTH store siblings, across the
-    // semantics zoo — the packing is a footprint change, never a
-    // semantics change.
+  test("packed store drains identically to BiEngine on both siblings") {
+    // The packed sorted-run store must produce multiset-equal drains
+    // against BiEngine, on BOTH store siblings, across the semantics zoo.
     val params = Gen.Parameters.default
-    val prev = sys.props.get("graft.bi.packed")
-    try {
-      for {
-        (slabel, sem) <- semanticsZoo.zipWithIndex.map { case (s, i) => (s"sem$i", s) }
-        distributed <- Seq(false, true)
-      } {
-        val history = genHistory(params,
-          Seed(42001L + slabel.hashCode * 31L + (if (distributed) 1 else 0)))
-          .getOrElse(Seq.empty)
-        sys.props("graft.bi.packed") = "off"
-        val (wantB, gotBoxed) = drive(history, sem, plans.head._2, distributed)
-        sys.props.remove("graft.bi.packed") // default: packed
-        val (wantP, gotPacked) = drive(history, sem, plans.head._2, distributed)
-        assert(wantB == wantP) // same BiEngine reference either way
-        assert(gotBoxed == wantB,
-          s"boxed $slabel dist=$distributed:\n want=$wantB\n got=$gotBoxed")
-        assert(gotPacked == wantB,
-          s"packed $slabel dist=$distributed:\n want=$wantB\n got=$gotPacked")
-      }
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.bi.packed") = v
-        case None    => sys.props.remove("graft.bi.packed")
-      }
+    for {
+      (slabel, sem) <- semanticsZoo.zipWithIndex.map { case (s, i) => (s"sem$i", s) }
+      distributed <- Seq(false, true)
+    } {
+      val history = genHistory(params,
+        Seed(42001L + slabel.hashCode * 31L + (if (distributed) 1 else 0)))
+        .getOrElse(Seq.empty)
+      val (want, got) = drive(history, sem, plans.head._2, distributed)
+      assert(got == want,
+        s"packed $slabel dist=$distributed:\n want=$want\n got=$got")
     }
   }
 
@@ -177,17 +160,13 @@ class BiMaintainedSpec extends AnyFunSuite {
     // ONLY at sys 0, so its keys never reappear in later slabs. A late
     // :bm/y standing can therefore only be served by the history
     // BACKFILL at its first processTime; without it the accumulated net
-    // is empty. All four backend x store combinations, full zoo.
-    val prevPacked = sys.props.get("graft.bi.packed")
+    // is empty. Both store siblings, full zoo.
     val prevDist = sys.props.get("graft.bi.distributed")
     try {
       for {
-        packedOff <- Seq(false, true)
         distributed <- Seq(false, true)
         sem <- semanticsZoo
       } {
-        if (packedOff) sys.props("graft.bi.packed") = "off"
-        else sys.props.remove("graft.bi.packed")
         sys.props("graft.bi.distributed") = if (distributed) "on" else "off"
         def run(late: Boolean): Map[Seq[Any], Long] = {
           val bm = new BiMaintained(spark, partitions = 4)
@@ -220,14 +199,9 @@ class BiMaintainedSpec extends AnyFunSuite {
         val got = run(late = true)
         assert(want == Map(Seq(1L, 5L) -> 1L), s"non-vacuous want: $want")
         assert(got == want,
-          s"packedOff=$packedOff dist=$distributed sem=$sem: " +
-            s"want=$want got=$got")
+          s"dist=$distributed sem=$sem: want=$want got=$got")
       }
     } finally {
-      prevPacked match {
-        case Some(v) => sys.props("graft.bi.packed") = v
-        case None    => sys.props.remove("graft.bi.packed")
-      }
       prevDist match {
         case Some(v) => sys.props("graft.bi.distributed") = v
         case None    => sys.props.remove("graft.bi.distributed")
@@ -242,10 +216,8 @@ class BiMaintainedSpec extends AnyFunSuite {
     // visit exactly :sc/y's 3 distinct (e, v) keys — not the store's
     // 203. The counter is per-JVM telemetry; suites run sequentially in
     // the forked test JVM, so the delta is this test's alone.
-    val prevPacked = sys.props.get("graft.bi.packed")
     val prevDist = sys.props.get("graft.bi.distributed")
     try {
-      sys.props.remove("graft.bi.packed") // default = packed
       sys.props("graft.bi.distributed") = "off"
       val bm = new BiMaintained(spark, partitions = 4)
       Seq(":sc/x", ":sc/y").foreach(a =>
@@ -273,10 +245,6 @@ class BiMaintainedSpec extends AnyFunSuite {
       val got = bm.drain("scy").map { case (row, _, w) => (row, w) }.toSet
       assert(got == (1L to 3L).map(e => (Seq[Any](e, e), 1L)).toSet, s"$got")
     } finally {
-      prevPacked match {
-        case Some(v) => sys.props("graft.bi.packed") = v
-        case None    => sys.props.remove("graft.bi.packed")
-      }
       prevDist match {
         case Some(v) => sys.props("graft.bi.distributed") = v
         case None    => sys.props.remove("graft.bi.distributed")
@@ -294,10 +262,8 @@ class BiMaintainedSpec extends AnyFunSuite {
     // maintained attribute is never in the `missing` set. Exactness:
     // the re-attached drain nets to the CURRENT visible state,
     // including everything written while detached.
-    val prevPacked = sys.props.get("graft.bi.packed")
     val prevDist = sys.props.get("graft.bi.distributed")
     try {
-      sys.props.remove("graft.bi.packed")
       sys.props("graft.bi.distributed") = "off"
       val bm = new BiMaintained(spark, partitions = 4)
       Seq(":cv/x", ":cv/y").foreach(a =>
@@ -340,10 +306,6 @@ class BiMaintainedSpec extends AnyFunSuite {
       assert(acc.filter(_._2 != 0L).toMap == Map(Seq[Any](2L, 6L) -> 1L),
         s"re-attached drain must net to the CURRENT visible state: $acc")
     } finally {
-      prevPacked match {
-        case Some(v) => sys.props("graft.bi.packed") = v
-        case None    => sys.props.remove("graft.bi.packed")
-      }
       prevDist match {
         case Some(v) => sys.props("graft.bi.distributed") = v
         case None    => sys.props.remove("graft.bi.distributed")
@@ -359,66 +321,58 @@ class BiMaintainedSpec extends AnyFunSuite {
     // A backfill that only visits history keys can never retract it,
     // so the re-attached standing would replay a phantom (1, 5) row.
     // The fix visits the union of history keys and the lane's emitted
-    // keys. Both store backends.
-    val prevPacked = sys.props.get("graft.bi.packed")
+    // keys.
     val prevDist = sys.props.get("graft.bi.distributed")
     val prevSlack = sys.props.get("graft.bi.slack")
     try {
       sys.props("graft.bi.distributed") = "off"
       sys.props("graft.bi.slack") = "0" // compact aggressively
-      for (packedOff <- Seq(false, true)) {
-        if (packedOff) sys.props("graft.bi.packed") = "off"
-        else sys.props.remove("graft.bi.packed")
-        val bm = new BiMaintained(spark, partitions = 4)
-        Seq(":fp/x", ":fp/y").foreach(a =>
-          bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
-        bm.register(Rule("fpx", Plan.MatchA(0, ":fp/x", 1)))
-        bm.register(Rule("fpy", Plan.MatchA(0, ":fp/y", 1)))
-        bm.interest("fpx", None); bm.interest("fpy", None)
-        bm.transact(Seq(
-          bm.BiDatom(Value.eid(1L), ":fp/x", Value.num(10L), (0L, 0L), 1L),
-          bm.BiDatom(Value.eid(1L), ":fp/y", Value.num(5L), (0L, 0L), 1L)))
-        bm.advance(1L)
-        bm.drain("fpx"); bm.drain("fpy")
-        bm.uninterest("fpy") // covered shrinks; :fp/y unmaintained
-        // Full retraction at the SAME event coordinate: the per-event
-        // net is 0, so compaction drops the key group from history.
-        bm.transact(Seq(
-          bm.BiDatom(Value.eid(1L), ":fp/y", Value.num(5L), (1L, 0L), -1L),
-          bm.BiDatom(Value.eid(2L), ":fp/x", Value.num(20L), (1L, 1L), 1L)))
-        bm.advance(2L)
-        bm.drain("fpx")
-        bm.transact(Seq(
-          bm.BiDatom(Value.eid(3L), ":fp/x", Value.num(30L), (2L, 2L), 1L)))
-        bm.advance(3L)
-        bm.drain("fpx")
-        // Re-attach: backfill must retract the stale emitted row even
-        // though :fp/y has NO history records left.
-        bm.interest("fpy", None)
-        val before = graft.streaming.BiPacked.backfillKeysScanned.get()
-        bm.transact(Seq(
-          bm.BiDatom(Value.eid(4L), ":fp/x", Value.num(40L), (3L, 3L), 1L)))
-        bm.advance(4L)
-        bm.drain("fpx")
-        if (!packedOff) {
-          // Non-vacuity: the ONE key the packed backfill visited came
-          // from the EMITTED view, not history — compaction really did
-          // drop the key group, so only the new emitted-union branch
-          // could have served the retraction.
-          val scanned =
-            graft.streaming.BiPacked.backfillKeysScanned.get() - before
-          assert(scanned == 1L,
-            s"expected exactly the emitted-only key, scanned $scanned")
-        }
-        val acc = scala.collection.mutable.Map
-          .empty[Seq[Any], Long].withDefaultValue(0L)
-        bm.drain("fpy").foreach { case (row, _, w) => acc(row) += w }
-        assert(acc.filter(_._2 != 0L).isEmpty,
-          s"packedOff=$packedOff: fully-retracted+compacted :fp/y must " +
-            s"re-attach EMPTY, got $acc")
-      }
+      val bm = new BiMaintained(spark, partitions = 4)
+      Seq(":fp/x", ":fp/y").foreach(a =>
+        bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
+      bm.register(Rule("fpx", Plan.MatchA(0, ":fp/x", 1)))
+      bm.register(Rule("fpy", Plan.MatchA(0, ":fp/y", 1)))
+      bm.interest("fpx", None); bm.interest("fpy", None)
+      bm.transact(Seq(
+        bm.BiDatom(Value.eid(1L), ":fp/x", Value.num(10L), (0L, 0L), 1L),
+        bm.BiDatom(Value.eid(1L), ":fp/y", Value.num(5L), (0L, 0L), 1L)))
+      bm.advance(1L)
+      bm.drain("fpx"); bm.drain("fpy")
+      bm.uninterest("fpy") // covered shrinks; :fp/y unmaintained
+      // Full retraction at the SAME event coordinate: the per-event
+      // net is 0, so compaction drops the key group from history.
+      bm.transact(Seq(
+        bm.BiDatom(Value.eid(1L), ":fp/y", Value.num(5L), (1L, 0L), -1L),
+        bm.BiDatom(Value.eid(2L), ":fp/x", Value.num(20L), (1L, 1L), 1L)))
+      bm.advance(2L)
+      bm.drain("fpx")
+      bm.transact(Seq(
+        bm.BiDatom(Value.eid(3L), ":fp/x", Value.num(30L), (2L, 2L), 1L)))
+      bm.advance(3L)
+      bm.drain("fpx")
+      // Re-attach: backfill must retract the stale emitted row even
+      // though :fp/y has NO history records left.
+      bm.interest("fpy", None)
+      val before = graft.streaming.BiPacked.backfillKeysScanned.get()
+      bm.transact(Seq(
+        bm.BiDatom(Value.eid(4L), ":fp/x", Value.num(40L), (3L, 3L), 1L)))
+      bm.advance(4L)
+      bm.drain("fpx")
+      // Non-vacuity: the ONE key the backfill visited came from the
+      // EMITTED view, not history — compaction really did drop the key
+      // group, so only the emitted-union branch could have served the
+      // retraction.
+      val scanned =
+        graft.streaming.BiPacked.backfillKeysScanned.get() - before
+      assert(scanned == 1L,
+        s"expected exactly the emitted-only key, scanned $scanned")
+      val acc = scala.collection.mutable.Map
+        .empty[Seq[Any], Long].withDefaultValue(0L)
+      bm.drain("fpy").foreach { case (row, _, w) => acc(row) += w }
+      assert(acc.filter(_._2 != 0L).isEmpty,
+        s"fully-retracted+compacted :fp/y must re-attach EMPTY, got $acc")
     } finally {
-      Seq(("graft.bi.packed", prevPacked), ("graft.bi.distributed", prevDist),
+      Seq(("graft.bi.distributed", prevDist),
         ("graft.bi.slack", prevSlack)).foreach {
         case (k, Some(v)) => sys.props(k) = v
         case (k, None)    => sys.props.remove(k)
@@ -570,38 +524,32 @@ class BiMaintainedSpec extends AnyFunSuite {
     // behind every lane's processed bound minus the slack — per-event
     // nets for Raw/Distinct, registered-window winner staircases for
     // LWW — and must be INVISIBLE to every drain: same histories, same
-    // advance schedule, dial on vs off, multiset-equal against BiEngine.
+    // advance schedule, dial on vs off, multiset-equal against BiEngine,
+    // on both store siblings.
     val params = Gen.Parameters.default
     val prevSlack = sys.props.get("graft.bi.slack")
-    val prevPacked = sys.props.get("graft.bi.packed")
     try {
       for {
         (slabel, sem) <- semanticsZoo.zipWithIndex.map { case (s, i) => (s"sem$i", s) }
-        packed <- Seq(true, false)
+        distributed <- Seq(false, true)
         slack <- Seq(0L, 1L)
       } {
         val history = genHistory(params,
           Seed(71009L + slabel.hashCode * 31L + slack)).getOrElse(Seq.empty)
-        if (packed) sys.props.remove("graft.bi.packed")
-        else sys.props("graft.bi.packed") = "off"
         sys.props.remove("graft.bi.slack")
-        val (wantOff, gotOff) = drive(history, sem, plans.head._2)
+        val (wantOff, gotOff) = drive(history, sem, plans.head._2, distributed)
         sys.props("graft.bi.slack") = slack.toString
-        val (wantOn, gotOn) = drive(history, sem, plans.head._2)
+        val (wantOn, gotOn) = drive(history, sem, plans.head._2, distributed)
         assert(wantOff == wantOn)
         assert(gotOff == wantOff)
         assert(gotOn == wantOff,
-          s"compaction changed the drain ($slabel packed=$packed slack=$slack):" +
+          s"compaction changed the drain ($slabel dist=$distributed slack=$slack):" +
             s"\n want=$wantOff\n got =$gotOn\n history=$history")
       }
     } finally {
       prevSlack match {
         case Some(v) => sys.props("graft.bi.slack") = v
         case None    => sys.props.remove("graft.bi.slack")
-      }
-      prevPacked match {
-        case Some(v) => sys.props("graft.bi.packed") = v
-        case None    => sys.props.remove("graft.bi.packed")
       }
     }
   }
@@ -706,7 +654,7 @@ class BiMaintainedSpec extends AnyFunSuite {
     // REGISTERED at compaction time, so a NEW granularity attached
     // later reads the compacted-trace approximation — the reference's
     // late-interest-over-advanced-trace semantics, documented in
-    // BiVis.compact.)
+    // BiPacked.compact.)
     val params = Gen.Parameters.default
     val prevSlack = sys.props.get("graft.bi.slack")
     try {

@@ -29,7 +29,7 @@ import graft.streaming.{BiMaintained, UnmaintainablePlan}
   *
   * Visibility semantics mirror the engine's documented completion of the
   * reference's underspecified corners (`BiEngine.asOfBi`,
-  * `BiVisibility.emitOf`): Raw CLAMPS negative net weights to absent
+  * `BiPacked`'s visible aggregate): Raw CLAMPS negative net weights to absent
   * (the unitemporal domain keeps them — the reference's bitemporal
   * tests, `tests/input_semantics.rs:337-508`, never drive net-negative
   * states, so the bi family standardizes on the clamp); Distinct keeps
@@ -195,14 +195,12 @@ class BiPlanFuzzSpec extends AnyFunSuite {
     assert(served >= 4, s"only $served/10 plans were served by BiMaintained")
   }
 
-  test("random plans agree on the boxed backend and the distributed store (dials forced)") {
-    // The main test runs the default packed/driver path; the boxed
-    // BiVisibility backend and the StateCell-distributed store implement
-    // visibility independently — re-fuzz a seed slice on each dial
-    // against the same naive oracle (the zoo spec pins fixed plans on
-    // these dials; this searches shapes).
+  test("random plans agree on the distributed store (dial forced)") {
+    // The main test runs the default driver store; the StateCell-
+    // distributed store serves visibility per partition — re-fuzz a seed
+    // slice on its dial against the same naive oracle (the zoo spec pins
+    // fixed plans on this dial; this searches shapes).
     for ((prop, value, label, seeds) <- Seq(
-        ("graft.bi.packed", "off", "boxed", 0 until 4),
         ("graft.bi.distributed", "on", "cell", 4 until 8))) {
       val prev = sys.props.get(prop)
       sys.props(prop) = value
@@ -234,7 +232,7 @@ class BiPlanFuzzSpec extends AnyFunSuite {
     // The corner the random histories rarely reach: at (0,1) the pair
     // (1, 7) has net weight -1 on a Raw attribute. The bi family's
     // documented completion CLAMPS it to absent (BiEngine.asOfBi,
-    // BiVisibility.emitOf) rather than emitting a negative-weight row
+    // BiPacked's visible aggregate) rather than emitting a negative-weight row
     // like the unitemporal domain — so NO diff is emitted at (0,1). The
     // later assertion at (1,0) IS visible there (the (0,1) retraction has
     // event 1 > 0, so it does not dominate (1,0)) and surfaces with +1;

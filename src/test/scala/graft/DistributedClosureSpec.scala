@@ -7,27 +7,16 @@ import graft.streaming.{DistributedClosure, IncrementalClosure}
 /** The distributed-adjacency closure must emit EXACTLY the per-batch
   * diffs of the broadcast-gated [[IncrementalClosure]] on any signed
   * edge stream — the two maintainers differ only in where the adjacency
-  * lives. Verified against both the sibling class and a driver-side BFS
+  * lives. Verified against both the sibling class and a driver-side closure
   * reference, at a FORCED multi-partition count (the kernel regression
   * rule: distributed kernels are tested with partitions pinned, not
   * whatever a size heuristic picks). */
 class DistributedClosureSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Driver-side reference closure by repeated BFS. */
-  private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] = {
-    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val nodes = edges.flatMap(e => Seq(e._1, e._2))
-    nodes.flatMap { s =>
-      val seen = scala.collection.mutable.Set.empty[Long]
-      var frontier = adj.getOrElse(s, Set.empty)
-      while (frontier.nonEmpty) {
-        seen ++= frontier
-        frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- seen
-      }
-      seen.map(d => (s, d))
-    }
-  }
+  /** Driver-side reference closure. */
+  private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] =
+    DriverClosure.of(edges)
 
   private def drain(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet

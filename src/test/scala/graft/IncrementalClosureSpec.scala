@@ -6,27 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.IncrementalClosure
 
 /** The streamed closure must emit, per batch, EXACTLY the tuples of
-  * closure(E ∪ Δe) − closure(E) — verified against a driver-side BFS
+  * closure(E ∪ Δe) − closure(E) — verified against a driver-side reference
   * closure on random edge batches, and end-to-end through the
   * foreachBatch attachment on a memory stream.
   */
 class IncrementalClosureSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Driver-side reference closure by repeated BFS. */
-  private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] = {
-    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val nodes = edges.flatMap(e => Seq(e._1, e._2))
-    nodes.flatMap { s =>
-      val seen = scala.collection.mutable.Set.empty[Long]
-      var frontier = adj.getOrElse(s, Set.empty)
-      while (frontier.nonEmpty) {
-        seen ++= frontier
-        frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)) -- seen
-      }
-      seen.map(d => (s, d))
-    }
-  }
+  /** Driver-side reference closure. */
+  private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] =
+    DriverClosure.of(edges)
 
   test("per-batch diffs equal closure(E ∪ Δe) − closure(E) on random batches") {
     val rnd = new scala.util.Random(42)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.compile.Compiler
 import graft.domain.AttributeSource
 import graft.model._
-import graft.model.ValueKind.{KEid, KNumber, KReal}
+import graft.model.ValueKind.{KEid, KNumber, KReal, KString}
 import graft.streaming.IncrementalQuery
 
 /** Composed incremental maintenance: across ANY history of signed datom
@@ -183,6 +183,18 @@ class IncrementalQuerySpec extends AnyFunSuite {
       val plan = Plan.Aggregate(Seq(1, 2), Plan.MatchA(1, ":m", 2),
         Seq(fn), Seq(1), Seq(2), Seq.empty)
       check(plan, genValidBatches(7919L * fn.hashCode, Seq(":m"), 3))
+    }
+  }
+
+  test("aggregate over its own group key is batch-exact (zero-width groups)") {
+    // COUNT/MIN of ?v grouped by ?v: every aggregated var is a key, so
+    // the grouped rows have no columns and the node's state takes the
+    // BoxedGroups backend — selected by row width, no dial.
+    import AggregationFn._
+    for (fn <- Seq(COUNT, MIN)) {
+      val plan = Plan.Aggregate(Seq(2, 2), Plan.MatchA(1, ":m", 2),
+        Seq(fn), Seq(2), Seq(2), Seq.empty)
+      check(plan, genBatches(104729L * fn.hashCode, Seq(":m"), 3))
     }
   }
 
@@ -743,88 +755,91 @@ class IncrementalQuerySpec extends AnyFunSuite {
 
   test("KReal support threshold: packed runs == boxed path; NaN is SQL-correct") {
     // Round 16: KReal columns join the PackedRuns fast path through the
-    // Hector cells' order-preserving encReal encoding. Parity with the
-    // boxed path (-Dgraft.iq.runs=off) on ordinary reals, and the NaN
-    // behavior the encoding FIXES pinned explicitly: a boxed Seq key's
-    // primitive == makes a NaN key unfindable (support never
-    // accumulates), while the packed key treats NaN = NaN like SQL.
+    // Hector cells' order-preserving encReal encoding. Both support-cell
+    // backends are driven through the same histories against literal
+    // expectations: the packed cell over an all-real row, and the boxed
+    // cell — selected by kind — over the same reals joined to a STRING
+    // column (a (KEid, KString, KReal) row is not packable). The NaN
+    // behavior the encoding FIXES is pinned explicitly: a boxed Seq key's
+    // primitive == would make a NaN key unfindable (support never
+    // accumulates), while the encoded key treats NaN = NaN like SQL.
     import spark.implicits._
-    val plan = Plan.Union(Seq(1, 2), Seq(Plan.MatchA(1, ":rr", 2)))
-    val kindsR = Map(":rr" -> KReal)
-    def drive(runsOff: Boolean,
+    val packedPlan = Plan.Union(Seq(1, 2), Seq(Plan.MatchA(1, ":rr", 2)))
+    val boxedPlan = Plan.Union(Seq(1, 2, 3), Seq(Plan.Project(Seq(1, 2, 3),
+      Plan.Join(Seq(1), Plan.MatchA(1, ":rr", 2), Plan.MatchA(1, ":rs", 3)))))
+    val kindsR = Map(":rr" -> KReal, ":rs" -> KString)
+    def drive(boxed: Boolean,
         batches: Seq[Seq[(Long, Double, Long)]]): Seq[String] = {
-      if (runsOff) sys.props("graft.iq.runs") = "off"
-      else sys.props -= "graft.iq.runs"
-      try {
-        val iq = new IncrementalQuery(spark, plan, kindsR)
-        batches.map { b =>
-          multiset(iq.advance(Map(":rr" -> b.toDF("e", "v", "diff"))))
-            .toSeq.map { case (k, w) => s"${k.mkString(",")}:$w" }
-            .sorted.mkString(";")
-        }
-      } finally sys.props -= "graft.iq.runs"
+      val iq = new IncrementalQuery(spark,
+        if (boxed) boxedPlan else packedPlan, kindsR)
+      batches.zipWithIndex.map { case (b, i) =>
+        val deltas = Map(":rr" -> b.toDF("e", "v", "diff")) ++
+          (if (boxed && i == 0)
+            Map(":rs" -> (1L to 9L).map(e => (e, "s", 1L)).toDF("e", "v", "diff"))
+          else Map.empty)
+        // The boxed row's string column is the constant "s": drop it so
+        // both backends render the same (e, v) rows.
+        multiset(iq.advance(deltas))
+          .toSeq.map { case (k, w) =>
+            s"${(if (boxed) Seq(k(0), k(1)) else k).mkString(",")}:$w" }
+          .sorted.mkString(";")
+      }
     }
-    // Ordinary reals (incl. a beyond-2^53 double): packed == boxed.
+    // Ordinary reals (incl. a beyond-2^53 double).
     val plain = Seq(
       Seq((1L, 1.5, 1L), (3L, 9.007199254740994e15, 1L), (1L, 1.5, 1L)),
       Seq((1L, 1.5, -1L), (2L, 0.25, 1L)),
       Seq((1L, 1.5, -1L), (2L, 0.25, -1L)))
-    assert(drive(runsOff = false, plain) == drive(runsOff = true, plain))
-    // NaN on the PACKED path: support accumulates across batches (one
-    // +1 at first support, nothing while supported, one -1 at zero) —
-    // and SAME-BATCH duplicate NaN rows (which the upstream boxed
-    // reduceByKey cannot merge) net to exactly ONE transition, not one
-    // per duplicate (the round-16 review's confirmed +2 repro).
+    val plainWant = Seq("1,1.5:1;3,9.007199254740994E15:1", "2,0.25:1",
+      "1,1.5:-1;2,0.25:-1")
+    // NaN: support accumulates across batches (one +1 at first support,
+    // nothing while supported, one -1 at zero) — and SAME-BATCH
+    // duplicate NaN rows (which the upstream boxed reduceByKey cannot
+    // merge) net to exactly ONE transition, not one per duplicate (the
+    // round-16 review's confirmed +2 repro).
     val nan = Seq(
       Seq((7L, Double.NaN, 1L), (7L, Double.NaN, 1L)),
       Seq((7L, Double.NaN, 1L)),
       Seq((7L, Double.NaN, -3L)))
-    val got = drive(runsOff = false, nan)
-    assert(got == Seq("7,NaN:1", "", "7,NaN:-1"),
-      s"packed NaN support must net per batch and accumulate like SQL: $got")
-    // Round 17: the BOXED path gets the same encoded-key treatment for
-    // KReal slots, so the off-dial is now a pure footprint A/B — NaN
-    // support accumulates identically (previously the boxed Seq key's
-    // primitive == left it unfindable and this read "+1;+1;+1").
-    val gotOff = drive(runsOff = true, nan)
-    assert(gotOff == Seq("7,NaN:1", "", "7,NaN:-1"),
-      s"boxed NaN support must match the packed path (one key semantics): $gotOff")
     // Emitted-sample canonicalization (round-16 advisory): asserting 0.0
     // in one batch and retracting -0.0 in a later one must emit a
     // CANCELABLE pair — both transitions keyed by the canonical 0.0
-    // boxed sample, on both dials.
+    // boxed sample.
     val signedZero = Seq(
       Seq((9L, 0.0, 1L)),
       Seq((9L, -0.0, -1L)))
-    for (off <- Seq(false, true)) {
-      val z = drive(runsOff = off, signedZero)
+    for (boxed <- Seq(false, true)) {
+      val p = drive(boxed, plain)
+      assert(p == plainWant, s"plain reals (boxed=$boxed): $p")
+      val n = drive(boxed, nan)
+      assert(n == Seq("7,NaN:1", "", "7,NaN:-1"),
+        s"NaN support must net per batch and accumulate like SQL (boxed=$boxed): $n")
+      val z = drive(boxed, signedZero)
       assert(z == Seq("9,0.0:1", "9,0.0:-1"),
-        s"signed-zero transitions must emit canonical samples (off=$off): $z")
+        s"signed-zero transitions must emit canonical samples (boxed=$boxed): $z")
     }
   }
 
   test("KReal threshold packing cuts measured resident bytes vs boxed") {
     // The packing's stated win is FOOTPRINT (wall-clock at the smoke was
-    // flat): pin the ~8x claim with the measured-bytes probe on the
-    // same 20k-row real-valued distinct threshold, packed vs
-    // -Dgraft.iq.runs=off.
+    // flat): pin it with the measured-bytes probe on a 20k-row
+    // real-valued distinct threshold, as an absolute per-entry bound 3x
+    // under the boxed support cell's figure for the same rows. That
+    // figure was measured with the boxed cell forced onto this plan
+    // (SizeEstimator, 64-bit JVM 17 with compressed oops): 2,430,376 B,
+    // 121.5 B/entry. The packed cell measured 24 B/entry there.
+    val boxedBytesPerEntry = 2430376.0 / 20000
     import spark.implicits._
     val plan = Plan.Union(Seq(1, 2), Seq(Plan.MatchA(1, ":rr", 2)))
     val kindsR = Map(":rr" -> KReal)
     val rows = (0 until 20000).map(i => (i.toLong, i * 0.5, 1L))
-    def bytes(runsOff: Boolean): Long = {
-      if (runsOff) sys.props("graft.iq.runs") = "off"
-      else sys.props -= "graft.iq.runs"
-      try {
-        val iq = new IncrementalQuery(spark, plan, kindsR)
-        iq.advance(Map(":rr" -> rows.toDF("e", "v", "diff"))).count()
-        iq.supportStateMeasuredBytes
-      } finally sys.props -= "graft.iq.runs"
-    }
-    val packed = bytes(runsOff = false)
-    val boxed = bytes(runsOff = true)
-    assert(packed > 0 && boxed > 0, s"probes must measure: $packed / $boxed")
-    assert(packed * 3 < boxed,
-      s"packed real threshold must be at least 3x smaller: packed=$packed boxed=$boxed")
+    val iq = new IncrementalQuery(spark, plan, kindsR)
+    iq.advance(Map(":rr" -> rows.toDF("e", "v", "diff"))).count()
+    val packed = iq.supportStateMeasuredBytes
+    val perEntry = packed.toDouble / rows.length
+    assert(packed > 0, "probe must measure")
+    assert(perEntry * 3 < boxedBytesPerEntry,
+      f"packed real threshold must stay 3x under the boxed $boxedBytesPerEntry%.1f B/entry: " +
+        f"$perEntry%.1f B/entry ($packed B)")
   }
 }

@@ -10,6 +10,11 @@ import graft.model.Plan._
   * must be a pure implementation swap: identical result sets to the
   * general semi-naive DataFrame loop on the same rules and data, and a
   * clean fallback (not a wrong answer) whenever its shape gates fail.
+  * Every path is checked against a driver-side closure
+  * ([[DriverClosure]]); each is reached by rule shape, never a dial:
+  * the bare binary closure takes the primitive-pair kernel, a `Filter`
+  * takes the generic boxed kernel, and a `Project`-wrapped recursive
+  * reference takes the general DataFrame loop.
   */
 class KernelFixpointSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
@@ -46,10 +51,28 @@ class KernelFixpointSpec extends AnyFunSuite {
     }.toSet
   }
 
-  private def withKernelOff[A](body: => A): A = {
-    sys.props("graft.fixpoint.kernel") = "off"
-    try body finally sys.props.remove("graft.fixpoint.kernel")
-  }
+  /** The closure with its recursive reference wrapped in a `Project` —
+    * the shape the kernel's bare-reference gate rejects, so it runs on
+    * the general DataFrame loop. */
+  private val nonBareClosureRules = Seq(
+    Rule("edges", matchA(0, ":edge", 1)),
+    Rule("closure", Union(Seq(0, 1), Seq(
+      NameExpr(Seq(0, 1), "edges"),
+      Project(Seq(0, 1), Join(Seq(2),
+        NameExpr(Seq(0, 2), "edges"),
+        Project(Seq(2, 1), NameExpr(Seq(2, 1), "closure"))))))))
+
+  /** The closure with a `Filter(x ≤ bound)` between the Project and the
+    * Join: a kernel-side JVM predicate, so the generic boxed kernel. */
+  private def filteredClosureRules(bound: Long) = Seq(
+    Rule("edges", matchA(0, ":edge", 1)),
+    Rule("closure", Union(Seq(0, 1), Seq(
+      NameExpr(Seq(0, 1), "edges"),
+      Filter(Seq(0), Predicate.LTE,
+        Project(Seq(0, 1), Join(Seq(2),
+          NameExpr(Seq(0, 2), "edges"),
+          NameExpr(Seq(2, 1), "closure"))),
+        Seq(None, Some(Value.num(bound))))))))
 
   test("kernel closure is correct across multiple partitions") {
     // 300 disjoint 11-node chains: 3000 edges exceed the 2000-row floor,
@@ -70,35 +93,25 @@ class KernelFixpointSpec extends AnyFunSuite {
 
   test("kernel and DataFrame loops agree on a random transitive closure") {
     val datoms = graphDatoms(60, seed = 7)
-    val viaKernel = runClosure(closureRules, datoms, "closure")
-    val viaDataFrame = withKernelOff(runClosure(closureRules, datoms, "closure"))
-    assert(viaKernel.nonEmpty)
-    assert(viaKernel == viaDataFrame)
-    // The primitive-pair fast path (binary long shape) and the generic
-    // boxed path must be pure implementation swaps of each other.
-    sys.props("graft.fixpoint.pairs") = "off"
-    val viaGeneric =
-      try runClosure(closureRules, datoms, "closure")
-      finally sys.props.remove("graft.fixpoint.pairs")
-    assert(viaGeneric == viaKernel)
+    val expected = DriverClosure.tuples(DriverClosure.of(DriverClosure.edgesOf(datoms)))
+    assert(expected.nonEmpty)
+    // Primitive-pair kernel (bare binary long closure).
+    assert(runClosure(closureRules, datoms, "closure") == expected)
+    // General DataFrame loop (non-bare recursive reference).
+    assert(runClosure(nonBareClosureRules, datoms, "closure") == expected)
+    // Generic boxed kernel: a filter every node passes keeps the result
+    // the full closure.
+    assert(runClosure(filteredClosureRules(60L), datoms, "closure") == expected)
   }
 
   test("filtered linear recursion runs on the kernel with identical results") {
     // Bounded reachability: a Filter between the Project and the Join
     // compiles to a kernel-side JVM predicate; results must match the
-    // general DataFrame loop exactly.
-    val rules = Seq(
-      Rule("edges", matchA(0, ":edge", 1)),
-      Rule("closure", Union(Seq(0, 1), Seq(
-        NameExpr(Seq(0, 1), "edges"),
-        Filter(Seq(0), Predicate.LTE,
-          Project(Seq(0, 1), Join(Seq(2),
-            NameExpr(Seq(0, 2), "edges"),
-            NameExpr(Seq(2, 1), "closure"))),
-          Seq(None, Some(Value.num(40))))))))
+    // driver-side bounded closure exactly.
     val datoms = graphDatoms(60, seed = 11)
-    val got = runClosure(rules, datoms, "closure")
-    val reference = withKernelOff(runClosure(rules, datoms, "closure"))
+    val got = runClosure(filteredClosureRules(40L), datoms, "closure")
+    val reference = DriverClosure.tuples(
+      DriverClosure.of(DriverClosure.edgesOf(datoms), _ <= 40L))
     assert(got.nonEmpty && got == reference)
   }
 
@@ -106,16 +119,10 @@ class KernelFixpointSpec extends AnyFunSuite {
     // A Project WRAPPING the recursive NameExpr inside the join breaks the
     // bare-reference gate; the fixpoint must still converge correctly via
     // the general loop.
-    val rules = Seq(
-      Rule("edges", matchA(0, ":edge", 1)),
-      Rule("closure", Union(Seq(0, 1), Seq(
-        NameExpr(Seq(0, 1), "edges"),
-        Project(Seq(0, 1), Join(Seq(2),
-          NameExpr(Seq(0, 2), "edges"),
-          Project(Seq(2, 1), NameExpr(Seq(2, 1), "closure"))))))))
     val datoms = graphDatoms(60, seed = 11)
-    val got = runClosure(rules, datoms, "closure")
-    val reference = withKernelOff(runClosure(rules, datoms, "closure"))
+    val got = runClosure(nonBareClosureRules, datoms, "closure")
+    val reference = DriverClosure.tuples(
+      DriverClosure.of(DriverClosure.edgesOf(datoms)))
     assert(got.nonEmpty && got == reference)
   }
 
@@ -127,9 +134,51 @@ class KernelFixpointSpec extends AnyFunSuite {
         Seq(AggregationFn.MIN), Seq(1), Seq(0), Seq.empty))
     val datoms = graphDatoms(40, seed = 3)
     val viaKernel = runClosure(rules, datoms, "labels")
-    val viaDataFrame = withKernelOff(runClosure(rules, datoms, "labels"))
+    // Driver-side labels: per target y, the MIN source x reaching it.
+    val expected: Set[Seq[Any]] =
+      DriverClosure.of(DriverClosure.edgesOf(datoms)).groupBy(_._2)
+        .map { case (y, ps) => Seq(y, ps.map(_._1).min): Seq[Any] }.toSet
     assert(viaKernel.nonEmpty)
-    assert(viaKernel == viaDataFrame)
+    assert(viaKernel == expected)
+  }
+
+  test("string-labelled reachability past the broadcast gate takes the boxed arrangement") {
+    // reach(x, l) :- label(x, l) ; edge(x, z), reach(z, l) with STRING
+    // labels: past the broadcast gate the static edges take the
+    // partitioned arrangement, and the string column keeps it off the
+    // primitive packed index — the boxed arrangement, selected by kind.
+    val rules = Seq(
+      Rule("edges", matchA(0, ":edge", 1)),
+      Rule("labels", matchA(0, ":label", 1)),
+      Rule("reach", Union(Seq(0, 1), Seq(
+        NameExpr(Seq(0, 1), "labels"),
+        Project(Seq(0, 1), Join(Seq(2),
+          NameExpr(Seq(0, 2), "edges"),
+          NameExpr(Seq(2, 1), "reach")))))))
+    val edgeDatoms = graphDatoms(40, seed = 5)
+    val labelled = Seq(0L -> "a", 7L -> "b", 19L -> "c", 33L -> "a")
+    val datoms = edgeDatoms ++ labelled.map { case (e, l) =>
+      Datom.add(e, ":label", Value.str(l)) }
+    // Driver-side: x reaches label l when x = z or x reaches z, z has l.
+    val cl = DriverClosure.of(DriverClosure.edgesOf(edgeDatoms))
+    val expected: Set[Seq[Any]] = labelled.flatMap { case (z, l) =>
+      (cl.collect { case (x, `z`) => x } + z).map(x => Seq[Any](x, l))
+    }.toSet
+    def run(): Set[Seq[Any]] = {
+      val engine = new Engine(spark)
+      engine.createAttribute(":edge", AttributeConfig(InputSemantics.Distinct))
+      engine.createAttribute(":label", AttributeConfig(InputSemantics.Distinct))
+      rules.foreach(engine.register)
+      engine.interest("reach")
+      engine.transact(datoms)
+      engine.advance(1)
+      engine.drain("reach").map(_._1).toSet
+    }
+    // Threshold 60 ⇒ maxStaticRows = 1 at arity 2: the ~80-edge static
+    // routes through the partitioned arrangement, not the broadcast.
+    val got = TestSpark.withConf(TestSpark.BroadcastThreshold, "60")(run())
+    assert(expected.size > labelled.size)
+    assert(got == expected)
   }
 
   test("arrangement consolidates a negating NameExpr static (r11 review)") {
@@ -174,8 +223,6 @@ class KernelFixpointSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "60")
     try {
       val arranged = run()
-      val reference = withKernelOff(run())
-      assert(arranged == reference, s"arranged=$arranged reference=$reference")
       assert(arranged == Set(Seq(0L, 1L), Seq(1L, 2L)),
         s"negated static must contribute NOTHING, got $arranged")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -14,6 +14,19 @@ class PipelineOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** Driver-side union-find reference: each id → the minimum id of its
+    * component. */
+  private def minLabels(ids: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => (i, find(i)))
+  }
+
   test("connectedComponents: chains, singletons, separate components") {
     // Component 1: 1-2-3-4-5 as a CHAIN (diameter 4 — forces several
     // propagation rounds). Component 2: {10, 11}. Singletons: 20, 21.
@@ -38,12 +51,10 @@ class PipelineOpsSpec extends AnyFunSuite {
     val d = 256
     val pairs = (0 until d).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     val ids = (0L to d.toLong).toDF("id")
-    // Force the distributed kernel: a path this small would otherwise take
-    // the driver union-find shortcut.
-    sys.props("graft.cc.driver") = "off"
-    val (df, rounds) =
-      try Dedup.connectedComponentsWithRounds(pairs, ids)
-      finally sys.props -= "graft.cc.driver"
+    // Broadcasts disabled: a path this small would otherwise take the
+    // driver union-find shortcut, so this reaches the distributed kernel.
+    val (df, rounds) = TestSpark.withConf(TestSpark.BroadcastThreshold, "-1")(
+      Dedup.connectedComponentsWithRounds(pairs, ids))
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == (0L to d.toLong).map(i => (i, 0L)).toSet)
     assert(rounds <= 12, s"expected O(log d) rounds, got $rounds for diameter $d")
@@ -239,12 +250,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     val d = 256
     val pairs = (0 until d).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     val ids = (0L to d.toLong).toDF("id")
-    sys.props("graft.cc.driver") = "off"
     sys.props("graft.cc.partitions") = "4"
     val got =
-      try Dedup.connectedComponents(pairs, ids)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally { sys.props -= "graft.cc.driver"; sys.props -= "graft.cc.partitions" }
+      try TestSpark.withConf(TestSpark.BroadcastThreshold, "-1")(
+        Dedup.connectedComponents(pairs, ids)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      finally sys.props -= "graft.cc.partitions"
     assert(got == (0L to d.toLong).map(i => (i, 0L)).toSet)
   }
 
@@ -254,14 +265,17 @@ class PipelineOpsSpec extends AnyFunSuite {
       .filter(p => p._1 != p._2).map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
       .distinct.toDF("a", "b")
     val ids = (0L until 150L).toDF("id")
-    val viaDriver = Dedup.connectedComponents(pairs, ids)
+    // keep = the id IS its component's label.
+    val expected = minLabels(0L until 150L,
+        pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+      .map { case (i, l) => (i, l, i == l) }.toSet
+    def run() = Dedup.connectedComponents(pairs, ids)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    sys.props("graft.cc.driver") = "off"
-    val viaKernel =
-      try Dedup.connectedComponents(pairs, ids)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      finally sys.props -= "graft.cc.driver"
-    assert(viaDriver == viaKernel)
+    val viaDriver = run()
+    // Broadcasts disabled: the distributed kernel.
+    val viaKernel = TestSpark.withConf(TestSpark.BroadcastThreshold, "-1")(run())
+    assert(viaDriver == expected)
+    assert(viaKernel == expected)
   }
 
   test("asOfJoin: latest-at-or-before match, ties, and no-match nulls") {
@@ -356,15 +370,7 @@ class PipelineOpsSpec extends AnyFunSuite {
         val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
         if (a < b) (a, b) else (b, a)
       }.filter(p => p._1 != p._2).distinct
-      // driver-side union-find reference
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-      pairSeq.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = ids.map(i => (i, find(i))).toSet
+      val want = minLabels(ids, pairSeq).toSet
       val got = Dedup.connectedComponents(
         pairSeq.toDF("a", "b"), ids.toDF("id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

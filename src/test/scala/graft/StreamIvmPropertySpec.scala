@@ -72,9 +72,16 @@ class StreamIvmPropertySpec extends AnyFunSuite {
           .view.mapValues(_.map(_._2).sum).toMap
         all.collect { case ((e, v), w) if w > 0 => (Seq[Any](e, v), 1L) }
       case "aggregate" =>
+        // A key stays while its consolidated support has a positive
+        // entry and its net count is non-zero — even a NEGATIVE net count
+        // (Z-set {1:+1, 3:-1, 5:-1}: SUM = -7): the batch compiler's
+        // aggregate rule, and NaiveEval's.
         x.toSeq.groupBy(_._1._1).view
-          .mapValues(vs => (vs.map(u => u._1._2 * u._2).sum, vs.map(_._2).sum))
-          .collect { case (e, (s, sup)) if sup > 0 => (Seq[Any](e, s), 1L) }
+          .mapValues(vs => (vs.map(u => u._1._2 * u._2).sum,
+            vs.exists(_._2 > 0), vs.map(_._2).sum))
+          .collect { case (e, (s, pos, wsum)) if pos && wsum != 0L =>
+            (Seq[Any](e, s), 1L)
+          }
           .toMap
       case "minmax" =>
         // A key stays while its consolidated support has a positive
@@ -105,39 +112,60 @@ class StreamIvmPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("streamed diffs net to the batch result under random histories") {
+  /** Stream `hist` (per-batch `(attr, e, v, diff)` updates) through
+    * `plan` and return the accumulated net of the delivered diffs. */
+  private def streamedNet(plan: Plan, queryName: String,
+      hist: Seq[Seq[(Int, Long, Long, Long)]]): Map[Seq[Any], Long] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
+    val xs = MemoryStream[(Long, Long, Long, Long)]
+    val ys = MemoryStream[(Long, Long, Long, Long)]
+    val iq = new IncrementalQuery(spark, plan,
+      Map(":s/x" -> KNumber, ":s/y" -> KNumber))
+    val net = scala.collection.mutable.Map.empty[Seq[Any], Long]
+    val query = iq.attach(DatomStream.of(Map(
+      ":s/x" -> xs.toDF.toDF("e", "v", "t", "diff"),
+      ":s/y" -> ys.toDF.toDF("e", "v", "t", "diff"))), queryName) { (_, df) =>
+      df.collect().foreach { r =>
+        val tuple: Seq[Any] = r.toSeq.init
+        net(tuple) = net.getOrElse(tuple, 0L) + r.getLong(r.length - 1)
+      }
+    }
+    try {
+      hist.zipWithIndex.foreach { case (tx, i) =>
+        tx.foreach {
+          case (0, e, v, d) => xs.addData((e, v, i.toLong, d))
+          case (_, e, v, d) => ys.addData((e, v, i.toLong, d))
+        }
+        query.processAllAvailable()
+      }
+      net.filter(_._2 != 0L).toMap
+    } finally query.stop()
+  }
+
+  test("streamed SUM at a negative net count with a positive entry matches NaiveEval") {
+    // One entity at values {1:+1, 3:-1, 5:-1}: net count -1, but the
+    // value-1 entry keeps the consolidated support non-empty, so the key
+    // stays with SUM = 1 - 3 - 5 = -7.
+    val plan = plans.toMap.apply("aggregate")
+    val hist = Seq(Seq((0, 1L, 1L, 1L)), Seq((0, 1L, 3L, -1L), (0, 1L, 5L, -1L)))
+    val attrs: NaiveEval.Attrs = Map(":s/x" -> hist.flatten
+      .groupMapReduce(u => (u._2, u._3: Any))(_._4)(_ + _))
+    val want = NaiveEval.eval(plan, attrs).rows
+      .map { case (row, w) => (row: Seq[Any], w) }
+    assert(want == Map(Seq[Any](1L, -7L) -> 1L), s"NaiveEval: $want")
+    assert(expected(plan, "aggregate", hist.flatten) == want)
+    assert(streamedNet(plan, "sipq_sum_negative", hist) == want)
+  }
+
+  test("streamed diffs net to the batch result under random histories") {
     val seedBase = 20260812L
     for ((name, plan) <- plans; round <- 0 until 3) {
       val hist = genHistory(Gen.Parameters.default, Seed(seedBase + round))
         .getOrElse(Seq.empty)
-      val xs = MemoryStream[(Long, Long, Long, Long)]
-      val ys = MemoryStream[(Long, Long, Long, Long)]
-      val iq = new IncrementalQuery(spark, plan,
-        Map(":s/x" -> KNumber, ":s/y" -> KNumber))
-      val net = scala.collection.mutable.Map.empty[Seq[Any], Long]
-      val query = iq.attach(DatomStream.of(Map(
-        ":s/x" -> xs.toDF.toDF("e", "v", "t", "diff"),
-        ":s/y" -> ys.toDF.toDF("e", "v", "t", "diff"))),
-        s"sipq_${name}_$round") { (_, df) =>
-        df.collect().foreach { r =>
-          val tuple: Seq[Any] = r.toSeq.init
-          net(tuple) = net.getOrElse(tuple, 0L) + r.getLong(r.length - 1)
-        }
-      }
-      try {
-        hist.zipWithIndex.foreach { case (tx, i) =>
-          tx.foreach {
-            case (0, e, v, d) => xs.addData((e, v, i.toLong, d))
-            case (_, e, v, d) => ys.addData((e, v, i.toLong, d))
-          }
-          query.processAllAvailable()
-        }
-        val got = net.filter(_._2 != 0L).toMap
-        val want = expected(plan, name, hist.flatten)
-        assert(got == want, s"plan=$name round=$round hist=$hist")
-      } finally query.stop()
+      val got = streamedNet(plan, s"sipq_${name}_$round", hist)
+      val want = expected(plan, name, hist.flatten)
+      assert(got == want, s"plan=$name round=$round hist=$hist")
     }
   }
 }

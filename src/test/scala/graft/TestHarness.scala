@@ -25,6 +25,22 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with session conf `key` set to `value`, restoring the
+    * previous setting (or unsetting it) afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** `spark.sql.autoBroadcastJoinThreshold`, the byte gate every
+    * driver/broadcast-vs-distributed choice reads (`-1` disables it). */
+  val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
 }
 
 /** One live datom stream in the shape `IncrementalQuery.attach` drains

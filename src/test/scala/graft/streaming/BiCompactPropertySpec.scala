@@ -9,7 +9,7 @@ import graft.model.InputSemantics
 /** Unit-level compaction exactness, wider than the integrated drain
   * parity: for random signed bitemporal histories (duplicate times,
   * retractions, LWW seq races), random registered-window sets, and a
-  * compaction at a mid-history bound, BOTH backends must emit
+  * compaction at a mid-history bound, the packed store must emit
   * IDENTICAL view transitions from the compacted and uncompacted
   * stores when driven through identical per-lane transition schedules —
   * at every lattice time, for every registered window. This pins the
@@ -40,7 +40,7 @@ class BiCompactPropertySpec extends AnyFunSuite {
   private val windowZoo: Seq[Option[(Long, Long)]] =
     Seq(None, Some((2L, 2L)), Some((3L, 2L)), Some((5L, 1L)))
 
-  private def run(seedBase: Long, mk: () => BiVis): Unit = {
+  private def run(seedBase: Long): Unit = {
     val params = Gen.Parameters.default
     for {
       (sem, si) <- Seq(InputSemantics.Raw, InputSemantics.Distinct,
@@ -50,7 +50,7 @@ class BiCompactPropertySpec extends AnyFunSuite {
       val seed = Seed(seedBase + si * 7919L + s * 104729L)
       val history = genHistory(params, seed).getOrElse(Seq.empty)
       val wins = windowZoo.take(1 + (s % windowZoo.length))
-      val semR: BiVisibility.Sem = _ => sem
+      val semR: BiTime.Sem = _ => sem
 
       // Ingest the full history at fine times, sorted by sys so the
       // processing order is a legal lex schedule per lane.
@@ -59,7 +59,7 @@ class BiCompactPropertySpec extends AnyFunSuite {
         val key = if (lww) BiKey(":cp/x", d.e, null) else BiKey(":cp/x", d.e, d.v)
         (key, BiRec(d.sys, d.event, i.toLong, d.diff, if (lww) d.v else null))
       }
-      val base = mk().ingest(recs)
+      val base = BiPacked.empty.ingest(recs)
 
       // Per-lane lattice: the coarse times of the history under each
       // window, processed in lex order. The compaction bound sits
@@ -76,7 +76,7 @@ class BiCompactPropertySpec extends AnyFunSuite {
         (lane, w, lattice(w))
       }
 
-      def drive(v0: BiVis, compactAtHalf: Boolean): (BiVis, Vector[String]) = {
+      def drive(v0: BiPacked, compactAtHalf: Boolean): (BiPacked, Vector[String]) = {
         var v = v0
         val out = Vector.newBuilder[String]
         val cursor = schedules.map { case (lane, w, ts) =>
@@ -123,8 +123,7 @@ class BiCompactPropertySpec extends AnyFunSuite {
       val outPlain = outRawPlain.sorted
       val outComp = outRawComp.sorted
       assert(outComp == outPlain,
-        s"compaction changed transitions (sem=$sem s=$s wins=$wins " +
-          s"backend=${base.getClass.getSimpleName}):\n" +
+        s"compaction changed transitions (sem=$sem s=$s wins=$wins):\n" +
           s" plain=$outPlain\n comp =$outComp\n history=$history")
       // Final emitted views agree per lane too.
       wins.indices.foreach { lane =>
@@ -137,11 +136,8 @@ class BiCompactPropertySpec extends AnyFunSuite {
   }
 
   test("packed: compacted == uncompacted transitions across the window zoo") {
-    run(910001L, () => BiPacked.empty)
-  }
-
-  test("boxed: compacted == uncompacted transitions across the window zoo") {
-    run(920003L, () => BiVisibility.empty)
+    run(910001L)
+    run(920003L)
   }
 
   test("the adversarial staircase shape: cross-window winner divergence is kept") {

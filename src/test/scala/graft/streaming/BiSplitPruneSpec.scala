@@ -14,24 +14,11 @@ import graft.model.InputSemantics
   * must fall back to the all-keys candidate scan and still be exact. */
 class BiSplitPruneSpec extends AnyFunSuite {
 
-  private val sem: BiVisibility.Sem = _ => InputSemantics.Raw
+  private val sem: BiTime.Sem = _ => InputSemantics.Raw
 
   private def recs = (0 until 200).map { i =>
     BiKey(":b/x", i.toLong, (i * 10).toLong) ->
       BiRec(sys = i % 10, event = i % 7, seq = i, diff = 1L, v = (i * 10).toLong)
-  }
-
-  test("boxed transitions prune sys entries at or under the min lane bound") {
-    val boxed0 = BiVisibility.empty.ingest(recs)
-    val (boxed1, _) = boxed0.transition(0, None, None, (4L, 10L), sem, 4L)
-    assert(boxed1.bySys.keysIterator.forall(_ > 4L),
-      s"dead sys entries survive the boxed prune: ${boxed1.bySys.keySet}")
-    val parts = boxed1.split(3)
-    parts.foreach { p =>
-      assert(p.bySys.keysIterator.forall(_ > 4L),
-        s"dead sys entries survive the boxed split: ${p.bySys.keySet}")
-    }
-    assert(parts.map(_.datomCount).sum == 200L)
   }
 
   test("packed split sheds dead sys weight and transitions exactly (r11 review)") {
@@ -42,7 +29,8 @@ class BiSplitPruneSpec extends AnyFunSuite {
     val unpruned = packedU.split(3)
     assert(pruned.map(_.estimatedBytes).sum < unpruned.map(_.estimatedBytes).sum,
       "pruned split must shed the dead sys index weight")
-    def step(vs: Seq[BiVis]): Set[(String, Any, Any, Long)] =
+    assert(pruned.map(_.datomCount).sum == 200L)
+    def step(vs: Seq[BiPacked]): Set[(String, Any, Any, Long)] =
       vs.flatMap(_.transition(0, None, Some((4L, 10L)), (9L, 3L), sem, 9L)._2).toSet
     val whole = packedP.transition(0, None, Some((4L, 10L)), (9L, 3L), sem, 9L)._2.toSet
     assert(step(pruned) == whole && step(unpruned) == whole,
@@ -54,26 +42,23 @@ class BiSplitPruneSpec extends AnyFunSuite {
     // replays from scratch — its slabs reach into the pruned region, so
     // candidates must come from the datom runs, not the (emptied) sys
     // index. Its cumulative emitted view must equal lane 0's.
-    for (mk <- Seq(() => BiPacked.empty: BiVis, () => BiVisibility.empty: BiVis)) {
-      var vis = mk().ingest(recs)
-      var out0 = Vector.empty[(String, Any, Any, Long)]
-      for (s <- 0L to 9L) {
-        val prev = if (s == 0L) None else Some((s - 1L, 6L))
-        val (next, rows) = vis.transition(0, None, prev, (s, 6L), sem, s)
-        vis = next; out0 ++= rows
-      }
-      var out1 = Vector.empty[(String, Any, Any, Long)]
-      for (s <- 0L to 9L) {
-        val prev = if (s == 0L) None else Some((s - 1L, 6L))
-        val (next, rows) = vis.transition(1, None, prev, (s, 6L), sem, Long.MinValue)
-        vis = next; out1 ++= rows
-      }
-      def net(xs: Vector[(String, Any, Any, Long)]) =
-        xs.groupBy(x => (x._1, x._2, x._3)).view
-          .mapValues(_.map(_._4).sum).filter(_._2 != 0L).toMap
-      assert(net(out1) == net(out0),
-        s"late-lane replay diverged on ${vis.getClass.getSimpleName}")
-      assert(vis.dumpEmitted(1).toSet == vis.dumpEmitted(0).toSet)
+    var vis = BiPacked.empty.ingest(recs)
+    var out0 = Vector.empty[(String, Any, Any, Long)]
+    for (s <- 0L to 9L) {
+      val prev = if (s == 0L) None else Some((s - 1L, 6L))
+      val (next, rows) = vis.transition(0, None, prev, (s, 6L), sem, s)
+      vis = next; out0 ++= rows
     }
+    var out1 = Vector.empty[(String, Any, Any, Long)]
+    for (s <- 0L to 9L) {
+      val prev = if (s == 0L) None else Some((s - 1L, 6L))
+      val (next, rows) = vis.transition(1, None, prev, (s, 6L), sem, Long.MinValue)
+      vis = next; out1 ++= rows
+    }
+    def net(xs: Vector[(String, Any, Any, Long)]) =
+      xs.groupBy(x => (x._1, x._2, x._3)).view
+        .mapValues(_.map(_._4).sum).filter(_._2 != 0L).toMap
+    assert(net(out1) == net(out0), "late-lane replay diverged")
+    assert(vis.dumpEmitted(1).toSet == vis.dumpEmitted(0).toSet)
   }
 }
