@@ -257,9 +257,12 @@ class Compiler(
     // this fixpoint sees the tuned ones. Memoized results are consumed
     // after the loop on whatever thread asks — i.e. under user settings.
     //
-    // Adaptive execution re-plans and materializes every shuffle as its
-    // own query stage — pure overhead at fixpoint-round granularity (each
-    // round is already a small, known-shape plan).
+    // The AQE-off setting below is meant to spare each round's shuffles
+    // their own query stages, but on Spark 4.1 it does not take effect:
+    // InsertAdaptiveSparkPlan reads the session's conf, not this
+    // thread-local one, so rounds still plan adaptively (see
+    // IncrementalQuery.tunedControl and TunedControlScopeSpec). The
+    // codegen setting does apply.
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val wscgKey = "spark.sql.codegen.wholeStage"

@@ -34,8 +34,9 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
   private val interests = mutable.LinkedHashSet.empty[String]
   private val initialized = mutable.Set.empty[String]
   private val granularities = mutable.Map.empty[String, Long]
-  private val prevSnapshots =
-    mutable.Map.empty[String, Map[Seq[Any], Long]].withDefaultValue(Map.empty)
+  // Last collected snapshot per rule: grouping key -> (tuple, weight).
+  private val prevSnapshots = mutable.Map.empty[String,
+    Map[Seq[Any], (Seq[Any], Long)]].withDefaultValue(Map.empty)
   private val outputs =
     mutable.Map.empty[String, mutable.ArrayBuffer[(Seq[Any], Long, Long)]]
   // Diffs coarsened to a future interval bound are held here until the
@@ -397,13 +398,16 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
         case None =>
           val cur = snapshot(name, processedThrough - 1)
           val buf = outputs(name)
-          cur.foreach { case (tuple, w) => buf += ((tuple, frontier, w)) }
+          cur.valuesIterator.foreach { case (tuple, w) => buf += ((tuple, frontier, w)) }
           prevSnapshots(name) = cur
       }
       initialized += name
     }
 
     val times = domain.pendingTimes(0L, next).filter(_ >= earliestUnprocessed)
+    // Each attribute's delta feed at a time is built once, on first use,
+    // and shared by every maintained rule that reads it.
+    val feeds = mutable.Map.empty[(String, Long), Option[(DataFrame, Long)]]
     for (t <- times; name <- interests) {
       // Delivery granularity: coarsen emitted times STRICTLY up to the next
       // interval bound — (t/g + 1)·g even at exact multiples (the reference
@@ -411,9 +415,11 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
       // frontier passes that bound.
       val coarse = granularities.get(name).map(g => (t / g + 1L) * g)
       if (incrementalQs.contains(name)) {
-        val deltas = incrementalDeltas(name, t, t + 1)
+        val (deltas, counts) = incrementalDeltas(name,
+          a => feeds.getOrElseUpdate((a, t), bufferFeed(a, t, t + 1L)))
         if (deltas.nonEmpty) {
-          val diff = incrementalQs(name).advance(deltas)
+          val diff = incrementalQs(name).advance(deltas, counts,
+            consolidate = sinks.contains(name))
           sinks.get(name) match {
             case Some(sink) =>
               // Data-sized delivery: the maintained diffs go to the sink
@@ -457,8 +463,9 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
               (c, pendingCoarse.getOrElseUpdate(name, mutable.ArrayBuffer.empty))
             case None => (t, outputs(name))
           }
-          (cur.keySet ++ prev.keySet).foreach { tuple =>
-            val d = cur.getOrElse(tuple, 0L) - prev.getOrElse(tuple, 0L)
+          (cur.keySet ++ prev.keySet).foreach { k =>
+            val (tuple, w) = cur.getOrElse(k, (prev(k)._1, 0L))
+            val d = w - prev.get(k).fold(0L)(_._2)
             if (d != 0L) buf += ((tuple, tOut, d))
           }
           prevSnapshots(name) = cur
@@ -599,9 +606,13 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     staticsPending(name) =
       iq.referencedAttributes.filter(a => domain.staticFrame(a).isDefined)
     if (processedThrough > 0L) {
-      val deltas = incrementalDeltas(name, 0L, processedThrough)
+      val (deltas, counts) =
+        incrementalDeltas(name, bufferFeed(_, 0L, processedThrough))
       if (deltas.nonEmpty) {
-        val diffs = iq.advance(deltas)
+        // Only a replay the Engine collects skips the distributed
+        // consolidation (a conversion delivers nothing, so it needs none).
+        val diffs = iq.advance(deltas, counts,
+          consolidate = deliverReplay && sinks.contains(name))
         if (deliverReplay) sinks.get(name) match {
           case Some(sink) =>
             sink.deliver(name, frontier, sinkFrame(diffs, frontier))
@@ -637,84 +648,98 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     math.max(1, math.min(spark.sparkContext.defaultParallelism, byRows))
   }
 
-  /** Per-attribute delta frames for a maintained rule over datom times in
-    * [from, until); pending static bulk attributes ride along with the
-    * first batch that feeds them (weight-1 initial load). */
-  private def incrementalDeltas(
-      name: String, from: Long, until: Long): Map[String, DataFrame] = {
+  /** The driver-buffered delta feed of attribute `a` over datom times in
+    * [from, until), with its row count: known here, so no maintained
+    * rule pays a job to count it. */
+  private def bufferFeed(
+      a: String, from: Long, until: Long): Option[(DataFrame, Long)] = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val iq = incrementalQs(name)
+    val k = domain.knownKinds(a)
+    val isLww = domain.staticFrame(a).isEmpty &&
+      domain.semanticsOf(a) == InputSemantics.LastWriteWins
+    val (rows, fields) =
+      if (isLww) {
+        // LWW maintenance consumes raw ordered EVENTS — consolidating
+        // by (e, v) here would erase the (t, seq) transaction order
+        // the latest-wins view is defined over.
+        (domain.bufferedEvents(a, from, until).map {
+          case (e, v, t, d, q) => Row(e, v, t, d, q) }, Seq("t", "diff", "seq"))
+      } else
+        (domain.bufferedDeltas(a, from, until).map {
+          case (e, v, d) => Row(e, v, d) }, Seq("diff"))
+    if (rows.isEmpty) None
+    else {
+      val schema = StructType(Seq(
+        StructField("e", LongType, false),
+        StructField("v", k.dataType, true)) ++
+        fields.map(StructField(_, LongType, false)))
+      Some((spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, feedPartitions(rows.size)),
+        schema), rows.size.toLong))
+    }
+  }
+
+  /** Per-attribute delta frames for a maintained rule, plus the row
+    * counts the Engine knows; pending static bulk attributes ride along
+    * with the first batch that feeds them (weight-1 initial load). A
+    * static feed's size is unknown, so its attribute gets no count and
+    * takes IncrementalQuery's counted checkpoint. */
+  private def incrementalDeltas(
+      name: String, feeds: String => Option[(DataFrame, Long)])
+      : (Map[String, DataFrame], Map[String, Long]) = {
     val statics = staticsPending.getOrElse(name, Set.empty)
     staticsPending(name) = Set.empty
     val staticFeeds: Map[String, DataFrame] = statics.iterator.map { a =>
       a -> domain.staticFrame(a).get
         .select(col("e"), col("v"), lit(1L).as("diff"))
     }.toMap
-    val bufferFeeds: Map[String, DataFrame] =
-      iq.referencedAttributes.iterator.flatMap { a =>
-        val k = domain.knownKinds(a)
-        val isLww = domain.staticFrame(a).isEmpty &&
-          domain.semanticsOf(a) == InputSemantics.LastWriteWins
-        if (isLww) {
-          // LWW maintenance consumes raw ordered EVENTS — consolidating
-          // by (e, v) here would erase the (t, seq) transaction order
-          // the latest-wins view is defined over.
-          val evs = domain.bufferedEvents(a, from, until)
-          if (evs.isEmpty) None
-          else {
-            val schema = StructType(Seq(
-              StructField("e", LongType, false),
-              StructField("v", k.dataType, true),
-              StructField("t", LongType, false),
-              StructField("diff", LongType, false),
-              StructField("seq", LongType, false)))
-            val rows = evs.map { case (e, v, t, d, q) => Row(e, v, t, d, q) }
-            Some(a -> spark.createDataFrame(
-              spark.sparkContext.parallelize(rows, feedPartitions(rows.size)),
-              schema))
-          }
-        } else {
-          val ds = domain.bufferedDeltas(a, from, until)
-          if (ds.isEmpty) None
-          else {
-            val schema = StructType(Seq(
-              StructField("e", LongType, false),
-              StructField("v", k.dataType, true),
-              StructField("diff", LongType, false)))
-            val rows = ds.map { case (e, v, d) => Row(e, v, d) }
-            Some(a -> spark.createDataFrame(
-              spark.sparkContext.parallelize(rows, feedPartitions(rows.size)),
-              schema))
-          }
-        }
-      }.toMap
-    (staticFeeds.keySet ++ bufferFeeds.keySet).iterator.map { a =>
-      a -> ((staticFeeds.get(a), bufferFeeds.get(a)) match {
-        case (Some(s), Some(b)) => s.unionByName(b)
-        case (Some(s), None)    => s
-        case (None, Some(b))    => b
-        case (None, None)       => sys.error("unreachable")
-      })
+    val buffered: Map[String, (DataFrame, Long)] =
+      incrementalQs(name).referencedAttributes.iterator
+        .flatMap(a => feeds(a).map(a -> _)).toMap
+    val deltas = (staticFeeds.keySet ++ buffered.keySet).iterator.map { a =>
+      a -> (staticFeeds.get(a) ++ buffered.get(a).map(_._1))
+        .reduce(_ unionByName _)
     }.toMap
+    (deltas, buffered.collect {
+      case (a, (_, n)) if !staticFeeds.contains(a) => a -> n })
   }
 
-  /** Collect a maintained query's consolidated diff frame into drain
-    * tuples (same deepNative canonicalization as the snapshot path).
-    * `pathArray` mirrors [[snapshot]]'s unpacking: a Pull result's single
+  /** Collect a maintained query's UNCONSOLIDATED diff frame into drain
+    * tuples, consolidating on the driver: what the distributed `groupBy`
+    * would return, without its shuffle. */
+  private def collectDiffs(df: DataFrame, pathArray: Boolean): Seq[(Seq[Any], Long)] =
+    keyed(df.collect(), pathArray).valuesIterator.filter(_._2 != 0L).toSeq
+
+  /** Collected result rows summed per tuple under Spark's grouping
+    * equality ([[Engine.groupKey]]): grouping key -> (drain tuple,
+    * weight). Drain tuples take one canonical form on both serving
+    * paths: [[Engine.deepNative]], with NaN and -0.0 normalized as
+    * `groupBy` normalizes them. `pathArray`: a Pull result's single
     * array<variant> cell IS the path, and drained tuples must have the
     * reference's flat `Vec<Value>` path shape on BOTH serving paths
     * (`tests/pull_test.rs` expectations; caught by the plan fuzz — the
     * maintained route used to drain the packed cell wrapped). */
-  private def collectDiffs(df: DataFrame, pathArray: Boolean): Seq[(Seq[Any], Long)] =
-    df.collect().iterator.map { row =>
+  private def keyed(rows: Array[Row], pathArray: Boolean)
+      : mutable.LinkedHashMap[Seq[Any], (Seq[Any], Long)] = {
+    val acc = mutable.LinkedHashMap.empty[Seq[Any], (Seq[Any], Long)]
+    rows.foreach { row =>
       val n = row.length - 1
-      val tuple: Seq[Any] =
-        if (pathArray) Engine.deepNative(row.get(0)).asInstanceOf[Seq[Any]]
-        else (0 until n).map(i => Engine.deepNative(row.get(i)))
-      (tuple, row.getLong(n))
-    }.toSeq
+      val cells = if (pathArray) Seq(row.get(0)) else (0 until n).map(row.get)
+      val key = cells.map(Engine.groupKey)
+      val w = row.getLong(n)
+      acc.get(key) match {
+        case Some((tuple, w0)) => acc(key) = (tuple, w0 + w)
+        case None =>
+          val native = cells.map(c => Engine.normalizeReals(Engine.deepNative(c)))
+          val tuple =
+            if (pathArray) native.head.asInstanceOf[Seq[Any]] else native
+          acc(key) = (tuple, w)
+      }
+    }
+    acc
+  }
 
-  private def snapshot(name: String, t: Long): Map[Seq[Any], Long] = {
+  private def snapshot(name: String, t: Long): Map[Seq[Any], (Seq[Any], Long)] = {
     snapshotRecomputes(name) += 1L
     val compiler = new Compiler(domain.asOf(t), domain.rules,
       aggregateSetSemantics = setSemantics)
@@ -722,15 +747,9 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     resultKinds(name) =
       if (rel.isPathArray) Seq(ValueKind.KVariant) else rel.kinds
     if (rel.isPathArray) pathArrayResults += name else pathArrayResults -= name
-    val n = rel.df.columns.length - 1 // tuple width without _w
-    rel.df.collect().iterator.map { row =>
-      // Pull results with heterogeneous arity arrive as one array<variant>
-      // column — unpack it so tuples compare against plain expectations.
-      val tuple =
-        if (rel.isPathArray) Engine.deepNative(row.get(0)).asInstanceOf[Seq[Any]]
-        else (0 until n).map(i => Engine.deepNative(row.get(i)))
-      tuple -> row.getLong(n)
-    }.toMap
+    // Pull results with heterogeneous arity arrive as one array<variant>
+    // column — unpacked so tuples compare against plain expectations.
+    keyed(rel.df.collect(), rel.isPathArray).toMap
   }
 }
 
@@ -761,6 +780,32 @@ object Engine {
     case 4         => Seq(r.get(5), r.get(6)) // rational
     case 8         => r.get(4) // real
     case other     => sys.error(s"unknown variant tag $other")
+  }
+
+  /** Grouping key of a collected cell under Spark's grouping equality:
+    * floating values compare as their normalized bits (every NaN equal,
+    * -0.0 = 0.0 — Catalyst's `NormalizeFloatingNumbers`), also inside
+    * structs (variants) and arrays (pull paths), and binary by content.
+    * Boxed `==` would keep a NaN tuple apart from itself. */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => RealBits(java.lang.Double.doubleToLongBits(d + 0.0))
+    case f: Float  => RealBits(java.lang.Float.floatToIntBits(f + 0.0f).toLong)
+    case r: Row    => r.toSeq.map(groupKey)
+    case b: Array[Byte] => b.toSeq
+    case a: Array[_] => a.toSeq.map(groupKey)
+    case s: scala.collection.Seq[_] => s.map(groupKey).toSeq
+    case other => other
+  }
+
+  private final case class RealBits(bits: Long)
+
+  /** The value Spark's `groupBy` outputs for a [[deepNative]] cell: NaN
+    * canonical, -0.0 as 0.0, nested sequences alike. */
+  private def normalizeReals(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else d + 0.0
+    case f: Float  => if (f.isNaN) Float.NaN else f + 0.0f
+    case s: scala.collection.Seq[_] => s.map(normalizeReals).toSeq
+    case other => other
   }
 
   /** Expected-side canonical form of a `Value`, matching `deepNative`. */

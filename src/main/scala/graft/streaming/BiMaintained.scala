@@ -1219,8 +1219,9 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         // truncation share ONE job instead of eager-then-count's two.
         val diff = pendingDelta.withColumnRenamed("_w", "_diff")
           .graftCheckpoint(false)
-        // Proven-small staged delta → control-plan conf for the one
-        // materializing cut+gate job (see processTime's gate).
+        // Proven-small staged delta → control-plan conf (no codegen;
+        // adaptive execution stays on) for the one materializing
+        // cut+gate job (see processTime's gate).
         val nDiff =
           if (stagedSmall) IncrementalQuery.tunedControl(partitions)(diff.count())
           else diff.count()
@@ -1367,13 +1368,15 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     // driver-known count and they sum under `graft.bi.smalladvance` —
     // the standings' DELTA-SIZED plans (advance output consolidation,
     // the sink fast path's pending-delta cut) materialize under
-    // [[IncrementalQuery.tunedControl]]: adaptive stage materialization
-    // costs 2+ scheduler round-trips per exchange, the dominant cost of
-    // a small lattice-time advance (measured: the bitemporal cells run
-    // ~2.3 Spark jobs per time, nearly all AQE stage jobs). Data-sized
-    // transitions (any unknown or large count) keep the full adaptive
-    // conf, as do the R/ledger-sized merges and consolidation folds —
-    // this is a size gate on proven-small plans, not a mode.
+    // [[IncrementalQuery.tunedControl]]. That scope was meant to turn
+    // adaptive execution off (its stage jobs cost 2+ scheduler
+    // round-trips per exchange), but on Spark 4.1 it does not: the
+    // plans stay adaptive, while codegen and the shuffle-partition count
+    // follow the scope (TunedControlScopeSpec; the `btrace` line below
+    // prints `aqe=false` next to an adaptive plan).
+    // Data-sized transitions (any unknown or large count) keep the
+    // session conf, as do the R/ledger-sized merges and consolidation
+    // folds — this is a size gate on proven-small plans, not a mode.
     val small = deltas.nonEmpty &&
       deltas.valuesIterator.forall(_._2.isDefined) &&
       deltas.valuesIterator.map(_._2.get).sum <= BiMaintained.smallAdvanceRows
@@ -1513,10 +1516,10 @@ object BiMaintained {
   /** Row gate for the per-time small-advance conf (processTime): a
     * lattice-time transition whose driver-known frame counts sum at or
     * under this runs its delta-sized standing plans under the
-    * control-plan conf ([[IncrementalQuery.tunedControl]]). 64k rows is
-    * comfortably below where adaptive partition coalescing starts
-    * earning its per-exchange stage jobs; data-sized transitions
-    * (unknown or larger counts) keep the adaptive conf. Dial:
+    * control-plan conf ([[IncrementalQuery.tunedControl]]: no codegen,
+    * the state partition count; adaptive execution stays on, as that
+    * scope cannot turn it off on Spark 4.1). Data-sized transitions
+    * (unknown or larger counts) keep the session conf. Dial:
     * `-Dgraft.bi.smalladvance=<rows>`. */
   private[streaming] def smallAdvanceRows: Long =
     sys.props.get("graft.bi.smalladvance").map(_.toLong).getOrElse(65536L)

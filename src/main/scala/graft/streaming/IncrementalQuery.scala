@@ -2099,10 +2099,11 @@ class IncrementalQuery(
         f"[recursion] +${(System.nanoTime() - recT0) / 1e9}%.2fs $msg")
 
     /** The batch fixpoint's per-round conf (thread-local, never session
-      * global): each round is a new SMALL plan, so adaptive re-planning,
-      * whole-stage codegen compilation, and constraint-propagation
-      * lineage walks cost more driver time than they save in executor
-      * time at per-round data sizes. */
+      * global): each round is a new SMALL plan, so whole-stage codegen
+      * compilation and constraint-propagation lineage walks cost more
+      * driver time than they save in executor time at per-round data
+      * sizes. Its AQE-off setting does not take effect on Spark 4.1 —
+      * see [[IncrementalQuery.tunedControl]]. */
     private def tuned[T](f: => T): T = {
       val c = org.apache.spark.sql.internal.SQLConf.get.clone()
       c.setConfString("spark.sql.adaptive.enabled", "false")
@@ -2581,25 +2582,28 @@ class IncrementalQuery(
   private val attrLwws = mutable.Map.empty[String, AttrLww]
 
   /** Apply one batch of signed per-attribute deltas (`e, v, diff` rows)
-    * and return the EXACT consolidated output diffs `(c0..cn, _w)` of
-    * the whole plan. Deltas for `distinctAttrs` pass a per-attribute
-    * support threshold first, so the plan sees the Distinct-semantics
-    * relation's set transitions; deltas for `lwwAttrs` must carry raw
-    * ordered EVENTS (`e, v, t, diff, seq` rows) and pass a per-attribute
-    * LastWriteWins view, so the plan sees the latest-event-wins
-    * relation's transitions. */
-  def advance(deltas: Map[String, DataFrame]): DataFrame =
-    advance(deltas, Map.empty)
-
-  /** [[advance]] with caller-known per-attribute delta row counts: a
-    * DRIVER-BUILT delta frame (the DriverBiStore's parallelize-backed
-    * transition frames) already knows its size, so the per-attribute
-    * materialize+count job exists only to rediscover it — skip both
-    * (recomputing a parallelize-backed select is free, so the
+    * and return the EXACT output diffs `(c0..cn, _w)` of the whole plan.
+    * Deltas for `distinctAttrs` pass a per-attribute support threshold
+    * first, so the plan sees the Distinct-semantics relation's set
+    * transitions; deltas for `lwwAttrs` must carry raw ordered EVENTS
+    * (`e, v, t, diff, seq` rows) and pass a per-attribute LastWriteWins
+    * view, so the plan sees the latest-event-wins relation's transitions.
+    *
+    * `knownCounts` carries caller-known per-attribute delta row counts:
+    * a DRIVER-BUILT delta frame (the Engine's buffer feeds, the
+    * DriverBiStore's transition frames) already knows its size, so the
+    * per-attribute materialize+count job would only rediscover it — skip
+    * both (recomputing a parallelize-backed select is free, so the
     * checkpoint buys nothing either). Attributes absent from
-    * `knownCounts` take the counted-checkpoint path unchanged. */
+    * `knownCounts` take the counted-checkpoint path.
+    *
+    * `consolidate = false` returns the root's diff unconsolidated (a
+    * tuple may repeat, weights may cancel) for callers that collect it
+    * anyway and sum weights where the rows land — saving the
+    * consolidation shuffle and its adaptive stage job. */
   def advance(deltas: Map[String, DataFrame],
-      knownCounts: Map[String, Long]): DataFrame = {
+      knownCounts: Map[String, Long] = Map.empty,
+      consolidate: Boolean = true): DataFrame = {
     // Per attribute: the raw delta materializes through ONE counted
     // checkpoint job (the count doubles as the emptiness probe), and
     // the input view's output emptiness reads off the state commit's
@@ -2643,13 +2647,16 @@ class IncrementalQuery(
     }
     if (attrDeltas.isEmpty) root.emptyDiff
     else {
-      // Multiset canonicalization before delivery (differential's
-      // per-batch `consolidate()`): one O(output diff) shuffle.
       val raw = root.advance(attrDeltas)
-      val cols = raw.columns.filter(_ != Rel.W).map(col).toIndexedSeq
-      raw.groupBy(cols: _*)
-        .agg(org.apache.spark.sql.functions.sum(col(Rel.W)).as(Rel.W))
-        .where(col(Rel.W) =!= 0L)
+      if (!consolidate) raw
+      else {
+        // Multiset canonicalization before delivery (differential's
+        // per-batch `consolidate()`): one O(output diff) shuffle.
+        val cols = raw.columns.filter(_ != Rel.W).map(col).toIndexedSeq
+        raw.groupBy(cols: _*)
+          .agg(org.apache.spark.sql.functions.sum(col(Rel.W)).as(Rel.W))
+          .where(col(Rel.W) =!= 0L)
+      }
     }
   }
 
@@ -2734,16 +2741,17 @@ class IncrementalQuery(
 object IncrementalQuery {
 
   /** Control-sized plan conf (thread-local, never session-global): run
-    * `f`'s plan materializations with adaptive execution, whole-stage
-    * codegen, and constraint propagation OFF and the shuffle-partition
-    * dial at the caller's STATE dial. For a plan the caller has PROVEN
-    * control-sized (driver-known row counts under a gate), adaptive
-    * stage materialization costs 2+ scheduler round-trips per exchange
-    * — the dominant cost of a small advance — while buying nothing a
-    * fixed state-dial shuffle doesn't already give; codegen compilation
-    * likewise costs more driver time than it saves in executor time at
-    * these sizes (the recursion rounds' measured `tuned{}` finding).
-    * Size-gated by the CALLER: data-sized plans must never come here. */
+    * `f`'s plan materializations with whole-stage codegen and constraint
+    * propagation OFF and the shuffle-partition dial at the caller's
+    * STATE dial — codegen compilation costs more driver time than it
+    * saves in executor time at these sizes (the recursion rounds'
+    * measured `tuned{}` finding). The scope also sets
+    * `spark.sql.adaptive.enabled=false`, but on Spark 4.1 that does NOT
+    * turn adaptive execution off: `InsertAdaptiveSparkPlan` reads the
+    * session's conf, not the thread's `SQLConf.get`, so plans planned
+    * here are still `AdaptiveSparkPlanExec` with their per-exchange
+    * stage jobs (pinned by `TunedControlScopeSpec`). Size-gated by the
+    * CALLER: data-sized plans must never come here. */
   def tunedControl[T](shufflePartitions: Int)(f: => T): T = {
     val c = org.apache.spark.sql.internal.SQLConf.get.clone()
     c.setConfString("spark.sql.adaptive.enabled", "false")
