@@ -1,5 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+
+/** The driver's timing harness: runs every bench cell once on a warmed
+  * session and prints two JSON lines on stdout — a full-precision record
+  * (per-cell seconds, per-cell Spark-side `layers`, host and
+  * contamination probes) and a final driver-facing line ([[tailLine]]).
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> [SPARK_GRAFT_ONLY=q_a,q_b]
+  *        sbt "runMain graft.Bench"
+  */
 object Bench {
   /** Host contention probe: (1-min load average, count of OTHER java
     * processes). Emitted at window start and end so a reader of the
@@ -80,6 +92,127 @@ object Bench {
   private def hostContaminated(load: Double, jvms: Int): Boolean =
     load < 0.0 || jvms < 0 || load > 2.0 || jvms > 1
 
+  /** One cell's Spark-side cost — the layer split its wall seconds
+    * cannot show: jobs, completed stages and tasks, summed executor task
+    * time and GC, shuffle bytes, and Janino codegen compiles. Wall time
+    * minus task time over cores is driver time (planning, per-job
+    * submission, checkpoint bookkeeping). */
+  private[graft] final case class Layers(
+      jobs: Long = 0L, stages: Long = 0L, tasks: Long = 0L,
+      taskMs: Long = 0L, gcMs: Long = 0L,
+      shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L,
+      codegenCompiles: Long = 0L, codegenNs: Long = 0L) {
+    def -(o: Layers): Layers = Layers(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, taskMs - o.taskMs, gcMs - o.gcMs,
+      shuffleReadBytes - o.shuffleReadBytes,
+      shuffleWriteBytes - o.shuffleWriteBytes,
+      codegenCompiles - o.codegenCompiles, codegenNs - o.codegenNs)
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        s""""task_s":${ms3(taskMs)},"gc_s":${ms3(gcMs)},""" +
+        s""""shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,""" +
+        s""""codegen_compiles":$codegenCompiles,""" +
+        s""""codegen_ms":${ms3(codegenNs / 1000L)}}"""
+  }
+
+  /** Monotone session-wide counters; a cell's [[Layers]] is the
+    * difference of two reads taken around it. */
+  private final class LayerListener extends SparkListener {
+    private val jobs, stages, tasks, taskMs, gcMs, shR, shW = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet(); ()
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = e.taskMetrics
+      if (m != null) {
+        taskMs.addAndGet(m.executorRunTime)
+        gcMs.addAndGet(m.jvmGCTime)
+        shR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
+      ()
+    }
+    /** The counters once every event posted so far has been delivered
+      * (a bus flush, not a sleep). Codegen counters are JVM-global:
+      * local-mode executors compile in this JVM too. */
+    def read(sc: SparkContext): Layers = {
+      // A bus still busy after the flush's 10 s wait costs attribution
+      // (late events land on the next cell), never the run.
+      try org.apache.spark.GraftBus.flush(sc)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+      Layers(jobs.get, stages.get, tasks.get, taskMs.get, gcMs.get,
+        shR.get, shW.get,
+        org.apache.spark.metrics.source.CodegenMetrics
+          .METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+          .compileTime)
+    }
+  }
+
+  /** One measured cell: seconds (-1 when it failed), its failure
+    * message, and its Spark-side layers. */
+  private[graft] final case class Cell(
+      name: String, secs: Double, error: Option[String], layers: Layers)
+
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Integer milliseconds as a plain decimal count of seconds
+    * ("1.234", "1.2", "0"); Locale-free, so always valid JSON. */
+  private def ms3(ms: Long): String =
+    BigDecimal(ms, 3).bigDecimal.stripTrailingZeros.toPlainString
+
+  /** Upper bound on the driver-facing line: the driver parses the last
+    * 2000 chars of stdout, and sbt may add a trailing line after it. */
+  private[graft] val TailLimit = 1880
+
+  /** Share of [[TailLimit]] the errors (with an empty `queries`) may
+    * take; the rest is kept for per-cell seconds. */
+  private val ErrorBudget = 1200
+
+  /** The driver-facing last stdout line,
+    * `{metric,value,unit,queries,errors,sf}`, at most [[TailLimit]]
+    * chars. `queries` holds the slowest successful cells by full name
+    * plus an `_other` sum of the rest; every value is a whole count of
+    * milliseconds, so the printed values add up EXACTLY to `value`.
+    * Failed cells count towards no value and are listed in `errors`,
+    * whose messages shrink (60, 20, 0 chars, then a bare count) before
+    * they may take more than [[ErrorBudget]] of the line. The host and
+    * contamination block stays on the full-precision line. */
+  private[graft] def tailLine(cells: Seq[Cell], sf: String): String = {
+    val ok = cells.filter(_.error.isEmpty)
+      .map(c => c.name -> math.round(c.secs * 1000.0))
+      .sortBy { case (n, ms) => (-ms, n) }
+    val totalMs = ok.map(_._2).sum
+    val failed = cells.collect { case Cell(n, _, Some(m), _) => (n, m) }
+    def line(top: Int, errs: String): String = {
+      val kept = ok.take(top)
+      val qs = (kept.map { case (n, ms) => jstr(n) + ":" + ms3(ms) } :+
+        ("\"_other\":" + ms3(totalMs - kept.map(_._2).sum)))
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${ms3(totalMs)},"unit":"sec","queries":$qs,"errors":$errs,"sf":${jstr(sf)}}"""
+    }
+    val errs = (Iterator(60, 20, 0).map(k => failed.map { case (n, m) =>
+      jstr(n) + ":" + jstr(m.take(k)) }.mkString("{", ",", "}")) ++
+      Iterator(s"""{"_n":${failed.length}}"""))
+      .find(e => line(0, e).length <= ErrorBudget)
+      .getOrElse(s"""{"_n":${failed.length}}""")
+    // The line grows with every kept cell: keep the longest prefix that fits.
+    val top = (1 to ok.length).takeWhile(k => line(k, errs).length <= TailLimit)
+      .lastOption.getOrElse(0)
+    line(top, errs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Act on the flag BEFORE the window opens (r17 VERDICT #3): four
@@ -111,12 +244,14 @@ object Bench {
       cwaits += 1
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Session conf posture lives in GraftSession (shared with Verify/
-    // Plans/Profile/StreamScaleSmoke — one definition, no per-entry-point
-    // drift); the GRAFT_CONF A/B hook is parsed there and EMBEDDED in the
-    // output below so a capture run with overrides is self-describing.
+    // Session conf posture lives in GraftSession (shared with Verify and
+    // Plans — one definition, no per-entry-point drift); the GRAFT_CONF
+    // A/B hook is parsed there and EMBEDDED in the output below so a
+    // capture run with overrides is self-describing.
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val meter = new LayerListener
+    spark.sparkContext.addSparkListener(meter)
     // Warm the session first (codegen compilation, parquet footer reads,
     // broadcast machinery, domain-catalog load for the bench SF) so startup
     // cost isn't attributed to whichever query happens to run first.
@@ -143,14 +278,6 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
       only.forall(_.contains(name))
     }
-    // Shared cross-query artifacts (the corpus token-hash pass, LSH
-    // bucket/pair tables, the digest-group family) are built once per
-    // (session, SF) and read by many queries; building them under their
-    // OWN named cell stops the cost landing on whichever consumer runs
-    // first alphabetically (the q_dedup_clusters / q_contamination
-    // attribution adjudications). The "a_" prefix sorts the cell first,
-    // making the artifact line self-describing. Skipped for
-    // SPARK_GRAFT_ONLY subsets (local iteration keeps raw attribution).
     // MID-RUN stall probes (r18 adjudication): the driver's 32-core r18
     // window read clean on every start/end gate yet its cells were 2-5x
     // inflated — the stall began after window start and recovered before
@@ -162,43 +289,43 @@ object Bench {
     // window cannot read clean, while a brief page-cache burp on a few
     // probes cannot flag a quiet one).
     val midCalib = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val artRow: Seq[(String, Double, Option[String])] =
-      if (only.nonEmpty) Seq.empty
-      else {
-        midCalib += calibrateCpu()
-        val t0 = System.nanoTime()
-        val err =
-          try { graft.queries.PipelineQueries.prebuildSharedArtifacts(spark, sfDir); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
-        val secs = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
-        Seq(("a_shared_artifacts", secs, err))
-      }
-    // A failing query must be VISIBLE in the artifact: its queries entry
-    // goes negative (-1, unmistakable as a timing) and its exception
-    // message lands in a top-level "errors" object — a broken query can
-    // never masquerade as a fast one.
-    val results = artRow ++ selected.map { case (name, fn) =>
+    // A failing cell must be VISIBLE in the artifact: its seconds go
+    // negative (-1, unmistakable as a timing) and its exception message
+    // lands in the "errors" object — a broken query can never
+    // masquerade as a fast one. The layer reads (bus flushes) sit
+    // outside the timer.
+    def measure(name: String)(body: => Unit): Cell = {
       midCalib += calibrateCpu()
+      val before = meter.read(spark.sparkContext)
       val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None }
+      val err = try { body; None }
         catch { case e: Throwable =>
           Some(Option(e.getMessage).getOrElse(e.getClass.getName)) }
       val secs = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
-      (name, secs, err)
+      Cell(name, secs, err, meter.read(spark.sparkContext) - before)
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    // Shared cross-query artifacts (the corpus token-hash pass, LSH
+    // bucket/pair tables, the digest-group family) are built once per
+    // (session, SF) and read by many queries; building them under their
+    // OWN named cell stops the cost landing on whichever consumer runs
+    // first alphabetically (the q_dedup_clusters / q_contamination
+    // attribution adjudications). The "a_" prefix sorts the cell first,
+    // making the artifact line self-describing. Skipped for
+    // SPARK_GRAFT_ONLY subsets (local iteration keeps raw attribution).
+    val artRow: Seq[Cell] =
+      if (only.nonEmpty) Seq.empty
+      else Seq(measure("a_shared_artifacts")(
+        graft.queries.PipelineQueries.prebuildSharedArtifacts(spark, sfDir)))
+    val results = artRow ++ selected.map { case (name, fn) =>
+      measure(name) { val _ = fn(spark, sfDir).count() }
+    }
+    val qs = results.map(c => jstr(c.name) + ":" + c.secs)
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(m)) =>
-      s"\"" + k + "\":" + jstr(m.take(300)) }.mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
+    val errs = results.collect { case Cell(k, _, Some(m), _) =>
+      jstr(k) + ":" + jstr(m.take(300)) }.mkString("{", ",", "}")
+    val layers = results.map(c => jstr(c.name) + ":" + c.layers.json)
+      .mkString("{", ",", "}")
+    val total = results.collect { case c if c.error.isEmpty => c.secs }.sum
     val (loadEnd, jvmsEnd) = hostLoad()
     val (cpuEnd, ioEnd) = calibrate()
     def c3(v: Double): String =
@@ -245,33 +372,9 @@ object Bench {
         .mkString(""","conf_overrides":{""", ",", "}")
     val host = s""""contaminated":$contaminated,"host":{"load_start":$loadStart,"load_end":$loadEnd,"jvms_start":$jvmsStart,"jvms_end":$jvmsEnd,"calib_cpu_start":${c3(cpuStart)},"calib_io_start":${c3(ioStart)},"calib_cpu_end":${c3(cpuEnd)},"calib_io_end":${c3(ioEnd)},"calib_cpu_mid_med":${c3(midMed)},"calib_cpu_mid_max":${c3(midMax)},"calib_cpu_mid_n":${midCalib.length}}$confStr"""
     // Full-precision line first — the per-round capture files keep whole
-    // stdout, so this is the builder/judge A/B record.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,$host,"sf":"$sfDir"}""")
-    def fmt(v: Double, p: Int): String = {
-      // Locale.ROOT: a default locale with comma decimal separators
-      // would make the JSON line unparseable.
-      val s = String.format(java.util.Locale.ROOT, s"%.${p}f", v: java.lang.Double)
-        .reverse.dropWhile(_ == '0').reverse
-      if (s.endsWith(".")) s.dropRight(1) else s
-    }
-    // The driver keeps only the LAST 2000 chars of stdout and parses a
-    // JSON line out of that tail. At 95 cells the per-query NAMES alone
-    // are ~1.8k chars — no precision trick fits a per-query map into the
-    // tail next to sbt's own trailing lines, which is why every driver
-    // comparison since r16 read parsed=null. The final line therefore
-    // carries NO per-query map: total + errors + contamination + host
-    // (≤ ~700 chars), so the driver's total comparison and gates parse
-    // again. The full-precision line above keeps the per-query record
-    // for humans, judges, and the committed capture files.
-    def tailLine(errLimit: Int): String = {
-      val cerrs = results.collect { case (k, _, Some(m)) =>
-        s"\"" + k + "\":" + jstr(m.take(errLimit)) }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","errors":$cerrs,$host,"sf":"$sfDir"}"""
-    }
-    // Degrade error detail, never the metric, if many cells failed at
-    // once (the line must stay parseable inside the 2000-char tail).
-    println(Iterator(60, 20, 0).map(tailLine).find(_.length <= 1200)
-      .getOrElse(s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","errors":{"_n":${results.count(_._3.nonEmpty)}},$host,"sf":"$sfDir"}"""))
+    // stdout, so this is the builder/judge A/B and layer record.
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"layers":$layers,$host,"sf":${jstr(sfDir)}}""")
+    println(tailLine(results, sfDir))
     spark.stop()
   }
 }

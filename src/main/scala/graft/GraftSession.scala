@@ -2,11 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** ONE definition of the engine's default session-conf posture for every
-  * local entry point (Bench, Verify, Plans, Profile, StreamScaleSmoke).
-  * Before this factory the five builders were copy-pasted and drifted
-  * (StreamScaleSmoke missed the sort-writer setting for a round); any
-  * future default lands here once and every surface measures the same
-  * engine.
+  * local entry point (Bench, Verify, Plans). Before this factory the
+  * builders were copy-pasted and drifted (one missed the sort-writer
+  * setting for a round); any future default lands here once and every
+  * surface measures the same engine.
   *
   * The settings and why (see the r18 optimization notes for evidence):
   *  - `spark.sql.shuffle.partitions = cpus`: the bulk-side dial follows

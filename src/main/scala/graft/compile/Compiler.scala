@@ -286,9 +286,8 @@ class Compiler(
     // spark.sql.autoBroadcastJoinThreshold — a bare row-count gate would
     // happily broadcast 5M wide tuples and OOM the driver (round-2
     // advice). Oversized sides fall back to shuffled plans.
-    val bcBytes: Long = graft.kernel.RddKernel.broadcastThresholdBytes(spark)
     def canBroadcast(rows: Long, cols: Int): Boolean =
-      bcBytes > 0 && rows * (24L * cols + 8L) <= bcBytes
+      graft.kernel.RddKernel.broadcastable(spark, rows, 24L * cols + 8L)
 
     // Set semantics inside the loop applies to the LEAVES too — in BOTH
     // strategies: a Z-set input tuple with NEGATIVE net support (possible
@@ -1145,43 +1144,39 @@ class Compiler(
       mkExpand: () => K => Iterator[K],
       debugT0: Long)(implicit ct: scala.reflect.ClassTag[K])
       : (Vector[org.apache.spark.rdd.RDD[(K, Null)]], Long) = {
-    val kHops = math.max(1, Integer.getInteger("graft.fixpoint.khop", 4))
+    val kHops = graft.kernel.RddKernel.KernelHops
     val hopBudget = 1 << 16
     val expand: org.apache.spark.rdd.RDD[(K, Null)] =>
         org.apache.spark.rdd.RDD[(K, Null)] = { delta =>
       delta.mapPartitions { it =>
         val expandOne = mkExpand()
-        if (kHops <= 1) {
-          it.flatMap { case (t, _) => expandOne(t).map((_, null)) }
-        } else {
-          val seen = new java.util.LinkedHashSet[K]()
-          val hop1 = it.flatMap { case (t, _) =>
-            expandOne(t).map { c =>
-              if (seen.size < hopBudget) seen.add(c)
-              (c, null)
-            }
+        val seen = new java.util.LinkedHashSet[K]()
+        val hop1 = it.flatMap { case (t, _) =>
+          expandOne(t).map { c =>
+            if (seen.size < hopBudget) seen.add(c)
+            (c, null)
           }
-          // Iterator.++'s right side is by-name: this block runs only
-          // after hop 1 is exhausted (and `seen` is fully populated).
-          hop1 ++ locally {
-            val extra = scala.collection.mutable.ArrayBuffer.empty[K]
-            var frontier: Array[K] = {
-              import scala.jdk.CollectionConverters._
-              seen.iterator.asScala.toArray
-            }
-            var hop = 1
-            while (hop < kHops && frontier.nonEmpty && seen.size < hopBudget) {
-              val next = scala.collection.mutable.ArrayBuffer.empty[K]
-              val cs = frontier.iterator.flatMap(expandOne(_))
-              while (cs.hasNext && seen.size < hopBudget) {
-                val c = cs.next()
-                if (seen.add(c)) { next += c; extra += c }
-              }
-              frontier = next.toArray
-              hop += 1
-            }
-            extra.iterator.map((_, null))
+        }
+        // Iterator.++'s right side is by-name: this block runs only
+        // after hop 1 is exhausted (and `seen` is fully populated).
+        hop1 ++ locally {
+          val extra = scala.collection.mutable.ArrayBuffer.empty[K]
+          var frontier: Array[K] = {
+            import scala.jdk.CollectionConverters._
+            seen.iterator.asScala.toArray
           }
+          var hop = 1
+          while (hop < kHops && frontier.nonEmpty && seen.size < hopBudget) {
+            val next = scala.collection.mutable.ArrayBuffer.empty[K]
+            val cs = frontier.iterator.flatMap(expandOne(_))
+            while (cs.hasNext && seen.size < hopBudget) {
+              val c = cs.next()
+              if (seen.add(c)) { next += c; extra += c }
+            }
+            frontier = next.toArray
+            hop += 1
+          }
+          extra.iterator.map((_, null))
         }
       }
     }
@@ -1202,7 +1197,7 @@ class Compiler(
       : (Vector[org.apache.spark.rdd.RDD[(K, Null)]], Long) = {
     import org.apache.spark.rdd.RDD
     val maxChain = 16
-    // Round-loop job batching (r19, same dial as the maintained
+    // Round-loop job batching (r19, shared with the maintained
     // recursion): up to B semi-naive iterations chain LAZILY and
     // materialize through one tagged-count job — a depth-d fixpoint
     // costs ⌈d/B⌉ scheduler round-trips instead of d. Iterations are
@@ -1210,8 +1205,7 @@ class Compiler(
     // (expand(∅)=∅, so later speculative links are definitionally
     // empty and cost only empty partitions) — identical loop
     // semantics, batched materialization.
-    val roundBatch =
-      math.max(1, Integer.getInteger("graft.recursion.roundbatch", 4))
+    val roundBatch = graft.kernel.RddKernel.RoundBatch
     var parts = Vector[RDD[(K, Null)]](d0)
     var delta: RDD[(K, Null)] = d0
     var total = rows0

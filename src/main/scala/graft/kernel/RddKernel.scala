@@ -30,17 +30,41 @@ import org.apache.spark.rdd.RDD
   */
 object RddKernel {
 
-  /** The session's `autoBroadcastJoinThreshold` in bytes (accepts raw
-    * byte counts and size strings like "10MB") — the ONE byte gate every
-    * driver-landing/broadcast decision measures against (fixpoint loop,
-    * connected-components driver union-find). */
-  def broadcastThresholdBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+  /** Hops a kernel task expands its delta through the broadcast static
+    * side before the round's one dedup/subtract (batch fixpoint,
+    * maintained closure, maintained recursion kernel): a depth-d thin
+    * recursion pays ⌈d/KernelHops⌉ rounds of job overhead, at a bounded
+    * ~2× candidate volume. */
+  val KernelHops = 4
+
+  /** Semi-naive rounds chained lazily and materialized through one
+    * tagged-count job ([[materializeCounts]]): a depth-d fixpoint costs
+    * ⌈d/RoundBatch⌉ scheduler round-trips instead of d. */
+  val RoundBatch = 4
+
+  /** The ONE size proof behind every broadcast / driver-landing
+    * decision (fixpoint loop, maintained recursion kernel, hector
+    * probes, dedup union-find, label and digest broadcasts): `rows` of
+    * about `bytesPerRow` bytes each fit the session's
+    * `autoBroadcastJoinThreshold`. A threshold ≤ 0 — Spark's −1,
+    * broadcasts disabled — admits nothing. */
+  def broadcastable(spark: org.apache.spark.sql.SparkSession,
+      rows: Long, bytesPerRow: Long): Boolean =
+    rows <= broadcastRowCap(spark, bytesPerRow)
+
+  /** Rows of `bytesPerRow` bytes the byte gate admits (−1 when
+    * broadcasts are disabled): `broadcastable(rows)` ⇔ `rows ≤ cap`,
+    * overflow-free at any row count. */
+  def broadcastRowCap(spark: org.apache.spark.sql.SparkSession,
+      bytesPerRow: Long): Long = {
     val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try raw.toLong
-    catch {
-      case _: NumberFormatException =>
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-    }
+    val bytes =
+      try raw.toLong
+      catch {
+        case _: NumberFormatException =>
+          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
+      }
+    if (bytes <= 0L) -1L else bytes / bytesPerRow
   }
 
   /** Assert `part` on an RDD whose records are ALREADY placed

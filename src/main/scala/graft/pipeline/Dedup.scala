@@ -209,8 +209,7 @@ object Dedup {
     // decisions on estimated bytes vs the session's
     // autoBroadcastJoinThreshold (same byte gate as the fixpoint loop —
     // a bare row-count gate would admit arbitrarily wide rows).
-    val bcBytes: Long = graft.kernel.RddKernel.broadcastThresholdBytes(spark)
-
+    //
     // Gate-sized pair sets (the common case: candidate pairs are a tiny
     // fraction of the corpus) finish on the driver: union-find with
     // min-root union + path compression is O(E·α) — microseconds where the
@@ -219,7 +218,7 @@ object Dedup {
     // The distributed pointer-jumping kernel below is the scale path for
     // pair sets past the gate (and every pair set when broadcasts are
     // disabled).
-    if (bcBytes > 0 && nEdges * 32L <= bcBytes) {
+    if (graft.kernel.RddKernel.broadcastable(spark, nEdges, 32L)) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -330,7 +329,7 @@ object Dedup {
     val labelDf0 = labels.toDF("id", "lbl")
     // Broadcast the touched-node label table when it fits the same gate.
     val labelDf =
-      if (bcBytes > 0 && nTouched * (24L * 2 + 8L) <= bcBytes)
+      if (graft.kernel.RddKernel.broadcastable(spark, nTouched, 24L * 2 + 8L))
         broadcast(labelDf0)
       else labelDf0
     val result = allIds.join(labelDf, Seq("id"), "left")
@@ -614,9 +613,9 @@ object Dedup {
       md5(col(textCol)).as("digest"))
       .graftCheckpoint(true) // read by the digest-set build AND the final join
     val nDigests = batchD.select(col("digest")).distinct().count()
-    val bcBytes = graft.kernel.RddKernel.broadcastThresholdBytes(spark)
-    // ~72 bytes per broadcast-hash-relation row of one 32-char digest.
-    val exactSetFits = bcBytes <= 0 || nDigests * 72L <= bcBytes
+    // ~72 bytes per broadcast-hash-relation row of one 32-char digest;
+    // broadcasts disabled take the sketch path like an oversized set.
+    val exactSetFits = graft.kernel.RddKernel.broadcastable(spark, nDigests, 72L)
     val matches =
       if (exactSetFits) {
         corpusD.join(broadcast(batchD.select(col("digest")).distinct()),

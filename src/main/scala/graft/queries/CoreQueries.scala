@@ -508,16 +508,10 @@ object CoreQueries {
           col("c4").as("n"), col("c5").as("sum_ok"))
     }),
 
-    "q_bitemporal_maintain" -> ((s, dir) => {
-      // DuckDB oracle SQL below is pinned at gate 60000 — fail loudly if
-      // the legacy dial disagrees instead of silently diverging engine
-      // vs oracle (round-12 ADVICE); other gates go through
-      // bitemporalMaintainQ directly with a matching oracle.
-      sys.props.get("graft.bt.gate").foreach(g => require(g.toLong == 60000L,
-        s"q_bitemporal_maintain's oracle is pinned at gate 60000 (got $g); " +
-          "call bitemporalMaintainQ(gate) for other gates"))
-      bitemporalMaintainQ(s, dir, gate = 60000L, slack = None)
-    }),
+    // The DuckDB oracle SQL below is pinned at gate 60000; other gates
+    // go through bitemporalMaintainQ directly with a matching oracle.
+    "q_bitemporal_maintain" -> ((s, dir) =>
+      bitemporalMaintainQ(s, dir, gate = 60000L, slack = None)),
 
     "q_bitemporal_compacted" -> ((s, dir) =>
       // The q_bitemporal_maintain computation with TRACE COMPACTION ON

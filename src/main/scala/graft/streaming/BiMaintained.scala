@@ -958,7 +958,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     // control-sized (see processTime's small-advance gate) — the sink
     // fast path's pending-delta cut then materializes under the
     // control-plan conf. Reset pessimistically on any non-small stage.
-    private var stagedSmall = true
+    private[BiMaintained] var stagedSmall = true
 
     private[BiMaintained] def noteStaged(small: Boolean): Unit =
       stagedSmall &&= small
@@ -984,8 +984,13 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         iq = new IncrementalQuery(spark, plan, kinds, rulePlans,
           partitions = partitions)
         val replay = store.dump(lane.id, kindOf).view.filterKeys(refAttrs).toMap
-        if (replay.nonEmpty) accumulate(iq.advance(
-          BiStore.framesOnly(replay), BiStore.knownCounts(replay)))
+        if (replay.nonEmpty) {
+          accumulate(iq.advance(
+            BiStore.framesOnly(replay), BiStore.knownCounts(replay)))
+          // The replay stages the lane's whole view: it keeps the next
+          // sink cut on the control-plan conf only with a size proof.
+          noteStaged(BiMaintained.provenSmall(replay))
+        }
       } else if (kinds != current) {
         kinds = current
         iq = new IncrementalQuery(spark, plan, kinds, rulePlans,
@@ -1377,9 +1382,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     // Data-sized transitions (any unknown or large count) keep the
     // session conf, as do the R/ledger-sized merges and consolidation
     // folds — this is a size gate on proven-small plans, not a mode.
-    val small = deltas.nonEmpty &&
-      deltas.valuesIterator.forall(_._2.isDefined) &&
-      deltas.valuesIterator.map(_._2.get).sum <= BiMaintained.smallAdvanceRows
+    val small = BiMaintained.provenSmall(deltas)
     for (name <- laneInterests) {
       val st = standings(name)
       val sub = deltas.view.filterKeys(st.refAttrs).toMap
@@ -1494,6 +1497,12 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       case _              => None
     }
 
+  /** Spec probe: whether everything a standing staged since its last
+    * delivery is proven control-sized (read from inside a sink
+    * delivery, before the flag resets). */
+  private[graft] def stagedSmallProbe(name: String): Boolean =
+    standings(name).stagedSmall
+
   def controlPlaneStats: Map[String, Long] = Map(
     "lanes" -> lanes.size.toLong,
     "pendingTimes" -> lanes.valuesIterator.map(_.pendingTimes.size.toLong).sum,
@@ -1523,4 +1532,12 @@ object BiMaintained {
     * `-Dgraft.bi.smalladvance=<rows>`. */
   private[streaming] def smallAdvanceRows: Long =
     sys.props.get("graft.bi.smalladvance").map(_.toLong).getOrElse(65536L)
+
+  /** Size proof for the small-advance conf: non-empty frames whose
+    * driver-known counts cover every frame and sum under
+    * [[smallAdvanceRows]]. An unknown count (distributed state) proves
+    * nothing. */
+  private def provenSmall(fs: BiStore.Frames): Boolean =
+    fs.nonEmpty && fs.valuesIterator.forall(_._2.isDefined) &&
+      fs.valuesIterator.map(_._2.get).sum <= smallAdvanceRows
 }

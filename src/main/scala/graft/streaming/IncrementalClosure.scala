@@ -71,7 +71,7 @@ class IncrementalClosure(
     spark: SparkSession,
     partitions: Int = 8,
     maxEdges: Long = 5000000L,
-    kHops: Int = math.max(1, Integer.getInteger("graft.fixpoint.khop", 4))) {
+    kHops: Int = RddKernel.KernelHops) {
 
   private type Tup = (Long, Long)
   private val sc = spark.sparkContext
@@ -293,13 +293,12 @@ class IncrementalClosure(
       }
     }
     val cand0 = sc.parallelize(dels.map(e => (e: Tup, null)), 1).union(direct)
-    // Round-loop job batching (r19, shared dial with the recursion
+    // Round-loop job batching (r19, shared with the recursion
     // kernels): up to B rounds chain lazily and materialize through one
     // tagged-count job; links past the fixpoint are definitionally
     // empty. Consumed in order, first zero ends the loop — identical
     // semantics, ⌈depth/B⌉ scheduler round-trips.
-    val roundBatch =
-      math.max(1, Integer.getInteger("graft.recursion.roundbatch", 4))
+    val roundBatch = RddKernel.RoundBatch
     var oChain = Vector.empty[RDD[(Tup, Null)]]
     var oDelta = RddKernel.freshDelta(cand0, part, oChain)
     var n = oDelta.count()
@@ -409,7 +408,7 @@ class IncrementalClosure(
   }
 
   /** One fixpoint round's candidate generation: expand a delta by up to
-    * `graft.fixpoint.khop` REVERSE hops within each task (the batch
+    * `kHops` REVERSE hops within each task (the batch
     * kernel's k-hop round batching, [[graft.compile.Compiler]]
     * kernelIterate), deduping per partition under a hop budget — the
     * fixpoint pays diameter/k rounds of job overhead instead of

@@ -186,10 +186,8 @@ class IncrementalHector(
 
   /** Shared byte gate: rows of a 3-column (e, v, _w) frame vs the
     * session's autoBroadcastJoinThreshold (the fixpoint loop's estimate). */
-  private def broadcastable(rows: Long): Boolean = {
-    val bcBytes = graft.kernel.RddKernel.broadcastThresholdBytes(spark)
-    bcBytes > 0 && rows * (24L * 3 + 8L) <= bcBytes
-  }
+  private def broadcastable(rows: Long): Boolean =
+    graft.kernel.RddKernel.broadcastable(spark, rows, 24L * 3 + 8L)
 
   private def stateSchema(i: Int): StructType = StructType(Seq(
     StructField("e", LongType, false),

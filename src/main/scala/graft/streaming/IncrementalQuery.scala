@@ -217,20 +217,11 @@ class IncrementalQuery(
   // Registry of support cells for scale evidence (measured resident
   // bytes across every threshold-class state this query holds).
   private val supportCells = mutable.ArrayBuffer.empty[SupportCell]
-  // Same for the group-index cells (join/antijoin/aggregate/pull).
-  private val groupCellMeters = mutable.ArrayBuffer.empty[() => Long]
 
   /** Test hook: MEASURED resident bytes across all threshold-class
-    * support cells (real SizeEstimator walk — smokes only). */
+    * support cells (real SizeEstimator walk — tests only). */
   private[graft] def supportStateMeasuredBytes: Long =
     supportCells.iterator.map(_.measuredBytes).sum
-
-  /** Test hook: MEASURED resident bytes across all group-index cells
-    * (join / antijoin-left / aggregate / pull supports). */
-  private[graft] def groupStateMeasuredBytes: Long =
-    groupCellMeters.iterator.map(_()).sum
-
-
 
   /** Support-count cell shared by the Union threshold and the
     * Distinct-attribute threshold: row → net weight, emitting the ±1
@@ -492,10 +483,6 @@ class IncrementalQuery(
         () => (mk(), scala.collection.immutable.HashMap.empty),
         { case (l, r) => l.bytes + r.size * 200L })
     }
-    groupCellMeters += (() =>
-      cell.rdd.map { case (l, r) =>
-        IncrementalQuery.meterBytes(l) + IncrementalQuery.meterBytes(r) }
-        .fold(0L)(_ + _))
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
       if (!touched(attrDeltas)) emptyDiff
@@ -618,8 +605,6 @@ class IncrementalQuery(
       spark.sparkContext, shufflePartitions,
       GroupIndex.maker(keyIdx.map(input.nodeKinds),
         valueIdx.map(input.nodeKinds)), _.bytes)
-    groupCellMeters += (() =>
-      cell.rdd.map(IncrementalQuery.meterBytes).fold(0L)(_ + _))
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
       if (!touched(attrDeltas)) emptyDiff
@@ -723,10 +708,6 @@ class IncrementalQuery(
         sc, shufflePartitions, () => (lz(), rz()),
         { case (l, r) => l.bytes + r.bytes })
     }
-    groupCellMeters += (() =>
-      cell.rdd.map { case (l, r) =>
-        IncrementalQuery.meterBytes(l) + IncrementalQuery.meterBytes(r) }
-        .fold(0L)(_ + _))
 
     private def sideDelta(
         node: Node, part: Partitioner,
@@ -796,9 +777,6 @@ class IncrementalQuery(
         sc, shufflePartitions,
         GroupIndex.maker(Seq(graft.model.ValueKind.KEid),
           Seq(graft.model.ValueKind.KEid, kinds(a))), _.bytes)).toMap
-    groupCellMeters += (() =>
-      (childCell.rdd +: attrCells.valuesIterator.map(_.rdd).toSeq)
-        .map(_.map(IncrementalQuery.meterBytes).fold(0L)(_ + _)).sum)
 
     private def childSchema: StructType = StructType(
       child.nodeKinds.zipWithIndex.map { case (k, i) =>
@@ -1419,11 +1397,8 @@ class IncrementalQuery(
       * the (set, count) pairs IN ORDER and stops at the first zero —
       * identical loop semantics, batched materialization. Kernel path
       * only: the per-round Catalyst path would pay B speculative plan
-      * compiles, the cost the khop composition experiment measured as a
-      * loss. `-Dgraft.recursion.roundbatch=1` restores per-round jobs
-      * for A/B. */
-    private val roundBatch: Int =
-      math.max(1, Integer.getInteger("graft.recursion.roundbatch", 4))
+      * compiles. */
+    private val roundBatch: Int = graft.kernel.RddKernel.RoundBatch
 
     private def batchedRounds(d0: PSet, expand: PSet => RDD[Seq[Any]],
         trim: PSet => PSet, what: String): Seq[(PSet, Long)] = {
@@ -1461,7 +1436,7 @@ class IncrementalQuery(
       var roundDeltas = initial
       while (roundDeltas.nonEmpty) {
         val kernelCase = roundDeltas match {
-          case Seq((dn, _, d)) if dn == target && roundBatch > 1 =>
+          case Seq((dn, _, d)) if dn == target =>
             expandFn().map(f => (f, d))
           case _ => None
         }
@@ -1509,55 +1484,10 @@ class IncrementalQuery(
       rw(p)
     }
 
-    // ---- k-hop plan composition (single-rule LINEAR cliques) --------
-    // The dominant per-round cost at small deltas is DRIVER work (one
-    // Catalyst plan + one job per round); for a linear self-recursive
-    // rule, k consecutive delta rounds compose into ONE plan — hop i's
-    // recursive occurrence holds hop i−1's plan (head renamed to the
-    // occurrence's vars, internal vars freshened against capture), the
-    // nested Union roots dedup each hop — so a length-d derivation
-    // chain costs ⌈d/k⌉ plans instead of d. Sound for every phase: for
-    // monotone programs hop outputs stay inside the relevant fixpoint,
-    // and the block-end subtract/intersect trims rediscoveries exactly
-    // as the per-round form does. Own dial (`graft.recursion.khop`),
-    // measured default 1: at k=4 the nested plan's Catalyst cost grew
-    // superlinearly (130 → 600+ ms per plan) and ate the 36→14 round
-    // reduction; composition stays available for deep-chain workloads
-    // where executor rounds, not driver planning, dominate.
-    private val kHop: Int =
-      math.max(1, Integer.getInteger("graft.recursion.khop", 1))
+    // A single-rule clique with one recursive occurrence: the shape the
+    // linear RDD kernel below can take.
     private val linearSingle: Boolean =
       clique.lengthCompare(1) == 0 && occCount(bodies(target), target) == 1
-    private def allVars(p: Plan): Set[PVar] = {
-      val s = mutable.Set.empty[PVar]
-      IncrementalQuery.mapVars(p, v => { s += v; v })
-      s.toSet
-    }
-    private var freshBase: Int =
-      (bodies.values.flatMap(allVars) ++ sig.values.flatMap(_._1))
-        .foldLeft(0)(math.max) + 1
-
-    /** The target body with its single recursive occurrence replaced by
-      * `sub` — head vars renamed to the occurrence's vars, every other
-      * `sub` var freshened so nothing unifies with host-body vars. */
-    private def composeHop(sub: Plan): Plan = {
-      val hv = sig(target)._1
-      var done = false
-      def rw(q: Plan): Plan = q match {
-        case Plan.NameExpr(vs, n) if n == target && !done =>
-          done = true
-          val m = mutable.Map.empty[PVar, PVar] ++ hv.zip(vs)
-          IncrementalQuery.mapVars(sub, v => m.getOrElseUpdate(v,
-            { val f = freshBase; freshBase += 1; f }))
-        case Plan.Project(vs, s2) => Plan.Project(vs, rw(s2))
-        case f: Plan.Filter       => f.copy(plan = rw(f.plan))
-        case t: Plan.Transform    => t.copy(plan = rw(t.plan))
-        case Plan.Join(vs, l, r2) => val nl = rw(l); Plan.Join(vs, nl, rw(r2))
-        case Plan.Union(vs, ps)   => Plan.Union(vs, ps.map(rw))
-        case other                => other
-      }
-      rw(bodies(target))
-    }
 
     /** Drop Union branches that do not contain the varied occurrence —
       * the batch fixpoint's `derivative` rule, applied per variant: a
@@ -1588,8 +1518,7 @@ class IncrementalQuery(
       * elsewhere, non-delta union branches pruned), compiled and
       * planned ONCE — per-round Catalyst cost is per RULE, not per
       * occurrence, and the Union root already set-distincts the
-      * candidates. Linear single-rule cliques batch `kHop` hops into
-      * the plan (see above). */
+      * candidates. */
     private def roundStep(
         r: String,
         deltas: Seq[(String, Seq[ValueKind], PSet)],
@@ -1604,13 +1533,9 @@ class IncrementalQuery(
         val denv = env ++ deltas.map { case (dn, dk, ds) =>
           (dn + "@d") -> relOf(dk, Seq(ds), isSmall = true)
         }
-        val hop1 =
+        val plan =
           if (variants.lengthCompare(1) == 0) variants.head
           else Plan.Union(sig(r)._1, variants)
-        val plan =
-          if (!linearSingle || kHop <= 1) hop1
-          else Plan.Union(sig(r)._1,
-            Iterator.iterate(hop1)(composeHop).take(kHop).toSeq)
         Some(evalSet(plan, denv))
       }
     }
@@ -1790,10 +1715,10 @@ class IncrementalQuery(
       val env = inputs.map { case (n, _) =>
         n -> relOf(inputKinds(n), Seq(inputState(n)), isSmall = false)
       }.toMap
-      val bcBytes = graft.kernel.RddKernel.broadcastThresholdBytes(spark)
-      val maxRows =
-        if (bcBytes <= 0) Long.MaxValue
-        else bcBytes / (24L * sh.staticCols + 8L)
+      // Broadcasts disabled (threshold ≤ 0) admit no static side: the
+      // partitioned arrangement takes it, as past the gate.
+      val rowBytes = 24L * sh.staticCols + 8L
+      val maxRows = graft.kernel.RddKernel.broadcastRowCap(spark, rowBytes)
       if (maxRows <= 0L) return None
       val cap = math.min(maxRows, Int.MaxValue.toLong - 1L).toInt
       // Bare-input static: the size gate reads the input state's known
@@ -1803,7 +1728,8 @@ class IncrementalQuery(
       // partition escalation. Derived statics keep the capped take.
       val taken: Array[Seq[Any]] = staticBareInput match {
         case Some(n) =>
-          if (inputCount(n) > cap) return None
+          if (!graft.kernel.RddKernel.broadcastable(spark, inputCount(n), rowBytes))
+            return None
           evalSet(sh.staticPlan, env).collect()
         case None =>
           val t = evalSet(sh.staticPlan, env).take(cap + 1)
@@ -1987,16 +1913,13 @@ class IncrementalQuery(
       * caller (additions) or intersected with state (overdeletion —
       * overdeleting a superset is DRed-safe, rederivation restores it).
       * Deep thin recursions drop from O(depth) to O(depth/k) jobs. */
-    private val kernelHops: Int =
-      math.max(1, Integer.getInteger("graft.recursion.kernelhop", 4))
-
     private def kernelExpand(sh: LinearShape, delta: PSet,
         bc: org.apache.spark.broadcast.Broadcast[
           java.util.HashMap[Seq[Any], Array[Array[Any]]]]): RDD[Seq[Any]] = {
       val keyIdx = sh.keyIdxRec
       val recipe = sh.recipe
       val fns = sh.filterFns
-      val kHops = kernelHops
+      val kHops = graft.kernel.RddKernel.KernelHops
       val hopBudget = 1 << 16
       delta.mapPartitions { it =>
         val m = bc.value
@@ -2022,37 +1945,34 @@ class IncrementalQuery(
               scala.collection.immutable.ArraySeq.unsafeWrapArray(out): Seq[Any]
             }
         }
-        if (kHops <= 1) it.flatMap { case (t, _) => expandOne(t) }
-        else {
-          // Hop 1 streams in O(1) memory; a budget-capped sample of its
-          // candidates seeds hops 2..k (Iterator.++'s right side is
-          // by-name: it runs only after hop 1 is exhausted).
-          val seen = new java.util.LinkedHashSet[Seq[Any]]()
-          val hop1 = it.flatMap { case (t, _) =>
-            expandOne(t).map { c =>
-              if (seen.size < hopBudget) seen.add(c)
-              c
-            }
+        // Hop 1 streams in O(1) memory; a budget-capped sample of its
+        // candidates seeds hops 2..k (Iterator.++'s right side is
+        // by-name: it runs only after hop 1 is exhausted).
+        val seen = new java.util.LinkedHashSet[Seq[Any]]()
+        val hop1 = it.flatMap { case (t, _) =>
+          expandOne(t).map { c =>
+            if (seen.size < hopBudget) seen.add(c)
+            c
           }
-          hop1 ++ locally {
-            val extra = mutable.ArrayBuffer.empty[Seq[Any]]
-            var frontier: Array[Seq[Any]] = {
-              import scala.jdk.CollectionConverters._
-              seen.iterator.asScala.toArray
-            }
-            var hop = 1
-            while (hop < kHops && frontier.nonEmpty && seen.size < hopBudget) {
-              val next = mutable.ArrayBuffer.empty[Seq[Any]]
-              val cs = frontier.iterator.flatMap(expandOne)
-              while (cs.hasNext && seen.size < hopBudget) {
-                val c = cs.next()
-                if (seen.add(c)) { next += c; extra += c }
-              }
-              frontier = next.toArray
-              hop += 1
-            }
-            extra.iterator
+        }
+        hop1 ++ locally {
+          val extra = mutable.ArrayBuffer.empty[Seq[Any]]
+          var frontier: Array[Seq[Any]] = {
+            import scala.jdk.CollectionConverters._
+            seen.iterator.asScala.toArray
           }
+          var hop = 1
+          while (hop < kHops && frontier.nonEmpty && seen.size < hopBudget) {
+            val next = mutable.ArrayBuffer.empty[Seq[Any]]
+            val cs = frontier.iterator.flatMap(expandOne)
+            while (cs.hasNext && seen.size < hopBudget) {
+              val c = cs.next()
+              if (seen.add(c)) { next += c; extra += c }
+            }
+            frontier = next.toArray
+            hop += 1
+          }
+          extra.iterator
         }
       }
     }
@@ -2767,18 +2687,6 @@ object IncrementalQuery {
   private[streaming] final case class ArrIndex(
       m: scala.collection.immutable.HashMap[Seq[Any], Array[Array[Any]]],
       rows: Long)
-
-  /** Real resident measurement of one group-index partition object
-    * (top-level so meter closures capture nothing; smokes only). */
-  private[streaming] def meterBytes(o: AnyRef): Long = o match {
-    case PackedGroups(runs, _, _, side, dictVals, dictIds, _) =>
-      org.apache.spark.util.GraftSizeOf.estimate(runs) +
-        org.apache.spark.util.GraftSizeOf.estimate(side) +
-        org.apache.spark.util.GraftSizeOf.estimate(dictVals) +
-        org.apache.spark.util.GraftSizeOf.estimate(dictIds)
-    case BoxedGroups(m) => org.apache.spark.util.GraftSizeOf.estimate(m)
-    case other          => org.apache.spark.util.GraftSizeOf.estimate(other)
-  }
 
   private[streaming] def sizedArr(ix: ArrIndex, cols: Int)
       : org.apache.spark.util.GraftSizedValue[ArrIndex] =

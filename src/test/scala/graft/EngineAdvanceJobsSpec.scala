@@ -62,7 +62,7 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
     try {
       spark.sparkContext.setJobGroup(group, label)
       body
-      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      org.apache.spark.GraftBus.flush(spark.sparkContext)
       jobs.get
     } finally {
       spark.sparkContext.clearJobGroup()

@@ -59,6 +59,19 @@ class IncrementalClosureSpec extends AnyFunSuite {
     assert(inc.advanceRdd(raw, 2L).count() === 0L)
   }
 
+  test("a distinct batch past maxEdges trips the broadcast gate loudly") {
+    // 500 genuinely fresh edges against a 200-edge gate: the distributed
+    // count must fail the batch before any edge lands on the driver,
+    // and the closure must stay as it was.
+    val inc = new IncrementalClosure(spark, partitions = 4, maxEdges = 200L)
+    assert(inc.advance(Seq((1L, 2L)), 1L).count() === 1L)
+    val fire = spark.sparkContext.parallelize(0L until 500L, 4)
+      .map(i => (i + 1000L, i + 100000L))
+    val ex = intercept[IllegalArgumentException](inc.advanceRdd(fire, 2L))
+    assert(ex.getMessage.contains("broadcast gate (200)"), ex.getMessage)
+    assert(inc.size === 1L)
+  }
+
   test("attach rejects diffs outside ±1 via the distributed guard") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._

@@ -330,20 +330,6 @@ class IncrementalQuerySpec extends AnyFunSuite {
     finally System.clearProperty("graft.closure.distributed")
   }
 
-  test("k-hop plan composition (graft.recursion.khop dial) stays batch-exact") {
-    // The measured default is 1; the dial composes k hops into one plan
-    // for linear single-rule cliques — must not change any result.
-    val reach = Plan.Union(Seq(0, 1), Seq(
-      Plan.MatchA(0, ":ua", 1),
-      Plan.Project(Seq(0, 1), Plan.Join(Seq(2),
-        Plan.MatchA(2, ":e1", 0), Plan.NameExpr(Seq(2, 1), "reach")))))
-    System.setProperty("graft.recursion.khop", "3")
-    try check(Plan.NameExpr(Seq(0, 1), "reach"),
-      genBatches(6733, Seq(":ua", ":e1"), 4, es = 4, vs = 4),
-      Map("reach" -> reach))
-    finally System.clearProperty("graft.recursion.khop")
-  }
-
   test("linear kernel: per-advance Catalyst planning independent of fixpoint depth") {
     import spark.implicits._
     // Labelprop shape over a CHAIN graph: extending the chain by m edges
@@ -384,19 +370,20 @@ class IncrementalQuerySpec extends AnyFunSuite {
 
   test("partitioned-arrangement kernel (static past the broadcast gate) stays batch-exact") {
     // A 1-byte broadcast threshold fails the kernel's size gate on every
-    // static rebuild, routing deep delta rounds onto the partitioned
-    // arrangement (co-partitioned static index + delta re-keying) — the
-    // results must be identical, retractions included.
+    // static rebuild, and a −1 threshold (broadcasts disabled) admits no
+    // static side at all; both route deep delta rounds onto the
+    // partitioned arrangement (co-partitioned static index + delta
+    // re-keying) — the results must be identical, retractions included.
     val reach = Plan.Union(Seq(0, 1), Seq(
       Plan.MatchA(0, ":ua", 1),
       Plan.Project(Seq(0, 1), Plan.Join(Seq(2),
         Plan.MatchA(2, ":e1", 0), Plan.NameExpr(Seq(2, 1), "reach")))))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    try check(Plan.NameExpr(Seq(0, 1), "reach"),
-      genBatches(6073, Seq(":ua", ":e1"), 5, es = 4, vs = 4),
-      Map("reach" -> reach))
-    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    for (gate <- Seq("1", "-1"))
+      TestSpark.withConf(TestSpark.BroadcastThreshold, gate) {
+        check(Plan.NameExpr(Seq(0, 1), "reach"),
+          genBatches(6073, Seq(":ua", ":e1"), 5, es = 4, vs = 4),
+          Map("reach" -> reach))
+      }
   }
 
   test("partitioned arrangement: O(1) Catalyst plans per advance past the gate") {
@@ -629,7 +616,7 @@ class IncrementalQuerySpec extends AnyFunSuite {
         in.addData((":ua", 7L, 1L, 1L, 1L), (":ub", 7L, 2L, 1L, 1L),
           (":ua", 8L, 1L, 0L, 1L))
         query.processAllAvailable()
-        org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+        org.apache.spark.GraftBus.flush(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(listener)
       // Entity 7 asserts once despite two supports.
       assert(got.toSet == Set((0L, 8L, 1L), (1L, 7L, 1L)))

@@ -69,7 +69,7 @@ class RecursionAdvanceJobsSpec extends AnyFunSuite {
       // a genuine multi-round delta (4 closure facts over 2+ rounds).
       val d2 = iq.advance(Map(":jc/edge" -> batch(Seq((0L, 1L)), 1L)))
       assert(d2.collect().length == 4)
-      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      org.apache.spark.GraftBus.flush(spark.sparkContext)
       val addJobs = jobs.get
       info(s"adds-only warm advance: $addJobs jobs")
       // Measured 2026-08-18 on the fused code: 10 jobs (1 fused
@@ -85,7 +85,7 @@ class RecursionAdvanceJobsSpec extends AnyFunSuite {
       // rounds + rederive-0 + gone/keep commits).
       val d3 = iq.advance(Map(":jc/edge" -> batch(Seq((2L, 3L)), -1L)))
       assert(d3.collect().nonEmpty)
-      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      org.apache.spark.GraftBus.flush(spark.sparkContext)
       val delJobs = jobs.get
       info(s"retraction advance: $delJobs jobs")
       // Measured 2026-08-18 on the fused code: 15 jobs (the r19 round
