@@ -176,9 +176,13 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of label-update rounds the
     * kernel ran before converging (exposed for the O(log d) convergence
-    * test; the last round — the one that observes zero changes — counts). */
+    * test; the last round — the one that observes zero changes — counts).
+    * `partitions` fixes the kernel's partition count (the multi-partition
+    * regression spec passes 4 on a gate-sized graph); by default it is
+    * sized from the edge count. */
   private[graft] def connectedComponentsWithRounds(pairs: DataFrame,
-      ids: DataFrame, idCol: String = "id"): (DataFrame, Int) = {
+      ids: DataFrame, idCol: String = "id",
+      partitions: Option[Int] = None): (DataFrame, Int) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
@@ -251,9 +255,7 @@ object Dedup {
     }
 
     val userP = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // `-Dgraft.cc.partitions=N` forces the partition count (the multi-
-    // partition regression spec uses it on gate-sized graphs).
-    val p = sys.props.get("graft.cc.partitions").map(_.toInt).getOrElse(
+    val p = partitions.getOrElse(
       math.max(1L, math.min(userP.toLong, nEdges / 250000L + 1L)).toInt)
     val part = new HashPartitioner(p)
     val edges = edgePairs

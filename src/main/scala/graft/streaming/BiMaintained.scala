@@ -19,9 +19,10 @@ import graft.model._
   *    ([[CellBiStore]]) — one [[BiPacked]] index per partition,
   *    hash-partitioned by view key. This matches the reference's split
   *    exactly: frontier bookkeeping is control-plane-sized and
-  *    worker-local, the datoms live in distributed arrangements.
-  *    `-Dgraft.bi.distributed=on|off` forces either sibling (A/B and
-  *    parity tests).
+  *    worker-local, the datoms live in distributed arrangements. The
+  *    `graft.bi.driver.bytes` gate alone picks the sibling (a gate of 0
+  *    starts distributed), and bulk frames always enter the
+  *    distributed store.
   *  - Each newly completed pair time feeds only the VISIBLE-VIEW
   *    TRANSITIONS of the referenced attributes, resolved INCREMENTALLY
   *    from the store's time indexes — O(candidate keys of the toggled
@@ -32,7 +33,7 @@ import graft.model._
   *    resolve inside the view layer.
   *  - The QUERY is a standing [[IncrementalQuery]]; per-time dataflow
   *    work is delta-proportional, never the per-time snapshot recompute
-  *    [[graft.engine.BiEngine]] pays.
+  *    the test tree's `BiEngine` parity oracle pays.
   *  - Delivery follows BiEngine's lattice rule exactly: `diff(t) = R(t)
   *    − Σ_{s ≤ t} diff(s)` with `≤` the PRODUCT order. Because times
   *    are processed in lex order, every ledger entry `s` emitted before
@@ -123,29 +124,29 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * the driver bitemporal store is never shipped: only delta-sized
     * transition frames leave it. The bound therefore prices driver
     * HEAP, not broadcast traffic, and defaults to 64 MB
-    * (`-Dgraft.bi.driver.bytes` overrides; the `graft.bi.distributed`
-    * dial bypasses the gate in either direction). */
+    * (`-Dgraft.bi.driver.bytes` overrides; a gate ≤ 0 admits nothing,
+    * so the history starts distributed). */
   private def driverGateBytes: Long =
     sys.props.get("graft.bi.driver.bytes").map(_.toLong)
       .getOrElse(64L * 1024 * 1024)
 
   /** THE history store — one fine-grained copy shared by every lane:
     * driver-resident under the byte gate, then migrated distributed
-    * (sticky). `graft.bi.distributed=on` starts distributed; `off`
-    * pins the driver sibling. */
+    * (sticky). */
   private var store: BiStore =
-    if (sys.props.get("graft.bi.distributed").contains("on"))
-      new CellBiStore(spark, partitions)
+    if (driverGateBytes <= 0L) new CellBiStore(spark, partitions)
     else new DriverBiStore(spark)
 
   private def maybeMigrate(): Unit = store match {
-    case d: DriverBiStore
-        if !sys.props.get("graft.bi.distributed").contains("off") &&
-          d.estimatedBytes > driverGateBytes =>
-      val cell = new CellBiStore(spark, partitions)
-      cell.plant(d.vis.split(partitions))
-      store = cell
+    case d: DriverBiStore if d.estimatedBytes > driverGateBytes => migrate(d)
     case _ => ()
+  }
+
+  private def migrate(d: DriverBiStore): CellBiStore = {
+    val cell = new CellBiStore(spark, partitions)
+    cell.plant(d.vis.split(partitions))
+    store = cell
+    cell
   }
 
   /** One Coarsen LANE per distinct delivery granularity in use — the
@@ -690,17 +691,10 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     val attrs: Array[String] = attrKinds.keys.toArray
 
     // A bulk frame is data-sized by declaration: route through the
-    // distributed store, migrating a driver-resident history first —
-    // UNLESS the A/B dial pins the driver sibling, in which case the
-    // keyed batch collects (the dial owner asked for driver-resident
-    // behavior and owns the size).
-    val pinDriver = sys.props.get("graft.bi.distributed").contains("off")
-    if (!pinDriver) store match {
-      case d: DriverBiStore =>
-        val cellS = new CellBiStore(spark, partitions)
-        cellS.plant(d.vis.split(partitions))
-        store = cellS
-      case _ => ()
+    // distributed store, migrating a driver-resident history first.
+    val cellS = store match {
+      case c: CellBiStore   => c
+      case d: DriverBiStore => migrate(d)
     }
     val lwwAttrs: Set[String] = attrs.iterator
       .filter(a => semanticsOf(a) == InputSemantics.LastWriteWins).toSet
@@ -750,13 +744,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         (key, BiRec(row.getLong(3), row.getLong(4), base + 1L + i,
           row.getLong(5), if (lww) v else null))
       }
-    val n = store match {
-      case cellS: CellBiStore => cellS.ingestRdd(recs)
-      case d: DriverBiStore =>
-        val batch = recs.collect()
-        d.ingest(batch.toSeq)
-        batch.length.toLong
-    }
+    val n = cellS.ingestRdd(recs)
     seqCounter += n
     for ((lane, times) <- laneTimes) lane.pendingTimes ++= times
     frameIngestProbe = Map(
@@ -775,11 +763,11 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
 
   /** STREAMING data-sized bitemporal ingest: drive a Structured
     * Streaming frame of versioned facts (columns `e, a, v, sys, event,
-    * diff`) through [[transactFrame]] per micro-batch — the maintained
-    * mirror of [[BiStream.attach]] WITHOUT its control-size gate,
-    * because batches enter the distributed store directly and never
-    * land on the driver. System time must be strictly increasing across
-    * micro-batches (the same closed-time contract BiStream enforces —
+    * diff`) through [[transactFrame]] per micro-batch — the one
+    * bitemporal stream loop. There is no control-size gate: batches
+    * enter the distributed store directly and never land on the
+    * driver. System time rides arrival order and must be strictly
+    * increasing across micro-batches (the closed-time contract —
     * violations fail loudly inside transactFrame); each batch advances
     * the frontier past its max sys and hands every standing's drained
     * diffs to `onDiffs` (sink-delivered standings deliver through their
@@ -806,8 +794,8 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * within-session foreachBatch retries, not a driver restart. Across
     * a restart a fresh engine starts a fresh history and the stream's
     * own checkpoint replays its source from the beginning, rebuilding
-    * state from scratch (exactly [[BiStream.attach]]'s contract and the
-    * reference's memory-resident server, `server/src/main.rs`). An
+    * state from scratch (the reference's memory-resident server,
+    * `server/src/main.rs`). An
     * embedder needing exactly-once ingest across restarts must persist
     * `(queryName, batchId)` watermarks alongside its own sink. */
   def attachStream(datoms: DataFrame, queryName: String)(
@@ -865,8 +853,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
 
   // Highest micro-batch id already transacted per attached stream —
   // the replay guard above (same-process retries; a fresh engine starts
-  // a fresh history, so cross-process replay rebuilds from scratch as
-  // BiStream does).
+  // a fresh history, so cross-process replay rebuilds from scratch).
   private val streamBatchSeen = mutable.Map.empty[String, Long]
 
   // Diffs drained for a standing by an attached stream's batch but not

@@ -46,7 +46,7 @@ import graft.model.InputSemantics
   * dictionary payload, never a per-datom constant (the round-10
   * accounting fix).
   *
-  * Semantics are pinned to [[graft.engine.BiEngine]]'s `asOfBi` rules
+  * Semantics are pinned to the `BiEngine` parity oracle's `asOfBi` rules
   * (reference `src/timestamp/pair.rs` product order,
   * `tests/input_semantics.rs:337-508`) by BiMaintainedSpec's and
   * BiPlanFuzzSpec's parity properties. */

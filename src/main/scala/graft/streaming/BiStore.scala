@@ -27,8 +27,7 @@ import graft.model.ValueKind
   *    distributed arrangements.
   *
   * A growing [[DriverBiStore]] migrates into a [[CellBiStore]] when its
-  * estimated bytes cross the gate ([[BiMaintained]] owns the flip);
-  * `-Dgraft.bi.distributed=on|off` forces either sibling for A/B.
+  * estimated bytes cross the gate ([[BiMaintained]] owns the flip).
   */
 private[streaming] sealed trait BiStore {
   /** Append one transact batch of keyed datom records (FINE times). */

@@ -14,9 +14,10 @@ import org.apache.spark.storage.StorageLevel
 import graft.kernel.RddKernel
 
 /** Incrementally maintained transitive closure with a fully DISTRIBUTED
-  * adjacency — the upgrade path [[IncrementalClosure]]'s class doc names
-  * for edge relations past its broadcast gate: no driver edge set, no
-  * broadcast reverse index, no `maxEdges` ceiling. Same maintenance
+  * adjacency — the store `IncrementalQuery`'s closure node migrates to
+  * once its edge set would cross the broadcast byte gate (and starts on
+  * when the gate admits nothing): no driver edge set, no broadcast
+  * reverse index, no edge ceiling. Same maintenance
   * algebra (warm-started semi-naive for additions, delete-and-rederive
   * for retractions — the differential `iterate` + arrangement analog,
   * reference `src/lib.rs:943-1022`), same exact per-batch diffs.
@@ -78,17 +79,22 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
 
   // ------------------------------------------------------------ ingest
 
-  /** Apply one batch of edge additions; returns the exact new closure
-    * tuples as a DataFrame (src, dst, t, diff) — all diffs +1. */
-  def advanceRdd(newEdges: RDD[(Long, Long)], t: Long): DataFrame = {
-    val fresh = edgeProbeAbsent(
-      newEdges.map(e => (e: Tup, null: Null)).reduceByKey(part, (a, _) => a))
-    diffDf(addFresh(fresh), t, 1L)
+  /** Seed every index from a [[IncrementalClosure]]'s state — its edge
+    * set and its closure — without running a fixpoint: the migration
+    * step when the owner's edge set outgrows the broadcast gate. Call
+    * once, on a fresh instance, before any advance. */
+  private[streaming] def plant(edges: Iterable[Tup], closure: RDD[(Tup, Null)]): Unit = {
+    val es = sc.parallelize(edges.iterator.map(e => (e, null: Null)).toSeq,
+      math.max(1, partitions / 4)).partitionBy(part)
+    edgeCell.advance1(es)(DistributedClosure.setInsert)
+    revCell.advance1(es.map { case ((s, d), _) => ((d, s): Tup, null: Null) }
+      .partitionBy(firstPart))(DistributedClosure.adjInsert)
+    fwdCell.advance1(es.partitionBy(firstPart))(DistributedClosure.adjInsert)
+    edgeCount = edges.size.toLong
+    val cs = closure.partitionBy(part)
+    closureCell.advance1(cs)(DistributedClosure.setInsert)
+    srcCell.advance1(cs.partitionBy(firstPart))(DistributedClosure.adjInsert)
   }
-
-  /** Seq convenience wrapper over [[advanceRdd]]. */
-  def advance(newEdges: Seq[(Long, Long)], t: Long): DataFrame =
-    advanceRdd(sc.parallelize(newEdges, math.max(1, partitions / 4)), t)
 
   /** Apply one batch of SIGNED edge deltas (diff ∈ {+1, −1}) at time `t`;
     * returns the exact closure diffs (src, dst, t, diff), retractions
@@ -123,10 +129,6 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
       diffDf(retr, t, -1L).union(diffDf(asserted, t, 1L))
     } finally net.unpersist(blocking = false)
   }
-
-  /** Seq convenience wrapper over [[advanceSignedRdd]]. */
-  def advanceSigned(deltas: Seq[((Long, Long), Long)], t: Long): DataFrame =
-    advanceSignedRdd(sc.parallelize(deltas, math.max(1, partitions / 4)), t)
 
   // ---------------------------------------------------------- membership
 
@@ -330,43 +332,6 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
     }
     if (hits.isEmpty) sc.emptyRDD[(Tup, Null)] else sc.union(hits)
   }
-
-  // --------------------------------------------------------- streaming
-
-  // Processed-time frontier: regressing input times would stamp
-  // historically wrong diffs — fail loudly instead.
-  private var frontier: Long = Long.MinValue
-
-  /** Structured Streaming integration — the [[IncrementalClosure.attach]]
-    * contract with the distributed maintenance underneath. */
-  def attach(edgeStream: DataFrame, queryName: String)(
-      onDiffs: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    edgeStream.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions.col
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          require(
-            batch.where(!(col("diff") <=> 1L) && !(col("diff") <=> -1L)).isEmpty,
-            "edge diffs must be ±1")
-          val times = batch.select("t").distinct().collect()
-            .map(_.getLong(0)).sorted
-          times.foreach { t =>
-            require(t > frontier,
-              s"input time $t does not advance the processed frontier " +
-                s"$frontier; diffs against already-advanced totals would " +
-                "be historically wrong")
-            frontier = t
-            val es = batch.where(col("t") === t)
-              .select("src", "dst", "diff").rdd
-              .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-            onDiffs(advanceSignedRdd(es, t))
-          }
-        } finally batch.unpersist()
-      }
-      .start()
 
   private val schema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType),

@@ -8,7 +8,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.kernel.RddKernel
 
@@ -30,7 +29,7 @@ import graft.kernel.RddKernel
   * Sound for monotone programs: iteration starts from a post-fixpoint of
   * the old rules below the new least fixpoint.
   *
-  * Edge RETRACTIONS ([[advanceSigned]] / the ±1 stream path) run classic
+  * Edge RETRACTIONS (−1 entries of [[advanceSignedRdd]]) run classic
   * delete-and-rederive (DRed — the standard maintenance for recursion
   * under deletion, the role differential's arrangement traces play in the
   * reference):
@@ -58,19 +57,21 @@ import graft.kernel.RddKernel
   * State: closure totals live in a maintained per-partition membership
   * index ([[StateCell]] — each round's dedup-against-totals is one
   * insert-if-absent pass, O(candidates), never a totals re-read), and
-  * the adjacency as a broadcast reverse index, size-gated like the
-  * kernel's static side (`maxEdges`). The one full-total scan per batch
-  * (Δe∘C) is narrow and partition-parallel. Past the `maxEdges` gate,
-  * use [[DistributedClosure]]: the same maintenance algebra with the
-  * adjacency as co-partitioned RDD copies (a second totals copy keyed by
-  * source, per-batch partition-local indexes) — no broadcast, no edge
-  * ceiling; this class stays the lower-latency choice under the gate
-  * (k-hop in-task expansion, no per-batch index fold).
+  * the adjacency as a broadcast reverse index plus a driver edge set.
+  * The one full-total scan per batch (Δe∘C) is narrow and
+  * partition-parallel. This class does not size-gate itself: its
+  * owner, `IncrementalQuery`'s closure node, keeps the edge set under
+  * the broadcast byte gate ([[IncrementalClosure.EdgeBytes]] per edge,
+  * [[graft.kernel.RddKernel.broadcastable]]) and migrates to
+  * [[DistributedClosure]] — the same maintenance algebra with the
+  * adjacency as co-partitioned indexes, no broadcast, no edge ceiling —
+  * before an advance would cross it. Under the gate this class is the
+  * lower-latency choice (k-hop in-task expansion, no per-batch index
+  * fold).
   */
 class IncrementalClosure(
     spark: SparkSession,
     partitions: Int = 8,
-    maxEdges: Long = 5000000L,
     kHops: Int = RddKernel.KernelHops) {
 
   private type Tup = (Long, Long)
@@ -105,100 +106,43 @@ class IncrementalClosure(
   /** Current closure size (tuples). */
   def size: Long = closureCell.rdd.map(_.size.toLong).fold(0L)(_ + _)
 
-  /** Apply one batch of edge additions; returns the exact new closure
-    * tuples as a DataFrame (src, dst, t, diff) — all diffs +1. */
-  def advance(newEdges: Seq[(Long, Long)], t: Long): DataFrame =
-    diffDf(addFresh(newEdges.distinct.filterNot(edgeSet)), t, 1L)
+  /** Current edge-relation size. */
+  def edgeSize: Long = edgeSet.size.toLong
 
-  /** Apply one batch of SIGNED edge deltas (diff ∈ {+1, −1}) at time `t`;
-    * returns the exact closure diffs (src, dst, t, diff), retractions
-    * included. Deltas consolidate per edge first (a delete+re-add nets to
-    * nothing); deletions run DRed, additions warm-start, and the two diff
-    * sets consolidate per tuple. Retracting an edge that is not present
-    * fails loudly (Z-set inputs are sets here, as in the engine's
-    * Distinct input semantics). */
-  def advanceSigned(deltas: Seq[((Long, Long), Long)], t: Long): DataFrame = {
-    deltas.foreach { case (e, w) =>
-      require(w == 1L || w == -1L, s"edge diff must be ±1, got $w for $e")
-    }
-    val net = deltas.groupBy(_._1).view.mapValues(_.map(_._2).sum)
-    val dels = net.collect { case (e, w) if w < 0 => e }.toSeq
-    val adds = net.collect { case (e, w) if w > 0 => e }.toSeq
-    applySigned(dels, adds, t)
-  }
+  /** The edge set and the closure (placed by a `partitions`-way
+    * HashPartitioner) — what [[DistributedClosure.plant]] seeds from
+    * when the owner migrates past the byte gate. */
+  private[streaming] def edges: Iterable[Tup] = edgeSet
+  private[streaming] def closure: RDD[(Tup, Null)] = totalsView
 
-  /** RDD-side variant for firehose ingest: the raw batch is deduped and
-    * subtracted against the known edge set DISTRIBUTED (the known set
-    * rides a broadcast — an immutable copy, since local-mode broadcasts
-    * share driver references), so only genuinely fresh edges — bounded by
-    * the `maxEdges` gate, however large the raw batch — ever reach the
-    * driver (which needs them anyway: the adjacency is a broadcast map). */
-  def advanceRdd(newEdges: RDD[(Long, Long)], t: Long): DataFrame = {
-    val known = sc.broadcast(edgeSet.toSet)
-    val fresh =
-      try {
-        val deduped = newEdges.distinct(partitions)
-          .filter(e => !known.value(e))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // Gate BEFORE collecting: the whole point of this path is that
-          // nothing unbounded ever lands on the driver — a batch of
-          // millions of genuinely fresh edges must fail loudly, not OOM
-          // the driver on the way to the failure.
-          val n = deduped.count()
-          require(edgeSet.size + n <= maxEdges,
-            s"edge relation exceeds the broadcast gate ($maxEdges); " +
-              "use the batch engine for edge sets this large")
-          deduped.collect().toSeq
-        } finally deduped.unpersist(blocking = false)
-      } finally known.destroy()
-    diffDf(addFresh(fresh), t, 1L)
-  }
-
-  /** RDD-side SIGNED variant, same firehose discipline as [[advanceRdd]]:
-    * the raw ±1 batch consolidates per edge DISTRIBUTED, splits into
-    * fresh additions (subtracted against the known set) and deletions
-    * (validated present — a retraction of an absent edge fails loudly,
-    * distributed), and only those gated survivors land on the driver. */
+  /** Apply one batch of SIGNED edge deltas at time `t`; returns the
+    * exact closure diffs (src, dst, t, diff), retractions included. The
+    * raw batch consolidates per edge distributed and only what changes
+    * the edge set — deletions and fresh additions — lands on the
+    * driver, in one job (already-known additions are dropped against a
+    * broadcast of the known set). Consolidated diffs must be ±1, and a
+    * retraction of an absent edge fails loudly (Z-set inputs are sets
+    * here, as in the engine's Distinct input semantics). Deletions run
+    * DRed, additions warm-start, and the two diff sets consolidate per
+    * tuple. */
   def advanceSignedRdd(deltas: RDD[((Long, Long), Long)], t: Long): DataFrame = {
     val known = sc.broadcast(edgeSet.toSet)
-    try {
-      val net = deltas.reduceByKey(part, _ + _)
-        .filter(_._2 != 0L).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // ONE validation + sizing pass: ±1 check, absent-retraction
-        // check, and the fresh-addition count for the driver gate.
-        val freshAdds = net.mapPartitions { it =>
-          var fresh = 0L
-          it.foreach { case (e, w) =>
-            if (w != 1L && w != -1L)
-              throw new IllegalArgumentException(
-                s"consolidated edge diff must be ±1, got $w for $e")
-            if (w < 0 && !known.value(e))
-              throw new IllegalArgumentException(
-                s"retraction of absent edges: $e")
-            if (w > 0 && !known.value(e)) fresh += 1
-          }
-          Iterator.single(fresh)
-        }.fold(0L)(_ + _)
-        require(edgeSet.size + freshAdds <= maxEdges,
-          s"edge relation exceeds the broadcast gate ($maxEdges); " +
-            "use the batch engine for edge sets this large")
-        // Survivors are gated (deletions ⊆ the known set, fresh
-        // additions counted above): one collect, split driver-side.
-        val survivors = net
-          .filter { case (e, w) => w < 0 || !known.value(e) }.collect()
-        applySigned(
-          survivors.collect { case (e, w) if w < 0 => e }.toSeq,
-          survivors.collect { case (e, w) if w > 0 => e }.toSeq, t)
-      } finally net.unpersist(blocking = false)
-    } finally known.destroy()
+    val survivors =
+      try deltas.reduceByKey(part, _ + _)
+        .filter { case (e, w) => w != 0L && (w != 1L || !known.value(e)) }
+        .collect()
+      finally known.destroy()
+    val bad = survivors.find { case (_, w) => w != 1L && w != -1L }
+    require(bad.isEmpty, s"consolidated edge diff must be ±1, got ${bad.get}")
+    applySigned(
+      survivors.collect { case (e, w) if w < 0 => e }.toSeq,
+      survivors.collect { case (e, w) if w > 0 => e }.toSeq, t)
   }
 
   /** Deletions first (DRed), then additions (warm-start), then per-tuple
     * consolidation of the two diff sets. `dels` must be present edges;
-    * `adds` may contain known edges (dropped) and re-adds of this batch's
-    * own deletions (the edge comes back; its closure effect nets out). */
+    * `adds` are fresh (one consolidated entry per edge, known additions
+    * already dropped). */
   private def applySigned(dels: Seq[Tup], adds: Seq[Tup], t: Long): DataFrame = {
     val missing = dels.filterNot(edgeSet)
     require(missing.isEmpty,
@@ -207,8 +151,7 @@ class IncrementalClosure(
     val removed =
       if (dels.isEmpty) emptyPart() else deleteEdges(dels)
     trace("deleteEdges done")
-    // Fresh-filter AFTER deletions: a deleted-then-re-added edge is fresh.
-    val added = addFresh(adds.distinct.filterNot(edgeSet))
+    val added = addFresh(adds)
     trace("addFresh done")
     val retr = RddKernel.subtract(removed, Seq(added))
     val asserted = RddKernel.subtract(added, Seq(removed))
@@ -219,9 +162,6 @@ class IncrementalClosure(
     * tuples, hash-partitioned by `part` (so callers can consolidate them
     * against DRed retractions with narrow co-partitioned subtracts). */
   private def addFresh(fresh: Seq[(Long, Long)]): RDD[(Tup, Null)] = {
-    require(edgeSet.size + fresh.size <= maxEdges,
-      s"edge relation exceeds the broadcast gate ($maxEdges); " +
-        "use the batch engine for edge sets this large")
     fresh.foreach { case (s, d) =>
       edgeSet += ((s, d))
       rev.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
@@ -478,48 +418,6 @@ class IncrementalClosure(
   private def emptyPart(): RDD[(Tup, Null)] =
     sc.emptyRDD[(Tup, Null)].partitionBy(part)
 
-  // Processed-time frontier: a batch's diffs are computed against totals
-  // that absorbed every earlier time, so a regressing input time would
-  // stamp historically wrong diffs — fail loudly instead.
-  private var frontier: Long = Long.MinValue
-
-  /** Structured Streaming integration: drain a `(src, dst, t, diff)` edge
-    * stream through [[advanceSignedRdd]] per micro-batch, handing each
-    * batch's closure diffs to `onDiffs`. Diffs must be ±1 (asserted
-    * distributed, never by collecting the batch: the raw batch may exceed
-    * driver limits; only its consolidated, gated survivors land there) —
-    * additions warm-start, retractions delete-and-rederive. Times must
-    * advance strictly across the whole stream. */
-  def attach(edges: DataFrame, queryName: String)(
-      onDiffs: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    edges.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions.col
-        batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // Null-safe: a null diff must fail the guard, not slip through
-          // three-valued logic as "not =!= ±1".
-          require(
-            batch.where(!(col("diff") <=> 1L) && !(col("diff") <=> -1L)).isEmpty,
-            "edge diffs must be ±1")
-          val times = batch.select("t").distinct().collect().map(_.getLong(0)).sorted
-          times.foreach { t =>
-            require(t > frontier,
-              s"input time $t does not advance the processed frontier " +
-                s"$frontier; diffs against already-advanced totals would " +
-                "be historically wrong")
-            frontier = t
-            val es = batch.where(col("t") === t)
-              .select("src", "dst", "diff").rdd
-              .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-            onDiffs(advanceSignedRdd(es, t))
-          }
-        } finally batch.unpersist()
-      }
-      .start()
-
   // ------------------------------------------------------------------ impl
 
   /** One insert-if-absent pass over round candidates: dedup against the
@@ -541,4 +439,12 @@ class IncrementalClosure(
   private def diffDf(rdd: RDD[(Tup, Null)], t: Long, diff: Long): DataFrame =
     spark.createDataFrame(
       rdd.map { case ((s, d), _) => Row(s, d, t, diff) }, schema)
+}
+
+object IncrementalClosure {
+
+  /** Broadcast bytes per edge: a row of two long columns at the batch
+    * kernel's static-side width (`24 × cols + 8`) — the unit the owner
+    * prices the edge set in against the byte gate. */
+  val EdgeBytes: Long = 24L * 2 + 8L
 }

@@ -719,53 +719,6 @@ class IncrementalHector(
       }, outputSchema)
   }
 
-  // Processed-time frontier: per-time diffs are computed against state
-  // that has absorbed every earlier time, so a regressing input time
-  // would silently emit historically wrong diffs — fail loudly instead
-  // (the batch BiEngine makes the same check).
-  private var frontier: Long = Long.MinValue
-
-  /** Structured Streaming integration: drain a datom stream (columns
-    * `a: string, e: long, v, t: long, diff: long`) through [[advance]] per
-    * completed time; every Attr binding scanning attribute `a` receives
-    * that attribute's delta. Times must advance strictly across the whole
-    * stream. Each time's exact output diffs go to `onDiffs(t, frame)`. */
-  def attach(datoms: DataFrame, queryName: String)(
-      onDiffs: (Long, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    datoms.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          val times = batch.select("t").distinct().collect().map(_.getLong(0)).sorted
-          times.foreach { t =>
-            require(t > frontier,
-              s"input time $t does not advance the processed frontier " +
-                s"$frontier; per-time diffs against already-advanced state " +
-                "would be historically wrong")
-            frontier = t
-            val att = batch.where(col("t") === t)
-            // One checkpointed delta per DISTINCT attribute (several
-            // bindings usually scan one attribute), fanned out to binding
-            // indices; checkpointing also keeps the delivered diff frame
-            // valid after this micro-batch's source frame is released.
-            val byAttr: Map[String, DataFrame] =
-              attrBindings.map(_.a).distinct.flatMap { a =>
-                val d = att.where(col("a") === a)
-                  .select(col("e"), col("v"), col("diff"))
-                if (d.isEmpty) None else Some(a -> d.graftCheckpoint(true))
-              }.toMap
-            val deltas: Map[Int, DataFrame] =
-              attrBindings.zipWithIndex.flatMap { case (b, i) =>
-                byAttr.get(b.a).map(i -> _)
-              }.toMap
-            if (deltas.nonEmpty) onDiffs(t, advance(deltas))
-          }
-        } finally batch.unpersist()
-      }
-      .start()
-
   /** Apply one batch of signed deltas (binding index -> (e, v, diff) rows;
     * indices follow Attr-binding order) and return the EXACT output diffs
     * `(c0..cn, _w)` of the conjunction for this batch. */

@@ -71,8 +71,8 @@ import graft.model._
   * the transitive-closure form (`r(x,z) := base ∪ edge∘r`, one edge
   * relation — see `closureNodeOf`) are maintained through a ClosureNode:
   * the edge subtree's diffs threshold to set transitions and drive the
-  * warm-start/DRed closure maintainer ([[IncrementalClosure]], or
-  * [[DistributedClosure]] under `-Dgraft.closure.distributed=true`).
+  * warm-start/DRed closure maintainer ([[IncrementalClosure]] under the
+  * broadcast byte gate, [[DistributedClosure]] past it).
   * Every OTHER monotone recursion — mutual cliques, non-linear bodies,
   * label-propagation shapes — is maintained by the general
   * [[RecursionNode]] (delta-rule warm start + delete-and-rederive, see
@@ -121,6 +121,10 @@ class IncrementalQuery(
     * instead of growing with fixpoint depth. */
   private[graft] val recursionPlanCount =
     new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Spec probe: closure stores built by this query's closure nodes, in
+    * build order ("IncrementalClosure", "DistributedClosure"). */
+  private[graft] val closureStoreProbe = mutable.ArrayBuffer.empty[String]
 
   // ---- Node tree -----------------------------------------------------
 
@@ -443,7 +447,12 @@ class IncrementalQuery(
     private val cell = new SupportCell(nodeKinds)
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+      advanceCounted(attrDeltas)._1
+
+    /** [[advance]] plus the transition count, read from the commit's
+      * own job (no emptiness probe). */
+    def advanceCounted(attrDeltas: Map[String, DataFrame]): (DataFrame, Long) =
+      if (!touched(attrDeltas)) (emptyDiff, 0L)
       else {
         val width = vars.length
         val delta: RDD[(Seq[Any], Long)] = inputs
@@ -451,9 +460,9 @@ class IncrementalQuery(
           .reduce(_ union _)
           .map(r => (rowKey(r, width), r.getLong(width)))
           .reduceByKey(part, _ + _) // the only shuffle: O(delta)
-        val diffs = cell.advance(delta)
-        spark.createDataFrame(
-          diffs.map { case (k, w) => Row.fromSeq(k :+ w) }, schema)
+        val (diffs, n) = cell.advanceCounted(delta)
+        (spark.createDataFrame(
+          diffs.map { case (k, w) => Row.fromSeq(k :+ w) }, schema), n)
       }
   }
 
@@ -631,10 +640,14 @@ class IncrementalQuery(
     * pass through a support-count THRESHOLD (so the closure sees exactly
     * the ±1 SET transitions its edge relation makes — matching the batch
     * compiler's set-semantic fixpoint over the Union-rooted rule), then
-    * drive the warm-start/DRed closure maintainer. The
-    * `graft.closure.distributed` system property selects
-    * [[DistributedClosure]] (no edge ceiling) over the default
-    * broadcast-gated [[IncrementalClosure]]. */
+    * drive the warm-start/DRed closure maintainer. The store is chosen
+    * by size, once and for good: the broadcast [[IncrementalClosure]]
+    * while its edge set plus the advance's transitions fits the byte
+    * gate ([[graft.kernel.RddKernel.broadcastable]]), then a
+    * [[DistributedClosure]] planted from its edge set and closure — and
+    * distributed from the first advance when the gate does not admit
+    * that advance (a threshold ≤ 0 admits nothing: no broadcast, no
+    * driver edge set). */
   private final class ClosureNode(edgeNode: Node) extends Node {
     UnmaintainablePlan.require(edgeNode.vars.length == 2,
       s"closure maintenance needs a binary edge relation, got ${edgeNode.vars}")
@@ -645,23 +658,44 @@ class IncrementalQuery(
     val attrs: Set[String] = edgeNode.attrs
 
     private val threshold = new ThresholdNode(Seq(edgeNode))
-    private val distributed = java.lang.Boolean.getBoolean("graft.closure.distributed")
-    private val broadcastCl =
-      if (distributed) None else Some(new IncrementalClosure(spark, shufflePartitions))
-    private val distributedCl =
-      if (distributed) Some(new DistributedClosure(spark, shufflePartitions)) else None
+    private var broadcastCl: IncrementalClosure = null
+    private var distributedCl: DistributedClosure = null
     private var tick = 0L
+
+    /** Pick (or keep) the store for an advance of `n` edge transitions:
+      * `n` bounds the additions, so the broadcast store is kept only
+      * while its edge set stays under the gate after the advance. */
+    private def chooseStore(n: Long): Unit =
+      if (distributedCl == null) {
+        val edges = if (broadcastCl == null) 0L else broadcastCl.edgeSize
+        if (graft.kernel.RddKernel.broadcastable(
+            spark, edges + n, IncrementalClosure.EdgeBytes)) {
+          if (broadcastCl == null) {
+            broadcastCl = new IncrementalClosure(spark, shufflePartitions)
+            closureStoreProbe += "IncrementalClosure"
+          }
+        } else {
+          distributedCl = new DistributedClosure(spark, shufflePartitions)
+          closureStoreProbe += "DistributedClosure"
+          if (broadcastCl != null) {
+            distributedCl.plant(broadcastCl.edges, broadcastCl.closure)
+            broadcastCl = null
+          }
+        }
+      }
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
       if (!touched(attrDeltas)) emptyDiff
       else {
-        val ed = threshold.advance(attrDeltas)
-        if (ed.isEmpty) emptyDiff
+        val (ed, n) = threshold.advanceCounted(attrDeltas)
+        if (n == 0L) emptyDiff
         else {
           tick += 1
+          chooseStore(n)
           val rdd = ed.rdd.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
-          val out = broadcastCl.map(_.advanceSignedRdd(rdd, tick))
-            .getOrElse(distributedCl.get.advanceSignedRdd(rdd, tick))
+          val out =
+            if (distributedCl != null) distributedCl.advanceSignedRdd(rdd, tick)
+            else broadcastCl.advanceSignedRdd(rdd, tick)
           out.select(col("src").as(Rel.c(0)), col("dst").as(Rel.c(1)),
             col("diff").as(Rel.W))
         }
@@ -1796,7 +1830,7 @@ class IncrementalQuery(
     private def commitArr(next: StaticArr): StaticArr = {
       val mat = next.graftCheckpoint()
       mat.count()
-      staticArrPrev.foreach(_.unpersist(blocking = false))
+      staticArrPrev.foreach(org.apache.spark.GraftUnpersist(_))
       staticArrPrev = Some(mat)
       staticArrVal = Some(mat)
       mat

@@ -135,7 +135,7 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     } finally sc0.setLocalProperty(ancestorsKey, prevProp)
     cur = mat.map(_._1)
     if (prevGen ne null) {
-      prevGen.unpersist(blocking = false)
+      org.apache.spark.GraftUnpersist(prevGen)
       // Under the reliable-checkpoint dial the superseded generation's
       // files would otherwise live until the DFS fills (Spark only
       // GC-cleans them, and only with cleanCheckpoints=true) — delete

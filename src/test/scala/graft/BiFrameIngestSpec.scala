@@ -181,8 +181,8 @@ class BiFrameIngestSpec extends AnyFunSuite {
       (_, diffs) => got ++= diffs
     }
     try {
-      // A DATA-SIZED micro-batch — well over BiStream's default 100k
-      // transaction gate — enters distributed; no gate exists here.
+      // A DATA-SIZED micro-batch (150k datoms) enters the distributed
+      // store directly; no transaction-size gate exists here.
       in.addData((0L until 150000L).map(i =>
         (i, ":st/x", i % 1000L, 0L, i % 3L, 1L)))
       query.processAllAvailable()

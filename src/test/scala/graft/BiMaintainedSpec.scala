@@ -16,9 +16,9 @@ import graft.streaming.BiMaintained
   * accumulation) — the reference's `Pair(sys, event)` semantics
   * (`src/timestamp/pair.rs`, `tests/input_semantics.rs:337-508`). The
   * parity is pinned on BOTH store siblings (driver-resident under the
-  * byte gate, StateCell-distributed past it / under the
-  * `graft.bi.distributed=on` dial) and across a mid-history gate
-  * MIGRATION, plus the Coarsen delivery laws. */
+  * byte gate, StateCell-distributed past it — a `graft.bi.driver.bytes`
+  * gate of 0 starts there) and across a mid-history gate MIGRATION,
+  * plus the Coarsen delivery laws. */
 class BiMaintainedSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -43,21 +43,18 @@ class BiMaintainedSpec extends AnyFunSuite {
     xs.groupBy(identity).map { case (k, vs) => k -> vs.length }
 
   /** Run one history through BiEngine (reference semantics) and
-    * BiMaintained; `distributed` pins the store dial for the run. */
+    * BiMaintained; `distributed` sets the driver-store byte gate to 0
+    * (the cell sibling from the start, checked through the store probe),
+    * `gateBytes` sets it to a migration point. */
   private def drive(
       history: Seq[BD], semantics: InputSemantics,
       plan: Plan, distributed: Boolean = false,
       gateBytes: Option[String] = None): (Out, Out) = {
     val bySys = history.groupBy(_.sys).toSeq.sortBy(_._1)
 
-    val prevDial = sys.props.get("graft.bi.distributed")
     val prevGate = sys.props.get("graft.bi.driver.bytes")
-    if (distributed) sys.props("graft.bi.distributed") = "on"
-    else sys.props("graft.bi.distributed") = "off"
-    gateBytes.foreach { g =>
-      sys.props.remove("graft.bi.distributed") // auto mode: gate decides
-      sys.props("graft.bi.driver.bytes") = g
-    }
+    (if (distributed) Some("0") else gateBytes)
+      .foreach(sys.props("graft.bi.driver.bytes") = _)
     try {
       val ref = new BiEngine(spark)
       val got = new BiMaintained(spark, partitions = 4)
@@ -80,12 +77,10 @@ class BiMaintainedSpec extends AnyFunSuite {
         refOut ++= ref.drain("q")
         gotOut ++= got.drain("q")
       }
+      if (distributed)
+        assert(got.storeGenerationProbe.isDefined, "the cell sibling did not run")
       (ms(refOut.toSeq), ms(gotOut.toSeq))
     } finally {
-      prevDial match {
-        case Some(v) => sys.props("graft.bi.distributed") = v
-        case None    => sys.props.remove("graft.bi.distributed")
-      }
       prevGate match {
         case Some(v) => sys.props("graft.bi.driver.bytes") = v
         case None    => sys.props.remove("graft.bi.driver.bytes")
@@ -161,13 +156,14 @@ class BiMaintainedSpec extends AnyFunSuite {
     // :bm/y standing can therefore only be served by the history
     // BACKFILL at its first processTime; without it the accumulated net
     // is empty. Both store siblings, full zoo.
-    val prevDist = sys.props.get("graft.bi.distributed")
+    val prevGate = sys.props.get("graft.bi.driver.bytes")
     try {
       for {
         distributed <- Seq(false, true)
         sem <- semanticsZoo
       } {
-        sys.props("graft.bi.distributed") = if (distributed) "on" else "off"
+        if (distributed) sys.props("graft.bi.driver.bytes") = "0"
+        else sys.props.remove("graft.bi.driver.bytes")
         def run(late: Boolean): Map[Seq[Any], Long] = {
           val bm = new BiMaintained(spark, partitions = 4)
           Seq(":bm/x", ":bm/y").foreach(a =>
@@ -193,6 +189,8 @@ class BiMaintainedSpec extends AnyFunSuite {
             if (!late || i == batches.length - 1)
               bm.drain("qy").foreach { case (row, _, w) => acc(row) += w }
           }
+          assert(bm.storeGenerationProbe.isDefined == distributed,
+            s"store sibling: want distributed=$distributed")
           acc.filter(_._2 != 0L).toMap
         }
         val want = run(late = false)
@@ -202,9 +200,9 @@ class BiMaintainedSpec extends AnyFunSuite {
           s"dist=$distributed sem=$sem: want=$want got=$got")
       }
     } finally {
-      prevDist match {
-        case Some(v) => sys.props("graft.bi.distributed") = v
-        case None    => sys.props.remove("graft.bi.distributed")
+      prevGate match {
+        case Some(v) => sys.props("graft.bi.driver.bytes") = v
+        case None    => sys.props.remove("graft.bi.driver.bytes")
       }
     }
   }
@@ -216,40 +214,31 @@ class BiMaintainedSpec extends AnyFunSuite {
     // visit exactly :sc/y's 3 distinct (e, v) keys — not the store's
     // 203. The counter is per-JVM telemetry; suites run sequentially in
     // the forked test JVM, so the delta is this test's alone.
-    val prevDist = sys.props.get("graft.bi.distributed")
-    try {
-      sys.props("graft.bi.distributed") = "off"
-      val bm = new BiMaintained(spark, partitions = 4)
-      Seq(":sc/x", ":sc/y").foreach(a =>
-        bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
-      bm.register(Rule("scx", Plan.MatchA(0, ":sc/x", 1)))
-      bm.register(Rule("scy", Plan.MatchA(0, ":sc/y", 1)))
-      bm.interest("scx", None)
-      bm.transact(
-        (1L to 200L).map(e =>
-          bm.BiDatom(Value.eid(e), ":sc/x", Value.num(e * 10), (0L, 0L), 1L)) ++
-        (1L to 3L).map(e =>
-          bm.BiDatom(Value.eid(e), ":sc/y", Value.num(e), (0L, 0L), 1L)))
-      bm.advance(1L)
-      bm.drain("scx")
-      val before = graft.streaming.BiPacked.backfillKeysScanned.get()
-      bm.interest("scy", None) // late demand → backfill at next processTime
-      bm.transact(Seq(
-        bm.BiDatom(Value.eid(300L), ":sc/x", Value.num(999L), (1L, 1L), 1L)))
-      bm.advance(2L)
-      val scanned =
-        graft.streaming.BiPacked.backfillKeysScanned.get() - before
-      assert(scanned == 3L,
-        s"backfill must touch only :sc/y's 3 keys, scanned $scanned")
-      bm.drain("scx")
-      val got = bm.drain("scy").map { case (row, _, w) => (row, w) }.toSet
-      assert(got == (1L to 3L).map(e => (Seq[Any](e, e), 1L)).toSet, s"$got")
-    } finally {
-      prevDist match {
-        case Some(v) => sys.props("graft.bi.distributed") = v
-        case None    => sys.props.remove("graft.bi.distributed")
-      }
-    }
+    val bm = new BiMaintained(spark, partitions = 4)
+    Seq(":sc/x", ":sc/y").foreach(a =>
+      bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
+    bm.register(Rule("scx", Plan.MatchA(0, ":sc/x", 1)))
+    bm.register(Rule("scy", Plan.MatchA(0, ":sc/y", 1)))
+    bm.interest("scx", None)
+    bm.transact(
+      (1L to 200L).map(e =>
+        bm.BiDatom(Value.eid(e), ":sc/x", Value.num(e * 10), (0L, 0L), 1L)) ++
+      (1L to 3L).map(e =>
+        bm.BiDatom(Value.eid(e), ":sc/y", Value.num(e), (0L, 0L), 1L)))
+    bm.advance(1L)
+    bm.drain("scx")
+    val before = graft.streaming.BiPacked.backfillKeysScanned.get()
+    bm.interest("scy", None) // late demand → backfill at next processTime
+    bm.transact(Seq(
+      bm.BiDatom(Value.eid(300L), ":sc/x", Value.num(999L), (1L, 1L), 1L)))
+    bm.advance(2L)
+    val scanned =
+      graft.streaming.BiPacked.backfillKeysScanned.get() - before
+    assert(scanned == 3L,
+      s"backfill must touch only :sc/y's 3 keys, scanned $scanned")
+    bm.drain("scx")
+    val got = bm.drain("scy").map { case (row, _, w) => (row, w) }.toSet
+    assert(got == (1L to 3L).map(e => (Seq[Any](e, e), 1L)).toSet, s"$got")
   }
 
   test("uninterest shrinks `covered` to live demand; re-attach backfills exactly (r17 VERDICT #5)") {
@@ -262,55 +251,46 @@ class BiMaintainedSpec extends AnyFunSuite {
     // maintained attribute is never in the `missing` set. Exactness:
     // the re-attached drain nets to the CURRENT visible state,
     // including everything written while detached.
-    val prevDist = sys.props.get("graft.bi.distributed")
-    try {
-      sys.props("graft.bi.distributed") = "off"
-      val bm = new BiMaintained(spark, partitions = 4)
-      Seq(":cv/x", ":cv/y").foreach(a =>
-        bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
-      bm.register(Rule("cvx", Plan.MatchA(0, ":cv/x", 1)))
-      bm.register(Rule("cvy", Plan.MatchA(0, ":cv/y", 1)))
-      bm.interest("cvx", None)
-      bm.interest("cvy", None)
-      bm.transact(Seq(
-        bm.BiDatom(Value.eid(1L), ":cv/x", Value.num(10L), (0L, 0L), 1L),
-        bm.BiDatom(Value.eid(1L), ":cv/y", Value.num(5L), (0L, 0L), 1L)))
-      bm.advance(1L)
-      bm.drain("cvx"); bm.drain("cvy")
-      bm.uninterest("cvy")
-      // Detached: y writes land in history but no lane maintains them.
-      bm.transact(Seq(
-        bm.BiDatom(Value.eid(2L), ":cv/y", Value.num(6L), (1L, 1L), 1L),
-        bm.BiDatom(Value.eid(2L), ":cv/x", Value.num(20L), (1L, 1L), 1L)))
-      bm.advance(2L)
-      bm.drain("cvx")
-      bm.transact(Seq(
-        bm.BiDatom(Value.eid(1L), ":cv/y", Value.num(5L), (2L, 2L), -1L)))
-      bm.advance(3L)
-      bm.drain("cvx")
-      // Re-attach: the next processed time must BACKFILL :cv/y.
-      bm.interest("cvy", None)
-      val before = graft.streaming.BiPacked.backfillKeysScanned.get()
-      bm.transact(Seq(
-        bm.BiDatom(Value.eid(3L), ":cv/x", Value.num(30L), (3L, 3L), 1L)))
-      bm.advance(4L)
-      val scanned =
-        graft.streaming.BiPacked.backfillKeysScanned.get() - before
-      assert(scanned == 2L,
-        s"re-attach must backfill exactly :cv/y's 2 distinct keys " +
-          s"(unmaintained while detached), scanned $scanned")
-      bm.drain("cvx")
-      val acc = scala.collection.mutable.Map
-        .empty[Seq[Any], Long].withDefaultValue(0L)
-      bm.drain("cvy").foreach { case (row, _, w) => acc(row) += w }
-      assert(acc.filter(_._2 != 0L).toMap == Map(Seq[Any](2L, 6L) -> 1L),
-        s"re-attached drain must net to the CURRENT visible state: $acc")
-    } finally {
-      prevDist match {
-        case Some(v) => sys.props("graft.bi.distributed") = v
-        case None    => sys.props.remove("graft.bi.distributed")
-      }
-    }
+    val bm = new BiMaintained(spark, partitions = 4)
+    Seq(":cv/x", ":cv/y").foreach(a =>
+      bm.createAttribute(a, AttributeConfig(InputSemantics.Distinct)))
+    bm.register(Rule("cvx", Plan.MatchA(0, ":cv/x", 1)))
+    bm.register(Rule("cvy", Plan.MatchA(0, ":cv/y", 1)))
+    bm.interest("cvx", None)
+    bm.interest("cvy", None)
+    bm.transact(Seq(
+      bm.BiDatom(Value.eid(1L), ":cv/x", Value.num(10L), (0L, 0L), 1L),
+      bm.BiDatom(Value.eid(1L), ":cv/y", Value.num(5L), (0L, 0L), 1L)))
+    bm.advance(1L)
+    bm.drain("cvx"); bm.drain("cvy")
+    bm.uninterest("cvy")
+    // Detached: y writes land in history but no lane maintains them.
+    bm.transact(Seq(
+      bm.BiDatom(Value.eid(2L), ":cv/y", Value.num(6L), (1L, 1L), 1L),
+      bm.BiDatom(Value.eid(2L), ":cv/x", Value.num(20L), (1L, 1L), 1L)))
+    bm.advance(2L)
+    bm.drain("cvx")
+    bm.transact(Seq(
+      bm.BiDatom(Value.eid(1L), ":cv/y", Value.num(5L), (2L, 2L), -1L)))
+    bm.advance(3L)
+    bm.drain("cvx")
+    // Re-attach: the next processed time must BACKFILL :cv/y.
+    bm.interest("cvy", None)
+    val before = graft.streaming.BiPacked.backfillKeysScanned.get()
+    bm.transact(Seq(
+      bm.BiDatom(Value.eid(3L), ":cv/x", Value.num(30L), (3L, 3L), 1L)))
+    bm.advance(4L)
+    val scanned =
+      graft.streaming.BiPacked.backfillKeysScanned.get() - before
+    assert(scanned == 2L,
+      s"re-attach must backfill exactly :cv/y's 2 distinct keys " +
+        s"(unmaintained while detached), scanned $scanned")
+    bm.drain("cvx")
+    val acc = scala.collection.mutable.Map
+      .empty[Seq[Any], Long].withDefaultValue(0L)
+    bm.drain("cvy").foreach { case (row, _, w) => acc(row) += w }
+    assert(acc.filter(_._2 != 0L).toMap == Map(Seq[Any](2L, 6L) -> 1L),
+      s"re-attached drain must net to the CURRENT visible state: $acc")
   }
 
   test("re-attach after full retraction + compaction delivers NO phantom row (r18 review)") {
@@ -322,10 +302,8 @@ class BiMaintainedSpec extends AnyFunSuite {
     // so the re-attached standing would replay a phantom (1, 5) row.
     // The fix visits the union of history keys and the lane's emitted
     // keys.
-    val prevDist = sys.props.get("graft.bi.distributed")
     val prevSlack = sys.props.get("graft.bi.slack")
     try {
-      sys.props("graft.bi.distributed") = "off"
       sys.props("graft.bi.slack") = "0" // compact aggressively
       val bm = new BiMaintained(spark, partitions = 4)
       Seq(":fp/x", ":fp/y").foreach(a =>
@@ -372,10 +350,9 @@ class BiMaintainedSpec extends AnyFunSuite {
       assert(acc.filter(_._2 != 0L).isEmpty,
         s"fully-retracted+compacted :fp/y must re-attach EMPTY, got $acc")
     } finally {
-      Seq(("graft.bi.distributed", prevDist),
-        ("graft.bi.slack", prevSlack)).foreach {
-        case (k, Some(v)) => sys.props(k) = v
-        case (k, None)    => sys.props.remove(k)
+      prevSlack match {
+        case Some(v) => sys.props("graft.bi.slack") = v
+        case None    => sys.props.remove("graft.bi.slack")
       }
     }
   }

@@ -147,9 +147,11 @@ class BiPlanFuzzSpec extends AnyFunSuite {
   }
 
   /** None when the plan is outside the maintained fragment (the typed
-    * rejection surfaces at the first standing build inside advance). */
+    * rejection surfaces at the first standing build inside advance).
+    * `cellStore` checks through the store probe that the distributed
+    * sibling served the run. */
   private def driveMaintained(plan: Plan, batches: Seq[Seq[BiD]],
-      sem: Map[String, InputSemantics]): Option[Out] = {
+      sem: Map[String, InputSemantics], cellStore: Boolean = false): Option[Out] = {
     val bm = new BiMaintained(spark, partitions = 4)
     attrNames.foreach(a => bm.createAttribute(a, AttributeConfig(sem(a))))
     bm.register(Rule("q", plan)); bm.interest("q")
@@ -161,6 +163,8 @@ class BiPlanFuzzSpec extends AnyFunSuite {
         bm.advance(i + 1L)
         out ++= bm.drain("q")
       }
+      if (cellStore)
+        assert(bm.storeGenerationProbe.isDefined, "the cell sibling did not run")
       Some(ms(out.toSeq))
     } catch {
       case _: UnmaintainablePlan => None
@@ -198,33 +202,31 @@ class BiPlanFuzzSpec extends AnyFunSuite {
   test("random plans agree on the distributed store (dial forced)") {
     // The main test runs the default driver store; the StateCell-
     // distributed store serves visibility per partition — re-fuzz a seed
-    // slice on its dial against the same naive oracle (the zoo spec pins
-    // fixed plans on this dial; this searches shapes).
-    for ((prop, value, label, seeds) <- Seq(
-        ("graft.bi.distributed", "on", "cell", 4 until 8))) {
-      val prev = sys.props.get(prop)
-      sys.props(prop) = value
-      try {
-        var served = 0
-        for (seed <- seeds) {
-          val rnd = new Random(0xB17E5EEDL + seed * 7919L)
-          val tp = gen(rnd, 1 + rnd.nextInt(2))
-          val batches = genBiHistory(rnd)
-          val sem = genSemantics(rnd)
-          def ctx = s"\nseed=$seed ($label)\nplan=${tp.plan}\nsem=$sem\nbatches=$batches"
-          val expect = naiveBiDrains(tp.plan, batches, sem)
-          driveMaintained(tp.plan, batches, sem) match {
-            case Some(got) =>
-              assert(got == expect, s"\nseed=$seed ($label vs naive)$ctx")
-              served += 1
-            case None =>
-          }
+    // slice on it against the same naive oracle (the zoo spec pins fixed
+    // plans on this store; this searches shapes). A driver-store byte
+    // gate of 0 (`graft.bi.driver.bytes`) starts every history there.
+    val prev = sys.props.get("graft.bi.driver.bytes")
+    sys.props("graft.bi.driver.bytes") = "0"
+    try {
+      var served = 0
+      for (seed <- 4 until 8) {
+        val rnd = new Random(0xB17E5EEDL + seed * 7919L)
+        val tp = gen(rnd, 1 + rnd.nextInt(2))
+        val batches = genBiHistory(rnd)
+        val sem = genSemantics(rnd)
+        def ctx = s"\nseed=$seed (cell)\nplan=${tp.plan}\nsem=$sem\nbatches=$batches"
+        val expect = naiveBiDrains(tp.plan, batches, sem)
+        driveMaintained(tp.plan, batches, sem, cellStore = true) match {
+          case Some(got) =>
+            assert(got == expect, s"\nseed=$seed (cell vs naive)$ctx")
+            served += 1
+          case None =>
         }
-        assert(served >= 2, s"only $served/4 plans served on the $label dial")
-      } finally prev match {
-        case Some(v) => sys.props(prop) = v
-        case None    => sys.props.remove(prop)
       }
+      assert(served >= 2, s"only $served/4 plans served on the cell store")
+    } finally prev match {
+      case Some(v) => sys.props("graft.bi.driver.bytes") = v
+      case None    => sys.props.remove("graft.bi.driver.bytes")
     }
   }
 

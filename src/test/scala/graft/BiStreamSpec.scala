@@ -5,14 +5,14 @@ import scala.collection.mutable
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.BiEngine
 import graft.model._
-import graft.streaming.BiStream
+import graft.streaming.BiMaintained
 
 /** The reference's bitemporal cases (`tests/input_semantics.rs:337-508`)
-  * driven through Structured Streaming: system time rides the stream's
-  * arrival order, event time is free, and late event-time data must emit
-  * the same product-order corrections the batch `BitemporalSpec` asserts. */
+  * driven through Structured Streaming via `BiMaintained.attachStream`:
+  * system time rides the stream's arrival order, event time is free, and
+  * late event-time data must emit the same product-order corrections the
+  * batch `BitemporalSpec` asserts. */
 class BiStreamSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -21,14 +21,14 @@ class BiStreamSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    val engine = new BiEngine(spark)
+    val engine = new BiMaintained(spark, partitions = 4)
     engine.createAttribute(":amount", AttributeConfig(InputSemantics.LastWriteWins))
     engine.register(Rule("query", Plan.MatchA(0, ":amount", 1)))
     engine.interest("query")
 
     val in = MemoryStream[(Long, String, Long, Long, Long, Long)]
     val got = mutable.ArrayBuffer.empty[(Seq[Any], (Long, Long), Long)]
-    val query = new BiStream(engine).attach(
+    val query = engine.attachStream(
       in.toDF.toDF("e", "a", "v", "sys", "event", "diff"), "bistream-spec") {
       (_, diffs) => got ++= diffs
     }
@@ -54,46 +54,17 @@ class BiStreamSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("a data-sized batch trips the transaction gate before any collect") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-
-    val engine = new BiEngine(spark)
-    engine.createAttribute(":bulk", AttributeConfig(InputSemantics.LastWriteWins))
-    engine.register(Rule("query", Plan.MatchA(0, ":bulk", 1)))
-    engine.interest("query")
-
-    val in = MemoryStream[(Long, String, Long, Long, Long, Long)]
-    val query = new BiStream(engine, maxTransaction = 8L).attach(
-      in.toDF.toDF("e", "a", "v", "sys", "event", "diff"), "bistream-gate-spec") {
-      (_, _) => ()
-    }
-    try {
-      // 50 datoms against a gate of 8: the distributed count must trip the
-      // require BEFORE the driver collects anything.
-      in.addData((1L to 50L).map(i => (i, ":bulk", i, 0L, 0L, 1L)))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        query.processAllAvailable()
-      }
-      def chain(t: Throwable): Seq[Throwable] =
-        Iterator.iterate(t: Throwable)(_.getCause).takeWhile(_ != null).take(20).toSeq
-      assert(chain(ex).exists(c =>
-        c.getMessage != null && c.getMessage.contains("transaction gate")),
-        s"expected transaction-gate violation, got: ${ex.getMessage}")
-    } finally query.stop()
-  }
-
   test("system time must be strictly increasing across batches") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    val engine = new BiEngine(spark)
+    val engine = new BiMaintained(spark, partitions = 4)
     engine.createAttribute(":x", AttributeConfig(InputSemantics.LastWriteWins))
     engine.register(Rule("query", Plan.MatchA(0, ":x", 1)))
     engine.interest("query")
 
     val in = MemoryStream[(Long, String, Long, Long, Long, Long)]
-    val query = new BiStream(engine).attach(
+    val query = engine.attachStream(
       in.toDF.toDF("e", "a", "v", "sys", "event", "diff"), "bistream-guard-spec") {
       (_, _) => ()
     }

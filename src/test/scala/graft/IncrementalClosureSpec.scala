@@ -1,14 +1,20 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.IncrementalClosure
+import graft.model._
+import graft.model.ValueKind.KEid
+import graft.streaming.{IncrementalClosure, IncrementalQuery}
 
-/** The streamed closure must emit, per batch, EXACTLY the tuples of
+/** The maintained closure must emit, per batch, EXACTLY the tuples of
   * closure(E ∪ Δe) − closure(E) — verified against a driver-side reference
-  * closure on random edge batches, and end-to-end through the
-  * foreachBatch attachment on a memory stream.
+  * closure on random edge batches through the one ingest entry,
+  * [[IncrementalClosure.advanceSignedRdd]], and end to end through
+  * `IncrementalQuery.attach` on a memory stream (the TC rule's closure
+  * node drives this class under the byte gate).
   */
 class IncrementalClosureSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -16,6 +22,41 @@ class IncrementalClosureSpec extends AnyFunSuite {
   /** Driver-side reference closure. */
   private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] =
     DriverClosure.of(edges)
+
+  /** One signed batch through the ingest entry: (src, dst) → diff. */
+  private def signed(inc: IncrementalClosure,
+      deltas: Seq[((Long, Long), Long)], t: Long): Map[(Long, Long), Long] =
+    inc.advanceSignedRdd(spark.sparkContext.parallelize(deltas, 2), t).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+
+  /** A batch of additions (distinct edges, +1 each). */
+  private def add(inc: IncrementalClosure, edges: Seq[(Long, Long)],
+      t: Long): Map[(Long, Long), Long] =
+    signed(inc, edges.distinct.map(_ -> 1L), t)
+
+  // closure(x, y) := e1(x, y) ∪ e1(x, z) ⋈ closure(z, y)
+  private val tcRule = Plan.Union(Seq(0, 1), Seq(
+    Plan.MatchA(0, ":e1", 1),
+    Plan.Project(Seq(0, 1), Plan.Join(Seq(2),
+      Plan.MatchA(0, ":e1", 2), Plan.NameExpr(Seq(2, 1), "closure")))))
+
+  /** A TC standing query attached to a `(a, e, v, t, diff)` memory
+    * stream of `:e1` edges; `onDiffs` sees (src, dst, t, diff). */
+  private def attachTc(queryName: String)(
+      onDiffs: Seq[(Long, Long, Long, Long)] => Unit)
+      : (MemoryStream[(String, Long, Long, Long, Long)],
+        org.apache.spark.sql.streaming.StreamingQuery) = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = MemoryStream[(String, Long, Long, Long, Long)]
+    val iq = new IncrementalQuery(spark, Plan.NameExpr(Seq(0, 1), "closure"),
+      Map(":e1" -> KEid), Map("closure" -> tcRule), partitions = 2)
+    val query = iq.attach(in.toDF.toDF("a", "e", "v", "t", "diff"), queryName) {
+      (t, df) => onDiffs(df.collect().toSeq.map(r =>
+        (r.getLong(0), r.getLong(1), t, r.getLong(2))))
+    }
+    (in, query)
+  }
 
   test("per-batch diffs equal closure(E ∪ Δe) − closure(E) on random batches") {
     val rnd = new scala.util.Random(42)
@@ -27,80 +68,39 @@ class IncrementalClosureSpec extends AnyFunSuite {
       val before = closure(accumulated)
       accumulated ++= edges
       val after = closure(accumulated)
-      val got = inc.advance(edges, batch.toLong).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == after -- before, s"batch $batch edges=$edges")
+      val got = add(inc, edges, batch.toLong)
+      assert(got == (after -- before).map(_ -> 1L).toMap, s"batch $batch edges=$edges")
     }
     assert(inc.size == closure(accumulated).size.toLong)
   }
 
   test("duplicate and already-known edges emit nothing") {
     val inc = new IncrementalClosure(spark, partitions = 2)
-    val d1 = inc.advance(Seq((1L, 2L), (2L, 3L), (1L, 2L)), 1L).collect()
-    assert(d1.map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((1L, 2L), (2L, 3L), (1L, 3L)))
-    assert(inc.advance(Seq((1L, 2L)), 2L).collect().isEmpty)
+    // Duplicate rows consolidate per edge before anything lands on the
+    // driver: (1,2) arrives three times and nets to one addition.
+    val d1 = signed(inc, Seq(((1L, 2L), 1L), ((2L, 3L), 1L),
+      ((1L, 2L), 1L), ((1L, 2L), -1L)), 1L)
+    assert(d1 == Map((1L, 2L) -> 1L, (2L, 3L) -> 1L, (1L, 3L) -> 1L))
+    // Re-adding a known edge is dropped against the known set.
+    assert(add(inc, Seq((1L, 2L)), 2L).isEmpty)
   }
 
-  test("advanceRdd dedups a firehose batch distributed: raw rows never collected") {
-    // 500k raw rows but only 100 distinct fresh edges: the driver must see
-    // the 100, not the 500k (the raw batch is deduped and subtracted
-    // against the known set as an RDD before any collect).
-    val inc = new IncrementalClosure(spark, partitions = 4, maxEdges = 200L)
-    val path = (0L until 100L).map(i => (i, i + 1))
-    val raw = spark.sparkContext
-      .parallelize(0 until 500000, 8)
-      .map(i => path(i % path.length))
-    // maxEdges=200 < 500k raw rows: this only passes if dedup/subtract
-    // runs BEFORE the driver-side gate sees the batch.
-    val d1 = inc.advanceRdd(raw, 1L)
-    assert(d1.count() === 100L * 101L / 2) // closure of a 101-node path
-    // Re-sending the same firehose adds nothing.
-    assert(inc.advanceRdd(raw, 2L).count() === 0L)
-  }
-
-  test("a distinct batch past maxEdges trips the broadcast gate loudly") {
-    // 500 genuinely fresh edges against a 200-edge gate: the distributed
-    // count must fail the batch before any edge lands on the driver,
-    // and the closure must stay as it was.
-    val inc = new IncrementalClosure(spark, partitions = 4, maxEdges = 200L)
-    assert(inc.advance(Seq((1L, 2L)), 1L).count() === 1L)
-    val fire = spark.sparkContext.parallelize(0L until 500L, 4)
-      .map(i => (i + 1000L, i + 100000L))
-    val ex = intercept[IllegalArgumentException](inc.advanceRdd(fire, 2L))
-    assert(ex.getMessage.contains("broadcast gate (200)"), ex.getMessage)
-    assert(inc.size === 1L)
-  }
-
-  test("attach rejects diffs outside ±1 via the distributed guard") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val edges = MemoryStream[(Long, Long, Long, Long)]
+  test("advanceSignedRdd rejects consolidated diffs outside ±1") {
     val inc = new IncrementalClosure(spark, partitions = 2)
-    val query = inc.attach(
-      edges.toDF.toDF("src", "dst", "t", "diff"), "inc-closure-guard-spec") { _ => () }
-    try {
-      edges.addData((1L, 2L, 1L, 2L))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        query.processAllAvailable()
-      }
-      assert(ex.getMessage.contains("must be ±1") ||
-        Option(ex.getCause).exists(_.getMessage.contains("must be ±1")))
-    } finally query.stop()
+    val ex = intercept[IllegalArgumentException] {
+      signed(inc, Seq(((1L, 2L), 1L), ((1L, 2L), 1L)), 1L)
+    }
+    assert(ex.getMessage.contains("must be ±1"), ex.getMessage)
+    assert(inc.size == 0L && inc.edgeSize == 0L)
   }
 
   // ---------------------------------------------------------------- DRed
-
-  private def signed(inc: IncrementalClosure,
-      deltas: Seq[((Long, Long), Long)], t: Long): Map[(Long, Long), Long] =
-    inc.advanceSigned(deltas, t).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
 
   test("deleting an edge retracts exactly the facts that lose all derivations") {
     val inc = new IncrementalClosure(spark, partitions = 2)
     // a→b→c plus the direct shortcut a→c: deleting a→b kills (a,b) only —
     // (a,c) survives on the shortcut.
-    inc.advance(Seq((1L, 2L), (2L, 3L), (1L, 3L)), 1L).collect()
+    add(inc, Seq((1L, 2L), (2L, 3L), (1L, 3L)), 1L)
     val d = signed(inc, Seq(((1L, 2L), -1L)), 2L)
     assert(d == Map((1L, 2L) -> -1L))
     assert(inc.size == 2L) // (2,3), (1,3)
@@ -109,7 +109,7 @@ class IncrementalClosureSpec extends AnyFunSuite {
   test("deletion cascades through facts with no alternative path") {
     val inc = new IncrementalClosure(spark, partitions = 2)
     // path 1→2→3→4: deleting 2→3 retracts (2,3),(2,4),(1,3),(1,4).
-    inc.advance(Seq((1L, 2L), (2L, 3L), (3L, 4L)), 1L).collect()
+    add(inc, Seq((1L, 2L), (2L, 3L), (3L, 4L)), 1L)
     val d = signed(inc, Seq(((2L, 3L), -1L)), 2L)
     assert(d == Map((2L, 3L) -> -1L, (2L, 4L) -> -1L,
       (1L, 3L) -> -1L, (1L, 4L) -> -1L))
@@ -120,7 +120,7 @@ class IncrementalClosureSpec extends AnyFunSuite {
     val inc = new IncrementalClosure(spark, partitions = 2)
     // 1→2 directly and 1→5→2, then 2→3. Deleting 1→2 overdeletes
     // (1,2),(1,3) but both rederive through 5 — nothing is retracted.
-    inc.advance(Seq((1L, 2L), (1L, 5L), (5L, 2L), (2L, 3L)), 1L).collect()
+    add(inc, Seq((1L, 2L), (1L, 5L), (5L, 2L), (2L, 3L)), 1L)
     val d = signed(inc, Seq(((1L, 2L), -1L)), 2L)
     assert(d.isEmpty, s"expected no net diffs, got $d")
     assert(inc.size == 6L) // (1,5),(5,2),(2,3),(1,2),(5,3),(1,3)
@@ -128,7 +128,7 @@ class IncrementalClosureSpec extends AnyFunSuite {
 
   test("mixed batch consolidates: delete one edge, add a replacement path") {
     val inc = new IncrementalClosure(spark, partitions = 2)
-    inc.advance(Seq((1L, 2L), (2L, 3L)), 1L).collect()
+    add(inc, Seq((1L, 2L), (2L, 3L)), 1L)
     // Drop 1→2, add 1→9→2: (1,2),(1,3) net to zero (retracted by DRed,
     // re-derived through 9); only the genuinely new facts appear.
     val d = signed(inc, Seq(((1L, 2L), -1L), ((1L, 9L), 1L), ((9L, 2L), 1L)), 2L)
@@ -139,7 +139,7 @@ class IncrementalClosureSpec extends AnyFunSuite {
 
   test("delete and re-add of the same edge in one batch is a no-op") {
     val inc = new IncrementalClosure(spark, partitions = 2)
-    inc.advance(Seq((1L, 2L), (2L, 3L)), 1L).collect()
+    add(inc, Seq((1L, 2L), (2L, 3L)), 1L)
     val d = signed(inc, Seq(((1L, 2L), -1L), ((1L, 2L), 1L)), 2L)
     assert(d.isEmpty)
     assert(inc.size == 3L)
@@ -147,9 +147,9 @@ class IncrementalClosureSpec extends AnyFunSuite {
 
   test("retracting an absent edge fails loudly") {
     val inc = new IncrementalClosure(spark, partitions = 2)
-    inc.advance(Seq((1L, 2L)), 1L).collect()
+    add(inc, Seq((1L, 2L)), 1L)
     val ex = intercept[IllegalArgumentException] {
-      inc.advanceSigned(Seq(((7L, 8L), -1L)), 2L)
+      signed(inc, Seq(((7L, 8L), -1L)), 2L)
     }
     assert(ex.getMessage.contains("absent"))
   }
@@ -175,20 +175,12 @@ class IncrementalClosureSpec extends AnyFunSuite {
   }
 
   test("attach processes retractions end-to-end") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val edges = MemoryStream[(Long, Long, Long, Long)]
-    val inc = new IncrementalClosure(spark, partitions = 2)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    val query = inc.attach(
-      edges.toDF.toDF("src", "dst", "t", "diff"), "inc-closure-signed-spec") { df =>
-      seen ++= df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    }
+    val seen = mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
+    val (edges, query) = attachTc("inc-closure-signed-spec")(seen ++= _)
     try {
-      edges.addData((1L, 2L, 1L, 1L), (2L, 3L, 1L, 1L))
+      edges.addData((":e1", 1L, 2L, 1L, 1L), (":e1", 2L, 3L, 1L, 1L))
       query.processAllAvailable()
-      edges.addData((2L, 3L, 2L, -1L))
+      edges.addData((":e1", 2L, 3L, 2L, -1L))
       query.processAllAvailable()
       assert(seen.filter(_._3 == 1L).map(x => (x._1, x._2)).toSet ==
         Set((1L, 2L), (2L, 3L), (1L, 3L)))
@@ -198,16 +190,11 @@ class IncrementalClosureSpec extends AnyFunSuite {
   }
 
   test("attach rejects a time that regresses the processed frontier") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val edges = MemoryStream[(Long, Long, Long, Long)]
-    val inc = new IncrementalClosure(spark, partitions = 2)
-    val query = inc.attach(
-      edges.toDF.toDF("src", "dst", "t", "diff"), "inc-closure-frontier-spec") { _ => () }
+    val (edges, query) = attachTc("inc-closure-frontier-spec")(_ => ())
     try {
-      edges.addData((1L, 2L, 5L, 1L))
+      edges.addData((":e1", 1L, 2L, 5L, 1L))
       query.processAllAvailable()
-      edges.addData((2L, 3L, 3L, 1L)) // t=3 regresses past t=5
+      edges.addData((":e1", 2L, 3L, 3L, 1L)) // t=3 regresses past t=5
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         query.processAllAvailable()
       }
@@ -220,21 +207,16 @@ class IncrementalClosureSpec extends AnyFunSuite {
   }
 
   test("foreachBatch attachment streams closure diffs from a memory stream") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val edges = MemoryStream[(Long, Long, Long, Long)]
-    val inc = new IncrementalClosure(spark, partitions = 2)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val query = inc.attach(
-      edges.toDF.toDF("src", "dst", "t", "diff"), "inc-closure-spec") { df =>
-      out ++= df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val out = mutable.ArrayBuffer.empty[(Long, Long, Long)]
+    val (edges, query) = attachTc("inc-closure-spec") { ds =>
+      out ++= ds.map(d => (d._1, d._2, d._3))
     }
     try {
-      edges.addData((1L, 2L, 1L, 1L), (2L, 3L, 1L, 1L))
+      edges.addData((":e1", 1L, 2L, 1L, 1L), (":e1", 2L, 3L, 1L, 1L))
       query.processAllAvailable()
       assert(out.toSet == Set((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 1L)))
       out.clear()
-      edges.addData((3L, 1L, 2L, 1L)) // closes the cycle
+      edges.addData((":e1", 3L, 1L, 2L, 1L)) // closes the cycle
       query.processAllAvailable()
       val want = Set(
         (3L, 1L), (3L, 2L), (3L, 3L),

@@ -4,7 +4,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.IncrementalHector
+import graft.streaming.{IncrementalHector, IncrementalQuery}
 import graft.model._
 
 /** Incrementally maintained Hector: across ANY history of signed input
@@ -72,13 +72,15 @@ class IncrementalHectorSpec extends AnyFunSuite {
   test("foreachBatch attachment maintains a join from a memory stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val inc = new IncrementalHector(spark, Seq(0, 1, 2), Seq(
+    // The conjunction streams through IncrementalQuery.attach, whose
+    // Hector node maintains it with this class.
+    val iq = new IncrementalQuery(spark, Plan.Hector(Seq(0, 1, 2), Seq(
       Binding.attribute(0, ":ihs/name", 1),
-      Binding.attribute(0, ":ihs/age", 2)),
+      Binding.attribute(0, ":ihs/age", 2))),
       Map(":ihs/name" -> ValueKind.KNumber, ":ihs/age" -> ValueKind.KNumber))
     val in = MemoryStream[(String, Long, Long, Long, Long)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long], Long)]
-    val query = inc.attach(
+    val query = iq.attach(
       in.toDF.toDF("a", "e", "v", "t", "diff"), "inc-hector-spec") { (t, df) =>
       got ++= df.collect().map(r =>
         (t, Seq(r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
@@ -158,11 +160,11 @@ class IncrementalHectorSpec extends AnyFunSuite {
   test("attach rejects a time that regresses the processed frontier") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val inc = new IncrementalHector(spark, Seq(0, 1),
-      Seq(Binding.attribute(0, ":ihf/x", 1)),
+    val iq = new IncrementalQuery(spark, Plan.Hector(Seq(0, 1),
+      Seq(Binding.attribute(0, ":ihf/x", 1))),
       Map(":ihf/x" -> ValueKind.KNumber))
     val in = MemoryStream[(String, Long, Long, Long, Long)]
-    val query = inc.attach(
+    val query = iq.attach(
       in.toDF.toDF("a", "e", "v", "t", "diff"), "inc-hector-frontier") { (_, df) =>
       df.collect(); ()
     }

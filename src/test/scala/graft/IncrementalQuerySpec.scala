@@ -72,10 +72,11 @@ class IncrementalQuerySpec extends AnyFunSuite {
     }.filter(_._2 != 0L).toMap
 
   /** Drive `plan` with `batches`, asserting the incremental diffs equal
-    * batch snapshot diffs after every batch. */
+    * batch snapshot diffs after every batch; returns the driven query
+    * for probes. */
   private def check(plan: Plan,
       batches: Seq[Seq[(String, Long, Long, Long)]],
-      rules: Map[String, Plan] = Map.empty): Unit = {
+      rules: Map[String, Plan] = Map.empty): IncrementalQuery = {
     import spark.implicits._
     val iq = new IncrementalQuery(spark, plan, kinds, rules)
     val store = emptyStore
@@ -97,6 +98,7 @@ class IncrementalQuerySpec extends AnyFunSuite {
         s"batch $i of ${batches.length}: $batch")
       before = after
     }
+    iq
   }
 
   /** Deterministic signed batches over `attrs` — retractions are
@@ -209,9 +211,11 @@ class IncrementalQuerySpec extends AnyFunSuite {
       Plan.MatchA(0, ":e1", 1),
       Plan.Project(Seq(0, 1), Plan.Join(Seq(2),
         Plan.MatchA(0, ":e1", 2), Plan.NameExpr(Seq(2, 1), "closure")))))
-    check(Plan.NameExpr(Seq(0, 1), "closure"),
+    val iq = check(Plan.NameExpr(Seq(0, 1), "closure"),
       genBatches(3671, Seq(":e1"), 4, es = 5, vs = 5),
       Map("closure" -> closure))
+    // A few dozen edges sit far under the default byte gate.
+    assert(iq.closureStoreProbe == Seq("IncrementalClosure"))
     // Right-linear form, same semantics.
     val closureR = Plan.Union(Seq(0, 1), Seq(
       Plan.MatchA(0, ":e1", 1),
@@ -315,19 +319,21 @@ class IncrementalQuerySpec extends AnyFunSuite {
       genBatches(2447, Seq(":ua", ":ub", ":uc"), 4))
   }
 
-  test("TC closure node on the distributed backend (graft.closure.distributed) stays batch-exact") {
-    // The ClosureNode's DistributedClosure backend (no broadcast edge
-    // ceiling) must emit identical diffs to the default broadcast-gated
-    // IncrementalClosure.
+  test("TC closure node on the distributed backend (broadcast threshold -1) stays batch-exact") {
+    // A threshold of −1 admits no broadcast, so the ClosureNode runs on
+    // DistributedClosure (no broadcast, no driver edge set) from its
+    // first advance; it must emit the batch compiler's diffs.
     val closure = Plan.Union(Seq(0, 1), Seq(
       Plan.MatchA(0, ":e1", 1),
       Plan.Project(Seq(0, 1), Plan.Join(Seq(2),
         Plan.MatchA(0, ":e1", 2), Plan.NameExpr(Seq(2, 1), "closure")))))
-    System.setProperty("graft.closure.distributed", "true")
-    try check(Plan.NameExpr(Seq(0, 1), "closure"),
-      genBatches(3671, Seq(":e1"), 4, es = 5, vs = 5),
-      Map("closure" -> closure))
-    finally System.clearProperty("graft.closure.distributed")
+    val iq = TestSpark.withConf(TestSpark.BroadcastThreshold, "-1") {
+      check(Plan.NameExpr(Seq(0, 1), "closure"),
+        genBatches(3671, Seq(":e1"), 4, es = 5, vs = 5),
+        Map("closure" -> closure))
+    }
+    assert(iq.closureStoreProbe == Seq("DistributedClosure"),
+      s"stores built: ${iq.closureStoreProbe}")
   }
 
   test("linear kernel: per-advance Catalyst planning independent of fixpoint depth") {

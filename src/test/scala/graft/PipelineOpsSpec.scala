@@ -250,12 +250,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val d = 256
     val pairs = (0 until d).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
     val ids = (0L to d.toLong).toDF("id")
-    sys.props("graft.cc.partitions") = "4"
-    val got =
-      try TestSpark.withConf(TestSpark.BroadcastThreshold, "-1")(
-        Dedup.connectedComponents(pairs, ids)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      finally sys.props -= "graft.cc.partitions"
+    val got = TestSpark.withConf(TestSpark.BroadcastThreshold, "-1")(
+      Dedup.connectedComponentsWithRounds(pairs, ids, partitions = Some(4))._1
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(got == (0L to d.toLong).map(i => (i, 0L)).toSet)
   }
 

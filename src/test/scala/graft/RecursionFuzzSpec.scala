@@ -15,8 +15,11 @@ import graft.streaming.IncrementalQuery
   * and every advance's drain must equal the set difference of a
   * driver-side reference over the thresholded input (a datom is present
   * while its net weight is positive):
-  *  - transitive closure through the `ClosureNode` tier, on the default
-  *    broadcast-gated store and on `DistributedClosure`;
+  *  - transitive closure through the `ClosureNode` tier: on the
+  *    broadcast `IncrementalClosure` under the default byte gate, on
+  *    `DistributedClosure` at a threshold of −1 (no broadcast admitted),
+  *    and across a mid-history migration between the two at a gate
+  *    that admits the first batch's edge set and nothing more;
   *  - label propagation through `RecursionNode`, under the default byte
   *    gate (broadcast kernel) and a 1-byte gate (partitioned
   *    arrangement). */
@@ -95,9 +98,10 @@ class RecursionFuzzSpec extends AnyFunSuite {
       .filter(_._2 != 0L)
 
   /** Drive `name`'s rule through the history, checking each drain
-    * against `reference` of the thresholded input. */
+    * against `reference` of the thresholded input; returns the query
+    * for probes. */
   private def drive(name: String, rule: Plan, batches: Seq[Batch],
-      reference: Map[(String, Long, Long), Long] => Set[(Long, Long)]): Unit = {
+      reference: Map[(String, Long, Long), Long] => Set[(Long, Long)]): IncrementalQuery = {
     import spark.implicits._
     val iq = new IncrementalQuery(spark, Plan.NameExpr(Seq(0, 1), name),
       kinds, Map(name -> rule), partitions = 4)
@@ -115,6 +119,7 @@ class RecursionFuzzSpec extends AnyFunSuite {
       assert(got == want, s"advance $i of ${batches.length}: $batch")
       before = after
     }
+    iq
   }
 
   private def tc(net: Map[(String, Long, Long), Long]): Set[(Long, Long)] =
@@ -124,15 +129,41 @@ class RecursionFuzzSpec extends AnyFunSuite {
     labelsOf(present(net, ":e1"), present(net, ":ua"))
 
   test("transitive closure (ClosureNode, default store) matches a driver closure") {
-    for (seed <- Seq(71L, 72L))
-      drive("closure", closure, history(seed, 6, labels = false), tc)
+    for (seed <- Seq(71L, 72L)) {
+      val iq = drive("closure", closure, history(seed, 6, labels = false), tc)
+      assert(iq.closureStoreProbe == Seq("IncrementalClosure"))
+    }
   }
 
   test("transitive closure (ClosureNode on DistributedClosure) matches a driver closure") {
-    System.setProperty("graft.closure.distributed", "true")
-    try for (seed <- Seq(73L, 74L))
-      drive("closure", closure, history(seed, 6, labels = false), tc)
-    finally System.clearProperty("graft.closure.distributed")
+    // A threshold of −1 admits no broadcast: the node never builds the
+    // broadcast store (no driver edge set) and runs distributed throughout.
+    TestSpark.withConf(TestSpark.BroadcastThreshold, "-1") {
+      for (seed <- Seq(73L, 74L)) {
+        val iq = drive("closure", closure, history(seed, 6, labels = false), tc)
+        assert(iq.closureStoreProbe == Seq("DistributedClosure"))
+      }
+    }
+  }
+
+  test("transitive closure migrates to DistributedClosure mid-history at the byte gate") {
+    // The gate admits exactly the first batch's edge set, so the node
+    // starts on the broadcast store and the next advance with any edge
+    // transition would cross it: the node plants the distributed store
+    // from the broadcast one's edge set and closure and continues there,
+    // and every drain still equals the driver closure.
+    for (seed <- Seq(75L, 76L)) {
+      val batches = history(seed, 6, labels = false)
+      val firstEdges = batches.head.groupBy(d => (d._2, d._3))
+        .count(_._2.map(_._4).sum > 0L)
+      assert(firstEdges > 0, s"seed $seed: empty first batch")
+      val gate = (firstEdges * graft.streaming.IncrementalClosure.EdgeBytes).toString
+      val iq = TestSpark.withConf(TestSpark.BroadcastThreshold, gate) {
+        drive("closure", closure, batches, tc)
+      }
+      assert(iq.closureStoreProbe == Seq("IncrementalClosure", "DistributedClosure"),
+        s"seed $seed: stores built ${iq.closureStoreProbe}")
+    }
   }
 
   test("label propagation (RecursionNode, default gate) matches a driver BFS") {

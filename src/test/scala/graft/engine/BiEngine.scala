@@ -44,6 +44,11 @@ import graft.model._
   * driver-side by nature (exactly as the reference's progress tracking is
   * worker-local). Each per-time evaluation runs through the same
   * distributed `Compiler` as the unitemporal engine.
+  *
+  * Lives in the test tree: it is the per-time snapshot-recompute parity
+  * oracle that the maintained `BiMaintained` is checked against
+  * (`BiMaintainedSpec`, `BiPlanFuzzSpec`, `BiPropertySpec`,
+  * `BitemporalSpec`); bitemporal serving runs through `BiMaintained`.
   */
 class BiEngine(val spark: SparkSession) {
 

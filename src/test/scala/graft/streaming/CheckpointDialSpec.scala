@@ -55,9 +55,11 @@ class CheckpointDialSpec extends AnyFunSuite {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       def drainOf(df: org.apache.spark.sql.DataFrame): Unit =
         out ++= df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      drainOf(inc.advance(Seq((1L, 2L), (2L, 3L)), 0L))
-      drainOf(inc.advance(Seq((3L, 4L)), 1L))
-      drainOf(inc.advanceSigned(Seq(((2L, 3L), -1L)), 2L))
+      def batch(deltas: ((Long, Long), Long)*) =
+        spark.sparkContext.parallelize(deltas, 2)
+      drainOf(inc.advanceSignedRdd(batch(((1L, 2L), 1L), ((2L, 3L), 1L)), 0L))
+      drainOf(inc.advanceSignedRdd(batch(((3L, 4L), 1L)), 1L))
+      drainOf(inc.advanceSignedRdd(batch(((2L, 3L), -1L)), 2L))
       out.toSeq.sorted
     }
     val base = run()
@@ -84,7 +86,7 @@ class CheckpointDialSpec extends AnyFunSuite {
     // lost — the executor-loss scenario the dial exists for.
     import graft.model._
     val dir = Files.createTempDirectory("graft-ckpt-bi")
-    val prevDist = sys.props.put("graft.bi.distributed", "on")
+    val prevGate = sys.props.put("graft.bi.driver.bytes", "0")
     try withDial(dir) {
       val bm = new graft.streaming.BiMaintained(spark, partitions = 2)
       bm.createAttribute(":ck/x", AttributeConfig(InputSemantics.Raw))
@@ -110,9 +112,9 @@ class CheckpointDialSpec extends AnyFunSuite {
       assert(second.map(_._3).sum == 1L,
         s"history lost after the cache wipe: $second")
       assert(bm.datomCountProbe == 1001L)
-    } finally prevDist match {
-      case Some(v) => sys.props("graft.bi.distributed") = v
-      case None    => sys.props.remove("graft.bi.distributed")
+    } finally prevGate match {
+      case Some(v) => sys.props("graft.bi.driver.bytes") = v
+      case None    => sys.props.remove("graft.bi.driver.bytes")
     }
   }
 
