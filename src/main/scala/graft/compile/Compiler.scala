@@ -1224,7 +1224,8 @@ class Compiler(
         i += 1
       }
       val counts =
-        graft.kernel.RddKernel.materializeCounts(chain.toIndexedSeq)
+        graft.streaming.CommitLedger.materialize(
+          delta.sparkContext, chain.toIndexedSeq)._1
       var j = 0
       var stop = false
       while (j < b && !stop) {

@@ -9,6 +9,8 @@ import graft.compile.{Compiler, Rel}
 import graft.domain.Domain
 import graft.model._
 import graft.sinks.DiffSink
+import graft.streaming.CommitLedger
+import graft.streaming.IncrementalQuery.rowsOf
 
 /** The embedded-engine API, mirroring the reference `Server`
   * (`src/server/mod.rs:225-530`) test path (SURVEY.md §3.2):
@@ -190,6 +192,11 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
 
   private val snapshotRecomputes =
     mutable.Map.empty[String, Long].withDefaultValue(0L)
+
+  /** Spec probe: the live state generations of `name`'s standing query
+    * (empty while the snapshot path serves it). */
+  private[graft] def liveGenerationsProbe(name: String): Seq[org.apache.spark.rdd.RDD[_]] =
+    incrementalQs.get(name).toSeq.flatMap(_.liveGenerationsProbe)
 
   /** Incremental maintenance + sink delivery: the maintained diffs go to
     * `sink` as DataFrames (data-sized results, never collected), computed
@@ -397,77 +404,73 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
           prevFrames(name) = cur
         case None =>
           val cur = snapshot(name, processedThrough - 1)
-          val buf = outputs(name)
-          cur.valuesIterator.foreach { case (tuple, w) => buf += ((tuple, frontier, w)) }
+          buffer(name, frontier, None, cur.valuesIterator)
           prevSnapshots(name) = cur
       }
       initialized += name
     }
 
     val times = domain.pendingTimes(0L, next).filter(_ >= earliestUnprocessed)
-    // Each attribute's delta feed at a time is built once, on first use,
-    // and shared by every maintained rule that reads it.
-    val feeds = mutable.Map.empty[(String, Long), Option[(DataFrame, Long)]]
-    for (t <- times; name <- interests) {
+    for (t <- times) {
       // Delivery granularity: coarsen emitted times STRICTLY up to the next
       // interval bound — (t/g + 1)·g even at exact multiples (the reference
       // Coarsen, src/timestamp/mod.rs:151-154) — and hold them until the
       // frontier passes that bound.
-      val coarse = granularities.get(name).map(g => (t / g + 1L) * g)
-      if (incrementalQs.contains(name)) {
-        val (deltas, counts) = incrementalDeltas(name,
-          a => feeds.getOrElseUpdate((a, t), bufferFeed(a, t, t + 1L)))
-        if (deltas.nonEmpty) {
-          val diff = incrementalQs(name).advance(deltas, counts,
-            consolidate = sinks.contains(name))
-          sinks.get(name) match {
-            case Some(sink) =>
-              // Data-sized delivery: the maintained diffs go to the sink
-              // as a DataFrame — never collected, and (unlike the
-              // snapshot-sink path) computed from the delta alone.
-              val frame = sinkFrame(diff, coarse.getOrElse(t))
-              coarse match {
-                case Some(tOut) =>
-                  pendingCoarseFrames.getOrElseUpdate(
-                    name, mutable.ArrayBuffer.empty) += ((tOut, frame))
-                case None => sink.deliver(name, t, frame)
-              }
-            case None =>
-              val rows = collectDiffs(diff, incrementalQs(name).outputIsPathArray)
-              if (rows.nonEmpty) {
-                val (tOut, buf) = coarse match {
-                  case Some(c) =>
-                    (c, pendingCoarse.getOrElseUpdate(name, mutable.ArrayBuffer.empty))
-                  case None => (t, outputs(name))
-                }
-                rows.foreach { case (tuple, w) => buf += ((tuple, tOut, w)) }
-              }
+      def coarse(name: String): Option[Long] =
+        granularities.get(name).map(g => (t / g + 1L) * g)
+      // Each attribute's delta feed at a time is built once, on first use,
+      // and shared by every maintained rule that reads it.
+      val feeds = mutable.Map.empty[String, Option[(DataFrame, Long)]]
+      // Every maintained interest advances as ONE Spark job per completed
+      // time, 3DF's one dataflow step per epoch: the diffs build lazily,
+      // and one action materializes every state commit with the collected
+      // rows. Sink frames read the committed outputs, so they go out
+      // after it; without one, the outputs are dead once it ran.
+      val maintained = interests.toSeq.filter(incrementalQs.contains)
+      val collected = mutable.ArrayBuffer.empty[String]
+      val frames = mutable.ArrayBuffer.empty[(String, DataFrame)]
+      val (_, rows) = CommitLedger.run(spark.sparkContext,
+          outputsDead = !maintained.exists(sinks.contains)) {
+        val rdds = maintained.flatMap { name =>
+          val (deltas, counts) = incrementalDeltas(name,
+            a => feeds.getOrElseUpdate(a, bufferFeed(a, t, t + 1L)))
+          if (deltas.isEmpty) None
+          else {
+            val diff = incrementalQs(name).advance(deltas, counts,
+              consolidate = sinks.contains(name))
+            // Data-sized delivery: the maintained diffs go to the sink as
+            // a DataFrame — never collected, and (unlike the snapshot-sink
+            // path) computed from the delta alone.
+            if (sinks.contains(name)) {
+              frames += ((name, sinkFrame(diff, coarse(name).getOrElse(t))))
+              None
+            } else {
+              collected += name
+              Some(rowsOf(diff))
+            }
           }
         }
-      } else sinks.get(name) match {
-        case Some(sink) =>
+        (Nil, rdds)
+      }
+      collected.zip(rows).foreach { case (name, rs) =>
+        buffer(name, t, coarse(name),
+          drainRows(rs, incrementalQs(name).outputIsPathArray))
+      }
+      frames.foreach { case (name, frame) => deliver(name, t, coarse(name), frame) }
+      for (name <- interests if !incrementalQs.contains(name)) sinks.get(name) match {
+        case Some(_) =>
           val cur = frameSnapshot(name, t)
-          val diff = frameDiff(cur, prevFrames.get(name), coarse.getOrElse(t))
-          coarse match {
-            case Some(tOut) =>
-              pendingCoarseFrames
-                .getOrElseUpdate(name, mutable.ArrayBuffer.empty) += ((tOut, diff))
-            case None => sink.deliver(name, t, diff)
-          }
+          deliver(name, t, coarse(name),
+            frameDiff(cur, prevFrames.get(name), coarse(name).getOrElse(t)))
           prevFrames(name) = cur
         case None =>
           val cur = snapshot(name, t)
           val prev = prevSnapshots(name)
-          val (tOut, buf) = coarse match {
-            case Some(c) =>
-              (c, pendingCoarse.getOrElseUpdate(name, mutable.ArrayBuffer.empty))
-            case None => (t, outputs(name))
-          }
-          (cur.keySet ++ prev.keySet).foreach { k =>
+          buffer(name, t, coarse(name), (cur.keySet ++ prev.keySet).iterator.flatMap { k =>
             val (tuple, w) = cur.getOrElse(k, (prev(k)._1, 0L))
             val d = w - prev.get(k).fold(0L)(_._2)
-            if (d != 0L) buf += ((tuple, tOut, d))
-          }
+            if (d != 0L) Some((tuple, d)) else None
+          })
           prevSnapshots(name) = cur
       }
     }
@@ -491,6 +494,28 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
 
   private var processedThrough: Long = 0L
   private def earliestUnprocessed: Long = processedThrough
+
+  /** Append a rule's diffs at time `t` to its drain buffer, or hold them
+    * until the frontier passes their coarsened time. */
+  private def buffer(name: String, t: Long, coarse: Option[Long],
+      diffs: Iterator[(Seq[Any], Long)]): Unit = {
+    val (tOut, buf) = coarse match {
+      case Some(c) =>
+        (c, pendingCoarse.getOrElseUpdate(name, mutable.ArrayBuffer.empty))
+      case None => (t, outputs(name))
+    }
+    diffs.foreach { case (tuple, w) => buf += ((tuple, tOut, w)) }
+  }
+
+  /** Hand a rule's diff frame at time `t` to its sink, or hold it until
+    * the frontier passes its coarsened time. */
+  private def deliver(name: String, t: Long, coarse: Option[Long],
+      frame: DataFrame): Unit = coarse match {
+    case Some(tOut) =>
+      pendingCoarseFrames.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
+        ((tOut, frame))
+    case None => sinks(name).deliver(name, t, frame)
+  }
 
   /** Fetch and clear accumulated output diffs for a rule (empty after
     * `uninterest`). */
@@ -611,17 +636,19 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
       if (deltas.nonEmpty) {
         // Only a replay the Engine collects skips the distributed
         // consolidation (a conversion delivers nothing, so it needs none).
-        val diffs = iq.advance(deltas, counts,
-          consolidate = deliverReplay && sinks.contains(name))
-        if (deliverReplay) sinks.get(name) match {
-          case Some(sink) =>
-            sink.deliver(name, frontier, sinkFrame(diffs, frontier))
-          case None =>
-            val buf = outputs(name)
-            collectDiffs(diffs, iq.outputIsPathArray).foreach { case (tuple, w) =>
-              buf += ((tuple, frontier, w))
-            }
+        // One action materializes the replay's commits with its rows.
+        val collect = deliverReplay && !sinks.contains(name)
+        var diffs: DataFrame = null
+        val (_, rows) = CommitLedger.run(spark.sparkContext,
+            outputsDead = !(deliverReplay && sinks.contains(name))) {
+          diffs = iq.advance(deltas, counts,
+            consolidate = deliverReplay && sinks.contains(name))
+          (Nil, if (collect) Seq(rowsOf(diffs)) else Nil)
         }
+        if (collect)
+          buffer(name, frontier, None, drainRows(rows(0), iq.outputIsPathArray))
+        else if (deliverReplay)
+          sinks(name).deliver(name, frontier, sinkFrame(diffs, frontier))
         // else: state advanced; these times were already delivered as
         // snapshot diffs — do not re-deliver.
       }
@@ -704,11 +731,11 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
       case (a, (_, n)) if !staticFeeds.contains(a) => a -> n })
   }
 
-  /** Collect a maintained query's UNCONSOLIDATED diff frame into drain
-    * tuples, consolidating on the driver: what the distributed `groupBy`
+  /** A maintained query's collected UNCONSOLIDATED diff rows as drain
+    * tuples, consolidated on the driver: what the distributed `groupBy`
     * would return, without its shuffle. */
-  private def collectDiffs(df: DataFrame, pathArray: Boolean): Seq[(Seq[Any], Long)] =
-    keyed(df.collect(), pathArray).valuesIterator.filter(_._2 != 0L).toSeq
+  private def drainRows(rows: Array[Any], pathArray: Boolean): Iterator[(Seq[Any], Long)] =
+    keyed(rows.map(_.asInstanceOf[Row]), pathArray).valuesIterator.filter(_._2 != 0L)
 
   /** Collected result rows summed per tuple under Spark's grouping
     * equality ([[Engine.groupKey]]): grouping key -> (drain tuple,

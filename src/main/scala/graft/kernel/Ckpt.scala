@@ -89,8 +89,11 @@ object Ckpt {
     /** Reliable `checkpoint()` under the dial (persisted first so the
       * checkpoint write re-reads, not recomputes), `localCheckpoint`
       * otherwise. Materialization stays with the caller's first action
-      * in both modes. */
+      * in both modes. An RDD already cut and materialized is returned
+      * as is: its lineage is already truncated (Spark would only log
+      * that it refuses to mark it again). */
     def graftCheckpoint(): RDD[T] = reliableDir match {
+      case _ if r.isCheckpointed => r
       case Some(d) =>
         ensureDir(r.sparkContext, d)
         if (r.getStorageLevel == StorageLevel.NONE)

@@ -38,8 +38,9 @@ object RddKernel {
   val KernelHops = 4
 
   /** Semi-naive rounds chained lazily and materialized through one
-    * tagged-count job ([[materializeCounts]]): a depth-d fixpoint costs
-    * ⌈d/RoundBatch⌉ scheduler round-trips instead of d. */
+    * tagged-count job ([[graft.streaming.CommitLedger.materialize]]):
+    * a depth-d fixpoint costs ⌈d/RoundBatch⌉ scheduler round-trips
+    * instead of d. */
   val RoundBatch = 4
 
   /** The ONE size proof behind every broadcast / driver-landing
@@ -128,26 +129,5 @@ object RddKernel {
       .graftCheckpoint()
     comp.count()
     comp
-  }
-
-  /** Materialize several marked (graftCheckpoint-ed) sets through ONE
-    * tagged-count union action, returning each set's count in order —
-    * per-job scheduler latency dominates control-sized fixpoint rounds,
-    * so k checkpoints that can share a materializing job must.
-    * Chain-dependent sets are safe: every set is a direct union branch,
-    * so the one action computes (and caches — the checkpoint marks the
-    * storage level) every partition and `RDD.doCheckpoint` truncates
-    * every marked branch at job end. */
-  def materializeCounts[K](ss: Seq[RDD[(K, Null)]]): Array[Long] = {
-    val tagged = ss.zipWithIndex.map { case (s, i) =>
-      s.mapPartitions({ it =>
-        var c = 0L; it.foreach(_ => c += 1L)
-        Iterator.single((i, c))
-      }, preservesPartitioning = false)
-    }
-    val out = new Array[Long](ss.length)
-    ss.head.sparkContext.union(tagged).collect()
-      .foreach { case (i, c) => out(i) += c }
-    out
   }
 }

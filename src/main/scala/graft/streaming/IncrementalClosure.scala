@@ -253,7 +253,7 @@ class IncrementalClosure(
         prev = chain(i)
         i += 1
       }
-      val counts = RddKernel.materializeCounts(chain.toIndexedSeq)
+      val counts = CommitLedger.materialize(sc, chain.toIndexedSeq)._1
       n = 0L
       var j = 0
       var stop = false
@@ -324,7 +324,7 @@ class IncrementalClosure(
         prev = chain(i)
         i += 1
       }
-      val counts = RddKernel.materializeCounts(chain.toIndexedSeq)
+      val counts = CommitLedger.materialize(sc, chain.toIndexedSeq)._1
       rn = 0L
       var j = 0
       var stop = false

@@ -126,6 +126,21 @@ class IncrementalQuery(
     * build order ("IncrementalClosure", "DistributedClosure"). */
   private[graft] val closureStoreProbe = mutable.ArrayBuffer.empty[String]
 
+  // Every state cell this query's nodes hold (closure and Hector stores
+  // keep their own).
+  private val stateCells = mutable.ArrayBuffer.empty[StateCell[_]]
+
+  private def stateCell[S <: AnyRef: scala.reflect.ClassTag](
+      zero: () => S, sizeOf: S => Long): StateCell[S] = {
+    val c = new StateCell[S](spark.sparkContext, shufflePartitions, zero, sizeOf)
+    stateCells += c
+    c
+  }
+
+  /** Spec probe: the live generation of every state cell above. */
+  private[graft] def liveGenerationsProbe: Seq[RDD[_]] =
+    stateCells.map(_.liveGeneration).toSeq
+
   // ---- Node tree -----------------------------------------------------
 
   private sealed trait Node {
@@ -273,31 +288,34 @@ class IncrementalQuery(
     }
     private val wCell: StateCell[IncrementalQuery.WMap] =
       if (packed) null
-      else new StateCell[IncrementalQuery.WMap](
-        spark.sparkContext, shufflePartitions,
+      else stateCell[IncrementalQuery.WMap](
         () => scala.collection.immutable.HashMap.empty, _.size * 200L)
     private val pCell: StateCell[(PackedRuns, IncrementalQuery.WMap)] =
       if (!packed) null
       else {
         val w = width
-        new StateCell[(PackedRuns, IncrementalQuery.WMap)](
-          spark.sparkContext, shufflePartitions,
+        stateCell[(PackedRuns, IncrementalQuery.WMap)](
           () => (PackedRuns.empty(w), scala.collection.immutable.HashMap.empty),
           { case (p, m) => p.bytes + m.size * 200L })
       }
 
     /** One co-partitioned NETTED delta batch (unique keys) → the ±1
-      * zero-crossing diffs. */
+      * zero-crossing diffs (a lazy commit). */
     def advance(delta: RDD[(Seq[Any], Long)]): RDD[(Seq[Any], Long)] =
-      advanceCounted(delta)._1
+      advanceWith(delta, counted = false)._1
 
-    /** [[advance]] plus the output-diff count — FREE: the commit's one
-      * materializing job already counts its outputs, so callers that
-      * would otherwise probe emptiness with a separate `isEmpty` job
-      * read it here instead. */
+    /** [[advance]] materialized now, with the output-diff count, for
+      * callers whose control flow reads it. */
     def advanceCounted(
         delta: RDD[(Seq[Any], Long)]): (RDD[(Seq[Any], Long)], Long) =
-      if (!packed && !hasReal) wCell.advance1Counted(delta)(thresholdAdvanceIdx)
+      advanceWith(delta, counted = true)
+
+    private def advanceWith(delta: RDD[(Seq[Any], Long)], counted: Boolean)
+        : (RDD[(Seq[Any], Long)], Long) = {
+      def on[S <: AnyRef](c: StateCell[S])(
+          f: (S, Iterator[(Seq[Any], Long)]) => (S, Array[(Seq[Any], Long)])) =
+        if (counted) c.advance1Counted(delta)(f) else (c.advance1(delta)(f), -1L)
+      if (!packed && !hasReal) on(wCell)(thresholdAdvanceIdx)
       else if (!packed) {
         // Boxed path WITH real columns (mixed non-packable kinds like
         // (string, real)): Scala's `==` on boxed doubles is primitive
@@ -315,7 +333,7 @@ class IncrementalQuery(
         val realIdx: Array[Int] =
           realCol.zipWithIndex.collect { case (true, i) => i }
         val cs = canonSample
-        wCell.advance1Counted(delta) { (s, dIt) =>
+        on(wCell) { (s, dIt) =>
           var m = s
           val out = mutable.ArrayBuffer.empty[(Seq[Any], Long)]
           dIt.foreach { case (k, dw) =>
@@ -353,7 +371,7 @@ class IncrementalQuery(
         val w = width
         val rc = realCol
         val cs = canonSample
-        pCell.advance1Counted(delta) { case ((runs, nullM), dIt) =>
+        on(pCell) { case ((runs, nullM), dIt) =>
           // NET the batch per ENCODED key first: encReal canonicalizes
           // keys the upstream boxed reduceByKey could not merge (two
           // same-batch NaN rows are distinct boxed Seq keys but ONE
@@ -425,6 +443,7 @@ class IncrementalQuery(
           ((runs.merged(buf.result()), nm), out.toArray)
         }
       }
+    }
 
     private[streaming] def measuredBytes: Long = {
       def m(o: AnyRef): Long = org.apache.spark.util.GraftSizeOf.estimate(o)
@@ -447,20 +466,25 @@ class IncrementalQuery(
     private val cell = new SupportCell(nodeKinds)
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      advanceCounted(attrDeltas)._1
+      advanceWith(attrDeltas, counted = false)._1
 
-    /** [[advance]] plus the transition count, read from the commit's
-      * own job (no emptiness probe). */
+    /** [[advance]] materialized now, with the transition count (the
+      * closure node's store choice reads it). */
     def advanceCounted(attrDeltas: Map[String, DataFrame]): (DataFrame, Long) =
+      advanceWith(attrDeltas, counted = true)
+
+    private def advanceWith(attrDeltas: Map[String, DataFrame],
+        counted: Boolean): (DataFrame, Long) =
       if (!touched(attrDeltas)) (emptyDiff, 0L)
       else {
         val width = vars.length
         val delta: RDD[(Seq[Any], Long)] = inputs
-          .map(_.advance(attrDeltas).rdd)
+          .map(n => rowsOf(n.advance(attrDeltas)))
           .reduce(_ union _)
           .map(r => (rowKey(r, width), r.getLong(width)))
           .reduceByKey(part, _ + _) // the only shuffle: O(delta)
-        val (diffs, n) = cell.advanceCounted(delta)
+        val (diffs, n) =
+          if (counted) cell.advanceCounted(delta) else (cell.advance(delta), -1L)
         (spark.createDataFrame(
           diffs.map { case (k, w) => Row.fromSeq(k :+ w) }, schema), n)
       }
@@ -487,8 +511,7 @@ class IncrementalQuery(
       new IndexKeyPartitioner(shufflePartitions, keyIdx.indices)
     private val cell = {
       val mk = GroupIndex.maker(keyIdx.map(left.nodeKinds), left.nodeKinds)
-      new StateCell[(GroupIndex, IncrementalQuery.WMap)](
-        spark.sparkContext, shufflePartitions,
+      stateCell[(GroupIndex, IncrementalQuery.WMap)](
         () => (mk(), scala.collection.immutable.HashMap.empty),
         { case (l, r) => l.bytes + r.size * 200L })
     }
@@ -498,10 +521,10 @@ class IncrementalQuery(
       else {
         val width = vars.length
         val kl = keyIdx.length
-        val dL = left.advance(attrDeltas).rdd
+        val dL = rowsOf(left.advance(attrDeltas))
           .map(r => (rowKey(r, width), r.getLong(width)))
           .reduceByKey(lPart, _ + _)
-        val dR = right.advance(attrDeltas).rdd
+        val dR = rowsOf(right.advance(attrDeltas))
           .map(r => (rowKey(r, kl), r.getLong(kl)))
           .reduceByKey(rPart, _ + _)
         // Locals only: a field reference here would capture the node
@@ -610,8 +633,7 @@ class IncrementalQuery(
       aggVars.map(v => kindOfVar(v).dataType == LongType))
 
     private val part = new SeqKeyPartitioner(shufflePartitions)
-    private val cell = new StateCell[GroupIndex](
-      spark.sparkContext, shufflePartitions,
+    private val cell = stateCell[GroupIndex](
       GroupIndex.maker(keyIdx.map(input.nodeKinds),
         valueIdx.map(input.nodeKinds)), _.bytes)
 
@@ -619,8 +641,8 @@ class IncrementalQuery(
       if (!touched(attrDeltas)) emptyDiff
       else {
         val (kIdx, vIdx) = (keyIdx, valueIdx)
-        val delta: RDD[((Seq[Any], Seq[Any]), Long)] = input
-          .advance(attrDeltas).rdd
+        val delta: RDD[((Seq[Any], Seq[Any]), Long)] =
+          rowsOf(input.advance(attrDeltas))
           .map { r =>
             ((kIdx.map(r.get): Seq[Any], vIdx.map(r.get): Seq[Any]),
               r.getLong(r.length - 1))
@@ -692,7 +714,7 @@ class IncrementalQuery(
         else {
           tick += 1
           chooseStore(n)
-          val rdd = ed.rdd.map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+          val rdd = rowsOf(ed).map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
           val out =
             if (distributedCl != null) distributedCl.advanceSignedRdd(rdd, tick)
             else broadcastCl.advanceSignedRdd(rdd, tick)
@@ -730,7 +752,6 @@ class IncrementalQuery(
       lRestIdx.map(left.nodeKinds) ++ rRestIdx.map(right.nodeKinds)
     val attrs: Set[String] = left.attrs ++ right.attrs
 
-    private val sc = spark.sparkContext
     private val lPart = new IndexKeyPartitioner(shufflePartitions, lKey)
     private val rPart = new IndexKeyPartitioner(shufflePartitions, rKey)
     // Both partitioners hash the JOIN KEY columns, so one compound index
@@ -738,8 +759,7 @@ class IncrementalQuery(
     private val cell = {
       val lz = GroupIndex.maker(lKey.map(left.nodeKinds), left.nodeKinds)
       val rz = GroupIndex.maker(rKey.map(right.nodeKinds), right.nodeKinds)
-      new StateCell[(GroupIndex, GroupIndex)](
-        sc, shufflePartitions, () => (lz(), rz()),
+      stateCell[(GroupIndex, GroupIndex)](() => (lz(), rz()),
         { case (l, r) => l.bytes + r.bytes })
     }
 
@@ -747,7 +767,7 @@ class IncrementalQuery(
         node: Node, part: Partitioner,
         attrDeltas: Map[String, DataFrame]): RDD[(Seq[Any], Long)] = {
       val width = node.vars.length
-      node.advance(attrDeltas).rdd
+      rowsOf(node.advance(attrDeltas))
         .map(r => (rowKey(r, width), r.getLong(width)))
         .reduceByKey(part, _ + _).filter(_._2 != 0L)
     }
@@ -803,12 +823,10 @@ class IncrementalQuery(
     private val attrPart = new IndexKeyPartitioner(shufflePartitions, Seq(0))
     // Child and attribute supports both hash the pull ENTITY, so each
     // partition's indexes are co-resident for the bilinear diff.
-    private val childCell = new StateCell[GroupIndex](
-      sc, shufflePartitions,
+    private val childCell = stateCell[GroupIndex](
       GroupIndex.maker(Seq(child.nodeKinds(eIdx)), child.nodeKinds), _.bytes)
     private val attrCells: Map[String, StateCell[GroupIndex]] =
-      pullAttrs.map(a => a -> new StateCell[GroupIndex](
-        sc, shufflePartitions,
+      pullAttrs.map(a => a -> stateCell[GroupIndex](
         GroupIndex.maker(Seq(graft.model.ValueKind.KEid),
           Seq(graft.model.ValueKind.KEid, kinds(a))), _.bytes)).toMap
 
@@ -821,15 +839,18 @@ class IncrementalQuery(
       if (!touched(attrDeltas)) emptyDiff
       else {
         val width = child.vars.length
-        val dChild = child.advance(attrDeltas).rdd
+        // Neither counted nor cut: every attribute's pass, the db__id
+        // branch and the child commit read it inside the ledger's one
+        // action, each re-reading the delta-sized shuffle output. A
+        // cached copy would make those tasks of one stage wait on each
+        // other for its blocks.
+        val dChild = rowsOf(child.advance(attrDeltas))
           .map(r => (rowKey(r, width), r.getLong(width)))
           .reduceByKey(childPart, _ + _).filter(_._2 != 0L)
-          .graftCheckpoint()
-        dChild.count()
         val branches = mutable.ArrayBuffer.empty[DataFrame]
         pullAttrs.foreach { a =>
           val dAttr = attrDeltas.get(a)
-            .map(_.rdd.map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2)))
+            .map(rowsOf(_).map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2)))
               .reduceByKey(attrPart, _ + _).filter(_._2 != 0L))
             .getOrElse(sc.emptyRDD[(Seq[Any], Long)].partitionBy(attrPart))
           val eIdxL = eIdx
@@ -869,6 +890,8 @@ class IncrementalQuery(
               col(Rel.W): _*)
         }
         val eIdxK = Seq(eIdx) // local: no node capture in the closure
+        // Nothing reads this commit's output; the ledger still
+        // materializes it (and with it the child index's generation).
         childCell.advance1(dChild)(
           IncrementalQuery.supportAdvanceIdx(eIdxK))
         branches.reduce(_ unionAll _)
@@ -1363,7 +1386,7 @@ class IncrementalQuery(
       val out = new Compiler(noAttrSrc)
         .compile(p, env.map { case (k, v) => k -> Some(v) }) match {
         case Some(rel) =>
-          rel.df.rdd.flatMap { r =>
+          rowsOf(rel.df).flatMap { r =>
             if (r.getLong(r.length - 1) > 0L) Some(rowKey(r, r.length - 1))
             else None
           }
@@ -1378,31 +1401,6 @@ class IncrementalQuery(
       val cn = checkpointedC(s)
       rtrace(f"$what materializeMs=${(System.nanoTime() - t0) / 1000000}")
       cn
-    }
-
-    /** Materialize several marked (graftCheckpoint-ed) sets through ONE
-      * tagged-count union action, returning each set's count in order —
-      * the n-ary generalization of the input-transition fusion: per-job
-      * scheduler latency is the maintained cells' wall floor (r18
-      * profile: wall ≈ jobs × 40-100 ms while task time / cores is a
-      * fraction of it), so k independent checkpoints that can share a
-      * materializing job must. CHAIN-dependent sets are safe too: every
-      * set is a direct union branch, so the one action computes (and
-      * caches — localCheckpoint marks the storage level, so a partition
-      * computed as an intermediate stage of a later branch lands in the
-      * cache) every partition, and `RDD.doCheckpoint` truncates every
-      * marked branch at job end, exactly as the two-branch transition
-      * fusion already does. */
-    private def materializeCounts(ss: Seq[PSet]): Array[Long] = {
-      val tagged = ss.zipWithIndex.map { case (s, i) =>
-        s.mapPartitions({ it =>
-          var c = 0L; it.foreach(_ => c += 1L)
-          Iterator.single((i, c))
-        }, preservesPartitioning = false)
-      }
-      val out = new Array[Long](ss.length)
-      sc.union(tagged).collect().foreach { case (i, c) => out(i) += c }
-      out
     }
 
     /** The kernel/arrangement expansion for the single-rule linear
@@ -1422,7 +1420,7 @@ class IncrementalQuery(
 
     /** Round-loop job batching (r19): up to `roundBatch` semi-naive
       * rounds chained LAZILY and materialized through one
-      * [[materializeCounts]] job — a length-d kernel round chain costs
+      * [[CommitLedger.materialize]] job — a length-d kernel round chain costs
       * ⌈d/B⌉ scheduler round-trips instead of d. Round i expands round
       * i−1's delta and trims through the caller's `trim` (the phase's
       * intersect/minus-with-state chain) plus the in-batch
@@ -1449,7 +1447,7 @@ class IncrementalQuery(
         prev = c
         i += 1
       }
-      val counts = materializeCounts(chain.toIndexedSeq)
+      val counts = CommitLedger.materialize(sc, chain.toIndexedSeq)._1
       rtrace(f"$what roundBatch=$roundBatch counts=${counts.mkString(",")} " +
         f"materializeMs=${(System.nanoTime() - t0) / 1000000}")
       chain.toIndexedSeq.zip(counts.toIndexedSeq)
@@ -2079,19 +2077,19 @@ class IncrementalQuery(
       // truncates every marked branch. This was 4 jobs (2 materializing
       // counts + 2 cached re-counts) per touched input per advance
       // before r18, and one fused job PER INPUT until r19 fused across
-      // inputs too. Safe to defer the materialization past the child
-      // advances: each child's output is already committed
-      // (checkpoint-backed) state by the time advance returns.
+      // inputs too. The children's commits may still be pending on the
+      // open ledger: this job computes (and caches) their outputs, and
+      // the ledger's action truncates them.
       val built = inputs.map { case (n, node) =>
         val d = node.advance(attrDeltas)
         val w = inputKinds(n).length
-        val rdd = d.rdd.map(r => (rowKey(r, w), r.getLong(w)))
+        val rdd = rowsOf(d).map(r => (rowKey(r, w), r.getLong(w)))
         val adds = asSet(rdd.filter(_._2 > 0L).keys).graftCheckpoint()
         val dels = asSet(rdd.filter(_._2 < 0L).keys).graftCheckpoint()
         (n, adds, dels)
       }
-      val tcounts = materializeCounts(
-        built.flatMap { case (_, a, d) => Seq(a, d) })
+      val tcounts = CommitLedger.materialize(sc,
+        built.flatMap { case (_, a, d) => Seq(a, d) })._1
       val trans = built.zipWithIndex.map { case ((n, adds, dels), i) =>
         (n, adds, dels, tcounts(2 * i), tcounts(2 * i + 1))
       }
@@ -2150,7 +2148,7 @@ class IncrementalQuery(
           if (upd.nonEmpty) {
             val next = upd.map { case (n, dels) =>
               without(inputState(n), dels).graftCheckpoint() }
-            val cs = materializeCounts(next)
+            val cs = CommitLedger.materialize(sc, next)._1
             upd.zip(next).zipWithIndex.foreach { case (((n, dels), st), i) =>
               inputState(n) = st
               inputCount(n) = cs(i)
@@ -2160,16 +2158,18 @@ class IncrementalQuery(
         }
         if (clique.exists(r => over(r).nonEmpty)) {
           // Fused: every rule's overdelete total AND its keep set
-          // materialize through one job (keep's lineage passes through
-          // overTotal — chain-safe, see materializeCounts).
+          // materialize through one job. keep reads the already cut
+          // overdelete parts, not the pending overTotal cut: two tasks of
+          // that one stage asking for the same pending block would wait
+          // on each other's write.
           val overTotal: Map[String, PSet] = clique.map { r =>
             r -> (if (over(r).isEmpty) emptySet
                   else disjointUnion(over(r)).graftCheckpoint())
           }.toMap
           val keep: Map[String, PSet] = clique.map { r =>
-            r -> without(recState(r), overTotal(r)).graftCheckpoint()
+            r -> without(recState(r), disjointUnion(over(r))).graftCheckpoint()
           }.toMap
-          materializeCounts(
+          CommitLedger.materialize(sc,
             clique.filter(r => over(r).nonEmpty).map(overTotal) ++
               clique.map(keep))
           val redv = mutable.Map.empty[String, Vector[PSet]]
@@ -2240,7 +2240,7 @@ class IncrementalQuery(
           val nextRec = clique.map { r =>
             disjointUnion(keep(r) +: redv(r)).graftCheckpoint()
           }
-          val gcs = materializeCounts(goneS ++ nextRec)
+          val gcs = CommitLedger.materialize(sc, goneS ++ nextRec)._1
           clique.zipWithIndex.foreach { case (r, i) =>
             if (r == target && gcs(i) > 0L)
               emitted += goneS(i).map { case (k, _) => (k, -1L) }
@@ -2258,7 +2258,7 @@ class IncrementalQuery(
           if (upd.nonEmpty) {
             val next = upd.map { case (n, adds) =>
               disjointUnion(Seq(inputState(n), adds)).graftCheckpoint() }
-            val cs = materializeCounts(next)
+            val cs = CommitLedger.materialize(sc, next)._1
             upd.zip(next).zipWithIndex.foreach { case (((n, adds), st), i) =>
               inputState(n) = st
               inputCount(n) = cs(i)
@@ -2319,7 +2319,7 @@ class IncrementalQuery(
           val nextRec = updR.map { r =>
             disjointUnion(recState(r) +: newParts(r)).graftCheckpoint()
           }
-          materializeCounts(nextRec)
+          CommitLedger.materialize(sc, nextRec)
           updR.zip(nextRec).foreach { case (r, st) =>
             if (r == target)
               newParts(r).foreach(p2 =>
@@ -2372,7 +2372,7 @@ class IncrementalQuery(
       clique.map { r =>
         val rel = comp.compile(Plan.NameExpr(sig(r)._1, r), Map.empty)
           .getOrElse(sys.error(s"bulk fixpoint failed for recursive rule $r"))
-        r -> asSet(rel.df.rdd.flatMap { row =>
+        r -> asSet(rowsOf(rel.df).flatMap { row =>
           if (row.getLong(row.length - 1) > 0L)
             Some(rowKey(row, row.length - 1))
           else None
@@ -2464,16 +2464,14 @@ class IncrementalQuery(
       StructField("v", kind.dataType, true),
       StructField(Rel.W, LongType, false)))
 
-    /** Returns the set-transition diffs plus their count (free — read
-      * off the state commit's materializing job, replacing a separate
-      * per-attribute `isEmpty` probe job on the hot advance path). */
-    def advanceCounted(delta: DataFrame): (DataFrame, Long) = {
-      val d = delta.rdd
+    /** The set-transition diffs (a lazy commit: an empty transition
+      * set flows on inside the same action). */
+    def advance(delta: DataFrame): DataFrame = {
+      val d = rowsOf(delta)
         .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2)))
         .reduceByKey(part, _ + _)
-      val (diffs, n) = cell.advanceCounted(d)
-      (spark.createDataFrame(
-        diffs.map { case (k, w) => Row(k(0), k(1), w) }, schema), n)
+      spark.createDataFrame(
+        cell.advance(d).map { case (k, w) => Row(k(0), k(1), w) }, schema)
     }
   }
 
@@ -2508,28 +2506,26 @@ class IncrementalQuery(
   private final class AttrLww(kind: ValueKind) {
     private val part = new SeqKeyPartitioner(shufflePartitions)
     // index: e -> (t, seq, v, isAdd) of the current winning event
-    private val cell = new StateCell[
+    private val cell = stateCell[
         scala.collection.immutable.HashMap[Long, (Long, Long, Any, Boolean)]](
-      spark.sparkContext, shufflePartitions,
       () => scala.collection.immutable.HashMap.empty, _.size * 200L)
     private val schema = StructType(Seq(
       StructField("e", LongType, false),
       StructField("v", kind.dataType, true),
       StructField(Rel.W, LongType, false)))
 
-    /** Returns the LWW-view diffs plus their count (free off the state
-      * commit — see [[AttrThreshold.advanceCounted]]). */
-    def advanceCounted(delta: DataFrame): (DataFrame, Long) = {
+    /** The LWW-view diffs (a lazy commit, like [[AttrThreshold]]). */
+    def advance(delta: DataFrame): DataFrame = {
       // Batch winner per entity: the max-(t, seq) event. seq is the
       // domain's global transaction counter, so this is total order.
-      val d = delta.rdd
+      val d = rowsOf(delta)
         .map(r => (r.getLong(0),
           (r.getLong(2), r.getLong(4), r.get(1), r.getLong(3) > 0L)))
         .reduceByKey(part, (a, b) =>
           if (a._1 > b._1 || (a._1 == b._1 && a._2 > b._2)) a else b)
-      val (diffs, n) = cell.advance1Counted(d)(IncrementalQuery.lwwAdvanceIdx)
-      (spark.createDataFrame(
-        diffs.map { case (e, v, w) => Row(e, v, w) }, schema), n)
+      spark.createDataFrame(
+        cell.advance1(d)(IncrementalQuery.lwwAdvanceIdx)
+          .map { case (e, v, w) => Row(e, v, w) }, schema)
     }
   }
 
@@ -2554,17 +2550,18 @@ class IncrementalQuery(
     * `consolidate = false` returns the root's diff unconsolidated (a
     * tuple may repeat, weights may cancel) for callers that collect it
     * anyway and sum weights where the rows land — saving the
-    * consolidation shuffle and its adaptive stage job. */
+    * consolidation shuffle and its adaptive stage job.
+    *
+    * State commits are lazy ([[StateCell.commit]]): inside a
+    * [[CommitLedger.run]] they wait for the ledger's one action, outside
+    * one each commit runs its own job, as a ledger of one. */
   def advance(deltas: Map[String, DataFrame],
       knownCounts: Map[String, Long] = Map.empty,
       consolidate: Boolean = true): DataFrame = {
-    // Per attribute: the raw delta materializes through ONE counted
-    // checkpoint job (the count doubles as the emptiness probe), and
-    // the input view's output emptiness reads off the state commit's
-    // free count — the previous shape (eager Dataset checkpoint +
-    // `isEmpty` + a second `isEmpty` on the view output) paid three
-    // scheduler round-trips per attribute per advance for the same
-    // information.
+    // Per attribute: a delta of unknown size materializes through ONE
+    // counted checkpoint job (the count doubles as the emptiness probe).
+    // The input views commit lazily: an empty view delta flows on inside
+    // the same action instead of paying a job to find it empty.
     def counted(df: DataFrame, a: String): (DataFrame, Long) =
       knownCounts.get(a) match {
         case Some(n) => (df, n)
@@ -2580,23 +2577,16 @@ class IncrementalQuery(
           col("v").cast(kinds(a).dataType), col("t").cast("long"),
           col("diff").cast("long"), col("seq").cast("long")), a)
         if (nRaw == 0L) None
-        else {
-          val (d, n) = attrLwws.getOrElseUpdate(a, new AttrLww(kinds(a)))
-            .advanceCounted(raw)
-          if (n == 0L) None else Some(a -> d)
-        }
+        else Some(a -> attrLwws.getOrElseUpdate(a, new AttrLww(kinds(a)))
+          .advance(raw))
       } else {
         val (raw, nRaw) = counted(df.select(col("e").cast("long"),
           col("v").cast(kinds(a).dataType),
           col("diff").cast("long").as(Rel.W)), a)
         if (nRaw == 0L) None
         else if (!distinctAttrs(a)) Some(a -> raw)
-        else {
-          val (d, n) = attrThresholds
-            .getOrElseUpdate(a, new AttrThreshold(kinds(a)))
-            .advanceCounted(raw)
-          if (n == 0L) None else Some(a -> d)
-        }
+        else Some(a -> attrThresholds
+          .getOrElseUpdate(a, new AttrThreshold(kinds(a))).advance(raw))
       }
     }
     if (attrDeltas.isEmpty) root.emptyDiff
@@ -2680,10 +2670,14 @@ class IncrementalQuery(
                 else d.select(col("e"), col("v"), col("diff")))
               }.toMap
             if (byAttr.nonEmpty) {
-              // Lazy cut: the count gate's job materializes the
-              // checkpoint (was eager-then-isEmpty — two jobs).
-              val diffs = advance(byAttr).graftCheckpoint(false)
-              if (diffs.count() > 0L) onDiffs(t, diffs)
+              // One action per time: the state commits, the diffs' lazy
+              // cut and the count gate.
+              var diffs: DataFrame = null
+              val (n, _) = CommitLedger.run(spark.sparkContext) {
+                diffs = advance(byAttr).graftCheckpoint(false)
+                (Seq(diffs.queryExecution.toRdd), Nil)
+              }
+              if (n(0) > 0L) onDiffs(t, diffs)
             }
           }
         } finally batch.unpersist()
@@ -2693,6 +2687,26 @@ class IncrementalQuery(
 }
 
 object IncrementalQuery {
+
+  /** A frame's rows as an RDD, for the maintained nodes' frame → RDD
+    * edges: the planned query's InternalRow RDD converted row by row.
+    * `Dataset.rdd` pays, per call, an SQL execution wrapper, an encoder
+    * build and a closure clean of Dataset's own lambda — and Spark 4.1's
+    * cleaner re-reads a lambda's declaring class file (here from the
+    * jar) every time; a named function class is not cleaned. On the
+    * serving path these edges ran a dozen times per advance. */
+  private[graft] def rowsOf(df: DataFrame): RDD[Row] =
+    df.queryExecution.toRdd.mapPartitions(new ToRows(df.schema))
+
+  private final class ToRows(schema: StructType)
+      extends (Iterator[org.apache.spark.sql.catalyst.InternalRow] => Iterator[Row])
+      with Serializable {
+    def apply(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Iterator[Row] = {
+      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)
+      it.map(r => conv(r).asInstanceOf[Row])
+    }
+  }
 
   /** Control-sized plan conf (thread-local, never session-global): run
     * `f`'s plan materializations with whole-stage codegen and constraint

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.kernel.Ckpt._
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD, UnionRDD}
 
 /** Arrangement-analog keyed state: ONE immutable index object per
   * partition, resident in executor memory as a deserialized cached
@@ -22,9 +23,10 @@ import org.apache.spark.rdd.RDD
   *
   * Mechanics: the state RDD holds exactly one `S` per partition.
   * `advance*` zips it against co-partitioned delta RDDs, runs the
-  * node's merge once per partition, localCheckpoints the (newState,
-  * outputs) pairs — the checkpoint stores REFERENCES into the shared
-  * trie, not a copy — and rebinds. Cached blocks carry locality, so on
+  * node's merge once per partition, marks the (newState, outputs) pairs
+  * for a localCheckpoint — the checkpoint stores REFERENCES into the
+  * shared trie, not a copy — and rebinds; the open [[CommitLedger]]'s
+  * one action materializes the cut. Cached blocks carry locality, so on
   * a cluster the next batch's tasks schedule onto the executors holding
   * the state; failure semantics match the rest of the streaming layer
   * (localCheckpoint: lineage is cut, a lost executor fails the standing
@@ -64,22 +66,16 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
   private var cur: RDD[W] = {
     val z = zero
     val sz = sizeOf
-    // LAZY zero state: no eager count job at construction — the first
-    // commit's materializing job computes (and caches/truncates) the
-    // zero partitions along with the first generation. Safe because the
-    // zero state has no predecessor whose blocks could be unpersisted
-    // out from under an unmaterialized successor (the reason commits
-    // MUST count before dropping the superseded generation). Engines
-    // that build several cells per standing (and the bi path, which
-    // rebuilds on kind discovery) were paying one scheduler-latency
-    // job per cell for a deterministic empty index.
-    val init = sc.parallelize(0 until numPartitions, numPartitions)
+    // LAZY, UNCUT zero state: no job at construction, and no cached
+    // block — every reader (the first commit, a sibling node's read of
+    // this cell in the same action) builds its own empty index, where a
+    // shared cached block would make tasks of one stage wait on each
+    // other for a deterministic empty index. Nothing reads it once the
+    // first generation is cut.
+    sc.parallelize(0 until numPartitions, numPartitions)
       .mapPartitions { _ =>
         val s = z(); Iterator.single(new GraftSizedValue(s, 64L + sz(s)))
       }
-      .graftCheckpoint()
-    prevGen = init
-    init
   }
 
   /** The current state, one element per partition — for read-only
@@ -88,54 +84,83 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
 
   /** Spec probe: the live generation's materialized RDD (the thing the
     * recoverability invariant is about — under the reliable dial it
-    * must be checkpointed before its predecessor's files are dropped). */
-  private[streaming] def liveGeneration: RDD[_] = prevGen
+    * must be checkpointed before its predecessor's files are dropped);
+    * the uncut zero state before the first commit. */
+  private[streaming] def liveGeneration: RDD[_] =
+    if (prevGen eq null) cur else prevGen
 
-  /** Commit a stepped (newState, outputs) pair RDD: materialize once
-    * (checkpoint), copy the OUTPUTS into their own delta-sized
-    * checkpoint, rebind the state, and eagerly drop the superseded
-    * generation's block. The eager unpersist matters: the block store
-    * estimates each generation at its FULL reachable graph (structural
-    * sharing is invisible to SizeEstimator), so letting generations wait
-    * for the ContextCleaner stacks phantom gigabytes of accounting,
-    * evicts live blocks, and serializes whole state graphs to disk —
-    * measured as per-batch wall time growing with state while narrow
-    * reads stayed flat. With outputs checkpointed separately, nothing
-    * references the superseded generation, so dropping it is safe even
-    * while callers still hold earlier batches' diff frames. */
-  def commit[O: ClassTag](stepped: RDD[(S, Array[O])]): RDD[O] =
-    commitCounted(stepped)._1
+  /** Commit a stepped (newState, outputs) pair RDD LAZILY: mark both
+    * cuts (the state generation and its outputs, the outputs in their
+    * own delta-sized checkpoint), rebind the state, and record the
+    * commit on the open [[CommitLedger]] — whose one action
+    * materializes it together with every other commit of the completed
+    * time, and only then drops the superseded generation's block.
+    * Outside a ledger the commit is its own ledger of one (one job,
+    * then the drop). The drop matters: the block store estimates
+    * each generation at its FULL reachable graph (structural sharing is
+    * invisible to SizeEstimator), so letting generations wait for the
+    * ContextCleaner stacks phantom gigabytes of accounting, evicts live
+    * blocks, and serializes whole state graphs to disk — measured as
+    * per-batch wall time growing with state while narrow reads stayed
+    * flat. With outputs checkpointed separately, nothing references the
+    * superseded generation, so dropping it is safe even while callers
+    * still hold earlier batches' diff frames. */
+  def commit[O: ClassTag](stepped: RDD[(S, Array[O])]): RDD[O] = {
+    val (mat, out) = mark(stepped)
+    CommitLedger.record(out, rebind(mat))
+    out
+  }
 
-  /** [[commit]] that also returns the output-row count — ONE job
-    * materializes both checkpoints (computing `out` computes and caches
-    * the state generation's partitions), so iterative callers get their
-    * per-round count for free. */
+  /** [[commit]] that materializes NOW and returns the output-row count
+    * — for callers whose control flow reads it (store choice, round
+    * loops). One job materializes both cuts (computing `out` computes
+    * and caches the state generation's partitions), then the superseded
+    * generation is dropped at once — unless a lazy commit still pending
+    * on the open ledger reads it, when the drop waits for the ledger's
+    * action. A round loop of counted commits so holds one generation at
+    * a time, as outside a ledger. */
   def commitCounted[O: ClassTag](
       stepped: RDD[(S, Array[O])]): (RDD[O], Long) = {
+    val (mat, out) = mark(stepped)
+    val n = out.count()
+    val prev = prevGen
+    CommitLedger.afterCount(prev, rebind(mat))
+    (out, n)
+  }
+
+  private def mark[O: ClassTag](
+      stepped: RDD[(S, Array[O])]): (RDD[(W, Array[O])], RDD[O]) = {
     val sz = sizeOf
     // Spark materializes only the job's LAST marked RDD at checkpoint
     // time, so without this property `mat` (the state generation) never
-    // writes reliable files — every generation's lineage would bottom
-    // out at the init files, and deleting those below strands recovery
-    // at the first executor loss. The property is thread-scoped AND
+    // writes reliable files — every generation's lineage would run back
+    // through its predecessors' files, and deleting those below strands
+    // recovery at the first executor loss. The property is thread-scoped AND
     // captured at RDD CONSTRUCTION (a private val in Spark's RDD), so
-    // it must wrap the RDD builds, not just the count; with it the one
-    // count job checkpoints BOTH cuts (`out` as the job RDD, `mat` as
-    // its marked ancestor).
+    // it must wrap the RDD builds, not the action; with it the action
+    // that computes `out` checkpoints BOTH cuts (`out` as the job RDD
+    // or a union branch, `mat` as its marked ancestor).
     val sc0 = stepped.sparkContext
     val ancestorsKey = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevProp = sc0.getLocalProperty(ancestorsKey)
     sc0.setLocalProperty(ancestorsKey, "true")
-    val (mat, out, n) = try {
+    try {
       val mat = stepped.mapPartitions(
         _.map { case (s, o) => (new GraftSizedValue(s, 64L + sz(s)), o) },
-        preservesPartitioning = false).graftCheckpoint()
-      val out = mat.flatMap(_._2.iterator).graftCheckpoint()
-      (mat, out, out.count())
+        preservesPartitioning = false)
+        .setName(StateCell.GenerationName).graftCheckpoint()
+      (mat, mat.flatMap(_._2.iterator).graftCheckpoint())
     } finally sc0.setLocalProperty(ancestorsKey, prevProp)
+  }
+
+  /** Rebind the state to `mat` and return the superseded generation's
+    * drop, to run once `mat` is materialized. */
+  private def rebind[O](mat: RDD[(W, Array[O])]): () => Unit = {
     cur = mat.map(_._1)
-    if (prevGen ne null) {
-      org.apache.spark.GraftUnpersist(prevGen)
+    val prev = prevGen
+    prevGen = mat
+    () => if (prev ne null) {
+      org.apache.spark.GraftUnpersist(prev)
       // Under the reliable-checkpoint dial the superseded generation's
       // files would otherwise live until the DFS fills (Spark only
       // GC-cleans them, and only with cleanCheckpoints=true) — delete
@@ -144,17 +169,15 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
       // checkpoint landed); if it did not land, recovery still walks
       // the lineage through the superseded files, so keep them.
       if (mat.isCheckpointed) {
-        graft.kernel.Ckpt.dropCheckpoint(prevGen)
+        graft.kernel.Ckpt.dropCheckpoint(prev)
         // A landed generation also licenses dropping every EARLIER
         // generation still queued from degraded commits.
         undroppedGens.foreach(graft.kernel.Ckpt.dropCheckpoint)
         undroppedGens = Nil
-      } else if (prevGen.isCheckpointed) {
-        undroppedGens = prevGen :: undroppedGens
+      } else if (prev.isCheckpointed) {
+        undroppedGens = prev :: undroppedGens
       }
     }
-    prevGen = mat
-    (out, n)
   }
 
   /** One batch against one co-partitioned delta: `f` runs once per
@@ -163,14 +186,19 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     * serializable locals — never a node or a SparkSession. */
   def advance1[D: ClassTag, O: ClassTag](delta: RDD[D])(
       f: (S, Iterator[D]) => (S, Array[O])): RDD[O] =
-    advance1Counted(delta)(f)._1
+    commit(step1(delta)(f))
 
-  /** [[advance1]] returning the output count too (no extra job). */
+  /** [[advance1]] through [[commitCounted]]: materialized now, with
+    * the output count. */
   def advance1Counted[D: ClassTag, O: ClassTag](delta: RDD[D])(
       f: (S, Iterator[D]) => (S, Array[O])): (RDD[O], Long) =
-    commitCounted(cur.zipPartitions(delta, preservesPartitioning = false) {
+    commitCounted(step1(delta)(f))
+
+  private def step1[D: ClassTag, O: ClassTag](delta: RDD[D])(
+      f: (S, Iterator[D]) => (S, Array[O])): RDD[(S, Array[O])] =
+    cur.zipPartitions(delta, preservesPartitioning = false) {
       (sIt, dIt) => Iterator.single(f(sIt.next().value, dIt))
-    })
+    }
 
   /** One batch against two co-partitioned deltas (two-sided nodes:
     * join, antijoin — one compound index per partition). */
@@ -180,4 +208,147 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     commit(cur.zipPartitions(d1, d2, preservesPartitioning = false) {
       (sIt, aIt, bIt) => Iterator.single(f(sIt.next().value, aIt, bIt))
     })
+}
+
+private[graft] object StateCell {
+  /** The name every state generation carries (storage listings). */
+  val GenerationName = "StateCell generation"
+}
+
+/** The state commits of one completed time, materialized by ONE Spark
+  * action. [[StateCell.commit]] only marks its cuts and records them
+  * here; [[CommitLedger.run]] opens a ledger around the lazy build of
+  * every maintained diff, then runs one action over every pending
+  * commit plus the caller's collected and counted branches, and only
+  * after it drops each cell's superseded generation. Per-job scheduler
+  * latency is the serving wall floor at interactive sizes, and 3DF
+  * advances every standing query as one dataflow step per epoch; here
+  * independent rules' stages overlap inside one job instead of queueing
+  * behind each other's round-trips. */
+private[graft] final class CommitLedger private () {
+  private val outs = mutable.ArrayBuffer.empty[RDD[_]]
+  private val drops = mutable.ArrayBuffer.empty[() => Unit]
+}
+
+private[graft] object CommitLedger {
+  private val open = new ThreadLocal[CommitLedger]
+
+  /** A lazy commit's output cut and the drop to run once it is
+    * materialized. Outside a ledger the commit is its own ledger of one:
+    * its job runs now, then the drop. */
+  private[streaming] def record(out: RDD[_], drop: () => Unit): Unit =
+    open.get match {
+      case null =>
+        materialize(out.sparkContext, Nil, touch = Seq(out))
+        drop()
+      case l =>
+        l.outs += out
+        l.drops += drop
+    }
+
+  /** The drop of an eagerly materialized commit that superseded `prev`:
+    * it runs now, unless a lazy commit pending on the open ledger reaches
+    * `prev` through its lineage — a pending generation's own output
+    * always does — and then it waits for the ledger's action. */
+  private[streaming] def afterCount(prev: RDD[_], drop: () => Unit): Unit =
+    open.get match {
+      case l if l != null && prev != null &&
+          reached(l.outs.toSeq, Seq(prev)).nonEmpty =>
+        l.drops += drop
+      case _ => drop()
+    }
+
+  /** Open a ledger around `build`, which builds its diffs lazily and
+    * returns the RDDs to count and the RDDs to collect; then run the one
+    * action (see [[materialize]]) and the recorded drops. Returns the
+    * counts and the collected rows, in `build`'s order.
+    *
+    * Failure: a build that throws runs no action and no drop, and the
+    * exception propagates. Its commits stay pending in lineage (the next
+    * action that reads them materializes them), but every state it
+    * rebound has advanced past rows nobody received — for the Engine, a
+    * failed time delivers no diff of any interest and stays unprocessed,
+    * so its maintained interests are unusable after it, as a failure
+    * part-way through the per-interest loop of eager commits left them.
+    * A plan-shape rejection ([[UnmaintainablePlan]]) during a late
+    * subscriber's replay discards that standing query with the state it
+    * rebound, so its demotion to the snapshot path loses nothing.
+    *
+    * `outputsDead`: the caller holds no frame over the commits' outputs
+    * past the action (every diff it wanted came back collected), so
+    * their cached blocks are released with the superseded generations
+    * instead of waiting for a GC to let the ContextCleaner find them. */
+  def run(sc: SparkContext, outputsDead: Boolean = false)(
+      build: => (Seq[RDD[_]], Seq[RDD[_]])): (Array[Long], Array[Array[Any]]) = {
+    val ledger = new CommitLedger
+    val outer = open.get
+    open.set(ledger)
+    val (counted, collected) = try build finally open.set(outer)
+    val res = materialize(sc, counted, collected, ledger.outs.toSeq)
+    ledger.drops.foreach(_())
+    if (outputsDead) ledger.outs.foreach(org.apache.spark.GraftUnpersist(_))
+    res
+  }
+
+  /** ONE action over marked (checkpoint-pending) RDDs: each `counted`
+    * RDD is counted per partition, each `collected` RDD's rows come back
+    * to the driver, and each `touch` RDD is only materialized. All are
+    * direct branches of one `sc.union`, so the action computes (and
+    * caches — a marked RDD carries its storage level) every partition,
+    * and every marked branch is truncated at job end; chain-dependent
+    * branches are safe for the same reason. A `touch` RDD that another
+    * branch computes anyway (or is itself) joins as a zero-partition
+    * branch instead:
+    * no second task reads its cached blocks, and its checkpoint still
+    * runs at job end (if a partition was not computed, Spark's local
+    * checkpoint computes it, so this is never a correctness question).
+    * Returns the counts and the collected rows, in argument order. */
+  def materialize(sc: SparkContext, counted: Seq[RDD[_]],
+      collected: Seq[RDD[_]] = Nil, touch: Seq[RDD[_]] = Nil)
+      : (Array[Long], Array[Array[Any]]) = {
+    val computed = reached(counted ++ collected ++ touch, touch) ++
+      (counted ++ collected).map(_.id)
+    val (pinned, touched) = touch.partition(r => computed(r.id))
+    val k = counted.length
+    val countB = (counted ++ touched).zipWithIndex.map { case (r, i) =>
+      r.mapPartitions({ it =>
+        var c = 0L; it.foreach(_ => c += 1L)
+        Iterator.single((i, c: Any))
+      }, preservesPartitioning = false)
+    }
+    val collectB = collected.zipWithIndex.map { case (r, j) =>
+      r.map(x => (-1 - j, x: Any))
+    }
+    val pinB = pinned.map(r => PartitionPruningRDD.create(r, _ => false)
+      .mapPartitions(_ => Iterator.empty[(Int, Any)]))
+    val counts = new Array[Long](k)
+    val rows = Array.fill(collected.length)(mutable.ArrayBuilder.make[Any])
+    val branches = countB ++ collectB ++ pinB
+    // `sc.union` would drop the zero-partition branches, and with them
+    // the pinned cuts' checkpoints. No branch at all runs no job.
+    if (branches.nonEmpty) new UnionRDD(sc, branches).collect().foreach {
+      case (i, c) if i >= 0 => if (i < k) counts(i) += c.asInstanceOf[Long]
+      case (t, x)           => rows(-1 - t) += x
+    }
+    (counts, rows.map(_.result()))
+  }
+
+  /** Ids of the `of` RDDs that some OTHER root reaches through its
+    * lineage (down to checkpointed cuts). */
+  private def reached(roots: Seq[RDD[_]], of: Seq[RDD[_]]): Set[Int] = {
+    val wanted = of.iterator.map(_.id).toSet
+    val seen = mutable.HashSet.empty[Int]
+    val hit = mutable.HashSet.empty[Int]
+    if (wanted.nonEmpty) roots.foreach { root =>
+      seen += root.id
+      val stack = mutable.Stack.empty[RDD[_]]
+      root.dependencies.foreach(d => stack.push(d.rdd))
+      while (stack.nonEmpty) {
+        val r = stack.pop()
+        if (wanted(r.id)) hit += r.id
+        if (seen.add(r.id)) r.dependencies.foreach(d => stack.push(d.rdd))
+      }
+    }
+    hit.toSet
+  }
 }

@@ -165,6 +165,9 @@ class SourcesAndSinksSpec extends AnyFunSuite {
       query.processAllAvailable()
       input.addData(Seq(4L))
       query.processAllAvailable()
+      // Progress events reach the log on the listener bus, after
+      // processAllAvailable has returned.
+      org.apache.spark.GraftBus.flush(spark.sparkContext)
       val epochs = log.epochs
       assert(epochs.map(_.inputRows).sum == 4L)
       assert(epochs.forall(_.durationMs >= 0L))
