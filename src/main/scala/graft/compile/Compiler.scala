@@ -261,8 +261,7 @@ class Compiler(
     // their own query stages, but on Spark 4.1 it does not take effect:
     // InsertAdaptiveSparkPlan reads the session's conf, not this
     // thread-local one, so rounds still plan adaptively (see
-    // IncrementalQuery.tunedControl and TunedControlScopeSpec). The
-    // codegen setting does apply.
+    // TunedControlScopeSpec). The codegen setting does apply.
     val aqeKey = "spark.sql.adaptive.enabled"
     val spKey = "spark.sql.shuffle.partitions"
     val wscgKey = "spark.sql.codegen.wholeStage"

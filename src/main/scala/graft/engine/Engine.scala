@@ -814,7 +814,7 @@ object Engine {
     * -0.0 = 0.0 — Catalyst's `NormalizeFloatingNumbers`), also inside
     * structs (variants) and arrays (pull paths), and binary by content.
     * Boxed `==` would keep a NaN tuple apart from itself. */
-  private def groupKey(v: Any): Any = v match {
+  private[graft] def groupKey(v: Any): Any = v match {
     case d: Double => RealBits(java.lang.Double.doubleToLongBits(d + 0.0))
     case f: Float  => RealBits(java.lang.Float.floatToIntBits(f + 0.0f).toLong)
     case r: Row    => r.toSeq.map(groupKey)
@@ -828,7 +828,7 @@ object Engine {
 
   /** The value Spark's `groupBy` outputs for a [[deepNative]] cell: NaN
     * canonical, -0.0 as 0.0, nested sequences alike. */
-  private def normalizeReals(v: Any): Any = v match {
+  private[graft] def normalizeReals(v: Any): Any = v match {
     case d: Double => if (d.isNaN) Double.NaN else d + 0.0
     case f: Float  => if (f.isNaN) Float.NaN else f + 0.0f
     case s: scala.collection.Seq[_] => s.map(normalizeReals).toSeq

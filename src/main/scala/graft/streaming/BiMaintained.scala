@@ -3,7 +3,8 @@ package graft.streaming
 import scala.collection.immutable.TreeMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.engine.Engine
 import graft.model._
@@ -82,6 +83,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     // instance, falling back to the global `-Dgraft.bi.slack` dial when
     // unset. None on both = never compact (history immortal).
     slack: Option[Long] = None) {
+  import BiMaintained.GroupedTuple
 
   type BiTimePair = (Long, Long)
 
@@ -349,8 +351,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
           lane.pendingTimes ++= store.coarseTimes(granularity)
           val done = lane.pendingTimes.iterator
             .takeWhile(_._1 < sysFrontier).toSeq
-          for (t <- done) processTime(lane, t, semResolver, Seq(name))
-          lane.pendingTimes --= done
+          processTimes(Seq((lane, done, Seq(name))), semResolver)
         }
     }
     interests += name
@@ -904,12 +905,13 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     var iq: IncrementalQuery = null
     var kinds: Map[String, ValueKind] = Map.empty
     // ---- collected delivery state (sink = None): output-sized driver
-    // maps, capped loudly (`graft.bi.out.cap`) ----------------------------
+    // maps keyed under Spark's grouping equality ([[GroupedTuple]]),
+    // capped loudly (`graft.bi.out.cap`) ---------------------------------
     // Accumulated standing-query result R(t) (output-sized).
-    val r = mutable.Map.empty[Seq[Any], Long]
+    val r = mutable.Map.empty[GroupedTuple, Long]
     // Emitted ledger, compacted by EVENT coordinate (exact under lex
     // processing — see class doc): event → summed diff map.
-    var ledger: TreeMap[Long, Map[Seq[Any], Long]] = TreeMap.empty
+    var ledger: TreeMap[Long, Map[GroupedTuple, Long]] = TreeMap.empty
     val out = mutable.ArrayBuffer.empty[(Seq[Any], BiTimePair, Long)]
     // ---- distributed delivery state (sink = Some): R and the ledger as
     // checkpointed frames, never collected --------------------------------
@@ -941,28 +943,21 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     private var dirty = false
     private var ledgerMaxEvent = Long.MinValue
     private var fullyDelivered = false
-    // True while every delta staged since the last deliver was proven
-    // control-sized (see processTime's small-advance gate) — the sink
-    // fast path's pending-delta cut then materializes under the
-    // control-plan conf. Reset pessimistically on any non-small stage.
-    private[BiMaintained] var stagedSmall = true
-
-    private[BiMaintained] def noteStaged(small: Boolean): Unit =
-      stagedSmall &&= small
 
     /** Build — or REBUILD when a referenced attribute's first datom
       * reveals a kind after the first build (the standing query's
-      * schema is fixed at build). Called BEFORE the current time's
-      * transitions are applied, so the replayed dump is exactly the
-      * lane's view through the previously processed time. A FIRST build
-      * after times were already processed (late interest on an existing
-      * lane) accumulates the replay diffs into `r` — they are this
+      * schema is fixed at build). Called on the open ledger BEFORE the
+      * current time's transitions are applied, so the replayed dump is
+      * exactly the lane's view through the previously processed time. A
+      * FIRST build after times were already processed (late interest on
+      * an existing lane) stages the replay diffs for `r` — they are this
       * standing's R; a kind rebuild discards them — they are already in
-      * `r`. */
-    def ensureBuilt(): Unit = {
+      * `r` — and leaves only its commits pending on the ledger. */
+    def ensureBuilt(batch: Staged): Unit = {
       val current: Map[String, ValueKind] =
         refAttrs.iterator.map(a => a -> kindOf(a)).toMap
-      if (iq == null) {
+      if (iq == null || kinds != current) {
+        val first = iq == null
         kinds = current
         // The instance's state-partition dial flows through to the
         // standing's stateful nodes — previously only the store was
@@ -972,35 +967,37 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
           partitions = partitions)
         val replay = store.dump(lane.id, kindOf).view.filterKeys(refAttrs).toMap
         if (replay.nonEmpty) {
-          accumulate(iq.advance(
-            BiStore.framesOnly(replay), BiStore.knownCounts(replay)))
-          // The replay stages the lane's whole view: it keeps the next
-          // sink cut on the control-plan conf only with a size proof.
-          noteStaged(BiMaintained.provenSmall(replay))
+          if (first) batch.steps += advanceQuery(replay, batch)
+          else {
+            val _ = iq.advance(BiStore.framesOnly(replay),
+              BiStore.knownCounts(replay), consolidate = false)
+          }
         }
-      } else if (kinds != current) {
-        kinds = current
-        iq = new IncrementalQuery(spark, plan, kinds, rulePlans,
-          partitions = partitions)
-        val replay = store.dump(lane.id, kindOf).view.filterKeys(refAttrs).toMap
-        if (replay.nonEmpty) { val _ = iq.advance(
-          BiStore.framesOnly(replay), BiStore.knownCounts(replay)).count() }
       }
     }
 
-    /** Fold a standing-diff frame into R. Collected path: output-sized
-      * driver fold (the delivery edge — capped). Sink path: one
-      * distributed union+net into the checkpointed `rFrame`; nothing
-      * lands on the driver. */
-    def accumulate(diffs: DataFrame): Unit = sink match {
-      case Some(_) => accumulateFrame(diffs)
-      case None =>
-        diffs.collect().foreach { row =>
-          val n = row.length - 1
-          val tuple: Seq[Any] = (0 until n).map(i => Engine.deepNative(row.get(i)))
-          val w = r.getOrElse(tuple, 0L) + row.getLong(n)
-          if (w == 0L) r.remove(tuple) else r(tuple) = w
-        }
+    /** Advance the standing query by one batch of per-attribute frames
+      * on the open ledger and return the fold of its diffs into R, to
+      * run after the ledger's action. Collected path: the unconsolidated
+      * diff rows are a branch of that action, and the fold sums them per
+      * tuple on the driver (the delivery edge — capped). Sink path: the
+      * consolidated frame, netted by one distributed union into the
+      * lazily cut `pendingDelta`; nothing lands on the driver. */
+    def advanceQuery(fs: BiStore.Frames, batch: Staged): () => Unit = {
+      val diffs = iq.advance(BiStore.framesOnly(fs), BiStore.knownCounts(fs),
+        consolidate = sink.isDefined)
+      sink match {
+        case Some(_) => () => accumulateFrame(diffs)
+        case None =>
+          val rows = batch.collect(IncrementalQuery.rowsOf(diffs))
+          () => rows().foreach { x =>
+            val row = x.asInstanceOf[Row]
+            val n = row.length - 1
+            val tuple = new GroupedTuple((0 until n).map(row.get))
+            val w = r.getOrElse(tuple, 0L) + row.getLong(n)
+            if (w == 0L) r.remove(tuple) else r(tuple) = w
+          }
+      }
     }
 
     private def accumulateFrame(diffs: DataFrame): Unit = {
@@ -1032,7 +1029,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     def deliver(t: BiTimePair): Unit = sink match {
       case Some(s) => deliverFrame(t, s)
       case None =>
-        val acc = mutable.Map.empty[Seq[Any], Long]
+        val acc = mutable.Map.empty[GroupedTuple, Long]
         ledger.rangeTo(t._2).valuesIterator.foreach(_.foreach { case (k, w) =>
           val nw = acc.getOrElse(k, 0L) + w
           if (nw == 0L) acc.remove(k) else acc(k) = nw
@@ -1049,7 +1046,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
           ledger =
             if (merged.isEmpty) ledger.removed(t._2)
             else ledger.updated(t._2, merged)
-          diff.foreach { case (tuple, w) => out += ((tuple, t, w)) }
+          diff.foreach { case (tuple, w) => out += ((tuple.native, t, w)) }
           // Spill guard on the drain buffer: `out` holds deliveries
           // until `drain`, so an undrained data-sized standing would
           // otherwise grow the driver unboundedly — fail loudly with
@@ -1074,7 +1071,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       val below = ledger.iterator.takeWhile(_._1 <= b).toSeq
       if (below.size > 1 || below.exists(_._1 < b)) {
         val merged = below.iterator.map(_._2)
-          .foldLeft(Map.empty[Seq[Any], Long]) { (acc0, mm) =>
+          .foldLeft(Map.empty[GroupedTuple, Long]) { (acc0, mm) =>
             mm.foldLeft(acc0) { case (m, (k, w)) =>
               val nw = m.getOrElse(k, 0L) + w
               if (nw == 0L) m.removed(k) else m.updated(k, nw)
@@ -1211,14 +1208,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         // truncation share ONE job instead of eager-then-count's two.
         val diff = pendingDelta.withColumnRenamed("_w", "_diff")
           .graftCheckpoint(false)
-        // Proven-small staged delta → control-plan conf (no codegen;
-        // adaptive execution stays on) for the one materializing
-        // cut+gate job (see processTime's gate).
-        val nDiff =
-          if (stagedSmall) IncrementalQuery.tunedControl(partitions)(diff.count())
-          else diff.count()
-        stagedSmall = true
-        if (nDiff > 0L) {
+        if (diff.count() > 0L) {
           segments += ((t._2, diff))
           ledgerMaxEvent = math.max(ledgerMaxEvent, t._2)
           s.deliver(name, t._1, diff.select(
@@ -1281,7 +1271,6 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         if (ledgerAll eq null) null else ledgerAll.graftCheckpoint(false)
       segments.clear()
       pendingDelta = null
-      stagedSmall = true
       // After a deliver whose accumulation covered the WHOLE ledger,
       // Σ_all ledger == R (diff closed the gap); entries above t.event
       // (impossible here since the merge bound max at t._2 when it was
@@ -1311,17 +1300,59 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
   private[graft] val sinkDeliveryStats =
     mutable.Map.empty[String, Long].withDefaultValue(0L)
 
-  private val biDebug = sys.env.contains("GRAFT_BI_DEBUG")
-  private def btrace(msg: => String): Unit =
-    if (biDebug) System.err.println(s"[bi] $msg")
+  /** One ledger's deferred driver work: the collected standings' row
+    * branches of its one action, and the fold → deliver steps that run
+    * after it, in (lane, time, standing) order. */
+  private final class Staged {
+    val collected = mutable.ArrayBuffer.empty[RDD[_]]
+    val steps = mutable.ArrayBuffer.empty[() => Unit]
+    private var rows: Array[Array[Any]] = Array.empty
 
-  /** Process ONE completed coarse time of `lane`: one shared
-    * visible-view transition against the fine store feeds every
-    * attached standing query. Sys-index entries dead for EVERY lane
-    * (at or under the min processed bound) are pruned en route. */
-  private def processTime(lane: Lane, t: BiTimePair,
-      sem: BiTime.Sem, laneInterests: Iterable[String]): Unit = {
-    val t0 = System.nanoTime()
+    /** Add `rdd` as a collected branch; its rows, once the action ran. */
+    def collect(rdd: RDD[_]): () => Array[Any] = {
+      val i = collected.length
+      collected += rdd
+      () => rows(i)
+    }
+
+    def landed(rs: Array[Array[Any]]): Unit = rows = rs
+  }
+
+  /** Process completed coarse times — per lane, its lex-ordered times and
+    * the standings that receive them — in ONE [[CommitLedger.run]]: every
+    * time's standing commits build lazily (time t+1's state reads time
+    * t's pending generation through lineage), every collected standing's
+    * diff rows join the same action, and only after it do the folds into
+    * R and the deliveries run, in the original order — before the lanes'
+    * `pendingTimes` shrink, which [[Standing]]'s ledger collapse bound
+    * reads. Without a sink standing no frame outlives the action, so the
+    * commits' output cuts are released with it.
+    *
+    * Failure: staging that throws runs no action and delivers nothing,
+    * while the store and the states it advanced have moved on (see
+    * [[CommitLedger.run]]) — the standings are unusable after it, as a
+    * failure part-way through the per-time loop left them. */
+  private def processTimes(
+      work: Seq[(Lane, Seq[BiTimePair], Iterable[String])],
+      sem: BiTime.Sem): Unit = {
+    val batch = new Staged
+    val (_, rows) = CommitLedger.run(spark.sparkContext,
+        outputsDead = !standings.valuesIterator.exists(_.sink.isDefined)) {
+      for ((lane, times, names) <- work; t <- times)
+        stageTime(lane, t, sem, names, batch)
+      (Nil, batch.collected.toSeq)
+    }
+    batch.landed(rows)
+    batch.steps.foreach(_())
+    for ((lane, times, _) <- work) lane.pendingTimes --= times
+  }
+
+  /** Stage ONE completed coarse time of `lane` on the open ledger: one
+    * shared visible-view transition against the fine store feeds every
+    * attached standing query. Sys-index entries dead for EVERY lane (at
+    * or under the min processed bound) are pruned en route. */
+  private def stageTime(lane: Lane, t: BiTimePair, sem: BiTime.Sem,
+      laneInterests: Iterable[String], batch: Staged): Unit = {
     // Lazy per-attribute views (round 17): the transition below only
     // aggregates attributes some attached standing READS — a registered
     // attribute no standing scans costs ~0 per advance (the pqsource
@@ -1339,8 +1370,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       store.backfill(lane.id, lane.win, lane.lastProcessed.get, sem, missing)
     lane.covered ++= demand
     // Standing queries (re)build against the PRE-transition view.
-    for (name <- laneInterests) standings(name).ensureBuilt()
-    val t1 = System.nanoTime()
+    for (name <- laneInterests) standings(name).ensureBuilt(batch)
     val newBound = BiTime.visBound(t._1, lane.winSys)
     val pruneUpTo = lanes.valuesIterator.map { l =>
       if (l eq lane) newBound else l.processedBound
@@ -1354,44 +1384,12 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       lane.id, lane.win, lane.lastProcessed, t, sem, pruneUpTo, kindOf,
       attrHint, Some(lane.covered.toSet))
     lane.lastProcessed = Some(t)
-    val t2 = System.nanoTime()
-    // Size-adaptive small-advance conf (r19): when the engine KNOWS this
-    // time's transition is control-sized — every frame carries a
-    // driver-known count and they sum under `graft.bi.smalladvance` —
-    // the standings' DELTA-SIZED plans (advance output consolidation,
-    // the sink fast path's pending-delta cut) materialize under
-    // [[IncrementalQuery.tunedControl]]. That scope was meant to turn
-    // adaptive execution off (its stage jobs cost 2+ scheduler
-    // round-trips per exchange), but on Spark 4.1 it does not: the
-    // plans stay adaptive, while codegen and the shuffle-partition count
-    // follow the scope (TunedControlScopeSpec; the `btrace` line below
-    // prints `aqe=false` next to an adaptive plan).
-    // Data-sized transitions (any unknown or large count) keep the
-    // session conf, as do the R/ledger-sized merges and consolidation
-    // folds — this is a size gate on proven-small plans, not a mode.
-    val small = BiMaintained.provenSmall(deltas)
     for (name <- laneInterests) {
       val st = standings(name)
       val sub = deltas.view.filterKeys(st.refAttrs).toMap
-      if (sub.nonEmpty) {
-        def adv(): Unit = {
-          val d = st.iq.advance(
-            BiStore.framesOnly(sub), BiStore.knownCounts(sub))
-          btrace(s"advance plan=" +
-            d.queryExecution.executedPlan.getClass.getSimpleName +
-            s" aqe=${org.apache.spark.sql.internal.SQLConf.get.adaptiveExecutionEnabled}")
-          st.accumulate(d)
-        }
-        if (small) IncrementalQuery.tunedControl(partitions)(adv())
-        else adv()
-        st.noteStaged(small)
-      }
-      st.deliver(t)
+      val fold = if (sub.isEmpty) None else Some(st.advanceQuery(sub, batch))
+      batch.steps += { () => fold.foreach(_()); st.deliver(t) }
     }
-    btrace(f"lane=${lane.win} t=$t build=${(t1 - t0) / 1e6}%.0fms " +
-      f"transition=${(t2 - t1) / 1e6}%.0fms " +
-      f"advance+deliver=${(System.nanoTime() - t2) / 1e6}%.0fms " +
-      f"small=$small counts=${deltas.valuesIterator.map(_._2).toSeq}")
   }
 
   /** Advance the system frontier: every input time with `sys < sysNext`
@@ -1399,15 +1397,18 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * lex-ordered — ONE shared visible-view transition per (lane, time)
     * feeds every standing query attached there.
     *
-    * Cost shape: the advance runs O(completed coarse times) SEQUENTIAL
-    * per-time rounds (transition → standing advance → deliver), each a
-    * handful of distributed jobs whose data-side work is
-    * delta-proportional (and O(delta) at delivery on monotone
-    * schedules). The time lattice is therefore the driver-sequenced
-    * dimension — exactly the reference's per-timestamp progress
-    * rounds — and `Coarsen` is the dial that keeps it control-plane
-    * on dense histories (the lattice caps enforce this loudly on the
-    * bulk paths). */
+    * Cost shape: one Spark action for the whole advance, over every
+    * completed time of every lane ([[processTimes]]): the standings'
+    * state commits of all those times and the collected standings' diff
+    * rows materialize together, and the driver then folds and delivers
+    * them in lex order. What still runs its own jobs: a distributed
+    * store's counted transitions (their counts shape the frames), its
+    * replay dumps, and sink deliveries (the O(delta) fast path's cut, or
+    * a full merge). Data-side work stays delta-proportional. The time
+    * lattice is the driver-sequenced dimension — the reference's
+    * per-timestamp progress rounds — and `Coarsen` is the dial that
+    * keeps it control-plane on dense histories (the lattice caps
+    * enforce this loudly on the bulk paths). */
   def advance(sysNext: Long): Unit = {
     require(sysNext > sysFrontier, s"cannot rewind from $sysFrontier to $sysNext")
     val sem = semResolver
@@ -1422,12 +1423,10 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       lanes.remove(lane.win)
       if (lane.lastProcessed.nonEmpty) store.dropLane(lane.id)
     }
-    for (lane <- lanes.valuesIterator.toSeq) {
-      val newTimes = lane.pendingTimes.iterator.takeWhile(_._1 < sysNext).toSeq
-      val laneInterests = interests.filter(lane.members.contains)
-      for (t <- newTimes) processTime(lane, t, sem, laneInterests)
-      lane.pendingTimes --= newTimes
-    }
+    processTimes(lanes.valuesIterator.toSeq.map { lane =>
+      (lane, lane.pendingTimes.iterator.takeWhile(_._1 < sysNext).toSeq,
+        interests.filter(lane.members.contains))
+    }, sem)
     sysFrontier = sysNext
     maybeCompact(sem)
   }
@@ -1478,17 +1477,17 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
   /** Spec probe: the distributed store's live StateCell generation —
     * None on the driver sibling. Recoverability drills wipe its cached
     * blocks and assert the history recomputes from reliable files. */
-  private[graft] def storeGenerationProbe: Option[org.apache.spark.rdd.RDD[_]] =
+  private[graft] def storeGenerationProbe: Option[RDD[_]] =
     store match {
       case c: CellBiStore => Some(c.liveGenerationProbe)
       case _              => None
     }
 
-  /** Spec probe: whether everything a standing staged since its last
-    * delivery is proven control-sized (read from inside a sink
-    * delivery, before the flag resets). */
-  private[graft] def stagedSmallProbe(name: String): Boolean =
-    standings(name).stagedSmall
+  /** Spec probe: the live state generations of `name`'s standing query
+    * (empty before it first builds). */
+  private[graft] def liveGenerationsProbe(name: String): Seq[RDD[_]] =
+    standings.get(name).flatMap(st => Option(st.iq)).toSeq
+      .flatMap(_.liveGenerationsProbe)
 
   def controlPlaneStats: Map[String, Long] = Map(
     "lanes" -> lanes.size.toLong,
@@ -1509,22 +1508,21 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
 }
 
 object BiMaintained {
-  /** Row gate for the per-time small-advance conf (processTime): a
-    * lattice-time transition whose driver-known frame counts sum at or
-    * under this runs its delta-sized standing plans under the
-    * control-plan conf ([[IncrementalQuery.tunedControl]]: no codegen,
-    * the state partition count; adaptive execution stays on, as that
-    * scope cannot turn it off on Spark 4.1). Data-sized transitions
-    * (unknown or larger counts) keep the session conf. Dial:
-    * `-Dgraft.bi.smalladvance=<rows>`. */
-  private[streaming] def smallAdvanceRows: Long =
-    sys.props.get("graft.bi.smalladvance").map(_.toLong).getOrElse(65536L)
-
-  /** Size proof for the small-advance conf: non-empty frames whose
-    * driver-known counts cover every frame and sum under
-    * [[smallAdvanceRows]]. An unknown count (distributed state) proves
-    * nothing. */
-  private def provenSmall(fs: BiStore.Frames): Boolean =
-    fs.nonEmpty && fs.valuesIterator.forall(_._2.isDefined) &&
-      fs.valuesIterator.map(_._2.get).sum <= smallAdvanceRows
+  /** A collected result tuple under Spark's grouping equality
+    * ([[Engine.groupKey]]: every NaN equal, -0.0 = 0.0, also inside
+    * nested values): the key of the collected delivery's driver maps,
+    * which sum unconsolidated diff rows as `groupBy` would. Boxed `Seq`
+    * equality keeps a NaN tuple apart from itself, so a retraction never
+    * nets its assertion. `native` is the drained form, normalized as
+    * `groupBy` outputs it. */
+  private final class GroupedTuple(cells: Seq[Any]) {
+    val native: Seq[Any] =
+      cells.map(c => Engine.normalizeReals(Engine.deepNative(c)))
+    private val key = native.map(Engine.groupKey)
+    override def equals(o: Any): Boolean = o match {
+      case g: GroupedTuple => key == g.key
+      case _               => false
+    }
+    override def hashCode: Int = key.##
+  }
 }

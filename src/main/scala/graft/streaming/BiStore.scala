@@ -170,16 +170,10 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
       kindOf: String => ValueKind,
       attrHint: Option[String] = None,
       demand: Option[Set[String]] = None): BiStore.Frames = {
-    val t0 = System.nanoTime()
     val (next, rows) = vis.transition(lane, win, tPrev, t, sem, pruneUpTo,
       BiStore.demandFn(demand))
     vis = next
-    val t1 = System.nanoTime()
-    val out = BiStore.framesOf(spark, rows, kindOf)
-    if (sys.env.contains("GRAFT_BI_DEBUG"))
-      System.err.println(f"[bi-store] vis=${(t1 - t0) / 1e6}%.0fms " +
-        f"frames=${(System.nanoTime() - t1) / 1e6}%.0fms rows=${rows.length}%d")
-    out
+    BiStore.framesOf(spark, rows, kindOf)
   }
 
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),

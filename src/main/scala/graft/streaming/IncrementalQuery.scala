@@ -2054,8 +2054,9 @@ class IncrementalQuery(
       * global): each round is a new SMALL plan, so whole-stage codegen
       * compilation and constraint-propagation lineage walks cost more
       * driver time than they save in executor time at per-round data
-      * sizes. Its AQE-off setting does not take effect on Spark 4.1 —
-      * see [[IncrementalQuery.tunedControl]]. */
+      * sizes. Its AQE-off setting does not take effect on Spark 4.1:
+      * `InsertAdaptiveSparkPlan` reads the session's conf, not the
+      * thread's (`TunedControlScopeSpec`). */
     private def tuned[T](f: => T): T = {
       val c = org.apache.spark.sql.internal.SQLConf.get.clone()
       c.setConfString("spark.sql.adaptive.enabled", "false")
@@ -2706,27 +2707,6 @@ object IncrementalQuery {
         .createToScalaConverter(schema)
       it.map(r => conv(r).asInstanceOf[Row])
     }
-  }
-
-  /** Control-sized plan conf (thread-local, never session-global): run
-    * `f`'s plan materializations with whole-stage codegen and constraint
-    * propagation OFF and the shuffle-partition dial at the caller's
-    * STATE dial — codegen compilation costs more driver time than it
-    * saves in executor time at these sizes (the recursion rounds'
-    * measured `tuned{}` finding). The scope also sets
-    * `spark.sql.adaptive.enabled=false`, but on Spark 4.1 that does NOT
-    * turn adaptive execution off: `InsertAdaptiveSparkPlan` reads the
-    * session's conf, not the thread's `SQLConf.get`, so plans planned
-    * here are still `AdaptiveSparkPlanExec` with their per-exchange
-    * stage jobs (pinned by `TunedControlScopeSpec`). Size-gated by the
-    * CALLER: data-sized plans must never come here. */
-  def tunedControl[T](shufflePartitions: Int)(f: => T): T = {
-    val c = org.apache.spark.sql.internal.SQLConf.get.clone()
-    c.setConfString("spark.sql.adaptive.enabled", "false")
-    c.setConfString("spark.sql.codegen.wholeStage", "false")
-    c.setConfString("spark.sql.constraintPropagation.enabled", "false")
-    c.setConfString("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    org.apache.spark.sql.internal.SQLConf.withExistingConf(c)(f)
   }
 
   /** Partitioned static-arrangement index of the linear-recursion

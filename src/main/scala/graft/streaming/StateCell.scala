@@ -215,8 +215,11 @@ private[graft] object StateCell {
   val GenerationName = "StateCell generation"
 }
 
-/** The state commits of one completed time, materialized by ONE Spark
-  * action. [[StateCell.commit]] only marks its cuts and records them
+/** The state commits of one advance, materialized by ONE Spark action:
+  * one completed time of the unitemporal `Engine`, or every completed
+  * lattice time of every lane of a [[BiMaintained]] advance (a later
+  * time's commits read an earlier one's pending generation through
+  * lineage). [[StateCell.commit]] only marks its cuts and records them
   * here; [[CommitLedger.run]] opens a ledger around the lazy build of
   * every maintained diff, then runs one action over every pending
   * commit plus the caller's collected and counted branches, and only

@@ -676,6 +676,36 @@ class BiMaintainedSpec extends AnyFunSuite {
     }
   }
 
+  test("NaN and -0.0 result tuples net in the collected delivery (grouping equality)") {
+    // The collected delivery sums diff rows per tuple on the driver the
+    // way `groupBy` groups them: every NaN equal, -0.0 = 0.0. Under boxed
+    // `Seq` equality a NaN tuple's retraction never met its assertion in
+    // R, so R kept a +1 and a -1 entry for one tuple.
+    val bm = new BiMaintained(spark, partitions = 4)
+    bm.createAttribute(":bm/r", AttributeConfig(InputSemantics.LastWriteWins))
+    bm.register(Rule("q", Plan.MatchA(0, ":bm/r", 1)))
+    bm.interest("q")
+    def put(e: Long, v: Double, t: (Long, Long), diff: Long) =
+      bm.BiDatom(Value.eid(e), ":bm/r", Value.VReal(v), t, diff)
+    bm.transact(Seq(put(1L, Double.NaN, (0L, 0L), 1L), put(2L, -0.0, (0L, 1L), 1L)))
+    bm.advance(1L)
+    val asserted = bm.drain("q")
+    assert(asserted.map(_._3).sorted == Seq(1L, 1L), asserted)
+    assert(bm.controlPlaneStats("resultRows") == 2L)
+    bm.transact(Seq(put(1L, Double.NaN, (1L, 1L), -1L), put(2L, -0.0, (1L, 1L), -1L)))
+    bm.advance(2L)
+    val drained = asserted ++ bm.drain("q")
+    def grouped(tuple: Seq[Any]): Seq[Any] = tuple.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+      case other     => other
+    }
+    val net = drained.groupMapReduce(d => grouped(d._1))(_._3)(_ + _)
+    assert(net.size == 2 && net.values.forall(_ == 0L),
+      s"retractions did not net their assertions: $drained")
+    assert(bm.controlPlaneStats("resultRows") == 0L,
+      s"R kept ${bm.controlPlaneStats("resultRows")} rows after every fact was retracted")
+  }
+
   test("transact is all-or-nothing: a rejected batch leaves no phantom state (r10 ADVICE)") {
     // Two siblings: `bm` sees a mixed batch (one valid datom ordered
     // BEFORE one at a closed system time) that must be rejected as a

@@ -130,41 +130,6 @@ class BiSinkDeliverySpec extends AnyFunSuite {
     assert(want("qx").nonEmpty && want("qy").nonEmpty)
   }
 
-  test("a late interest's replay is staged as control-sized only with a size proof") {
-    // Gate at 4 rows: the 40-datom view a second standing replays when it
-    // joins a live lane is over it, the one-datom transition of the same
-    // time under it. The replay must clear the staging proof, so that
-    // delivery's sink cut never runs under the control-plan conf; the
-    // first standing's one-datom time stays proven small.
-    val prev = sys.props.put("graft.bi.smalladvance", "4")
-    try {
-      val bm = new BiMaintained(spark, partitions = 4)
-      bm.createAttribute(":ls/x", AttributeConfig(InputSemantics.Raw))
-      bm.register(Rule("early", Plan.MatchA(0, ":ls/x", 1)))
-      bm.register(Rule("late", Plan.MatchA(0, ":ls/x", 1)))
-      val staged = scala.collection.mutable.Map.empty[(String, Long), Boolean]
-      val sink = new ForeachFrameSink((nm, t, _) => {
-        staged((nm, t)) = bm.stagedSmallProbe(nm)
-      })
-      def put(es: Seq[Long], s: Long): Unit = {
-        bm.transact(es.map(e =>
-          bm.BiDatom(Value.eid(e), ":ls/x", Value.num(e), (s, s), 1L)))
-        bm.advance(s + 1L)
-      }
-      bm.interestSink("early", sink)
-      put(1L to 40L, 0L)
-      bm.interestSink("late", sink)
-      put(Seq(41L), 1L)
-      assert(staged.get(("early", 0L)).contains(false), staged)
-      assert(staged.get(("early", 1L)).contains(true), staged)
-      assert(staged.get(("late", 1L)).contains(false),
-        s"the 40-row replay was staged as control-sized: $staged")
-    } finally prev match {
-      case Some(v) => sys.props("graft.bi.smalladvance") = v
-      case None    => sys.props.remove("graft.bi.smalladvance")
-    }
-  }
-
   test("monotone schedules take the O(delta) fast path; regressions full-merge; consolidation stays exact") {
     // Drive a MONOTONE event schedule (event grows with sys) through
     // the sink edge with a tiny segment cap, then a late event write.

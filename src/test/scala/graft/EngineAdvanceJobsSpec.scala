@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
@@ -47,30 +44,6 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
   private def d(e: Long, a: String, v: Value, diff: Long = 1L) =
     Datom(e, a, v, None, diff)
 
-  /** Count the jobs `body` submits under this spec's job group. */
-  private def jobsOf(label: String)(body: => Unit): Int = {
-    val group = "engine-advance-jobs-spec"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, label)
-      body
-      org.apache.spark.GraftBus.flush(spark.sparkContext)
-      jobs.get
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
   test("a warm maintained advance runs one job for every commit and collect") {
     val e = new Engine(spark)
     Seq(Cust -> InputSemantics.Raw, Status -> InputSemantics.LastWriteWins,
@@ -107,7 +80,7 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
     (1 to 3).foreach(_ => step())
     rules.foreach(r => assert(e.servedIncrementally(r.name), r.name))
 
-    val warm = jobsOf("warm maintained advance")(step())
+    val warm = TestSpark.jobsOf("warm maintained advance")(step())
     info(s"warm maintained advance: $warm jobs")
     // Measured: 1 job. With one job per state commit and per collect
     // the same advance ran 10, and with per-attribute count jobs and
@@ -119,7 +92,7 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
     // commit and its collect.
     e.register(count("late", MatchA(0, Cust, 1), key = 1, of = 0))
     e.interestMaintained("late")
-    val late = jobsOf("late subscriber replay") { epoch += 1; e.advance(epoch) }
+    val late = TestSpark.jobsOf("late subscriber replay") { epoch += 1; e.advance(epoch) }
     info(s"late subscriber replay: $late jobs")
     assert(e.servedIncrementally("late"))
     val drained = e.drain("late")

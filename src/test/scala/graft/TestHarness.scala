@@ -38,6 +38,32 @@ object TestSpark {
     }
   }
 
+  /** Spark jobs `body` submits, counted on the listener bus by the job
+    * group `body` runs under. */
+  def jobsOf(label: String)(body: => Unit): Int = {
+    val group = s"jobs-of-$label"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (e.properties != null &&
+            group == e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, label)
+      body
+      org.apache.spark.GraftBus.flush(sc)
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** `spark.sql.autoBroadcastJoinThreshold`, the byte gate every
     * driver/broadcast-vs-distributed choice reads (`-1` disables it). */
   val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"

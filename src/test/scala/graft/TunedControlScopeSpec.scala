@@ -7,11 +7,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.IncrementalQuery
-
-/** What the thread-local control-plan scope (`IncrementalQuery.tunedControl`,
-  * the same `SQLConf.withExistingConf` override the recursion rounds, the
-  * batch fixpoint and the bitemporal small-advance gate install) really
+/** What a thread-local control-plan scope (a cloned `SQLConf` installed
+  * through `SQLConf.withExistingConf`, the override the recursion rounds
+  * and the batch fixpoint install) really
   * changes on this Spark. Rules that read `SQLConf.get` on the calling
   * thread see the override: whole-stage codegen is off and the planned
   * shuffle takes the scope's partition count. Adaptive execution is NOT
@@ -21,6 +19,17 @@ import graft.streaming.IncrementalQuery
 class TunedControlScopeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
+
+  /** The scope under test: adaptive execution, whole-stage codegen and
+    * constraint propagation off, the shuffle-partition count set. */
+  private def tunedControl[T](shufflePartitions: Int)(f: => T): T = {
+    val c = SQLConf.get.clone()
+    c.setConfString("spark.sql.adaptive.enabled", "false")
+    c.setConfString("spark.sql.codegen.wholeStage", "false")
+    c.setConfString("spark.sql.constraintPropagation.enabled", "false")
+    c.setConfString("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    SQLConf.withExistingConf(c)(f)
+  }
 
   private def grouped(): DataFrame =
     spark.range(0L, 2000L, 1L, 4).selectExpr("id % 7 AS k", "id AS v")
@@ -46,7 +55,7 @@ class TunedControlScopeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val sessionPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val scoped = sessionPartitions + 3
     val (outExec, outAqe) = run()
-    val (inExec, inAqe) = IncrementalQuery.tunedControl(scoped)(run())
+    val (inExec, inAqe) = tunedControl(scoped)(run())
 
     // Outside the scope: the session's settings.
     assert(outAqe)
