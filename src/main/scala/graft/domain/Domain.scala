@@ -75,7 +75,28 @@ class Domain(val spark: SparkSession) extends Serializable {
       var kind: Option[ValueKind],
       // transacted datoms: (e, v-native, t, diff, seq)
       buffer: mutable.ArrayBuffer[(Long, Any, Long, Long, Long)],
-      staticDf: Option[DataFrame])
+      staticDf: Option[DataFrame]) {
+    // time -> offsets into `buffer` of the datoms at that time, so the
+    // per-advance reads of [from, until) touch only the delta
+    private val byTime = mutable.TreeMap.empty[Long, Domain.OffsetRuns]
+
+    def append(d: (Long, Any, Long, Long, Long)): Unit = {
+      byTime.getOrElseUpdate(d._3, new Domain.OffsetRuns).add(buffer.length)
+      buffer += d
+    }
+
+    /** Times of the buffered datoms in [from, until), ascending. */
+    def timesIn(from: Long, until: Long): Iterator[Long] =
+      byTime.range(from, until).keysIterator
+
+    /** The buffered datoms with time in [from, until), in buffer order. */
+    def datomsIn(from: Long, until: Long): Seq[(Long, Any, Long, Long, Long)] = {
+      val offs = byTime.range(from, until).valuesIterator
+        .flatMap(_.iterator).toArray
+      java.util.Arrays.sort(offs)
+      offs.toSeq.map(buffer)
+    }
+  }
 
   private val attrs = mutable.LinkedHashMap.empty[String, AttrState]
 
@@ -161,7 +182,7 @@ class Domain(val spark: SparkSession) extends Serializable {
             throw GraftError.incorrect(s"attribute ${d.a}: kind $k != $existing")
       }
       seqCounter += 1
-      st.buffer += ((d.e, d.v.native, d.t.getOrElse(defaultT), d.diff, seqCounter))
+      st.append((d.e, d.v.native, d.t.getOrElse(defaultT), d.diff, seqCounter))
     }
   }
 
@@ -178,10 +199,8 @@ class Domain(val spark: SparkSession) extends Serializable {
   /** Distinct datom times in [from, until) — the completed times an
     * `advance` must emit output diffs for. */
   def pendingTimes(from: Long, until: Long): Seq[Long] =
-    (attrs.valuesIterator
-      .flatMap(_.buffer.iterator.map(_._3)) ++
-      extraPending.iterator)
-      .filter(t => t >= from && t < until)
+    (attrs.valuesIterator.flatMap(_.timesIn(from, until)) ++
+      extraPending.range(from, until).iterator)
       .toSeq.distinct.sorted
 
   def attributeNames: Seq[String] = attrs.keys.toSeq
@@ -209,9 +228,7 @@ class Domain(val spark: SparkSession) extends Serializable {
     * maintenance. Driver-sized by the same contract as `transact`. */
   def bufferedDeltas(name: String, from: Long, until: Long): Seq[(Long, Any, Long)] =
     attrs.get(name).toSeq.flatMap { st =>
-      st.buffer.iterator
-        .filter(d => d._3 >= from && d._3 < until)
-        .toSeq.groupBy(d => (d._1, d._2))
+      st.datomsIn(from, until).groupBy(d => (d._1, d._2))
         .iterator.collect {
           case ((e, v), ds) if ds.map(_._4).sum != 0L => (e, v, ds.map(_._4).sum)
         }.toSeq
@@ -224,9 +241,7 @@ class Domain(val spark: SparkSession) extends Serializable {
     * `transact`. */
   def bufferedEvents(
       name: String, from: Long, until: Long): Seq[(Long, Any, Long, Long, Long)] =
-    attrs.get(name).toSeq.flatMap { st =>
-      st.buffer.iterator.filter(d => d._3 >= from && d._3 < until).toSeq
-    }
+    attrs.get(name).toSeq.flatMap(_.datomsIn(from, until))
 
   def registerRule(rule: Rule): Unit = rulesCatalog(rule.name) = rule
   def rules: Map[String, Rule] = rulesCatalog.toMap
@@ -326,5 +341,29 @@ class Domain(val spark: SparkSession) extends Serializable {
           }
       }
     }
+  }
+}
+
+object Domain {
+  /** Buffer offsets as runs of consecutive offsets: the datoms of one
+    * transact at one time land in one run, so the per-time index costs
+    * a few ints per batch, not per datom. */
+  private final class OffsetRuns {
+    private var starts = new Array[Int](1)
+    private var ends = new Array[Int](1)
+    private var n = 0
+
+    def add(off: Int): Unit =
+      if (n > 0 && ends(n - 1) == off) ends(n - 1) = off + 1
+      else {
+        if (n == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, 2 * n)
+          ends = java.util.Arrays.copyOf(ends, 2 * n)
+        }
+        starts(n) = off; ends(n) = off + 1; n += 1
+      }
+
+    def iterator: Iterator[Int] =
+      Iterator.range(0, n).flatMap(i => Iterator.range(starts(i), ends(i)))
   }
 }

@@ -1474,6 +1474,15 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
   /** Test hook: resident datom records (shrinks under compaction). */
   private[graft] def datomCountProbe: Long = store.datomCount
 
+  /** Test hook: rows of every lane's emitted view (the visible view
+    * the store keeps per lane). */
+  private[graft] def emittedRowsProbe: Long =
+    lanes.valuesIterator.map { lane =>
+      store.dump(lane.id, kindOf).valuesIterator.map {
+        case (df, n) => n.getOrElse(df.count())
+      }.sum
+    }.sum
+
   /** Spec probe: the distributed store's live StateCell generation —
     * None on the driver sibling. Recoverability drills wipe its cached
     * blocks and assert the history recomputes from reliable files. */

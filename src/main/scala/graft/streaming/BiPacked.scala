@@ -74,7 +74,10 @@ final class BiPacked private (
   }
 
   /** Mutable encoding context for one batch (dictionary grows once per
-    * distinct value; committed into the successor instance). */
+    * distinct value; committed into the successor instance). Values are
+    * distinct under Spark's grouping equality (`Engine.groupKey`: every
+    * NaN one value, -0.0 = 0.0), so a NaN datom's retraction meets its
+    * assertion; the first sample of a value is the one decoded. */
   private final class Enc {
     var vals: Vector[Any] = dictVals
     var ids: HashMap[Any, Long] = dictIds
@@ -83,12 +86,13 @@ final class BiPacked private (
       case null => TagNull
       case l: Long if (l << 2 >> 2) == l => (l << 2) | TagInline
       case other =>
-        ids.get(other) match {
+        val g = graft.engine.Engine.groupKey(other)
+        ids.get(g) match {
           case Some(i) => i << 2
           case None =>
             val i = vals.length.toLong
             vals = vals :+ other
-            ids = ids.updated(other, i)
+            ids = ids.updated(g, i)
             bytes += valBytes(other)
             i << 2
         }

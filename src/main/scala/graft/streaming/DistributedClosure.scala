@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.kernel.RddKernel
+import graft.kernel.{Exchange, RddKernel}
 
 /** Incrementally maintained transitive closure with a fully DISTRIBUTED
   * adjacency — the store `IncrementalQuery`'s closure node migrates to
@@ -103,7 +103,7 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
     * Retracting an absent edge fails loudly (distributed — nothing
     * data-sized ever lands on the driver on this path). */
   def advanceSignedRdd(deltas: RDD[((Long, Long), Long)], t: Long): DataFrame = {
-    val net = deltas.reduceByKey(part, _ + _).filter(_._2 != 0L)
+    val net = Exchange.sum(deltas, part).filter(_._2 != 0L)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val bad = net.filter { case (_, w) => w != 1L && w != -1L }.take(1)
@@ -196,7 +196,7 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
     * the genuinely fresh tuples — the round's only shuffle is the
     * candidates' own key consolidation. */
   private def insertClosure(cand: RDD[(Tup, Null)]): (RDD[(Tup, Null)], Long) = {
-    val keyed = cand.reduceByKey(part, (a, _) => a)
+    val keyed = Exchange.distinct(cand, part)
     val (out, n) =
       closureCell.advance1Counted(keyed)(DistributedClosure.setInsertFresh)
     // Records came out of `part`-keyed partitions untouched — assert the

@@ -9,7 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.kernel.RddKernel
+import graft.kernel.{Exchange, RddKernel}
 
 /** Incrementally maintained transitive closure over a streamed edge
   * attribute — the recursion slice of the reference's incrementally-
@@ -128,7 +128,7 @@ class IncrementalClosure(
   def advanceSignedRdd(deltas: RDD[((Long, Long), Long)], t: Long): DataFrame = {
     val known = sc.broadcast(edgeSet.toSet)
     val survivors =
-      try deltas.reduceByKey(part, _ + _)
+      try Exchange.sum(deltas, part)
         .filter { case (e, w) => w != 0L && (w != 1L || !known.value(e)) }
         .collect()
       finally known.destroy()
@@ -425,7 +425,7 @@ class IncrementalClosure(
     * exactly the genuinely fresh tuples (`part`-placed, partitioner
     * asserted back for downstream narrow unions/subtracts). */
   private def insertClosure(cand: RDD[(Tup, Null)]): (RDD[(Tup, Null)], Long) = {
-    val keyed = cand.reduceByKey(part, (a, _) => a)
+    val keyed = Exchange.distinct(cand, part)
     val (out, n) =
       closureCell.advance1Counted(keyed)(DistributedClosure.setInsertFresh)
     (RddKernel.assertPartitioned(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.kernel.Ckpt._
+import graft.kernel.Exchange
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -735,7 +736,7 @@ class IncrementalHector(
     val doCanon = needsCanon
     val deltaPairs: Map[Int, (RDD[KV], Long)] = deltas.map { case (i, df) =>
       val isReal = realBinding(i)
-      val r = df
+      val r = Exchange.sum(df
         .select(col("e"), col("v"), col("diff").cast("long").as("_w"))
         .rdd.map { r =>
           val v0 = r.get(1)
@@ -745,8 +746,7 @@ class IncrementalHector(
             else if (doCanon) IncrementalHector.canon(v0)
             else v0
           ((r.getLong(0), v), r.getLong(2))
-        }
-        .reduceByKey(part, _ + _)
+        }, part)
         .graftCheckpoint()
       i -> (r, r.count())
     }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.kernel.Ckpt._
+import graft.kernel.Exchange
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -373,7 +374,7 @@ class IncrementalQuery(
         val cs = canonSample
         on(pCell) { case ((runs, nullM), dIt) =>
           // NET the batch per ENCODED key first: encReal canonicalizes
-          // keys the upstream boxed reduceByKey could not merge (two
+          // keys the upstream boxed exchange could not merge (two
           // same-batch NaN rows are distinct boxed Seq keys but ONE
           // packed key; likewise -0.0 vs 0.0), and the threshold below
           // must see the batch's NET weight against ONE pre-batch
@@ -478,11 +479,11 @@ class IncrementalQuery(
       if (!touched(attrDeltas)) (emptyDiff, 0L)
       else {
         val width = vars.length
-        val delta: RDD[(Seq[Any], Long)] = inputs
+        val delta: RDD[(Seq[Any], Long)] = Exchange.sum(inputs
           .map(n => rowsOf(n.advance(attrDeltas)))
           .reduce(_ union _)
-          .map(r => (rowKey(r, width), r.getLong(width)))
-          .reduceByKey(part, _ + _) // the only shuffle: O(delta)
+          .map(r => (rowKey(r, width), r.getLong(width))),
+          part) // the only shuffle: O(delta)
         val (diffs, n) =
           if (counted) cell.advanceCounted(delta) else (cell.advance(delta), -1L)
         (spark.createDataFrame(
@@ -521,12 +522,10 @@ class IncrementalQuery(
       else {
         val width = vars.length
         val kl = keyIdx.length
-        val dL = rowsOf(left.advance(attrDeltas))
-          .map(r => (rowKey(r, width), r.getLong(width)))
-          .reduceByKey(lPart, _ + _)
-        val dR = rowsOf(right.advance(attrDeltas))
-          .map(r => (rowKey(r, kl), r.getLong(kl)))
-          .reduceByKey(rPart, _ + _)
+        val dL = Exchange.sum(rowsOf(left.advance(attrDeltas))
+          .map(r => (rowKey(r, width), r.getLong(width))), lPart)
+        val dR = Exchange.sum(rowsOf(right.advance(attrDeltas))
+          .map(r => (rowKey(r, kl), r.getLong(kl))), rPart)
         // Locals only: a field reference here would capture the node
         // (and its SparkSession) into the task closure.
         val ki = keyIdx; val dlf = distinctLeft
@@ -641,13 +640,12 @@ class IncrementalQuery(
       if (!touched(attrDeltas)) emptyDiff
       else {
         val (kIdx, vIdx) = (keyIdx, valueIdx)
-        val delta: RDD[((Seq[Any], Seq[Any]), Long)] =
+        val delta: RDD[((Seq[Any], Seq[Any]), Long)] = Exchange.sum(
           rowsOf(input.advance(attrDeltas))
           .map { r =>
             ((kIdx.map(r.get): Seq[Any], vIdx.map(r.get): Seq[Any]),
               r.getLong(r.length - 1))
-          }
-          .reduceByKey(part, _ + _) // the only shuffle: O(delta)
+          }, part) // the only shuffle: O(delta)
         val specL = spec
         val rows = cell.advance1(delta)(
           aggregateAdvanceIdx(requireNonNeg = false,
@@ -767,9 +765,9 @@ class IncrementalQuery(
         node: Node, part: Partitioner,
         attrDeltas: Map[String, DataFrame]): RDD[(Seq[Any], Long)] = {
       val width = node.vars.length
-      rowsOf(node.advance(attrDeltas))
-        .map(r => (rowKey(r, width), r.getLong(width)))
-        .reduceByKey(part, _ + _).filter(_._2 != 0L)
+      Exchange.sum(rowsOf(node.advance(attrDeltas))
+        .map(r => (rowKey(r, width), r.getLong(width))), part)
+        .filter(_._2 != 0L)
     }
 
     def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
@@ -844,14 +842,15 @@ class IncrementalQuery(
         // action, each re-reading the delta-sized shuffle output. A
         // cached copy would make those tasks of one stage wait on each
         // other for its blocks.
-        val dChild = rowsOf(child.advance(attrDeltas))
-          .map(r => (rowKey(r, width), r.getLong(width)))
-          .reduceByKey(childPart, _ + _).filter(_._2 != 0L)
+        val dChild = Exchange.sum(rowsOf(child.advance(attrDeltas))
+          .map(r => (rowKey(r, width), r.getLong(width))), childPart)
+          .filter(_._2 != 0L)
         val branches = mutable.ArrayBuffer.empty[DataFrame]
         pullAttrs.foreach { a =>
           val dAttr = attrDeltas.get(a)
-            .map(rowsOf(_).map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2)))
-              .reduceByKey(attrPart, _ + _).filter(_._2 != 0L))
+            .map(df => Exchange.sum(rowsOf(df)
+              .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2))), attrPart)
+              .filter(_._2 != 0L))
             .getOrElse(sc.emptyRDD[(Seq[Any], Long)].partitionBy(attrPart))
           val eIdxL = eIdx
           val aCell = attrCells(a)
@@ -1301,7 +1300,7 @@ class IncrementalQuery(
     private def checkpointed(s: PSet): PSet = checkpointedC(s)._1
 
     private def asSet(rows: RDD[Seq[Any]]): PSet =
-      rows.map(k => (k, null: Null)).reduceByKey(part, (a, _) => a)
+      Exchange.distinct(rows.map(k => (k, null: Null)), part)
 
     /** a − b, hash-building a (pass the delta-sized side first). */
     private def minus(a: PSet, b: PSet): PSet =
@@ -2337,7 +2336,7 @@ class IncrementalQuery(
         emitted: mutable.ArrayBuffer[RDD[(Seq[Any], Long)]]): DataFrame =
       if (emitted.isEmpty) emptyDiff
       else {
-        val net = sc.union(emitted.toSeq).reduceByKey(part, _ + _)
+        val net = Exchange.sum(sc.union(emitted.toSeq), part)
           .filter(_._2 != 0L)
         spark.createDataFrame(
           net.map { case (k, w) => Row.fromSeq(k :+ w) }, schema)
@@ -2468,9 +2467,8 @@ class IncrementalQuery(
     /** The set-transition diffs (a lazy commit: an empty transition
       * set flows on inside the same action). */
     def advance(delta: DataFrame): DataFrame = {
-      val d = rowsOf(delta)
-        .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2)))
-        .reduceByKey(part, _ + _)
+      val d = Exchange.sum(rowsOf(delta)
+        .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2))), part)
       spark.createDataFrame(
         cell.advance(d).map { case (k, w) => Row(k(0), k(1), w) }, schema)
     }
@@ -2517,13 +2515,11 @@ class IncrementalQuery(
 
     /** The LWW-view diffs (a lazy commit, like [[AttrThreshold]]). */
     def advance(delta: DataFrame): DataFrame = {
-      // Batch winner per entity: the max-(t, seq) event. seq is the
-      // domain's global transaction counter, so this is total order.
-      val d = rowsOf(delta)
+      // Batch winner per entity: the max-(t, seq) event.
+      val d = Exchange.net(rowsOf(delta)
         .map(r => (r.getLong(0),
-          (r.getLong(2), r.getLong(4), r.get(1), r.getLong(3) > 0L)))
-        .reduceByKey(part, (a, b) =>
-          if (a._1 > b._1 || (a._1 == b._1 && a._2 > b._2)) a else b)
+          (r.getLong(2), r.getLong(4), r.get(1), r.getLong(3) > 0L))),
+        part, IncrementalQuery.LwwLatest)
       spark.createDataFrame(
         cell.advance1(d)(IncrementalQuery.lwwAdvanceIdx)
           .map { case (e, v, w) => Row(e, v, w) }, schema)
@@ -2987,6 +2983,17 @@ object IncrementalQuery {
     val lmNext = lm.merged(dl.map { case (r, w) => ((lk(r), r), w) })
     val rmNext = rm.merged(dr.map { case (r, w) => ((rk(r), r), w) })
     ((lmNext, rmNext), out.toArray)
+  }
+
+  /** The batch's LWW winner of two events of one entity: the max in
+    * `(t, seq)` (seq is the domain's global transaction counter, so the
+    * order is total). */
+  private[graft] object LwwLatest
+      extends (((Long, Long, Any, Boolean), (Long, Long, Any, Boolean)) =>
+        (Long, Long, Any, Boolean)) with Serializable {
+    def apply(a: (Long, Long, Any, Boolean), b: (Long, Long, Any, Boolean))
+        : (Long, Long, Any, Boolean) =
+      if (a._1 > b._1 || (a._1 == b._1 && a._2 > b._2)) a else b
   }
 
   /** Indexed LWW: index = entity → winning (t, seq, v, isAdd); a batch

@@ -5,8 +5,9 @@ import graft.kernel.Ckpt._
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.SparkContext
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD, UnionRDD}
+import org.apache.spark.{NarrowDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.util.GraftSizedValue
 
 /** Arrangement-analog keyed state: ONE immutable index object per
   * partition, resident in executor memory as a deserialized cached
@@ -25,8 +26,11 @@ import org.apache.spark.rdd.{PartitionPruningRDD, RDD, UnionRDD}
   * `advance*` zips it against co-partitioned delta RDDs, runs the
   * node's merge once per partition, marks the (newState, outputs) pairs
   * for a localCheckpoint — the checkpoint stores REFERENCES into the
-  * shared trie, not a copy — and rebinds; the open [[CommitLedger]]'s
-  * one action materializes the cut. Cached blocks carry locality, so on
+  * shared trie, not a copy — marks the outputs as a second cut of ONE
+  * known-size `Array[O]` block per partition (callers read an uncached
+  * row view over it), and rebinds; the open [[CommitLedger]]'s one
+  * action materializes both cuts, one task per partition index. Cached
+  * blocks carry locality, so on
   * a cluster the next batch's tasks schedule onto the executors holding
   * the state; failure semantics match the rest of the streaming layer
   * (localCheckpoint: lineage is cut, a lost executor fails the standing
@@ -48,7 +52,6 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     // — that walk was an O(state) CPU tax per advance.
     sizeOf: S => Long) {
 
-  import org.apache.spark.util.GraftSizedValue
   private type W = GraftSizedValue[S]
 
   private var prevGen: RDD[_] = null
@@ -91,7 +94,8 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
 
   /** Commit a stepped (newState, outputs) pair RDD LAZILY: mark both
     * cuts (the state generation and its outputs, the outputs in their
-    * own delta-sized checkpoint), rebind the state, and record the
+    * own delta-sized checkpoint of one block per partition), rebind the
+    * state, and record the
     * commit on the open [[CommitLedger]] — whose one action
     * materializes it together with every other commit of the completed
     * time, and only then drops the superseded generation's block.
@@ -106,9 +110,9 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     * superseded generation, so dropping it is safe even while callers
     * still hold earlier batches' diff frames. */
   def commit[O: ClassTag](stepped: RDD[(S, Array[O])]): RDD[O] = {
-    val (mat, out) = mark(stepped)
-    CommitLedger.record(out, rebind(mat))
-    out
+    val (mat, block) = mark(stepped)
+    CommitLedger.record(block, rebind(mat))
+    rowsOfBlocks(block)
   }
 
   /** [[commit]] that materializes NOW and returns the output-row count
@@ -121,16 +125,25 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     * a time, as outside a ledger. */
   def commitCounted[O: ClassTag](
       stepped: RDD[(S, Array[O])]): (RDD[O], Long) = {
-    val (mat, out) = mark(stepped)
+    val (mat, block) = mark(stepped)
+    val out = rowsOfBlocks(block)
     val n = out.count()
     val prev = prevGen
     CommitLedger.afterCount(prev, rebind(mat))
     (out, n)
   }
 
-  private def mark[O: ClassTag](
-      stepped: RDD[(S, Array[O])]): (RDD[(W, Array[O])], RDD[O]) = {
-    val sz = sizeOf
+  /** The output rows of a block cut: an uncached read over the cached
+    * blocks. */
+  private def rowsOfBlocks[O: ClassTag](block: RDD[GraftSizedValue[Array[O]]]): RDD[O] =
+    block.mapPartitions(new StateCell.Unblock[O], preservesPartitioning = false)
+
+  /** Mark the two cuts of a commit: the state generation, and its
+    * outputs as ONE known-size `Array[O]` block per partition — the
+    * block store then caches one value per partition under a declared
+    * size instead of walking every output row. */
+  private def mark[O: ClassTag](stepped: RDD[(S, Array[O])])
+      : (RDD[(W, Array[O])], RDD[GraftSizedValue[Array[O]]]) = {
     // Spark materializes only the job's LAST marked RDD at checkpoint
     // time, so without this property `mat` (the state generation) never
     // writes reliable files — every generation's lineage would run back
@@ -138,25 +151,26 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
     // recovery at the first executor loss. The property is thread-scoped AND
     // captured at RDD CONSTRUCTION (a private val in Spark's RDD), so
     // it must wrap the RDD builds, not the action; with it the action
-    // that computes `out` checkpoints BOTH cuts (`out` as the job RDD
-    // or a union branch, `mat` as its marked ancestor).
+    // that computes the block cut checkpoints BOTH cuts (the block as the
+    // job RDD or a ledger branch, `mat` as its marked ancestor).
     val sc0 = stepped.sparkContext
     val ancestorsKey = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevProp = sc0.getLocalProperty(ancestorsKey)
     sc0.setLocalProperty(ancestorsKey, "true")
     try {
       val mat = stepped.mapPartitions(
-        _.map { case (s, o) => (new GraftSizedValue(s, 64L + sz(s)), o) },
-        preservesPartitioning = false)
+        new StateCell.Sized[S, Array[O]](sizeOf), preservesPartitioning = false)
         .setName(StateCell.GenerationName).graftCheckpoint()
-      (mat, mat.flatMap(_._2.iterator).graftCheckpoint())
+      (mat, mat.mapPartitions(new StateCell.Block[W, O],
+        preservesPartitioning = false).graftCheckpoint())
     } finally sc0.setLocalProperty(ancestorsKey, prevProp)
   }
 
   /** Rebind the state to `mat` and return the superseded generation's
     * drop, to run once `mat` is materialized. */
   private def rebind[O](mat: RDD[(W, Array[O])]): () => Unit = {
-    cur = mat.map(_._1)
+    cur = mat.mapPartitions(new StateCell.First[W, Array[O]],
+      preservesPartitioning = false)
     val prev = prevGen
     prevGen = mat
     () => if (prev ne null) {
@@ -196,26 +210,73 @@ private[streaming] final class StateCell[S <: AnyRef: ClassTag](
 
   private def step1[D: ClassTag, O: ClassTag](delta: RDD[D])(
       f: (S, Iterator[D]) => (S, Array[O])): RDD[(S, Array[O])] =
-    cur.zipPartitions(delta, preservesPartitioning = false) {
-      (sIt, dIt) => Iterator.single(f(sIt.next().value, dIt))
-    }
+    cur.zipPartitions(delta, preservesPartitioning = false)(
+      new StateCell.Step1(f))
 
   /** One batch against two co-partitioned deltas (two-sided nodes:
     * join, antijoin — one compound index per partition). */
   def advance2[D1: ClassTag, D2: ClassTag, O: ClassTag](
       d1: RDD[D1], d2: RDD[D2])(
       f: (S, Iterator[D1], Iterator[D2]) => (S, Array[O])): RDD[O] =
-    commit(cur.zipPartitions(d1, d2, preservesPartitioning = false) {
-      (sIt, aIt, bIt) => Iterator.single(f(sIt.next().value, aIt, bIt))
-    })
+    commit(cur.zipPartitions(d1, d2, preservesPartitioning = false)(
+      new StateCell.Step2(f)))
 }
 
 private[graft] object StateCell {
   /** The name every state generation carries (storage listings). */
   val GenerationName = "StateCell generation"
+
+  /** Declared bytes per cached output row (a boxed tuple and its
+    * weight): the output block's known size. */
+  private val OutRowBytes = 96L
+
+  // The per-partition steps of a commit, as named classes: the advance
+  // path builds them every commit, and a named class gives
+  // ClosureCleaner no lambda class file to read.
+
+  private[streaming] final class Sized[S, O](sizeOf: S => Long)
+      extends (Iterator[(S, O)] => Iterator[(GraftSizedValue[S], O)]) with Serializable {
+    def apply(it: Iterator[(S, O)]): Iterator[(GraftSizedValue[S], O)] =
+      it.map { case (s, o) => (new GraftSizedValue(s, 64L + sizeOf(s)), o) }
+  }
+
+  private[streaming] final class Block[W, O]
+      extends (Iterator[(W, Array[O])] => Iterator[GraftSizedValue[Array[O]]])
+      with Serializable {
+    def apply(it: Iterator[(W, Array[O])]): Iterator[GraftSizedValue[Array[O]]] =
+      it.map { case (_, o) => new GraftSizedValue(o, 64L + OutRowBytes * o.length) }
+  }
+
+  private[streaming] final class Unblock[O]
+      extends (Iterator[GraftSizedValue[Array[O]]] => Iterator[O]) with Serializable {
+    def apply(it: Iterator[GraftSizedValue[Array[O]]]): Iterator[O] =
+      it.flatMap(_.value.iterator)
+  }
+
+  private[streaming] final class First[A, B]
+      extends (Iterator[(A, B)] => Iterator[A]) with Serializable {
+    def apply(it: Iterator[(A, B)]): Iterator[A] = it.map(_._1)
+  }
+
+  private[streaming] final class Step1[S, D, O](f: (S, Iterator[D]) => (S, Array[O]))
+      extends ((Iterator[GraftSizedValue[S]], Iterator[D]) => Iterator[(S, Array[O])])
+      with Serializable {
+    def apply(sIt: Iterator[GraftSizedValue[S]], dIt: Iterator[D]): Iterator[(S, Array[O])] =
+      Iterator.single(f(sIt.next().value, dIt))
+  }
+
+  private[streaming] final class Step2[S, D1, D2, O](
+      f: (S, Iterator[D1], Iterator[D2]) => (S, Array[O]))
+      extends ((Iterator[GraftSizedValue[S]], Iterator[D1], Iterator[D2]) =>
+        Iterator[(S, Array[O])]) with Serializable {
+    def apply(sIt: Iterator[GraftSizedValue[S]], aIt: Iterator[D1],
+        bIt: Iterator[D2]): Iterator[(S, Array[O])] =
+      Iterator.single(f(sIt.next().value, aIt, bIt))
+  }
 }
 
-/** The state commits of one advance, materialized by ONE Spark action:
+/** The state commits of one advance, materialized by ONE Spark action
+  * that runs one task per partition index:
   * one completed time of the unitemporal `Engine`, or every completed
   * lattice time of every lane of a [[BiMaintained]] advance (a later
   * time's commits read an earlier one's pending generation through
@@ -295,15 +356,17 @@ private[graft] object CommitLedger {
 
   /** ONE action over marked (checkpoint-pending) RDDs: each `counted`
     * RDD is counted per partition, each `collected` RDD's rows come back
-    * to the driver, and each `touch` RDD is only materialized. All are
-    * direct branches of one `sc.union`, so the action computes (and
-    * caches — a marked RDD carries its storage level) every partition,
-    * and every marked branch is truncated at job end; chain-dependent
-    * branches are safe for the same reason. A `touch` RDD that another
-    * branch computes anyway (or is itself) joins as a zero-partition
-    * branch instead:
-    * no second task reads its cached blocks, and its checkpoint still
-    * runs at job end (if a partition was not computed, Spark's local
+    * to the driver, and each `touch` RDD is only materialized. The action
+    * runs ONE task per partition index: task i computes partition i of
+    * every branch that has one (n tasks, n the largest branch partition
+    * count), so the whole lineage is deserialized n times, not once per
+    * branch partition. Computing a branch partition caches it (a marked
+    * RDD carries its storage level), and every marked branch is
+    * truncated at job end; chain-dependent branches are safe for the
+    * same reason. A `touch` RDD that another branch computes anyway (or
+    * is itself) is pinned instead: a dependency no task reads, so no
+    * second read of its cached blocks, while its checkpoint still runs
+    * at job end (if a partition was not computed, Spark's local
     * checkpoint computes it, so this is never a correctness question).
     * Returns the counts and the collected rows, in argument order. */
   def materialize(sc: SparkContext, counted: Seq[RDD[_]],
@@ -313,28 +376,32 @@ private[graft] object CommitLedger {
       (counted ++ collected).map(_.id)
     val (pinned, touched) = touch.partition(r => computed(r.id))
     val k = counted.length
-    val countB = (counted ++ touched).zipWithIndex.map { case (r, i) =>
-      r.mapPartitions({ it =>
-        var c = 0L; it.foreach(_ => c += 1L)
-        Iterator.single((i, c: Any))
-      }, preservesPartitioning = false)
-    }
-    val collectB = collected.zipWithIndex.map { case (r, j) =>
-      r.map(x => (-1 - j, x: Any))
-    }
-    val pinB = pinned.map(r => PartitionPruningRDD.create(r, _ => false)
-      .mapPartitions(_ => Iterator.empty[(Int, Any)]))
+    val tallied = counted ++ touched
     val counts = new Array[Long](k)
     val rows = Array.fill(collected.length)(mutable.ArrayBuilder.make[Any])
-    val branches = countB ++ collectB ++ pinB
-    // `sc.union` would drop the zero-partition branches, and with them
-    // the pinned cuts' checkpoints. No branch at all runs no job.
-    if (branches.nonEmpty) new UnionRDD(sc, branches).collect().foreach {
-      case (i, c) if i >= 0 => if (i < k) counts(i) += c.asInstanceOf[Long]
-      case (t, x)           => rows(-1 - t) += x
+    // No branch at all runs no job.
+    if (tallied.nonEmpty || collected.nonEmpty || pinned.nonEmpty) {
+      val action = new LedgerAction(sc, tallied, collected, pinned)
+      val probe = actionProbe
+      if (probe != null) probe(action)
+      sc.runJob(action, new LedgerAction.Result).foreach { part =>
+        var b = 0
+        while (b < part.length) {
+          part(b) match {
+            case c: java.lang.Long => if (b < k) counts(b) += c
+            case xs: Array[Any]    => rows(b - tallied.length) ++= xs
+            case _                 => ()
+          }
+          b += 1
+        }
+      }
     }
     (counts, rows.map(_.result()))
   }
+
+  /** Spec probe: called with the action RDD of every [[materialize]]
+    * before its job runs (lineage shape pins). */
+  @volatile private[graft] var actionProbe: RDD[_] => Unit = null
 
   /** Ids of the `of` RDDs that some OTHER root reaches through its
     * lineage (down to checkpointed cuts). */
@@ -353,5 +420,69 @@ private[graft] object CommitLedger {
       }
     }
     hit.toSet
+  }
+}
+
+/** The action RDD of [[CommitLedger.materialize]]: partition i computes
+  * partition i of every `tallied` branch (a row count) and every
+  * `collected` branch (its rows) that has one, as one element: an array
+  * with one slot per branch, null where the branch has no partition i.
+  * The `pinned` branches are dependencies no partition reads, so the
+  * job-end checkpoint still reaches their marked cuts. */
+private final class LedgerAction(sc: SparkContext,
+    tallied: Seq[RDD[_]], collected: Seq[RDD[_]], pinned: Seq[RDD[_]])
+    extends RDD[Array[Any]](sc,
+      (tallied ++ collected).map(new LedgerAction.SameIndex(_)) ++
+        pinned.map(new LedgerAction.NoIndex(_))) {
+  private val branches = (tallied ++ collected).toArray
+
+  override protected def getPartitions: Array[Partition] = {
+    val n = if (branches.isEmpty) 0 else branches.map(_.partitions.length).max
+    Array.tabulate[Partition](n) { i =>
+      new LedgerAction.Part(i, branches.map { b =>
+        val ps = b.partitions
+        if (i < ps.length) ps(i) else null
+      })
+    }
+  }
+
+  override def compute(split: Partition, context: TaskContext): Iterator[Array[Any]] = {
+    val parents = split.asInstanceOf[LedgerAction.Part].parents
+    val t = tallied.length
+    val out = new Array[Any](branches.length)
+    var b = 0
+    while (b < branches.length) {
+      val p = parents(b)
+      if (p != null) {
+        val it = branches(b).iterator(p, context)
+        out(b) =
+          if (b < t) { var c = 0L; while (it.hasNext) { it.next(); c += 1L }; c: java.lang.Long }
+          else it.toArray[Any]
+      }
+      b += 1
+    }
+    Iterator.single(out)
+  }
+}
+
+private object LedgerAction {
+  final class Part(val index: Int, val parents: Array[Partition]) extends Partition
+
+  /** Partition i of the action reads partition i of the branch. */
+  final class SameIndex(b: RDD[_])
+      extends NarrowDependency[Any](b.asInstanceOf[RDD[Any]]) {
+    def getParents(i: Int): Seq[Int] =
+      if (i < b.partitions.length) Seq(i) else Nil
+  }
+
+  /** A dependency no partition of the action reads. */
+  final class NoIndex(b: RDD[_])
+      extends NarrowDependency[Any](b.asInstanceOf[RDD[Any]]) {
+    def getParents(i: Int): Seq[Int] = Nil
+  }
+
+  /** The one element of an action partition. */
+  final class Result extends (Iterator[Array[Any]] => Array[Any]) with Serializable {
+    def apply(it: Iterator[Array[Any]]): Array[Any] = it.next()
   }
 }

@@ -84,19 +84,32 @@ class BiAdvanceJobsSpec extends AnyFunSuite {
     }
     (1 to 3).foreach(_ => step())
 
-    val warm = TestSpark.jobsOf("warm bitemporal advance")(step())
-    info(s"warm bitemporal advance (3 lattice times): $warm jobs")
+    var shape: TestSpark.JobShape = null
+    val aggregating = TestSpark.aggregatingShufflesOf {
+      shape = TestSpark.shapeOf("warm bitemporal advance")(step())
+    }
+    val warm = shape.jobs
+    info(s"warm bitemporal advance (3 lattice times): $warm jobs, " +
+      s"result stage tasks ${shape.resultTasks}")
     // Measured: 1 job. With each commit its own job (a ledger of one) and
     // a consolidating collect per standing and time, the same advance ran
     // 15.
     assert(warm <= 2, s"warm bitemporal advance ran $warm jobs")
+    // The one action runs one task per partition index: measured 4 (the
+    // 4 state partitions); one task per partition of every union branch
+    // ran 24.
+    assert(shape.resultTasks.forall(_ <= 4),
+      s"result stages of ${shape.resultTasks} tasks, over 4 partitions")
+    // Every delta nets through the exchange: no by-key aggregation shuffle.
+    assert(aggregating.isEmpty, s"aggregating shuffles in the action: $aggregating")
 
     // A late COUNT subscriber on the live lane: its replay of the lane's
     // view is built at the advance's first time, inside the same action.
     bm.register(count("late", MatchA(0, Cust, 1), key = 1, of = 0))
     bm.interest("late")
-    val late = TestSpark.jobsOf("late bitemporal subscriber")(step())
-    info(s"late bitemporal subscriber: $late jobs")
+    val lateShape = TestSpark.shapeOf("late bitemporal subscriber")(step())
+    val late = lateShape.jobs
+    info(s"late bitemporal subscriber: $late jobs, result stage tasks ${lateShape.resultTasks}")
     val counts = bm.drain("late").groupMapReduce(_._1)(_._3)(_ + _)
       .filter(_._2 != 0L)
     assert(counts.nonEmpty && counts.values.forall(_ == 1L), counts)
@@ -104,5 +117,9 @@ class BiAdvanceJobsSpec extends AnyFunSuite {
     // Measured: 1 job (24 with the replay and each time's commits and
     // collects apart).
     assert(late <= 2, s"late bitemporal subscriber ran $late jobs")
+    // Measured: 4 result-stage tasks (40 with one task per
+    // partition of every union branch).
+    assert(lateShape.resultTasks.forall(_ <= 4),
+      s"result stages of ${lateShape.resultTasks} tasks, over 4 partitions")
   }
 }

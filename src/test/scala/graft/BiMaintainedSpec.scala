@@ -706,6 +706,44 @@ class BiMaintainedSpec extends AnyFunSuite {
       s"R kept ${bm.controlPlaneStats("resultRows")} rows after every fact was retracted")
   }
 
+  test("a NaN fact retracts under Raw and Distinct on both stores (one dictionary code per NaN)") {
+    // The store interns values under grouping equality: with boxed `==`
+    // every NaN took a fresh code, so a retraction never met its
+    // assertion — Distinct drained the +1 and never the -1, and Raw kept
+    // a +1 and a -1 row in the lane's view.
+    for {
+      sem <- Seq(InputSemantics.Raw, InputSemantics.Distinct)
+      distributed <- Seq(false, true)
+    } {
+      val prevGate = sys.props.get("graft.bi.driver.bytes")
+      if (distributed) sys.props("graft.bi.driver.bytes") = "0"
+      try {
+        val bm = new BiMaintained(spark, partitions = 4)
+        bm.createAttribute(":bm/r", AttributeConfig(sem))
+        bm.register(Rule("q", Plan.MatchA(0, ":bm/r", 1)))
+        bm.interest("q")
+        def put(t: (Long, Long), diff: Long) =
+          bm.BiDatom(Value.eid(1L), ":bm/r", Value.VReal(Double.NaN), t, diff)
+        bm.transact(Seq(put((0L, 0L), 1L)))
+        bm.advance(1L)
+        val asserted = bm.drain("q")
+        assert(asserted.map(_._3) == Seq(1L), s"$sem dist=$distributed: $asserted")
+        assert(bm.controlPlaneStats("resultRows") == 1L)
+        bm.transact(Seq(put((1L, 1L), -1L)))
+        bm.advance(2L)
+        val retracted = bm.drain("q")
+        assert(retracted.map(_._3) == Seq(-1L), s"$sem dist=$distributed: $retracted")
+        assert(bm.controlPlaneStats("resultRows") == 0L, s"$sem dist=$distributed")
+        assert(bm.emittedRowsProbe == 0L,
+          s"$sem dist=$distributed: the lane's view kept ${bm.emittedRowsProbe} rows")
+        assert(bm.storeGenerationProbe.isDefined == distributed)
+      } finally prevGate match {
+        case Some(v) => sys.props("graft.bi.driver.bytes") = v
+        case None    => sys.props.remove("graft.bi.driver.bytes")
+      }
+    }
+  }
+
   test("transact is all-or-nothing: a rejected batch leaves no phantom state (r10 ADVICE)") {
     // Two siblings: `bm` sees a mixed batch (one valid datom ordered
     // BEFORE one at a closed system time) that must be rejected as a

@@ -66,4 +66,43 @@ class DomainSemanticsSpec extends AnyFunSuite {
     val got = engine.drain("join").map { case (tuple, _, d) => (tuple, d) }
     assert(got == Seq((Seq(101L, 1L), 1L)))
   }
+
+  test("buffered reads over [from, until) equal a scan of every datom, at out-of-order times") {
+    // The per-advance reads go through a per-attribute time index; this
+    // pins them against a filter over the whole transacted history.
+    val dom = new graft.domain.Domain(spark)
+    val rnd = new scala.util.Random(7)
+    val attrs = Seq(":ix/a", ":ix/b")
+    attrs.foreach(dom.createAttribute(_))
+    val all = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Any, Long, Long, Long)]
+    var seq = 0L
+    (1 to 40).foreach { batch =>
+      val ds = (1 to rnd.nextInt(6)).map { _ =>
+        val t = if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(12).toLong)
+        Datom(rnd.nextInt(4).toLong, attrs(rnd.nextInt(2)), Value.num(rnd.nextInt(3).toLong),
+          t, if (rnd.nextInt(3) == 0) -1L else 1L)
+      }
+      val defaultT = (batch % 9).toLong
+      dom.transact(ds, defaultT)
+      ds.foreach { d =>
+        seq += 1
+        all += ((d.a, d.e, d.v.native, d.t.getOrElse(defaultT), d.diff, seq))
+      }
+    }
+    dom.notePending(5L); dom.notePending(20L)
+    for (from <- -1L to 13L; until <- from - 1L to 14L) {
+      val in = all.filter(d => d._4 >= from && d._4 < until)
+      assert(dom.pendingTimes(from, until) ==
+        (in.map(_._4) ++ Seq(5L, 20L).filter(t => t >= from && t < until)).distinct.sorted)
+      attrs.foreach { a =>
+        val mine = in.filter(_._1 == a)
+        assert(dom.bufferedEvents(a, from, until) ==
+          mine.map(d => (d._2, d._3, d._4, d._5, d._6)).toSeq)
+        val net = mine.groupMapReduce(d => (d._2, d._3))(_._5)(_ + _)
+          .collect { case ((e, v), w) if w != 0L => (e, v, w) }
+        assert(dom.bufferedDeltas(a, from, until).sortBy(_.toString) ==
+          net.toSeq.sortBy(_.toString), s"$a [$from, $until)")
+      }
+    }
+  }
 }

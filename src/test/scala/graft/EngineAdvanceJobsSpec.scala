@@ -24,6 +24,9 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  /** The state partitions: the test session's shuffle partitions. */
+  private val Partitions = 4
+
   private val Cust = ":order/customer"
   private val Status = ":order/status"
   private val Flag = ":order/flagged"
@@ -80,12 +83,23 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
     (1 to 3).foreach(_ => step())
     rules.foreach(r => assert(e.servedIncrementally(r.name), r.name))
 
-    val warm = TestSpark.jobsOf("warm maintained advance")(step())
-    info(s"warm maintained advance: $warm jobs")
+    var shape: TestSpark.JobShape = null
+    val aggregating = TestSpark.aggregatingShufflesOf {
+      shape = TestSpark.shapeOf("warm maintained advance")(step())
+    }
+    val warm = shape.jobs
+    info(s"warm maintained advance: $warm jobs, result stage tasks ${shape.resultTasks}")
     // Measured: 1 job. With one job per state commit and per collect
     // the same advance ran 10, and with per-attribute count jobs and
     // distributed consolidation too, 23.
     assert(warm <= 2, s"warm maintained advance ran $warm jobs")
+    // The one action runs one task per partition index: measured 4 (the
+    // session's 4 state partitions); one task per partition of every
+    // union branch ran 16.
+    assert(shape.resultTasks.forall(_ <= Partitions),
+      s"result stages of ${shape.resultTasks} tasks, over $Partitions partitions")
+    // Every delta nets through the exchange: no by-key aggregation shuffle.
+    assert(aggregating.isEmpty, s"aggregating shuffles in the action: $aggregating")
 
     // A late COUNT subscriber: its replay of the whole history is one
     // driver-built feed per attribute, and one action for its state

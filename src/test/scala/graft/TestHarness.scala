@@ -8,6 +8,8 @@ import graft.model._
 
 /** One shared local session for all suites. */
 object TestSpark {
+  import scala.jdk.CollectionConverters._
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -40,14 +42,21 @@ object TestSpark {
 
   /** Spark jobs `body` submits, counted on the listener bus by the job
     * group `body` runs under. */
-  def jobsOf(label: String)(body: => Unit): Int = {
+  def jobsOf(label: String)(body: => Unit): Int = shapeOf(label)(body).jobs
+
+  /** The jobs `body` submits (by job group) and each job's result-stage
+    * task count, in submission order. */
+  final case class JobShape(jobs: Int, resultTasks: Seq[Int])
+
+  def shapeOf(label: String)(body: => Unit): JobShape = {
     val group = s"jobs-of-$label"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        // A job's result stage is created after its parents: the max id.
         if (e.properties != null &&
             group == e.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
+          tasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
         ()
       }
     }
@@ -57,11 +66,35 @@ object TestSpark {
       sc.setJobGroup(group, label)
       body
       org.apache.spark.GraftBus.flush(sc)
-      jobs.get
+      val ts = tasks.asScala.toSeq
+      JobShape(ts.length, ts)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The shuffles of every `CommitLedger` action `body` runs that carry
+    * an aggregator or a map-side combine (a by-key aggregation). */
+  def aggregatingShufflesOf(body: => Unit): Seq[org.apache.spark.ShuffleDependency[_, _, _]] = {
+    val found = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.ShuffleDependency[_, _, _]]
+    graft.streaming.CommitLedger.actionProbe = { action =>
+      val seen = scala.collection.mutable.HashSet.empty[Int]
+      val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](action)
+      while (stack.nonEmpty) {
+        val r = stack.pop()
+        if (seen.add(r.id)) r.dependencies.foreach { d =>
+          d match {
+            case s: org.apache.spark.ShuffleDependency[_, _, _]
+                if s.aggregator.isDefined || s.mapSideCombine => found += s
+            case _ => ()
+          }
+          stack.push(d.rdd)
+        }
+      }
+    }
+    try body finally graft.streaming.CommitLedger.actionProbe = null
+    found.toSeq
   }
 
   /** `spark.sql.autoBroadcastJoinThreshold`, the byte gate every
