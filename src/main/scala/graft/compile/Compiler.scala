@@ -76,8 +76,8 @@ object Compiler extends Serializable {
     }
 
   /** interleave(values, constants) — the pull path layout
-    * (`src/plan/pull.rs:53-79`). On the companion so the batch compile
-    * and the maintained PullLevel node share ONE decoration. */
+    * (`src/plan/pull.rs:53-79`); `LinearRows.interleave` is its per-row
+    * twin on the maintained path. */
   private[graft] def pullInterleave(
       cols: Seq[(Column, ValueKind)],
       consts: Seq[String]): Seq[(Column, ValueKind)] =
@@ -1962,8 +1962,8 @@ class Compiler(
     Some(projectTo(rel, target))
   }
 
-  /** Single pull level — `src/plan/pull.rs:94-237`. Decoration shared
-    * with the maintained PullLevel node via `Compiler.pullBranchCols`. */
+  /** Single pull level — `src/plan/pull.rs:94-237`. The maintained path
+    * decorates per row with `LinearRows.pullBranch`, its twin. */
   private def pullLevel(
       input: Rel, pullVar: Int, pullAttrs: Seq[String],
       pathAttrs: Seq[String], cardMany: Boolean): Rel = {

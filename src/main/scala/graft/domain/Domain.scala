@@ -73,16 +73,16 @@ class Domain(val spark: SparkSession) extends Serializable {
   private case class AttrState(
       config: AttributeConfig,
       var kind: Option[ValueKind],
-      // transacted datoms: (e, v-native, t, diff, seq)
-      buffer: mutable.ArrayBuffer[(Long, Any, Long, Long, Long)],
       staticDf: Option[DataFrame]) {
+    // transacted datoms: (e, v-native, t, diff, seq)
+    val buffer = new Domain.Datoms
     // time -> offsets into `buffer` of the datoms at that time, so the
     // per-advance reads of [from, until) touch only the delta
     private val byTime = mutable.TreeMap.empty[Long, Domain.OffsetRuns]
 
-    def append(d: (Long, Any, Long, Long, Long)): Unit = {
-      byTime.getOrElseUpdate(d._3, new Domain.OffsetRuns).add(buffer.length)
-      buffer += d
+    def append(e: Long, v: Any, t: Long, diff: Long, seq: Long): Unit = {
+      byTime.getOrElseUpdate(t, new Domain.OffsetRuns).add(buffer.length)
+      buffer.add(e, v, t, diff, seq, kind.exists(ValueKind.longBacked))
     }
 
     /** Times of the buffered datoms in [from, until), ascending. */
@@ -94,7 +94,7 @@ class Domain(val spark: SparkSession) extends Serializable {
       val offs = byTime.range(from, until).valuesIterator
         .flatMap(_.iterator).toArray
       java.util.Arrays.sort(offs)
-      offs.toSeq.map(buffer)
+      offs.toSeq.map(buffer(_))
     }
   }
 
@@ -127,14 +127,14 @@ class Domain(val spark: SparkSession) extends Serializable {
     if (attrs.contains(name))
       throw GraftError.conflict(s"attribute $name already exists")
     dataEpoch += 1
-    attrs(name) = AttrState(config, None, mutable.ArrayBuffer.empty, None)
+    attrs(name) = AttrState(config, None, None)
   }
 
   /** Bulk path: register a pre-consolidated weight-1 attribute backed by an
     * arbitrary (typically parquet-scanned) DataFrame with columns (e, v). */
   def registerStatic(name: String, df: DataFrame, kind: ValueKind): Unit = {
     dataEpoch += 1
-    attrs(name) = AttrState(AttributeConfig(), Some(kind), mutable.ArrayBuffer.empty, Some(df))
+    attrs(name) = AttrState(AttributeConfig(), Some(kind), Some(df))
   }
 
   // attribute name -> (colocation group, base table, entity col, value col)
@@ -182,7 +182,7 @@ class Domain(val spark: SparkSession) extends Serializable {
             throw GraftError.incorrect(s"attribute ${d.a}: kind $k != $existing")
       }
       seqCounter += 1
-      st.append((d.e, d.v.native, d.t.getOrElse(defaultT), d.diff, seqCounter))
+      st.append(d.e, d.v.native, d.t.getOrElse(defaultT), d.diff, seqCounter)
     }
   }
 
@@ -204,6 +204,10 @@ class Domain(val spark: SparkSession) extends Serializable {
       .toSeq.distinct.sorted
 
   def attributeNames: Seq[String] = attrs.keys.toSeq
+
+  /** Spec probe: measured resident bytes of `name`'s datom buffer. */
+  private[graft] def bufferBytesProbe(name: String): Long =
+    org.apache.spark.util.GraftSizeOf.estimate(attrs(name).buffer)
 
   /** Known scalar kind of every stored/static attribute (incremental
     * maintenance builds its delta schemas from this). */
@@ -315,8 +319,9 @@ class Domain(val spark: SparkSession) extends Serializable {
             StructField("t", LongType, false),
             StructField("diff", LongType, false),
             StructField("seq", LongType, false)))
-          val rows = st.buffer.filter(_._3 <= t).map {
-            case (e, v, tt, d, s) => Row(e, v, tt, d, s)
+          val rows = (0 until st.buffer.length).filter(st.buffer.t(_) <= t).map { i =>
+            val (e, v, tt, d, s) = st.buffer(i)
+            Row(e, v, tt, d, s)
           }
           val nPart = math.max(1, math.min(
             spark.sparkContext.defaultParallelism, rows.size / 65536 + 1))
@@ -345,6 +350,39 @@ class Domain(val spark: SparkSession) extends Serializable {
 }
 
 object Domain {
+  /** The transacted datoms `(e, v, t, diff, seq)` of one attribute in
+    * growable columns: longs for e, t, diff and seq, and for v when the
+    * attribute's kind is long-backed (boxed values otherwise). A boxed
+    * tuple row costs a `Tuple5` and up to five boxed longs. */
+  private[domain] final class Datoms {
+    private var n = 0
+    private var cols = Array.fill(4)(new Array[Long](16)) // e, t, diff, seq
+    private var longV: Array[Long] = null
+    private var refV: Array[AnyRef] = null
+
+    def length: Int = n
+
+    def add(e: Long, v: Any, t: Long, diff: Long, seq: Long, longBacked: Boolean): Unit = {
+      if (n == cols(0).length) {
+        cols = cols.map(java.util.Arrays.copyOf(_, 2 * n))
+        if (longV != null) longV = java.util.Arrays.copyOf(longV, 2 * n)
+        if (refV != null) refV = java.util.Arrays.copyOf(refV, 2 * n)
+      }
+      if (longV == null && refV == null) {
+        if (longBacked) longV = new Array[Long](cols(0).length)
+        else refV = new Array[AnyRef](cols(0).length)
+      }
+      cols(0)(n) = e; cols(1)(n) = t; cols(2)(n) = diff; cols(3)(n) = seq
+      if (longV != null) longV(n) = v.asInstanceOf[Long] else refV(n) = v.asInstanceOf[AnyRef]
+      n += 1
+    }
+
+    def t(i: Int): Long = cols(1)(i)
+
+    def apply(i: Int): (Long, Any, Long, Long, Long) =
+      (cols(0)(i), if (longV != null) longV(i) else refV(i), cols(1)(i), cols(2)(i), cols(3)(i))
+  }
+
   /** Buffer offsets as runs of consecutive offsets: the datoms of one
     * transact at one time land in one run, so the per-time index costs
     * a few ints per batch, not per datom. */

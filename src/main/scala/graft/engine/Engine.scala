@@ -10,7 +10,7 @@ import graft.domain.Domain
 import graft.model._
 import graft.sinks.DiffSink
 import graft.streaming.CommitLedger
-import graft.streaming.IncrementalQuery.rowsOf
+import graft.streaming.IncrementalQuery.Delta
 
 /** The embedded-engine API, mirroring the reference `Server`
   * (`src/server/mod.rs:225-530`) test path (SURVEY.md §3.2):
@@ -420,7 +420,7 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
         granularities.get(name).map(g => (t / g + 1L) * g)
       // Each attribute's delta feed at a time is built once, on first use,
       // and shared by every maintained rule that reads it.
-      val feeds = mutable.Map.empty[String, Option[(DataFrame, Long)]]
+      val feeds = mutable.Map.empty[String, Option[Delta]]
       // Every maintained interest advances as ONE Spark job per completed
       // time, 3DF's one dataflow step per epoch: the diffs build lazily,
       // and one action materializes every state commit with the collected
@@ -429,28 +429,30 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
       val maintained = interests.toSeq.filter(incrementalQs.contains)
       val collected = mutable.ArrayBuffer.empty[String]
       val frames = mutable.ArrayBuffer.empty[(String, DataFrame)]
-      val (_, rows) = CommitLedger.run(spark.sparkContext,
-          outputsDead = !maintained.exists(sinks.contains)) {
-        val rdds = maintained.flatMap { name =>
-          val (deltas, counts) = incrementalDeltas(name,
-            a => feeds.getOrElseUpdate(a, bufferFeed(a, t, t + 1L)))
-          if (deltas.isEmpty) None
-          else {
-            val diff = incrementalQs(name).advance(deltas, counts,
-              consolidate = sinks.contains(name))
-            // Data-sized delivery: the maintained diffs go to the sink as
-            // a DataFrame — never collected, and (unlike the snapshot-sink
-            // path) computed from the delta alone.
-            if (sinks.contains(name)) {
-              frames += ((name, sinkFrame(diff, coarse(name).getOrElse(t))))
-              None
-            } else {
-              collected += name
-              Some(rowsOf(diff))
+      val (_, rows) = CommitLedger.named(spark.sparkContext, "graft.engine.Engine.advance") {
+        CommitLedger.run(spark.sparkContext,
+            outputsDead = !maintained.exists(sinks.contains)) {
+          val rdds = maintained.flatMap { name =>
+            val iq = incrementalQs(name)
+            val deltas = incrementalDeltas(name,
+              a => feeds.getOrElseUpdate(a, bufferFeed(a, t, t + 1L)))
+            if (deltas.isEmpty) None
+            else {
+              val diff = iq.advanceDeltas(deltas, consolidate = sinks.contains(name))
+              // Data-sized delivery: the maintained diffs go to the sink
+              // as a DataFrame — never collected, and (unlike the
+              // snapshot-sink path) computed from the delta alone.
+              if (sinks.contains(name)) {
+                frames += ((name, sinkFrame(iq.frameOf(diff), coarse(name).getOrElse(t))))
+                None
+              } else {
+                collected += name
+                Some(diff)
+              }
             }
           }
+          (Nil, rdds)
         }
-        (Nil, rdds)
       }
       collected.zip(rows).foreach { case (name, rs) =>
         buffer(name, t, coarse(name),
@@ -631,24 +633,23 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     staticsPending(name) =
       iq.referencedAttributes.filter(a => domain.staticFrame(a).isDefined)
     if (processedThrough > 0L) {
-      val (deltas, counts) =
-        incrementalDeltas(name, bufferFeed(_, 0L, processedThrough))
+      val deltas = incrementalDeltas(name, bufferFeed(_, 0L, processedThrough))
       if (deltas.nonEmpty) {
         // Only a replay the Engine collects skips the distributed
         // consolidation (a conversion delivers nothing, so it needs none).
         // One action materializes the replay's commits with its rows.
         val collect = deliverReplay && !sinks.contains(name)
-        var diffs: DataFrame = null
+        var diffs: Delta = null
         val (_, rows) = CommitLedger.run(spark.sparkContext,
             outputsDead = !(deliverReplay && sinks.contains(name))) {
-          diffs = iq.advance(deltas, counts,
+          diffs = iq.advanceDeltas(deltas,
             consolidate = deliverReplay && sinks.contains(name))
-          (Nil, if (collect) Seq(rowsOf(diffs)) else Nil)
+          (Nil, if (collect) Seq(diffs) else Nil)
         }
         if (collect)
           buffer(name, frontier, None, drainRows(rows(0), iq.outputIsPathArray))
         else if (deliverReplay)
-          sinks(name).deliver(name, frontier, sinkFrame(diffs, frontier))
+          sinks(name).deliver(name, frontier, sinkFrame(iq.frameOf(diffs), frontier))
         // else: state advanced; these times were already delivered as
         // snapshot diffs — do not re-deliver.
       }
@@ -676,66 +677,46 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
   }
 
   /** The driver-buffered delta feed of attribute `a` over datom times in
-    * [from, until), with its row count: known here, so no maintained
-    * rule pays a job to count it. */
-  private def bufferFeed(
-      a: String, from: Long, until: Long): Option[(DataFrame, Long)] = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val k = domain.knownKinds(a)
+    * [from, until): `((e, v), diff)` rows, or raw `((e, v, t, seq),
+    * diff)` events for a LastWriteWins attribute — consolidating by
+    * (e, v) would erase the (t, seq) transaction order the latest-wins
+    * view is defined over. */
+  private def bufferFeed(a: String, from: Long, until: Long): Option[Delta] = {
     val isLww = domain.staticFrame(a).isEmpty &&
       domain.semanticsOf(a) == InputSemantics.LastWriteWins
-    val (rows, fields) =
-      if (isLww) {
-        // LWW maintenance consumes raw ordered EVENTS — consolidating
-        // by (e, v) here would erase the (t, seq) transaction order
-        // the latest-wins view is defined over.
-        (domain.bufferedEvents(a, from, until).map {
-          case (e, v, t, d, q) => Row(e, v, t, d, q) }, Seq("t", "diff", "seq"))
-      } else
-        (domain.bufferedDeltas(a, from, until).map {
-          case (e, v, d) => Row(e, v, d) }, Seq("diff"))
+    import scala.collection.immutable.ArraySeq
+    val rows: Seq[(Seq[Any], Long)] =
+      if (isLww) domain.bufferedEvents(a, from, until).map {
+        case (e, v, t, d, q) => (ArraySeq[Any](e, v, t, q), d) }
+      else domain.bufferedDeltas(a, from, until).map {
+        case (e, v, d) => (ArraySeq[Any](e, v), d) }
     if (rows.isEmpty) None
-    else {
-      val schema = StructType(Seq(
-        StructField("e", LongType, false),
-        StructField("v", k.dataType, true)) ++
-        fields.map(StructField(_, LongType, false)))
-      Some((spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, feedPartitions(rows.size)),
-        schema), rows.size.toLong))
-    }
+    else Some(spark.sparkContext.parallelize(rows, feedPartitions(rows.size)))
   }
 
-  /** Per-attribute delta frames for a maintained rule, plus the row
-    * counts the Engine knows; pending static bulk attributes ride along
-    * with the first batch that feeds them (weight-1 initial load). A
-    * static feed's size is unknown, so its attribute gets no count and
-    * takes IncrementalQuery's counted checkpoint. */
+  /** Per-attribute delta feeds for a maintained rule; pending static bulk
+    * attributes ride along with the first batch that feeds them
+    * (weight-1 initial load). */
   private def incrementalDeltas(
-      name: String, feeds: String => Option[(DataFrame, Long)])
-      : (Map[String, DataFrame], Map[String, Long]) = {
+      name: String, feeds: String => Option[Delta]): Map[String, Delta] = {
+    val iq = incrementalQs(name)
     val statics = staticsPending.getOrElse(name, Set.empty)
     staticsPending(name) = Set.empty
-    val staticFeeds: Map[String, DataFrame] = statics.iterator.map { a =>
-      a -> domain.staticFrame(a).get
-        .select(col("e"), col("v"), lit(1L).as("diff"))
-    }.toMap
-    val buffered: Map[String, (DataFrame, Long)] =
-      incrementalQs(name).referencedAttributes.iterator
-        .flatMap(a => feeds(a).map(a -> _)).toMap
-    val deltas = (staticFeeds.keySet ++ buffered.keySet).iterator.map { a =>
-      a -> (staticFeeds.get(a) ++ buffered.get(a).map(_._1))
-        .reduce(_ unionByName _)
-    }.toMap
-    (deltas, buffered.collect {
-      case (a, (_, n)) if !staticFeeds.contains(a) => a -> n })
+    val staticFeeds = statics.iterator.map { a =>
+      a -> iq.feedOf(a, domain.staticFrame(a).get
+        .select(col("e"), col("v"), lit(1L).as("diff")))
+    }
+    (staticFeeds ++ iq.referencedAttributes.iterator.flatMap(a => feeds(a).map(a -> _)))
+      .toSeq.groupBy(_._1).map { case (a, ds) =>
+        a -> ds.map(_._2).reduce(_ union _) }
   }
 
   /** A maintained query's collected UNCONSOLIDATED diff rows as drain
     * tuples, consolidated on the driver: what the distributed `groupBy`
     * would return, without its shuffle. */
   private def drainRows(rows: Array[Any], pathArray: Boolean): Iterator[(Seq[Any], Long)] =
-    keyed(rows.map(_.asInstanceOf[Row]), pathArray).valuesIterator.filter(_._2 != 0L)
+    keyed(rows.iterator.map(_.asInstanceOf[(Seq[Any], Long)]), pathArray)
+      .valuesIterator.filter(_._2 != 0L)
 
   /** Collected result rows summed per tuple under Spark's grouping
     * equality ([[Engine.groupKey]]): grouping key -> (drain tuple,
@@ -746,14 +727,11 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     * reference's flat `Vec<Value>` path shape on BOTH serving paths
     * (`tests/pull_test.rs` expectations; caught by the plan fuzz — the
     * maintained route used to drain the packed cell wrapped). */
-  private def keyed(rows: Array[Row], pathArray: Boolean)
+  private def keyed(rows: Iterator[(Seq[Any], Long)], pathArray: Boolean)
       : mutable.LinkedHashMap[Seq[Any], (Seq[Any], Long)] = {
     val acc = mutable.LinkedHashMap.empty[Seq[Any], (Seq[Any], Long)]
-    rows.foreach { row =>
-      val n = row.length - 1
-      val cells = if (pathArray) Seq(row.get(0)) else (0 until n).map(row.get)
+    rows.foreach { case (cells, w) =>
       val key = cells.map(Engine.groupKey)
-      val w = row.getLong(n)
       acc.get(key) match {
         case Some((tuple, w0)) => acc(key) = (tuple, w0 + w)
         case None =>
@@ -776,7 +754,10 @@ class Engine(val spark: SparkSession, setSemantics: Boolean = false,
     if (rel.isPathArray) pathArrayResults += name else pathArrayResults -= name
     // Pull results with heterogeneous arity arrive as one array<variant>
     // column — unpacked so tuples compare against plain expectations.
-    keyed(rel.df.collect(), rel.isPathArray).toMap
+    keyed(rel.df.collect().iterator.map { r =>
+      val n = r.length - 1
+      ((0 until n).map(r.get), r.getLong(n))
+    }, rel.isPathArray).toMap
   }
 }
 

@@ -886,18 +886,20 @@ object CoreQueries {
       val inc = new graft.streaming.IncrementalClosure(s,
         partitions = 4, kHops = 16)
       val diffs = Seq(
-        inc.advanceSignedRdd(batch(m3 < 2, 1L), 1L),
-        inc.advanceSignedRdd(batch(m3 === 2, 1L), 2L),
-        inc.advanceSignedRdd(batch(m3 === 0, -1L), 3L))
+        inc.advanceSignedRdd(batch(m3 < 2, 1L)),
+        inc.advanceSignedRdd(batch(m3 === 2, 1L)),
+        inc.advanceSignedRdd(batch(m3 === 0, -1L)))
       // The advances consume `edges` eagerly (shuffle + gated collect
       // inside advanceSignedRdd) and the emitted diffs derive from the
       // closure's checkpointed state — drop the cache now instead of
       // leaking it for the session lifetime.
       edges.unpersist(blocking = false)
-      diffs.reduce(_ unionAll _)
-        .groupBy(col("src"), col("dst")).agg(sum(col("diff")).as("w"))
-        .where(col("w") > 0)
-        .select(col("src"), col("dst"))
+      val net = graft.kernel.Exchange.sum(s.sparkContext.union(diffs),
+        new org.apache.spark.HashPartitioner(4))
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      s.createDataFrame(
+        net.collect { case ((a, b), w) if w > 0 => org.apache.spark.sql.Row(a, b) },
+        StructType(Seq(StructField("src", LongType), StructField("dst", LongType))))
     })
   )
 

@@ -965,12 +965,11 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
         // the session's shuffle partitions.
         iq = new IncrementalQuery(spark, plan, kinds, rulePlans,
           partitions = partitions)
-        val replay = store.dump(lane.id, kindOf).view.filterKeys(refAttrs).toMap
+        val replay = store.dump(lane.id).view.filterKeys(refAttrs).toMap
         if (replay.nonEmpty) {
           if (first) batch.steps += advanceQuery(replay, batch)
           else {
-            val _ = iq.advance(BiStore.framesOnly(replay),
-              BiStore.knownCounts(replay), consolidate = false)
+            val _ = iq.advanceDeltas(replay, consolidate = false)
           }
         }
       }
@@ -984,17 +983,15 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       * consolidated frame, netted by one distributed union into the
       * lazily cut `pendingDelta`; nothing lands on the driver. */
     def advanceQuery(fs: BiStore.Frames, batch: Staged): () => Unit = {
-      val diffs = iq.advance(BiStore.framesOnly(fs), BiStore.knownCounts(fs),
-        consolidate = sink.isDefined)
+      val diffs = iq.advanceDeltas(fs, consolidate = sink.isDefined)
       sink match {
-        case Some(_) => () => accumulateFrame(diffs)
+        case Some(_) => () => accumulateFrame(iq.frameOf(diffs))
         case None =>
-          val rows = batch.collect(IncrementalQuery.rowsOf(diffs))
+          val rows = batch.collect(diffs)
           () => rows().foreach { x =>
-            val row = x.asInstanceOf[Row]
-            val n = row.length - 1
-            val tuple = new GroupedTuple((0 until n).map(row.get))
-            val w = r.getOrElse(tuple, 0L) + row.getLong(n)
+            val (cells, dw) = x.asInstanceOf[(Seq[Any], Long)]
+            val tuple = new GroupedTuple(cells)
+            val w = r.getOrElse(tuple, 0L) + dw
             if (w == 0L) r.remove(tuple) else r(tuple) = w
           }
       }
@@ -1336,11 +1333,14 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
       work: Seq[(Lane, Seq[BiTimePair], Iterable[String])],
       sem: BiTime.Sem): Unit = {
     val batch = new Staged
-    val (_, rows) = CommitLedger.run(spark.sparkContext,
-        outputsDead = !standings.valuesIterator.exists(_.sink.isDefined)) {
-      for ((lane, times, names) <- work; t <- times)
-        stageTime(lane, t, sem, names, batch)
-      (Nil, batch.collected.toSeq)
+    val (_, rows) = CommitLedger.named(spark.sparkContext,
+        "graft.streaming.BiMaintained.advance") {
+      CommitLedger.run(spark.sparkContext,
+          outputsDead = !standings.valuesIterator.exists(_.sink.isDefined)) {
+        for ((lane, times, names) <- work; t <- times)
+          stageTime(lane, t, sem, names, batch)
+        (Nil, batch.collected.toSeq)
+      }
     }
     batch.landed(rows)
     batch.steps.foreach(_())
@@ -1381,7 +1381,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     val attrHint =
       if (firstKind.size == 1) Some(firstKind.keysIterator.next()) else None
     val deltas = store.transition(
-      lane.id, lane.win, lane.lastProcessed, t, sem, pruneUpTo, kindOf,
+      lane.id, lane.win, lane.lastProcessed, t, sem, pruneUpTo,
       attrHint, Some(lane.covered.toSet))
     lane.lastProcessed = Some(t)
     for (name <- laneInterests) {
@@ -1478,9 +1478,7 @@ class BiMaintained(val spark: SparkSession, partitions: Int = 32,
     * the store keeps per lane). */
   private[graft] def emittedRowsProbe: Long =
     lanes.valuesIterator.map { lane =>
-      store.dump(lane.id, kindOf).valuesIterator.map {
-        case (df, n) => n.getOrElse(df.count())
-      }.sum
+      store.dump(lane.id).valuesIterator.map(_.count()).sum
     }.sum
 
   /** Spec probe: the distributed store's live StateCell generation —

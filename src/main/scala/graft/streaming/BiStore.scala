@@ -2,12 +2,12 @@ package graft.streaming
 
 import graft.kernel.Ckpt._
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 
-import graft.model.ValueKind
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
+
 
 /** Storage seam for [[BiMaintained]]'s bitemporal datom history and its
   * maintained visible views. ONE store instance holds the FINE-grained
@@ -41,7 +41,6 @@ private[streaming] sealed trait BiStore {
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
       sem: BiTime.Sem, pruneUpTo: Long,
-      kindOf: String => ValueKind,
       // Caller-known single-attribute domains (Some(a) = every emitted
       // row is attribute `a`): lets the distributed sibling skip the
       // per-time distinct-attribute job — per-lattice-time job count is
@@ -63,7 +62,7 @@ private[streaming] sealed trait BiStore {
 
   /** Lane `lane`'s full emitted view per attribute — replay for
     * late/rebuilt standing queries. */
-  def dump(lane: Int, kindOf: String => ValueKind): BiStore.Frames
+  def dump(lane: Int): BiStore.Frames
 
   /** Drop lane `lane`'s emitted view (lane teardown — its last interest
     * left). The shared history is untouched. */
@@ -88,22 +87,10 @@ private[streaming] sealed trait BiStore {
 }
 
 private[streaming] object BiStore {
-  /** Per-attribute transition/dump frames, each with its row count when
-    * the store already knows it driver-side (the DriverBiStore builds
-    * its frames from in-memory rows): a known count lets the standing's
-    * `IncrementalQuery.advance` skip the per-attribute materialize+count
-    * job whose only purpose is rediscovering the size. None = the frame
-    * is RDD-backed distributed state (CellBiStore) — counting it would
-    * itself cost the job the channel exists to avoid. */
-  type Frames = Map[String, (DataFrame, Option[Long])]
+  /** Per-attribute signed view transitions `((e, v), diff)`: the
+    * standing queries' feeds. */
+  type Frames = Map[String, IncrementalQuery.Delta]
 
-  /** The plain per-attribute frame view of [[Frames]]. */
-  def framesOnly(fs: Frames): Map[String, DataFrame] =
-    fs.view.mapValues(_._1).toMap
-
-  /** The known-count view of [[Frames]] (absent = unknown). */
-  def knownCounts(fs: Frames): Map[String, Long] =
-    fs.collect { case (a, (_, Some(n))) => a -> n }
   /** Demand Option → predicate, shared by both siblings. The returned
     * lambda captures only the Set (or nothing), so it is safe to ship
     * into executor closures. */
@@ -131,28 +118,19 @@ private[streaming] object BiStore {
     } finally { val _ = lat.unpersist(blocking = false) }
   }
 
-  /** `(e, v, diff)` schema of a view-transition frame. */
-  def schema(kind: ValueKind): StructType = StructType(Seq(
-    StructField("e", LongType, false),
-    StructField("v", kind.dataType, true),
-    StructField("diff", LongType, false)))
-
-  def frame(spark: SparkSession, kind: ValueKind,
-      rows: Seq[Row]): DataFrame = {
-    val nPart = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, rows.size / 65536 + 1))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, nPart), schema(kind))
-  }
-
-  /** Group driver-side transition rows into per-attribute frames, each
-    * carrying its (driver-known) row count. */
-  def framesOf(spark: SparkSession, rows: Iterable[(String, Any, Any, Long)],
-      kindOf: String => ValueKind): Frames =
+  /** Group driver-side transition rows into per-attribute feeds. */
+  def framesOf(sc: SparkContext, rows: Iterable[(String, Any, Any, Long)]): Frames =
     rows.groupBy(_._1).map { case (a, rs) =>
-      val rws = rs.iterator.map { case (_, e, v, w) => Row(e, v, w) }.toSeq
-      a -> ((frame(spark, kindOf(a), rws), Some(rws.size.toLong)))
+      val fs = rs.iterator.map { case (_, e, v, w) => (ArraySeq[Any](e, v): Seq[Any], w) }.toSeq
+      a -> sc.parallelize(fs, math.max(1, math.min(sc.defaultParallelism, fs.size / 65536 + 1)))
     }
+
+  /** A store row `(a, e, v, w)` as a feed row. */
+  private[streaming] final class FeedRow
+      extends (((String, Any, Any, Long)) => (Seq[Any], Long)) with Serializable {
+    def apply(r: (String, Any, Any, Long)): (Seq[Any], Long) = (ArraySeq[Any](r._2, r._3), r._4)
+  }
+  private[streaming] val feedRow = new FeedRow
 }
 
 /** Driver-resident sibling: the whole history in one [[BiPacked]].
@@ -167,21 +145,20 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
       sem: BiTime.Sem, pruneUpTo: Long,
-      kindOf: String => ValueKind,
       attrHint: Option[String] = None,
       demand: Option[Set[String]] = None): BiStore.Frames = {
     val (next, rows) = vis.transition(lane, win, tPrev, t, sem, pruneUpTo,
       BiStore.demandFn(demand))
     vis = next
-    BiStore.framesOf(spark, rows, kindOf)
+    BiStore.framesOf(spark.sparkContext, rows)
   }
 
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),
       sem: BiTime.Sem, attrs: Set[String]): Unit =
     vis = vis.backfill(lane, win, t, sem, attrs)
 
-  def dump(lane: Int, kindOf: String => ValueKind): BiStore.Frames =
-    BiStore.framesOf(spark, vis.dumpEmitted(lane).toSeq, kindOf)
+  def dump(lane: Int): BiStore.Frames =
+    BiStore.framesOf(spark.sparkContext, vis.dumpEmitted(lane).toSeq)
 
   def dropLane(lane: Int): Unit = vis = vis.dropLane(lane)
 
@@ -203,8 +180,8 @@ private[streaming] final class DriverBiStore(spark: SparkSession)
   * partition inside a [[StateCell]] (hash-partitioned by view key).
   * Per-batch narrow work is O(delta + touched keys); per-completed-time
   * transition work is O(candidate keys of the toggled time slabs), and
-  * nothing data-sized ever lands on the driver — transition frames feed
-  * the standing queries directly as RDD-backed DataFrames. */
+  * nothing data-sized ever lands on the driver — transition feeds go
+  * to the standing queries directly as RDDs. */
 private[streaming] final class CellBiStore(
     spark: SparkSession, partitions: Int) extends BiStore {
   private val sc = spark.sparkContext
@@ -255,7 +232,6 @@ private[streaming] final class CellBiStore(
   def transition(lane: Int, win: Option[(Long, Long)],
       tPrev: Option[(Long, Long)], t: (Long, Long),
       sem: BiTime.Sem, pruneUpTo: Long,
-      kindOf: String => ValueKind,
       // Caller-known single-attribute domains (Some(a) = every emitted
       // row is attribute `a`): lets the distributed sibling skip the
       // per-time distinct-attribute job — per-lattice-time job count is
@@ -277,7 +253,7 @@ private[streaming] final class CellBiStore(
     // advances) is skipped for single-standing single-attribute lanes
     // regardless of how wide the registered catalog is.
     val hint = attrHint.orElse(demand.collect { case s if s.size == 1 => s.head })
-    framesFrom(out, n, kindOf, hint)
+    framesFrom(out, n, hint)
   }
 
   def backfill(lane: Int, win: Option[(Long, Long)], t: (Long, Long),
@@ -288,9 +264,9 @@ private[streaming] final class CellBiStore(
       (next, Array(next.estimatedBytes))
     }.fold(0L)(_ + _)
 
-  def dump(lane: Int, kindOf: String => ValueKind): BiStore.Frames = {
+  def dump(lane: Int): BiStore.Frames = {
     val out = cell.rdd.flatMap(_.dumpEmitted(lane)).graftCheckpoint()
-    framesFrom(out, out.count(), kindOf)
+    framesFrom(out, out.count())
   }
 
   def dropLane(lane: Int): Unit =
@@ -317,24 +293,17 @@ private[streaming] final class CellBiStore(
 
   def datomCount: Long = count
 
-  /** Per-attribute typed frames over a checkpointed (a, e, v, w) RDD —
-    * the only driver-sized read is the distinct attribute-name list. */
+  /** Per-attribute feeds over a checkpointed (a, e, v, w) RDD — the
+    * only driver-sized read is the distinct attribute-name list, skipped
+    * for single-attribute output (every emitted row is provably the
+    * hinted attribute). */
   private def framesFrom(out: RDD[(String, Any, Any, Long)], n: Long,
-      kindOf: String => ValueKind,
       attrHint: Option[String] = None): BiStore.Frames =
     if (n == 0L) Map.empty
     else attrHint match {
-      // Single-attribute output: every emitted row is provably the
-      // hinted attribute, so `n` IS the frame's count — the consumer
-      // skips its materialize+count job (the same per-time job economy
-      // the hint already buys for the distinct-attribute pass).
-      case Some(a) => Map(a -> ((spark.createDataFrame(
-        out.map { case (_, e, v, w) => Row(e, v, w) },
-        BiStore.schema(kindOf(a))), Some(n))))
+      case Some(a) => Map(a -> out.map(BiStore.feedRow))
       case None => out.map(_._1).distinct().collect().iterator.map { a =>
-        a -> ((spark.createDataFrame(
-          out.filter(_._1 == a).map { case (_, e, v, w) => Row(e, v, w) },
-          BiStore.schema(kindOf(a))), None: Option[Long]))
+        a -> out.filter(_._1 == a).map(BiStore.feedRow)
       }.toMap
     }
 

@@ -7,8 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 import graft.kernel.{Exchange, RddKernel}
@@ -97,12 +96,12 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
   }
 
   /** Apply one batch of SIGNED edge deltas (diff ∈ {+1, −1}) at time `t`;
-    * returns the exact closure diffs (src, dst, t, diff), retractions
+    * returns the exact closure diffs (src, dst) → diff, retractions
     * included. Deltas consolidate per edge first; deletions run DRed,
     * additions warm-start, and the two diff sets consolidate per tuple.
     * Retracting an absent edge fails loudly (distributed — nothing
     * data-sized ever lands on the driver on this path). */
-  def advanceSignedRdd(deltas: RDD[((Long, Long), Long)], t: Long): DataFrame = {
+  def advanceSignedRdd(deltas: RDD[((Long, Long), Long)]): RDD[((Long, Long), Long)] = {
     val net = Exchange.sum(deltas, part).filter(_._2 != 0L)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -126,7 +125,7 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
       val added = addFresh(fresh)
       val retr = RddKernel.subtract(removed, Seq(added))
       val asserted = RddKernel.subtract(added, Seq(removed))
-      diffDf(retr, t, -1L).union(diffDf(asserted, t, 1L))
+      signed(retr, -1L).union(signed(asserted, 1L))
     } finally net.unpersist(blocking = false)
   }
 
@@ -333,13 +332,8 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
     if (hits.isEmpty) sc.emptyRDD[(Tup, Null)] else sc.union(hits)
   }
 
-  private val schema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType),
-    StructField("t", LongType), StructField("diff", LongType)))
-
-  private def diffDf(rdd: RDD[(Tup, Null)], t: Long, diff: Long): DataFrame =
-    spark.createDataFrame(
-      rdd.map { case ((s, d), _) => Row(s, d, t, diff) }, schema)
+  private def signed(rdd: RDD[(Tup, Null)], diff: Long): RDD[(Tup, Long)] =
+    rdd.map { case (e, _) => (e, diff) }
 }
 
 object DistributedClosure {

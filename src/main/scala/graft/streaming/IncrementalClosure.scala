@@ -6,8 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 
 import graft.kernel.{Exchange, RddKernel}
 
@@ -78,13 +77,6 @@ class IncrementalClosure(
   private val sc = spark.sparkContext
   private val part = new HashPartitioner(partitions)
 
-  private val debug = sys.env.contains("GRAFT_CLOSURE_DEBUG")
-  private var debugT0 = System.nanoTime()
-  private def trace(msg: => String): Unit = if (debug) {
-    System.err.println(
-      f"[closure] +${(System.nanoTime() - debugT0) / 1e9}%.2fs $msg")
-  }
-
   private val edgeSet = mutable.Set.empty[Tup]
   // reverse adjacency: dst -> srcs (the semi-naive round joins
   // edges(x,y) with delta(y,z) on y)
@@ -116,7 +108,7 @@ class IncrementalClosure(
   private[streaming] def closure: RDD[(Tup, Null)] = totalsView
 
   /** Apply one batch of SIGNED edge deltas at time `t`; returns the
-    * exact closure diffs (src, dst, t, diff), retractions included. The
+    * exact closure diffs (src, dst) → diff, retractions included. The
     * raw batch consolidates per edge distributed and only what changes
     * the edge set — deletions and fresh additions — lands on the
     * driver, in one job (already-known additions are dropped against a
@@ -125,7 +117,7 @@ class IncrementalClosure(
     * here, as in the engine's Distinct input semantics). Deletions run
     * DRed, additions warm-start, and the two diff sets consolidate per
     * tuple. */
-  def advanceSignedRdd(deltas: RDD[((Long, Long), Long)], t: Long): DataFrame = {
+  def advanceSignedRdd(deltas: RDD[((Long, Long), Long)]): RDD[((Long, Long), Long)] = {
     val known = sc.broadcast(edgeSet.toSet)
     val survivors =
       try Exchange.sum(deltas, part)
@@ -136,26 +128,23 @@ class IncrementalClosure(
     require(bad.isEmpty, s"consolidated edge diff must be ±1, got ${bad.get}")
     applySigned(
       survivors.collect { case (e, w) if w < 0 => e }.toSeq,
-      survivors.collect { case (e, w) if w > 0 => e }.toSeq, t)
+      survivors.collect { case (e, w) if w > 0 => e }.toSeq)
   }
 
   /** Deletions first (DRed), then additions (warm-start), then per-tuple
     * consolidation of the two diff sets. `dels` must be present edges;
     * `adds` are fresh (one consolidated entry per edge, known additions
     * already dropped). */
-  private def applySigned(dels: Seq[Tup], adds: Seq[Tup], t: Long): DataFrame = {
+  private def applySigned(dels: Seq[Tup], adds: Seq[Tup]): RDD[(Tup, Long)] = {
     val missing = dels.filterNot(edgeSet)
     require(missing.isEmpty,
       s"retraction of absent edges: ${missing.take(5).mkString(", ")}")
-    trace(s"applySigned start dels=${dels.size} adds=${adds.size}")
     val removed =
       if (dels.isEmpty) emptyPart() else deleteEdges(dels)
-    trace("deleteEdges done")
     val added = addFresh(adds)
-    trace("addFresh done")
     val retr = RddKernel.subtract(removed, Seq(added))
     val asserted = RddKernel.subtract(added, Seq(removed))
-    diffDf(retr, t, -1L).union(diffDf(asserted, t, 1L))
+    signed(retr, -1L).union(signed(asserted, 1L))
   }
 
   /** Mutate state with genuinely fresh additions; return the new closure
@@ -189,7 +178,6 @@ class IncrementalClosure(
     var newParts = Vector.empty[RDD[(Tup, Null)]]
     var (delta, n) = insertClosure(cand0)
     while (n > 0) {
-      trace(s"addFresh round n=$n")
       newParts = newParts :+ delta
       val step = insertClosure(expand(delta, revBc))
       delta = step._1
@@ -266,7 +254,6 @@ class IncrementalClosure(
         } else { stop = true; n = 0L }
       }
     }
-    trace(s"overdelete fixpoint done links=${oChain.length}")
     if (oChain.isEmpty) return emptyPart()
 
     // Split totals once (narrow full pass — the deletion path's analog of
@@ -280,7 +267,6 @@ class IncrementalClosure(
       }
     }.graftCheckpoint()
     keep.count()
-    trace("keep split done")
     val oAll = sc.union(oChain) // links are disjoint, partitioner preserved
 
     // --- rederive: R = lfp of (O∩E') ∪ (O ∩ E'∘keep) ∪ (O ∩ E'∘R) -----
@@ -306,7 +292,6 @@ class IncrementalClosure(
     var rChain = Vector.empty[RDD[(Tup, Null)]]
     var rDelta = RddKernel.freshDelta(r0a.union(r0b), part, rChain)
     var rn = rDelta.count()
-    trace(s"rederive r0 n=$rn")
     if (rn > 0) rChain = rChain :+ rDelta
     // Same batched shape as the overdelete loop above.
     while (rn > 0) {
@@ -340,7 +325,6 @@ class IncrementalClosure(
 
     val removed = RddKernel.subtract(oAll, rChain).graftCheckpoint()
     removed.count()
-    trace("removed materialized")
     // Install C − removed: rederived tuples never left the index.
     closureCell.advance1(removed.partitionBy(part))(
       DistributedClosure.setRemove)
@@ -432,13 +416,8 @@ class IncrementalClosure(
       out.mapPartitions(_.map(t => (t, null: Null))), part), n)
   }
 
-  private val schema = StructType(Seq(
-    StructField("src", LongType), StructField("dst", LongType),
-    StructField("t", LongType), StructField("diff", LongType)))
-
-  private def diffDf(rdd: RDD[(Tup, Null)], t: Long, diff: Long): DataFrame =
-    spark.createDataFrame(
-      rdd.map { case ((s, d), _) => Row(s, d, t, diff) }, schema)
+  private def signed(rdd: RDD[(Tup, Null)], diff: Long): RDD[(Tup, Long)] =
+    rdd.map { case (e, _) => (e, diff) }
 }
 
 object IncrementalClosure {

@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{array, col, lit}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 import graft.compile.{Compiler, Rel}
 import graft.domain.AttributeSource
@@ -28,12 +28,11 @@ import graft.model._
   *  - '''Linear zones.''' `MatchA/EA/AV`, `Project`, `Filter`,
   *    `Transform`, `Negate` are linear in their input Z-sets
   *    (per-row, weight-preserving up to sign), so for any subtree built
-  *    only from them, `op(Δin) = Δop(in)`: the zone needs NO state and
-  *    is evaluated by the unmodified BATCH compiler, fed the batch's
-  *    per-attribute deltas through an [[AttributeSource]] (and stateful
-  *    children through `NameExpr` placeholders bound in the compile
-  *    env). Exactness is by linearity; every predicate/function/constant
-  *    rule of the batch engine applies verbatim — zero re-implementation.
+  *    only from them, `op(Δin) = Δop(in)`: the zone needs NO state. It is
+  *    compiled once, at construction, into per-row steps
+  *    ([[LinearRows]]) over the batch's per-attribute deltas and its
+  *    stateful child's diffs (a `NameExpr` placeholder), reproducing the
+  *    batch compiler's operators under Catalyst's value semantics.
   *
   *  - '''Stateful nodes''' at the non-linear operators, each keeping
   *    co-partitioned keyed-RDD state merged with one O(delta) shuffle
@@ -66,6 +65,11 @@ import graft.model._
   *       — including the bulk retract/assert when a right key's presence
   *       flips. `Plan.Antijoin` uses the distinct-left form, Hector
   *       `Not` the multiset left-anti form, both batch-exact.
+  *
+  * Every node takes and returns signed tuples as an RDD
+  * ([[IncrementalQuery.Delta]]); no Catalyst query is planned between
+  * feed and drain, except inside the frame-speaking maintainers
+  * (`IncrementalHector`, the general recursion node's rounds).
   *
   * Non-recursive `NameExpr` rule references are inlined (the batch
   * compiler's compileRule + positional rename). RECURSIVE references in
@@ -144,76 +148,125 @@ class IncrementalQuery(
 
   // ---- Node tree -----------------------------------------------------
 
+  private val sc = spark.sparkContext
+  private def noDiff: Delta = sc.emptyRDD[(Tup, Long)]
+
   private sealed trait Node {
     def vars: Seq[PVar]
     def nodeKinds: Seq[ValueKind]
     /** Attributes whose deltas can change this subtree's output. */
     def attrs: Set[String]
-    /** Exact output diffs (c0..cn, _w) for this batch's attr deltas. */
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame
+    /** Exact output diffs for this batch's attribute deltas. */
+    def advance(attrDeltas: Map[String, Delta]): Delta
     /** Whether this node's single output column packs heterogeneous pull
       * paths (the batch compiler's `Rel.isPathArray`) — an explicit
       * serde marker for the wire layer, never inferred from payload
       * shape (round-10 ADVICE). */
     def pathArray: Boolean = false
 
-    final def schema: StructType = StructType(
-      nodeKinds.zipWithIndex.map { case (k, i) =>
-        StructField(Rel.c(i), k.dataType, true)
-      } :+ StructField(Rel.W, LongType, false))
-    final lazy val emptyDiff: DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    final def touched(attrDeltas: Map[String, DataFrame]): Boolean =
+    final def touched(attrDeltas: Map[String, Delta]): Boolean =
       attrs.exists(attrDeltas.contains)
   }
 
-  /** Stateless linear subtree, evaluated by the batch compiler over the
-    * batch's deltas; stateful children appear as `NameExpr` placeholders
-    * resolved through the compile env. */
+  /** Stateless linear subtree, compiled once into per-row steps
+    * ([[LinearRows]]) over the batch's attribute deltas and its stateful
+    * child's diffs (a `NameExpr` placeholder). Exactness is by
+    * linearity: `op(Δin) = Δop(in)`. */
   private final class Zone(
       linearPlan: Plan, children: Map[String, Node]) extends Node {
 
     val attrs: Set[String] =
       referencedAttrs(linearPlan) ++ children.values.flatMap(_.attrs)
 
-    // One compile at construction (against empty deltas) derives the
-    // output template and validates the zone end-to-end before any
-    // batch arrives.
-    val (vars, nodeKinds): (Seq[PVar], Seq[ValueKind]) = {
-      val rel = compileWith(a => emptyAttrDelta(a),
-        children.map { case (n, c) => n -> c.emptyDiff })
-      (rel.vars, rel.kinds)
-    }
+    private val lin = compileLinear(linearPlan, children)
+    val vars: Seq[PVar] = lin.vars
+    val nodeKinds: Seq[ValueKind] = lin.kinds
 
-    private def compileWith(
-        deltaOf: String => DataFrame,
-        childDiffs: Map[String, DataFrame]): Rel = {
-      val src = new AttributeSource {
-        def has(name: String): Boolean = kinds.contains(name)
-        def kind(name: String): ValueKind = kinds(name)
-        def unit(name: String): Boolean = false // signed deltas
-        def collection(name: String): DataFrame = deltaOf(name)
-        override def version: (Long, Long) = (0L, Long.MaxValue)
-      }
-      val env: Map[String, Option[Rel]] = children.map { case (name, c) =>
-        name -> Some(Rel(c.vars, c.nodeKinds, childDiffs(name)))
-      }
-      new Compiler(src, Map.empty).compile(linearPlan, env)
-        .getOrElse(UnmaintainablePlan.reject(s"linear zone failed to compile: $linearPlan"))
-    }
-
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
-      else {
-        val childDiffs = children.map { case (name, c) =>
-          name -> c.advance(attrDeltas)
-        }
-        compileWith(
-          a => attrDeltas.getOrElse(a, emptyAttrDelta(a)), childDiffs).df
-      }
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
+      else unionAll(lin.branches.flatMap { b =>
+        val in =
+          if (b.child) Some(children(b.source).advance(attrDeltas))
+          else attrDeltas.get(b.source)
+        in.map(d => if (b.identity) d else d.mapPartitions(b.rows))
+      })
   }
 
-  /** Conjunction node: state and delta rule live in IncrementalHector. */
+  private def unionAll(ds: Seq[Delta]): Delta =
+    if (ds.isEmpty) noDiff else if (ds.lengthCompare(1) == 0) ds.head else sc.union(ds)
+
+  /** The batch compiler's linear operators (`Compiler.compile`) as per-row
+    * steps: same output variables, kinds and rows. */
+  private def compileLinear(p: Plan, children: Map[String, Node]): LinearRows.Lin = {
+    import LinearRows._
+    def scan(a: String, steps: Step*) = Seq(Branch(a, child = false, steps.toVector, 1L))
+    def test(pred: Predicate, l: (Opnd, ValueKind), r: (Opnd, ValueKind)) = {
+      UnmaintainablePlan.require(comparable(l._2, r._2),
+        s"comparison of ${l._2} with ${r._2} needs a cast")
+      Test(pred, l._1, r._1)
+    }
+    def col(i: Int, k: ValueKind) = (Opnd(i, null), k)
+    def const(v: Value) = (Opnd(-1, native(v)), ValueKind.of(v))
+    p match {
+      case Plan.MatchA(e, a, v) if e == v =>
+        Lin(Seq(e), Seq(ValueKind.KEid), scan(a,
+          test(Predicate.EQ, col(0, ValueKind.KEid), col(1, kinds(a))),
+          Layout(Array(Col(0)))))
+      case Plan.MatchA(e, a, v) =>
+        Lin(Seq(e, v), Seq(ValueKind.KEid, kinds(a)), scan(a))
+      case Plan.MatchEA(eid, a, v) =>
+        Lin(Seq(v), Seq(kinds(a)), scan(a,
+          Test(Predicate.EQ, Opnd(0, null), Opnd(-1, eid)), Layout(Array(Col(1)))))
+      case Plan.MatchAV(e, a, value) =>
+        Lin(Seq(e), Seq(ValueKind.KEid), scan(a,
+          test(Predicate.EQ, col(1, kinds(a)), const(value)), Layout(Array(Col(0)))))
+      case Plan.Project(vs, s) =>
+        val in = compileLinear(s, children)
+        in.step(Layout(vs.map(v => Col(in.idx(v)): Cell).toArray), vs,
+          vs.map(v => in.kinds(in.idx(v))))
+      case Plan.Filter(fvars, pred, s, consts) =>
+        val in = compileLinear(s, children)
+        def v(i: Int) = col(in.idx(fvars(i)), in.kinds(in.idx(fvars(i))))
+        // constants(0) = constant LEFT operand, constants(1) = constant
+        // RIGHT operand — src/plan/filter.rs:111-130.
+        val t = consts.lift(0).flatten match {
+          case Some(k) => test(pred, const(k), v(0))
+          case None => consts.lift(1).flatten match {
+            case Some(k) => test(pred, v(0), const(k))
+            case None    => test(pred, v(0), v(1))
+          }
+        }
+        in.step(t, in.vars, in.kinds)
+      case Plan.Transform(tvars, rv, s, fn, consts) =>
+        val in = compileLinear(s, children)
+        val (t, k) = transform(tvars.map(in.idx), in.kinds, fn, consts)
+        in.step(t, in.vars :+ rv, in.kinds :+ k)
+      case Plan.Negate(s) =>
+        val in = compileLinear(s, children)
+        in.copy(branches = in.branches.map(b => b.copy(sign = -b.sign)))
+      case Plan.NameExpr(vs, name) =>
+        val c = children(name)
+        require(c.vars.length == vs.length,
+          s"NameExpr($vs, $name): arity mismatch with ${c.vars}")
+        Lin(vs, c.nodeKinds, Seq(Branch(name, child = true, Vector.empty, 1L)))
+      case Plan.PullAll(_, pas) =>
+        // [e a v] for every attribute — src/plan/pull.rs:288-358.
+        Lin(Seq(-1, -2, -3), Seq(ValueKind.KEid, ValueKind.KAid, ValueKind.KVariant),
+          pas.flatMap(a => scan(a, Layout(Array(Col(0), Lit(a), Enc(1, kinds(a)))))))
+      case Plan.PullLevel(_, s, _, _, pathAttrs, _) =>
+        val in = compileLinear(s, children)
+        if (pathAttrs.isEmpty) in
+        else {
+          val inter = interleave(in.kinds, pathAttrs)
+          in.step(Layout(inter.map(_._1).toArray),
+            inter.indices.map(i => -(i + 1)), inter.map(_._2))
+        }
+      case other => sys.error(s"unexpected non-linear node $other in zone")
+    }
+  }
+
+  /** Conjunction node: state and delta rule live in IncrementalHector,
+    * which speaks frames — its boundary converts once each way. */
   private final class HectorNode(
       targetVars: Seq[PVar], bindings: Seq[Binding]) extends Node {
     private val attrBindings = bindings.collect { case a: Binding.Attr => a }
@@ -222,15 +275,17 @@ class IncrementalQuery(
     val attrs: Set[String] = attrBindings.map(_.a).toSet
     val (vars, nodeKinds): (Seq[PVar], Seq[ValueKind]) = ih.outputVarsKinds
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
         val deltas: Map[Int, DataFrame] =
           attrBindings.zipWithIndex.flatMap { case (b, i) =>
-            attrDeltas.get(b.a).map(d =>
-              i -> d.withColumnRenamed(Rel.W, "diff"))
+            attrDeltas.get(b.a).map(d => i -> spark.createDataFrame(
+              d.map { case (t, w) => Row.fromSeq(t :+ w) }, StructType(Seq(StructField("e", LongType, false),
+                StructField("v", kinds(b.a).dataType, true),
+                StructField("diff", LongType, false)))))
           }.toMap
-        ih.advance(deltas)
+        deltaOf(ih.advance(deltas))
       }
   }
 
@@ -466,29 +521,16 @@ class IncrementalQuery(
     private val part = new SeqKeyPartitioner(shufflePartitions)
     private val cell = new SupportCell(nodeKinds)
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      advanceWith(attrDeltas, counted = false)._1
+    private def delta(attrDeltas: Map[String, Delta]): Delta =
+      Exchange.sum(unionAll(inputs.map(_.advance(attrDeltas))), part) // the only shuffle: O(delta)
+
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff else cell.advance(delta(attrDeltas))
 
     /** [[advance]] materialized now, with the transition count (the
       * closure node's store choice reads it). */
-    def advanceCounted(attrDeltas: Map[String, DataFrame]): (DataFrame, Long) =
-      advanceWith(attrDeltas, counted = true)
-
-    private def advanceWith(attrDeltas: Map[String, DataFrame],
-        counted: Boolean): (DataFrame, Long) =
-      if (!touched(attrDeltas)) (emptyDiff, 0L)
-      else {
-        val width = vars.length
-        val delta: RDD[(Seq[Any], Long)] = Exchange.sum(inputs
-          .map(n => rowsOf(n.advance(attrDeltas)))
-          .reduce(_ union _)
-          .map(r => (rowKey(r, width), r.getLong(width))),
-          part) // the only shuffle: O(delta)
-        val (diffs, n) =
-          if (counted) cell.advanceCounted(delta) else (cell.advance(delta), -1L)
-        (spark.createDataFrame(
-          diffs.map { case (k, w) => Row.fromSeq(k :+ w) }, schema), n)
-      }
+    def advanceCounted(attrDeltas: Map[String, Delta]): (Delta, Long) =
+      if (!touched(attrDeltas)) (noDiff, 0L) else cell.advanceCounted(delta(attrDeltas))
   }
 
   /** Antijoin node — the batch compiler's semantics
@@ -517,21 +559,15 @@ class IncrementalQuery(
         { case (l, r) => l.bytes + r.size * 200L })
     }
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
-        val width = vars.length
-        val kl = keyIdx.length
-        val dL = Exchange.sum(rowsOf(left.advance(attrDeltas))
-          .map(r => (rowKey(r, width), r.getLong(width))), lPart)
-        val dR = Exchange.sum(rowsOf(right.advance(attrDeltas))
-          .map(r => (rowKey(r, kl), r.getLong(kl))), rPart)
+        val dL = Exchange.sum(left.advance(attrDeltas), lPart)
+        val dR = Exchange.sum(right.advance(attrDeltas), rPart)
         // Locals only: a field reference here would capture the node
         // (and its SparkSession) into the task closure.
         val ki = keyIdx; val dlf = distinctLeft
-        val diffs = cell.advance2(dL, dR)(antijoinAdvanceIdx(ki, dlf))
-        spark.createDataFrame(
-          diffs.map { case (row, w) => Row.fromSeq(row :+ w) }, schema)
+        cell.advance2(dL, dR)(antijoinAdvanceIdx(ki, dlf))
       }
   }
 
@@ -635,23 +671,17 @@ class IncrementalQuery(
     private val cell = stateCell[GroupIndex](
       GroupIndex.maker(keyIdx.map(input.nodeKinds),
         valueIdx.map(input.nodeKinds)), _.bytes)
+    private val split = new KeyValue(keyIdx.toArray, valueIdx.toArray)
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
-        val (kIdx, vIdx) = (keyIdx, valueIdx)
-        val delta: RDD[((Seq[Any], Seq[Any]), Long)] = Exchange.sum(
-          rowsOf(input.advance(attrDeltas))
-          .map { r =>
-            ((kIdx.map(r.get): Seq[Any], vIdx.map(r.get): Seq[Any]),
-              r.getLong(r.length - 1))
-          }, part) // the only shuffle: O(delta)
+        val delta = Exchange.sum(input.advance(attrDeltas).map(split), part) // the only shuffle: O(delta)
         val specL = spec
-        val rows = cell.advance1(delta)(
+        cell.advance1(delta)(
           aggregateAdvanceIdx(requireNonNeg = false,
             (k: Seq[Any], rs: Iterable[(Seq[Any], Long)]) =>
               aggRowOf(specL, k, rs)))
-        spark.createDataFrame(rows.map(Row.fromSeq), schema)
       }
   }
 
@@ -680,7 +710,6 @@ class IncrementalQuery(
     private val threshold = new ThresholdNode(Seq(edgeNode))
     private var broadcastCl: IncrementalClosure = null
     private var distributedCl: DistributedClosure = null
-    private var tick = 0L
 
     /** Pick (or keep) the store for an advance of `n` edge transitions:
       * `n` bounds the additions, so the broadcast store is kept only
@@ -704,20 +733,19 @@ class IncrementalQuery(
         }
       }
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
         val (ed, n) = threshold.advanceCounted(attrDeltas)
-        if (n == 0L) emptyDiff
+        if (n == 0L) noDiff
         else {
-          tick += 1
           chooseStore(n)
-          val rdd = rowsOf(ed).map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+          val edges = ed.map { case (t, w) =>
+            ((t(0).asInstanceOf[Long], t(1).asInstanceOf[Long]), w) }
           val out =
-            if (distributedCl != null) distributedCl.advanceSignedRdd(rdd, tick)
-            else broadcastCl.advanceSignedRdd(rdd, tick)
-          out.select(col("src").as(Rel.c(0)), col("dst").as(Rel.c(1)),
-            col("diff").as(Rel.W))
+            if (distributedCl != null) distributedCl.advanceSignedRdd(edges)
+            else broadcastCl.advanceSignedRdd(edges)
+          out.map { case ((s, d), w) => (Seq(s, d), w) }
         }
       }
   }
@@ -760,31 +788,17 @@ class IncrementalQuery(
       stateCell[(GroupIndex, GroupIndex)](() => (lz(), rz()),
         { case (l, r) => l.bytes + r.bytes })
     }
+    private val joined = new JoinedRow((lKey ++ lRestIdx).toArray, rRestIdx.toArray)
 
-    private def sideDelta(
-        node: Node, part: Partitioner,
-        attrDeltas: Map[String, DataFrame]): RDD[(Seq[Any], Long)] = {
-      val width = node.vars.length
-      Exchange.sum(rowsOf(node.advance(attrDeltas))
-        .map(r => (rowKey(r, width), r.getLong(width))), part)
-        .filter(_._2 != 0L)
-    }
-
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
-        val dL = sideDelta(left, lPart, attrDeltas)
-        val dR = sideDelta(right, rPart, attrDeltas)
+        val dL = Exchange.sum(left.advance(attrDeltas), lPart).filter(NonZero)
+        val dR = Exchange.sum(right.advance(attrDeltas), rPart).filter(NonZero)
         // Locals only: a field reference in the curried call would
         // capture the node (and its SparkSession) into the task closure.
-        val (lk, rk2, lri, rri) = (lKey, rKey, lRestIdx, rRestIdx)
-        val diffs = cell.advance2(dL, dR)(
-          IncrementalQuery.joinAdvanceIdx(lk, rk2))
-        val rows = diffs.map { case (lrow, rrow, w) =>
-          Row.fromSeq((lk.map(lrow.apply) ++ lri.map(lrow.apply) ++
-            rri.map(rrow.apply)) :+ w)
-        }
-        spark.createDataFrame(rows, schema)
+        val (lk, rk2) = (lKey, rKey)
+        cell.advance2(dL, dR)(IncrementalQuery.joinAdvanceIdx(lk, rk2)).map(joined)
       }
   }
 
@@ -795,9 +809,9 @@ class IncrementalQuery(
     * tables co-partitioned by the pull entity (the AntijoinNode state
     * discipline — a batch recomputes the old/new products of exactly
     * the entities it touches, partition-locally, one O(delta) shuffle
-    * per side), then the batch compiler's OWN decoration
-    * (`Compiler.pullBranchCols` — shared code, zero drift) applied
-    * per-row to the join diffs; the synthetic db__id branch is linear
+    * per side), then the batch compiler's decoration
+    * ([[LinearRows.pullBranch]], `Compiler.pullBranchCols` per row)
+    * applied to the join diffs; the synthetic db__id branch is linear
     * in the child. Output is the exact diff of the batch `pullLevel`
     * relation (multiset: child weight × attribute weight). */
   private final class PullLevelNode(
@@ -808,15 +822,18 @@ class IncrementalQuery(
     pullAttrs.foreach(a =>
       UnmaintainablePlan.require(kinds.contains(a), s"unknown pull attribute $a"))
 
-    private val inputCols: Seq[(Column, ValueKind)] =
-      child.nodeKinds.zipWithIndex.map { case (k, i) => (col(Rel.c(i)), k) }
+    private def branch(attr: Option[(String, ValueKind)]) =
+      LinearRows.pullBranch(child.nodeKinds, pathAttrs, cardMany, attr)
     val nodeKinds: Seq[ValueKind] =
-      Compiler.pullBranchCols(inputCols, pathAttrs, cardMany,
-        Some((pullAttrs.head, kinds(pullAttrs.head), lit(null)))).map(_._2)
+      branch(Some((pullAttrs.head, kinds(pullAttrs.head)))).map(_._2)
     val vars: Seq[PVar] = nodeKinds.indices.map(i => -(i + 1))
     val attrs: Set[String] = child.attrs ++ pullAttrs
 
-    private val sc = spark.sparkContext
+    private def rows(attr: Option[(String, ValueKind)]) =
+      new LinearRows.Rows(Array(LinearRows.Layout(branch(attr).map(_._1).toArray)), 1L)
+    private val attrRows = pullAttrs.map(a => rows(Some((a, kinds(a)))))
+    private val idRows = rows(None)
+
     private val childPart = new IndexKeyPartitioner(shufflePartitions, Seq(eIdx))
     private val attrPart = new IndexKeyPartitioner(shufflePartitions, Seq(0))
     // Child and attribute supports both hash the pull ENTITY, so each
@@ -828,30 +845,19 @@ class IncrementalQuery(
         GroupIndex.maker(Seq(graft.model.ValueKind.KEid),
           Seq(graft.model.ValueKind.KEid, kinds(a))), _.bytes)).toMap
 
-    private def childSchema: StructType = StructType(
-      child.nodeKinds.zipWithIndex.map { case (k, i) =>
-        StructField(Rel.c(i), k.dataType, true)
-      } :+ StructField(Rel.W, LongType, false))
-
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
       else {
-        val width = child.vars.length
         // Neither counted nor cut: every attribute's pass, the db__id
         // branch and the child commit read it inside the ledger's one
         // action, each re-reading the delta-sized shuffle output. A
         // cached copy would make those tasks of one stage wait on each
         // other for its blocks.
-        val dChild = Exchange.sum(rowsOf(child.advance(attrDeltas))
-          .map(r => (rowKey(r, width), r.getLong(width))), childPart)
-          .filter(_._2 != 0L)
-        val branches = mutable.ArrayBuffer.empty[DataFrame]
-        pullAttrs.foreach { a =>
+        val dChild = Exchange.sum(child.advance(attrDeltas), childPart).filter(NonZero)
+        val branches = pullAttrs.zip(attrRows).map { case (a, rs) =>
           val dAttr = attrDeltas.get(a)
-            .map(df => Exchange.sum(rowsOf(df)
-              .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2))), attrPart)
-              .filter(_._2 != 0L))
-            .getOrElse(sc.emptyRDD[(Seq[Any], Long)].partitionBy(attrPart))
+            .map(d => Exchange.sum(d, attrPart).filter(NonZero))
+            .getOrElse(sc.emptyRDD[(Tup, Long)].partitionBy(attrPart))
           val eIdxL = eIdx
           val aCell = attrCells(a)
           // One pass per attribute: the bilinear diff against the OLD
@@ -865,35 +871,16 @@ class IncrementalQuery(
                 (cIt.next(), aIt.next()), dcIt, daIt)
             Iterator.single((newA, out))
           }
-          val diffRows = aCell.commit(stepped)
-            .map { case (l, r, w) => (l, r(1), w) }
-          val schema = StructType(
-            child.nodeKinds.zipWithIndex.map { case (k, i) =>
-              StructField(Rel.c(i), k.dataType, true)
-            } ++ Seq(StructField("_pv", kinds(a).dataType, true),
-              StructField(Rel.W, LongType, false)))
-          val df = spark.createDataFrame(
-            diffRows.map { case (r, v, w) => Row.fromSeq((r :+ v) :+ w) }, schema)
-          val oc = Compiler.pullBranchCols(inputCols, pathAttrs, cardMany,
-            Some((a, kinds(a), col("_pv"))))
-          branches += df.select(
-            oc.zipWithIndex.map { case ((cc, _), i) => cc.as(Rel.c(i)) } :+
-              col(Rel.W): _*)
-        }
-        if (pathAttrs.nonEmpty && !cardMany) {
-          val oc = Compiler.pullBranchCols(inputCols, pathAttrs, cardMany, None)
-          val dcDf = spark.createDataFrame(
-            dChild.map { case (r, w) => Row.fromSeq(r :+ w) }, childSchema)
-          branches += dcDf.select(
-            oc.zipWithIndex.map { case ((cc, _), i) => cc.as(Rel.c(i)) } :+
-              col(Rel.W): _*)
+          aCell.commit(stepped).map { case (l, r, w) => (l :+ r(1), w) }.mapPartitions(rs)
         }
         val eIdxK = Seq(eIdx) // local: no node capture in the closure
         // Nothing reads this commit's output; the ledger still
         // materializes it (and with it the child index's generation).
         childCell.advance1(dChild)(
           IncrementalQuery.supportAdvanceIdx(eIdxK))
-        branches.reduce(_ unionAll _)
+        unionAll(
+          if (pathAttrs.nonEmpty && !cardMany) branches :+ dChild.mapPartitions(idRows)
+          else branches)
       }
   }
 
@@ -906,16 +893,14 @@ class IncrementalQuery(
     val nodeKinds: Seq[ValueKind] = Seq(ValueKind.KVariant)
     override val pathArray: Boolean = true
     val attrs: Set[String] = paths.flatMap(_.attrs).toSet
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
-      if (!touched(attrDeltas)) emptyDiff
-      else paths.map { p =>
-        val d = p.advance(attrDeltas)
-        val cols = p.nodeKinds.zipWithIndex.map { case (k, i) =>
-          val cc = col(Rel.c(i))
-          if (k == ValueKind.KVariant) cc else Variant.encode(cc, k)
+    def advance(attrDeltas: Map[String, Delta]): Delta =
+      if (!touched(attrDeltas)) noDiff
+      else unionAll(paths.map { p =>
+        val ks = p.nodeKinds.toArray
+        p.advance(attrDeltas).map { case (t, w) =>
+          (Seq(t.indices.map(i => LinearRows.encode(t(i), ks(i)))), w)
         }
-        d.select(array(cols: _*).as(Rel.c(0)), col(Rel.W))
-      }.reduce(_ unionAll _)
+      })
   }
 
   // ---- Plan → node tree ----------------------------------------------
@@ -1232,7 +1217,11 @@ class IncrementalQuery(
         def has(name: String): Boolean = kinds.contains(name)
         def kind(name: String): ValueKind = kinds(name)
         def unit(name: String): Boolean = false
-        def collection(name: String): DataFrame = emptyAttrDelta(name)
+        def collection(name: String): DataFrame =
+          spark.createDataFrame(sc.emptyRDD[Row], StructType(Seq(
+            StructField("e", LongType, false),
+            StructField("v", kinds(name).dataType, true),
+            StructField(Rel.W, LongType, false))))
         override def version: (Long, Long) = (0L, Long.MaxValue)
       }
       val comp = new Compiler(src, rules.map { case (n, p) => n -> Rule(n, p) })
@@ -1265,7 +1254,6 @@ class IncrementalQuery(
     val nodeKinds: Seq[ValueKind] = sig(target)._2
     val attrs: Set[String] = inputs.flatMap(_._2.attrs).toSet
 
-    private val sc = spark.sparkContext
     private val part = new SeqKeyPartitioner(shufflePartitions)
     private type PSet = RDD[(Seq[Any], Null)]
 
@@ -1380,26 +1368,13 @@ class IncrementalQuery(
     }
 
     private def evalSet(p: Plan, env: Map[String, Rel]): RDD[Seq[Any]] = {
-      val t0 = System.nanoTime()
       recursionPlanCount.incrementAndGet()
-      val out = new Compiler(noAttrSrc)
+      new Compiler(noAttrSrc)
         .compile(p, env.map { case (k, v) => k -> Some(v) }) match {
         case Some(rel) =>
-          rowsOf(rel.df).flatMap { r =>
-            if (r.getLong(r.length - 1) > 0L) Some(rowKey(r, r.length - 1))
-            else None
-          }
+          deltaOf(rel.df).flatMap { case (t, w) => if (w > 0L) Some(t) else None }
         case None => sc.emptyRDD[Seq[Any]]
       }
-      rtrace(f"evalSet planMs=${(System.nanoTime() - t0) / 1000000}")
-      out
-    }
-
-    private def checkpointedTC(s: PSet, what: String): (PSet, Long) = {
-      val t0 = System.nanoTime()
-      val cn = checkpointedC(s)
-      rtrace(f"$what materializeMs=${(System.nanoTime() - t0) / 1000000}")
-      cn
     }
 
     /** The kernel/arrangement expansion for the single-rule linear
@@ -1432,8 +1407,7 @@ class IncrementalQuery(
     private val roundBatch: Int = graft.kernel.RddKernel.RoundBatch
 
     private def batchedRounds(d0: PSet, expand: PSet => RDD[Seq[Any]],
-        trim: PSet => PSet, what: String): Seq[(PSet, Long)] = {
-      val t0 = System.nanoTime()
+        trim: PSet => PSet): Seq[(PSet, Long)] = {
       val chain = new Array[PSet](roundBatch)
       var prev = d0
       var i = 0
@@ -1447,8 +1421,6 @@ class IncrementalQuery(
         i += 1
       }
       val counts = CommitLedger.materialize(sc, chain.toIndexedSeq)._1
-      rtrace(f"$what roundBatch=$roundBatch counts=${counts.mkString(",")} " +
-        f"materializeMs=${(System.nanoTime() - t0) / 1000000}")
       chain.toIndexedSeq.zip(counts.toIndexedSeq)
     }
 
@@ -1462,8 +1434,7 @@ class IncrementalQuery(
         initial: Seq[(String, Seq[ValueKind], PSet)],
         step: Seq[(String, Seq[ValueKind], PSet)] => Seq[(String, Seq[ValueKind], PSet)],
         trim: PSet => PSet,
-        consume: PSet => Unit,
-        what: String): Unit = {
+        consume: PSet => Unit): Unit = {
       var roundDeltas = initial
       while (roundDeltas.nonEmpty) {
         val kernelCase = roundDeltas match {
@@ -1474,7 +1445,7 @@ class IncrementalQuery(
         kernelCase match {
           case Some((f, d0)) =>
             var cont: Option[PSet] = None
-            val it = batchedRounds(d0, f, trim, what).iterator
+            val it = batchedRounds(d0, f, trim).iterator
             var done = false
             while (it.hasNext && !done) {
               val (c, cn) = it.next()
@@ -1775,7 +1746,6 @@ class IncrementalQuery(
         scala.collection.immutable.ArraySeq.unsafeWrapArray(k): Seq[Any]
       }.foreach { case (k, vs) => m.put(k, vs.map(_.toArray).toArray) }
       staticBcVal = Some(sc.broadcast(m))
-      rtrace(s"kernel static broadcast rows=${taken.length} gen=$staticGen")
       staticBcVal
     }
 
@@ -1855,7 +1825,6 @@ class IncrementalQuery(
         Iterator.single(sizedArr(ArrIndex(b.result(), n), cols))
       }
       val built = commitArr(arr)
-      rtrace(s"kernel static arrangement BUILT gen=$staticGen")
       built
     }
 
@@ -1889,7 +1858,6 @@ class IncrementalQuery(
           Iterator.single(sizedArr(ArrIndex(m, rows), cols))
         }
       commitArr(next)
-      rtrace(s"kernel static arrangement maintained (+${if (isAdd) "adds" else "dels"})")
     }
 
     /** One arrangement round: re-key the delta by the join key and
@@ -2043,12 +2011,6 @@ class IncrementalQuery(
       }
     }
 
-    private val recDebug = sys.env.contains("GRAFT_REC_DEBUG")
-    private var recT0 = System.nanoTime()
-    private def rtrace(msg: => String): Unit = if (recDebug)
-      System.err.println(
-        f"[recursion] +${(System.nanoTime() - recT0) / 1e9}%.2fs $msg")
-
     /** The batch fixpoint's per-round conf (thread-local, never session
       * global): each round is a new SMALL plan, so whole-stage codegen
       * compilation and constraint-propagation lineage walks cost more
@@ -2064,8 +2026,8 @@ class IncrementalQuery(
       org.apache.spark.sql.internal.SQLConf.withExistingConf(c)(f)
     }
 
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame = {
-      if (!touched(attrDeltas)) return emptyDiff
+    def advance(attrDeltas: Map[String, Delta]): Delta = {
+      if (!touched(attrDeltas)) return noDiff
       // Input SET transitions (children threshold internally; their
       // outputs derive from checkpointed state, so reading adds and dels
       // re-reads the checkpoint, not the maintenance pass). Children run
@@ -2081,9 +2043,7 @@ class IncrementalQuery(
       // open ledger: this job computes (and caches) their outputs, and
       // the ledger's action truncates them.
       val built = inputs.map { case (n, node) =>
-        val d = node.advance(attrDeltas)
-        val w = inputKinds(n).length
-        val rdd = rowsOf(d).map(r => (rowKey(r, w), r.getLong(w)))
+        val rdd = node.advance(attrDeltas)
         val adds = asSet(rdd.filter(_._2 > 0L).keys).graftCheckpoint()
         val dels = asSet(rdd.filter(_._2 < 0L).keys).graftCheckpoint()
         (n, adds, dels)
@@ -2095,7 +2055,7 @@ class IncrementalQuery(
       }
       val anyAdd = trans.exists(_._4 > 0L)
       val anyDel = trans.exists(_._5 > 0L)
-      if (!anyAdd && !anyDel) return emptyDiff
+      if (!anyAdd && !anyDel) return noDiff
       tuned { advancePhases(trans, anyAdd, anyDel) }
     }
 
@@ -2105,7 +2065,7 @@ class IncrementalQuery(
 
     private def advancePhases(
         trans: Seq[(String, PSet, PSet, Long, Long)],
-        anyAdd: Boolean, anyDel: Boolean): DataFrame = {
+        anyAdd: Boolean, anyDel: Boolean): Delta = {
       val bulkEligible = !primed && !anyDel && anyAdd
       primed = true
       val emitted = mutable.ArrayBuffer.empty[RDD[(Seq[Any], Long)]]
@@ -2124,7 +2084,7 @@ class IncrementalQuery(
             stepCandidates(r, rd, envOld).flatMap { cand =>
               var s = intersect(asSet(cand), recState(r))
               over(r).foreach(o => s = minus(s, o))
-              val (c, cn) = checkpointedTC(s, s"over:$r")
+              val (c, cn) = checkpointedC(s)
               if (cn == 0L) None
               else {
                 over(r) = compactedParts(over(r) :+ c)
@@ -2137,8 +2097,7 @@ class IncrementalQuery(
             over(target).foreach(o => s = minus(s, o))
             s
           },
-          consume = c => over(target) = compactedParts(over(target) :+ c),
-          what = s"over:$target")
+          consume = c => over(target) = compactedParts(over(target) :+ c))
         // Fused input-state retraction commit: every touched input's new
         // state materializes through ONE job; counts land in inputCount
         // (the kernel broadcast gate reads them for free).
@@ -2194,8 +2153,8 @@ class IncrementalQuery(
                   Plan.NameExpr(hv, "@over"))
                 val envR = envKeep +
                   ("@over" -> relOf(sig(r)._2, Seq(overTotal(r)), isSmall = true))
-                val (c, cn) = checkpointedTC(intersect(
-                  overTotal(r), asSet(evalSet(restricted, envR))), s"rederive0:$r")
+                val (c, cn) = checkpointedC(intersect(
+                  overTotal(r), asSet(evalSet(restricted, envR))))
                 if (cn == 0L) None
                 else {
                   redv(r) = compactedParts(redv(r) :+ c)
@@ -2214,7 +2173,7 @@ class IncrementalQuery(
                 stepCandidates(r, rd, envK).flatMap { cand =>
                   var s = intersect(asSet(cand), overTotal(r))
                   redv(r).foreach(o => s = minus(s, o))
-                  val (c, cn) = checkpointedTC(s, s"rederive:$r")
+                  val (c, cn) = checkpointedC(s)
                   if (cn == 0L) None
                   else {
                     redv(r) = compactedParts(redv(r) :+ c)
@@ -2228,8 +2187,7 @@ class IncrementalQuery(
               redv(target).foreach(o => s = minus(s, o))
               s
             },
-            consume = c => redv(target) = compactedParts(redv(target) :+ c),
-            what = s"rederive:$target")
+            consume = c => redv(target) = compactedParts(redv(target) :+ c))
           // Fused: every rule's gone set (emission needs its count) and
           // its rederived state commit share one materializing job.
           val goneS = clique.map { r =>
@@ -2297,7 +2255,7 @@ class IncrementalQuery(
               stepCandidates(r, rd, env).flatMap { cand =>
                 var s = minus(asSet(cand), recState(r))
                 newParts(r).foreach(p2 => s = minus(s, p2))
-                val (c, cn) = checkpointedTC(s, s"add:$r")
+                val (c, cn) = checkpointedC(s)
                 if (cn == 0L) None
                 else {
                   newParts(r) = compactedParts(newParts(r) :+ c)
@@ -2311,8 +2269,7 @@ class IncrementalQuery(
             newParts(target).foreach(p2 => s = minus(s, p2))
             s
           },
-          consume = c => newParts(target) = compactedParts(newParts(target) :+ c),
-          what = s"add:$target")
+          consume = c => newParts(target) = compactedParts(newParts(target) :+ c))
         // Fused warm-start state commit across rules.
         val updR = clique.filter(r => newParts(r).nonEmpty)
         if (updR.nonEmpty) {
@@ -2333,14 +2290,9 @@ class IncrementalQuery(
     }
 
     private def emitResult(
-        emitted: mutable.ArrayBuffer[RDD[(Seq[Any], Long)]]): DataFrame =
-      if (emitted.isEmpty) emptyDiff
-      else {
-        val net = Exchange.sum(sc.union(emitted.toSeq), part)
-          .filter(_._2 != 0L)
-        spark.createDataFrame(
-          net.map { case (k, w) => Row.fromSeq(k :+ w) }, schema)
-      }
+        emitted: mutable.ArrayBuffer[RDD[(Seq[Any], Long)]]): Delta =
+      if (emitted.isEmpty) noDiff
+      else Exchange.sum(sc.union(emitted.toSeq), part).filter(NonZero)
 
     /** Batch fixpoint over the current input sets — the bulk path. The
       * rewritten bodies become a rule group for a fresh batch compiler;
@@ -2372,11 +2324,7 @@ class IncrementalQuery(
       clique.map { r =>
         val rel = comp.compile(Plan.NameExpr(sig(r)._1, r), Map.empty)
           .getOrElse(sys.error(s"bulk fixpoint failed for recursive rule $r"))
-        r -> asSet(rowsOf(rel.df).flatMap { row =>
-          if (row.getLong(row.length - 1) > 0L)
-            Some(rowKey(row, row.length - 1))
-          else None
-        })
+        r -> asSet(deltaOf(rel.df).flatMap { case (t, w) => if (w > 0L) Some(t) else None })
       }.toMap
     }
   }
@@ -2390,7 +2338,7 @@ class IncrementalQuery(
     val nodeKinds: Seq[ValueKind] = inner.nodeKinds
     val attrs: Set[String] = inner.attrs
     override val pathArray: Boolean = inner.pathArray
-    def advance(attrDeltas: Map[String, DataFrame]): DataFrame =
+    def advance(attrDeltas: Map[String, Delta]): Delta =
       inner.advance(attrDeltas)
   }
 
@@ -2445,12 +2393,6 @@ class IncrementalQuery(
   /** Attributes whose deltas can change this query's output. */
   def referencedAttributes: Set[String] = root.attrs
 
-  private def emptyAttrDelta(a: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("e", LongType, false),
-      StructField("v", kinds(a).dataType, true),
-      StructField(Rel.W, LongType, false))))
-
   /** Per-attribute support-count threshold — DISTINCT input semantics
     * maintained: the engine's Distinct collection is exactly "net datom
     * support > 0 → weight 1" (`Domain.collectionStored`), so its diffs
@@ -2459,37 +2401,13 @@ class IncrementalQuery(
   private final class AttrThreshold(kind: ValueKind) {
     private val part = new SeqKeyPartitioner(shufflePartitions)
     private val cell = new SupportCell(Seq(ValueKind.KEid, kind))
-    private val schema = StructType(Seq(
-      StructField("e", LongType, false),
-      StructField("v", kind.dataType, true),
-      StructField(Rel.W, LongType, false)))
 
     /** The set-transition diffs (a lazy commit: an empty transition
       * set flows on inside the same action). */
-    def advance(delta: DataFrame): DataFrame = {
-      val d = Exchange.sum(rowsOf(delta)
-        .map(r => (Seq(r.get(0), r.get(1)): Seq[Any], r.getLong(2))), part)
-      spark.createDataFrame(
-        cell.advance(d).map { case (k, w) => Row(k(0), k(1), w) }, schema)
-    }
+    def advance(delta: Delta): Delta = cell.advance(Exchange.sum(delta, part))
   }
 
   private val attrThresholds = mutable.Map.empty[String, AttrThreshold]
-
-  /** Materialize a per-attribute delta projection ONCE, returning the
-    * frame plus its row count from the same job: a LAZY checkpoint
-    * whose first action is the count — the marked RDD materializes,
-    * truncates, and counts in ONE scheduler round-trip, where
-    * `graftCheckpoint(eager) + isEmpty` paid two for the same answer.
-    * Deliberately NOT `df.rdd.graftCheckpoint() + count`: that leaves
-    * InternalRow land, and every downstream consumer then pays a
-    * Row↔InternalRow conversion boundary — measured as +0.5-2 s on
-    * each bitemporal bench cell (many standings × attributes ×
-    * advances) before this was caught in the round-15 same-window A/B. */
-  private def materializeCounted(df: DataFrame): (DataFrame, Long) = {
-    val mat = df.graftCheckpoint(eager = false)
-    (mat, mat.count())
-  }
 
   /** Per-attribute LastWriteWins view maintained — the engine's LWW
     * collection is "latest event per entity wins; output its value iff
@@ -2502,104 +2420,91 @@ class IncrementalQuery(
     * stored winner iff strictly newer; stale events change nothing.
     * State keyed by entity, the delta reduce (max per entity, map-side
     * combined) is the only shuffle — O(delta) per batch. */
-  private final class AttrLww(kind: ValueKind) {
+  private final class AttrLww {
     private val part = new SeqKeyPartitioner(shufflePartitions)
     // index: e -> (t, seq, v, isAdd) of the current winning event
     private val cell = stateCell[
         scala.collection.immutable.HashMap[Long, (Long, Long, Any, Boolean)]](
       () => scala.collection.immutable.HashMap.empty, _.size * 200L)
-    private val schema = StructType(Seq(
-      StructField("e", LongType, false),
-      StructField("v", kind.dataType, true),
-      StructField(Rel.W, LongType, false)))
 
-    /** The LWW-view diffs (a lazy commit, like [[AttrThreshold]]). */
-    def advance(delta: DataFrame): DataFrame = {
+    /** The LWW-view diffs of raw events `((e, v, t, seq), diff)` (a lazy
+      * commit, like [[AttrThreshold]]). */
+    def advance(events: Delta): Delta =
       // Batch winner per entity: the max-(t, seq) event.
-      val d = Exchange.net(rowsOf(delta)
-        .map(r => (r.getLong(0),
-          (r.getLong(2), r.getLong(4), r.get(1), r.getLong(3) > 0L))),
-        part, IncrementalQuery.LwwLatest)
-      spark.createDataFrame(
-        cell.advance1(d)(IncrementalQuery.lwwAdvanceIdx)
-          .map { case (e, v, w) => Row(e, v, w) }, schema)
-    }
+      cell.advance1(Exchange.net(events.map(LwwEvent), part, IncrementalQuery.LwwLatest))(
+        IncrementalQuery.lwwAdvanceIdx)
   }
 
   private val attrLwws = mutable.Map.empty[String, AttrLww]
 
-  /** Apply one batch of signed per-attribute deltas (`e, v, diff` rows)
-    * and return the EXACT output diffs `(c0..cn, _w)` of the whole plan.
-    * Deltas for `distinctAttrs` pass a per-attribute support threshold
+  /** Apply one batch of signed per-attribute deltas and return the EXACT
+    * output diffs of the whole plan. A feed row is `((e, v), diff)`;
+    * deltas for `distinctAttrs` pass a per-attribute support threshold
     * first, so the plan sees the Distinct-semantics relation's set
     * transitions; deltas for `lwwAttrs` must carry raw ordered EVENTS
-    * (`e, v, t, diff, seq` rows) and pass a per-attribute LastWriteWins
-    * view, so the plan sees the latest-event-wins relation's transitions.
-    *
-    * `knownCounts` carries caller-known per-attribute delta row counts:
-    * a DRIVER-BUILT delta frame (the Engine's buffer feeds, the
-    * DriverBiStore's transition frames) already knows its size, so the
-    * per-attribute materialize+count job would only rediscover it — skip
-    * both (recomputing a parallelize-backed select is free, so the
-    * checkpoint buys nothing either). Attributes absent from
-    * `knownCounts` take the counted-checkpoint path.
+    * `((e, v, t, seq), diff)` and pass a per-attribute LastWriteWins
+    * view, so the plan sees the latest-event-wins relation's
+    * transitions. No Catalyst query is planned between feed and drain.
     *
     * `consolidate = false` returns the root's diff unconsolidated (a
     * tuple may repeat, weights may cancel) for callers that collect it
     * anyway and sum weights where the rows land — saving the
-    * consolidation shuffle and its adaptive stage job.
+    * consolidation shuffle. Consolidation nets under Spark's grouping
+    * equality ([[graft.engine.Engine.groupKey]]) and outputs values as
+    * `groupBy` would (every NaN canonical, -0.0 as 0.0).
     *
     * State commits are lazy ([[StateCell.commit]]): inside a
     * [[CommitLedger.run]] they wait for the ledger's one action, outside
     * one each commit runs its own job, as a ledger of one. */
-  def advance(deltas: Map[String, DataFrame],
-      knownCounts: Map[String, Long] = Map.empty,
-      consolidate: Boolean = true): DataFrame = {
-    // Per attribute: a delta of unknown size materializes through ONE
-    // counted checkpoint job (the count doubles as the emptiness probe).
-    // The input views commit lazily: an empty view delta flows on inside
-    // the same action instead of paying a job to find it empty.
-    def counted(df: DataFrame, a: String): (DataFrame, Long) =
-      knownCounts.get(a) match {
-        case Some(n) => (df, n)
-        case None    => materializeCounted(df)
-      }
-    val attrDeltas: Map[String, DataFrame] = deltas.flatMap { case (a, df) =>
+  def advanceDeltas(feeds: Map[String, Delta], consolidate: Boolean = true): Delta = {
+    val attrDeltas = feeds.map { case (a, d) =>
       require(kinds.contains(a), s"unknown attribute $a")
-      if (lwwAttrs(a)) {
+      a -> (
+        if (lwwAttrs(a)) attrLwws.getOrElseUpdate(a, new AttrLww).advance(d)
+        else if (distinctAttrs(a))
+          attrThresholds.getOrElseUpdate(a, new AttrThreshold(kinds(a))).advance(d)
+        else d)
+    }
+    val raw = root.advance(attrDeltas)
+    if (!consolidate) raw
+    else Exchange.net(raw.map(d => (d._1.map(graft.engine.Engine.groupKey), d)),
+      new SeqKeyPartitioner(shufflePartitions),
+      (a: (Tup, Long), b: (Tup, Long)) => (a._1, a._2 + b._2))
+      .flatMap { case (_, (t, w)) => if (w == 0L) None else Some((t.map(canonCell), w)) }
+  }
+
+  /** [[advanceDeltas]] over frames — the frame edge of callers that hold
+    * DataFrames (bulk feeds, tests): each frame (`e, v, diff`, or `e, v,
+    * t, diff, seq` for a LastWriteWins attribute) converts to a feed
+    * once, and the consolidated diffs `(c0..cn, _w)` come back as a
+    * frame. */
+  def advance(deltas: Map[String, DataFrame]): DataFrame =
+    frameOf(advanceDeltas(deltas.map { case (a, df) => a -> feedOf(a, df) }))
+
+  /** One attribute's frame as a feed, cut lazily so every leaf reading
+    * it shares one evaluation. */
+  private[graft] def feedOf(a: String, df: DataFrame): Delta = {
+    val v = col("v").cast(kinds(a).dataType)
+    val cols =
+      if (!lwwAttrs(a)) Seq(col("e"), v, col("diff"))
+      else {
         require(df.columns.toSet == Set("e", "v", "t", "diff", "seq"),
           s"LastWriteWins attribute $a needs raw ordered events " +
             s"(e, v, t, diff, seq), got ${df.columns.mkString(", ")}")
-        val (raw, nRaw) = counted(df.select(col("e").cast("long"),
-          col("v").cast(kinds(a).dataType), col("t").cast("long"),
-          col("diff").cast("long"), col("seq").cast("long")), a)
-        if (nRaw == 0L) None
-        else Some(a -> attrLwws.getOrElseUpdate(a, new AttrLww(kinds(a)))
-          .advance(raw))
-      } else {
-        val (raw, nRaw) = counted(df.select(col("e").cast("long"),
-          col("v").cast(kinds(a).dataType),
-          col("diff").cast("long").as(Rel.W)), a)
-        if (nRaw == 0L) None
-        else if (!distinctAttrs(a)) Some(a -> raw)
-        else Some(a -> attrThresholds
-          .getOrElseUpdate(a, new AttrThreshold(kinds(a))).advance(raw))
+        Seq(col("e"), v, col("t"), col("seq"), col("diff"))
       }
-    }
-    if (attrDeltas.isEmpty) root.emptyDiff
-    else {
-      val raw = root.advance(attrDeltas)
-      if (!consolidate) raw
-      else {
-        // Multiset canonicalization before delivery (differential's
-        // per-batch `consolidate()`): one O(output diff) shuffle.
-        val cols = raw.columns.filter(_ != Rel.W).map(col).toIndexedSeq
-        raw.groupBy(cols: _*)
-          .agg(org.apache.spark.sql.functions.sum(col(Rel.W)).as(Rel.W))
-          .where(col(Rel.W) =!= 0L)
-      }
-    }
+    deltaOf(df.select(cols.map(c => if (c eq v) c else c.cast("long")): _*))
+      .graftCheckpoint()
   }
+
+  /** Diffs of this query's output as a frame `(c0..cn, _w)` — where rows
+    * leave the engine (sink frames, the frame API). */
+  def frameOf(d: Delta): DataFrame =
+    spark.createDataFrame(d.map { case (t, w) => Row.fromSeq(t :+ w) }, StructType(
+      root.nodeKinds.zipWithIndex.map { case (k, i) =>
+        StructField(Rel.c(i),
+          if (root.pathArray) ArrayType(k.dataType) else k.dataType, true)
+      } :+ StructField(Rel.W, LongType, false)))
 
   // Processed-time frontier (the shared streaming-maintenance
   // discipline): regressing times would diff against state that already
@@ -2669,12 +2574,13 @@ class IncrementalQuery(
             if (byAttr.nonEmpty) {
               // One action per time: the state commits, the diffs' lazy
               // cut and the count gate.
-              var diffs: DataFrame = null
-              val (n, _) = CommitLedger.run(spark.sparkContext) {
-                diffs = advance(byAttr).graftCheckpoint(false)
-                (Seq(diffs.queryExecution.toRdd), Nil)
+              var diffs: Delta = null
+              val (n, _) = CommitLedger.run(sc) {
+                diffs = advanceDeltas(byAttr.map { case (a, df) => a -> feedOf(a, df) })
+                  .graftCheckpoint()
+                (Seq(diffs), Nil)
               }
-              if (n(0) > 0L) onDiffs(t, diffs)
+              if (n(0) > 0L) onDiffs(t, frameOf(diffs))
             }
           }
         } finally batch.unpersist()
@@ -2685,24 +2591,86 @@ class IncrementalQuery(
 
 object IncrementalQuery {
 
-  /** A frame's rows as an RDD, for the maintained nodes' frame → RDD
-    * edges: the planned query's InternalRow RDD converted row by row.
-    * `Dataset.rdd` pays, per call, an SQL execution wrapper, an encoder
-    * build and a closure clean of Dataset's own lambda — and Spark 4.1's
-    * cleaner re-reads a lambda's declaring class file (here from the
-    * jar) every time; a named function class is not cleaned. On the
-    * serving path these edges ran a dozen times per advance. */
-  private[graft] def rowsOf(df: DataFrame): RDD[Row] =
-    df.queryExecution.toRdd.mapPartitions(new ToRows(df.schema))
+  /** A maintained tuple: one cell per output column, each as a collected
+    * frame row holds it. The one alias every node's delta is typed by. */
+  type Tup = Seq[Any]
 
-  private final class ToRows(schema: StructType)
-      extends (Iterator[org.apache.spark.sql.catalyst.InternalRow] => Iterator[Row])
+  /** Signed diffs `(tuple, weight)`: what maintained nodes take and
+    * return. */
+  type Delta = RDD[(Tup, Long)]
+
+  /** A frame's rows as signed diffs — every column but the last is the
+    * tuple, the last the weight — for the frame → RDD edges (bulk and
+    * streamed feeds, the frame-speaking maintainers' outputs): the
+    * planned query's InternalRow RDD converted row by row. `Dataset.rdd`
+    * pays, per call, an SQL execution wrapper, an encoder build and a
+    * closure clean of Dataset's own lambda. */
+  private[graft] def deltaOf(df: DataFrame): Delta =
+    df.queryExecution.toRdd.mapPartitions(new ToDelta(df.schema))
+
+  private final class ToDelta(schema: StructType)
+      extends (Iterator[org.apache.spark.sql.catalyst.InternalRow] => Iterator[(Tup, Long)])
       with Serializable {
-    def apply(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Iterator[Row] = {
+    def apply(it: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Iterator[(Tup, Long)] = {
       val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
         .createToScalaConverter(schema)
-      it.map(r => conv(r).asInstanceOf[Row])
+      it.map { r =>
+        val row = conv(r).asInstanceOf[Row]
+        val n = row.length - 1
+        val cells = new Array[Any](n)
+        var i = 0
+        while (i < n) { cells(i) = row.get(i); i += 1 }
+        (scala.collection.immutable.ArraySeq.unsafeWrapArray(cells), row.getLong(n))
+      }
     }
+  }
+
+  // ---- named per-row functions of the advance path (a lambda would
+  // cost a ClosureCleaner class-file read on every advance) ----
+
+  private object NonZero extends (((Tup, Long)) => Boolean) with Serializable {
+    def apply(d: (Tup, Long)): Boolean = d._2 != 0L
+  }
+
+  /** A row as its (key, value) tuples — the aggregate's delta. */
+  private final class KeyValue(k: Array[Int], v: Array[Int])
+      extends (((Tup, Long)) => ((Tup, Tup), Long)) with Serializable {
+    def apply(d: (Tup, Long)): ((Tup, Tup), Long) =
+      ((k.toSeq.map(d._1), v.toSeq.map(d._1)), d._2)
+  }
+
+  /** A join diff `(left row, right row, w)` as the output row. */
+  private final class JoinedRow(l: Array[Int], r: Array[Int])
+      extends (((Tup, Tup, Long)) => (Tup, Long)) with Serializable {
+    def apply(d: (Tup, Tup, Long)): (Tup, Long) = {
+      val out = new Array[Any](l.length + r.length)
+      var i = 0
+      while (i < l.length) { out(i) = d._1(l(i)); i += 1 }
+      while (i < out.length) { out(i) = d._2(r(i - l.length)); i += 1 }
+      (scala.collection.immutable.ArraySeq.unsafeWrapArray(out), d._3)
+    }
+  }
+
+  /** A raw LastWriteWins event `((e, v, t, seq), diff)` keyed by entity. */
+  private object LwwEvent
+      extends (((Tup, Long)) => (Long, (Long, Long, Any, Boolean))) with Serializable {
+    def apply(d: (Tup, Long)): (Long, (Long, Long, Any, Boolean)) = {
+      val t = d._1
+      (t(0).asInstanceOf[Long],
+        (t(2).asInstanceOf[Long], t(3).asInstanceOf[Long], t(1), d._2 > 0L))
+    }
+  }
+
+  /** A value as Spark's `groupBy` outputs it: NaN canonical and -0.0 as
+    * 0.0, also inside structs and arrays. */
+  private def canonCell(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else d + 0.0
+    case r: org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema =>
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        r.toSeq.map(canonCell).toArray, r.schema)
+    case r: Row => Row.fromSeq(r.toSeq.map(canonCell))
+    case s: scala.collection.Seq[_] => s.map(canonCell).toSeq
+    case other => other
   }
 
   /** Partitioned static-arrangement index of the linear-recursion
@@ -2839,9 +2807,6 @@ object IncrementalQuery {
     override def hashCode: Int = n
   }
 
-  private def rowKey(r: Row, width: Int): Seq[Any] =
-    (0 until width).map(r.get).toIndexedSeq
-
   /** Partition a Seq key by the values at `keyIdx` — left rows (key
     * embedded at those positions) and right keys (identity indices) of
     * an antijoin land where their key does. */
@@ -2895,7 +2860,7 @@ object IncrementalQuery {
       requireNonNeg: Boolean,
       aggRow: (Seq[Any], Iterable[(Seq[Any], Long)]) => Option[Seq[Any]])(
       s: GroupIndex, dIt: Iterator[((Seq[Any], Seq[Any]), Long)])
-    : (GroupIndex, Array[Seq[Any]]) = {
+    : (GroupIndex, Array[(Seq[Any], Long)]) = {
     val byKey =
       mutable.LinkedHashMap.empty[Seq[Any], mutable.ArrayBuffer[(Seq[Any], Long)]]
     val deltas = mutable.ArrayBuffer.empty[((Seq[Any], Seq[Any]), Long)]
@@ -2903,7 +2868,7 @@ object IncrementalQuery {
       byKey.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += ((v, w))
       deltas += kv
     }
-    val out = mutable.ArrayBuffer.empty[Seq[Any]]
+    val out = mutable.ArrayBuffer.empty[(Seq[Any], Long)]
     byKey.foreach { case (k, dvs) =>
       val oldG = s.group(k)
       var g = oldG
@@ -2917,8 +2882,8 @@ object IncrementalQuery {
       val o = if (oldG.isEmpty) None else aggRow(k, oldG)
       val n = if (g.isEmpty) None else aggRow(k, g)
       if (o != n) {
-        o.foreach(a => out += (a :+ -1L))
-        n.foreach(a => out += (a :+ 1L))
+        o.foreach(a => out += ((a, -1L)))
+        n.foreach(a => out += ((a, 1L)))
       }
     }
     (s.merged(deltas), out.toArray)
@@ -3004,9 +2969,9 @@ object IncrementalQuery {
       s: scala.collection.immutable.HashMap[Long, (Long, Long, Any, Boolean)],
       dIt: Iterator[(Long, (Long, Long, Any, Boolean))])
     : (scala.collection.immutable.HashMap[Long, (Long, Long, Any, Boolean)],
-       Array[(Long, Any, Long)]) = {
+       Array[(Tup, Long)]) = {
     var m = s
-    val out = mutable.ArrayBuffer.empty[(Long, Any, Long)]
+    val out = mutable.ArrayBuffer.empty[(Tup, Long)]
     dIt.foreach { case (e, c) =>
       val st = m.get(e)
       val newer = st.forall(w => c._1 > w._1 || (c._1 == w._1 && c._2 > w._2))
@@ -3014,8 +2979,8 @@ object IncrementalQuery {
         val oldOut = st.collect { case w if w._4 => w._3 }
         val newOut = if (c._4) Some(c._3) else None
         if (oldOut != newOut) {
-          oldOut.foreach(v => out += ((e, v, -1L)))
-          newOut.foreach(v => out += ((e, v, 1L)))
+          oldOut.foreach(v => out += ((Seq(e, v), -1L)))
+          newOut.foreach(v => out += ((Seq(e, v), 1L)))
         }
         m = m.updated(e, c)
       } // else: stale — a globally-unique seq means "not newer" is stale

@@ -399,6 +399,23 @@ private[graft] object CommitLedger {
     (counts, rows.map(_.result()))
   }
 
+  /** Run `f` — an advance's ledger run — with both call-site forms set
+    * to `site`, and restore them after: the RDDs it builds (many per
+    * node) skip Spark's stack walk for their creation site, and the long
+    * form's `graft.streaming.` frame attributes the action's job to the
+    * streaming module. */
+  def named[T](sc: SparkContext, site: String)(f: => T): T = {
+    val (short, long) = ("callSite.short", "callSite.long")
+    val prev = (sc.getLocalProperty(short), sc.getLocalProperty(long))
+    sc.setLocalProperty(short, site)
+    sc.setLocalProperty(long, s"graft.streaming.CommitLedger.run\n$site")
+    try f
+    finally {
+      sc.setLocalProperty(short, prev._1)
+      sc.setLocalProperty(long, prev._2)
+    }
+  }
+
   /** Spec probe: called with the action RDD of every [[materialize]]
     * before its job runs (lineage shape pins). */
   @volatile private[graft] var actionProbe: RDD[_] => Unit = null

@@ -85,9 +85,10 @@ class BiAdvanceJobsSpec extends AnyFunSuite {
     (1 to 3).foreach(_ => step())
 
     var shape: TestSpark.JobShape = null
-    val aggregating = TestSpark.aggregatingShufflesOf {
+    val lineage = TestSpark.actionRddsOf {
       shape = TestSpark.shapeOf("warm bitemporal advance")(step())
     }
+    val aggregating = TestSpark.aggregatingShuffles(lineage)
     val warm = shape.jobs
     info(s"warm bitemporal advance (3 lattice times): $warm jobs, " +
       s"result stage tasks ${shape.resultTasks}")
@@ -102,6 +103,10 @@ class BiAdvanceJobsSpec extends AnyFunSuite {
       s"result stages of ${shape.resultTasks} tasks, over 4 partitions")
     // Every delta nets through the exchange: no by-key aggregation shuffle.
     assert(aggregating.isEmpty, s"aggregating shuffles in the action: $aggregating")
+    // No Catalyst query between feed and drain: every RDD of the action
+    // is the maintained nodes' own (a frame edge ran 20+ SQL operators).
+    val sql = TestSpark.sqlRdds(lineage)
+    assert(sql.isEmpty, s"SQL-built RDDs in the action: ${sql.mkString(", ")}")
 
     // A late COUNT subscriber on the live lane: its replay of the lane's
     // view is built at the advance's first time, inside the same action.

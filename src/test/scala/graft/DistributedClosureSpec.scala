@@ -18,8 +18,8 @@ class DistributedClosureSpec extends AnyFunSuite {
   private def closure(edges: Set[(Long, Long)]): Set[(Long, Long)] =
     DriverClosure.of(edges)
 
-  private def drain(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
+  private def drain(d: org.apache.spark.rdd.RDD[((Long, Long), Long)]): Set[(Long, Long, Long)] =
+    d.collect().map { case ((s, t), w) => (s, t, w) }.toSet
 
   private def rdd(deltas: Seq[((Long, Long), Long)]) =
     spark.sparkContext.parallelize(deltas, 2)
@@ -38,8 +38,8 @@ class DistributedClosureSpec extends AnyFunSuite {
       val before = closure(accumulated)
       accumulated ++= edges
       val after = closure(accumulated)
-      val got = drain(dist.advanceSignedRdd(adds(edges), batch.toLong))
-      val sib = drain(bcast.advanceSignedRdd(adds(edges), batch.toLong))
+      val got = drain(dist.advanceSignedRdd(adds(edges)))
+      val sib = drain(bcast.advanceSignedRdd(adds(edges)))
       assert(got == (after -- before).map(e => (e._1, e._2, 1L)),
         s"batch $batch vs reference, edges=$edges")
       assert(got == sib, s"batch $batch vs sibling, edges=$edges")
@@ -68,8 +68,8 @@ class DistributedClosureSpec extends AnyFunSuite {
         val expected =
           (after -- before).map(e => (e._1, e._2, 1L)) ++
             (before -- after).map(e => (e._1, e._2, -1L))
-        val got = drain(dist.advanceSignedRdd(rdd(deltas), batch.toLong))
-        val sib = drain(bcast.advanceSignedRdd(rdd(deltas), batch.toLong))
+        val got = drain(dist.advanceSignedRdd(rdd(deltas)))
+        val sib = drain(bcast.advanceSignedRdd(rdd(deltas)))
         assert(got == expected, s"batch $batch vs reference, deltas=$deltas")
         assert(got == sib, s"batch $batch vs sibling, deltas=$deltas")
         sawRetraction ||= got.exists(_._3 == -1L)
@@ -81,18 +81,18 @@ class DistributedClosureSpec extends AnyFunSuite {
 
   test("retracting an absent edge fails loudly, distributed") {
     val dist = new DistributedClosure(spark, partitions = 2)
-    dist.advanceSignedRdd(adds(Seq((1L, 2L))), 1L).count()
+    dist.advanceSignedRdd(adds(Seq((1L, 2L)))).count()
     val e = intercept[IllegalArgumentException] {
-      dist.advanceSignedRdd(rdd(Seq(((7L, 8L), -1L))), 2L).count()
+      dist.advanceSignedRdd(rdd(Seq(((7L, 8L), -1L)))).count()
     }
     assert(e.getMessage.contains("retraction of absent edges"))
   }
 
   test("delete and re-add of the same edge in one batch is a no-op") {
     val dist = new DistributedClosure(spark, partitions = 2)
-    dist.advanceSignedRdd(adds(Seq((1L, 2L), (2L, 3L))), 1L).count()
+    dist.advanceSignedRdd(adds(Seq((1L, 2L), (2L, 3L)))).count()
     val got = drain(dist.advanceSignedRdd(
-      rdd(Seq(((1L, 2L), -1L), ((1L, 2L), 1L))), 2L))
+      rdd(Seq(((1L, 2L), -1L), ((1L, 2L), 1L)))))
     assert(got.isEmpty)
     assert(dist.size == 3L)
   }

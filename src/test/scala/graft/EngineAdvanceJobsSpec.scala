@@ -84,9 +84,10 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
     rules.foreach(r => assert(e.servedIncrementally(r.name), r.name))
 
     var shape: TestSpark.JobShape = null
-    val aggregating = TestSpark.aggregatingShufflesOf {
+    val lineage = TestSpark.actionRddsOf {
       shape = TestSpark.shapeOf("warm maintained advance")(step())
     }
+    val aggregating = TestSpark.aggregatingShuffles(lineage)
     val warm = shape.jobs
     info(s"warm maintained advance: $warm jobs, result stage tasks ${shape.resultTasks}")
     // Measured: 1 job. With one job per state commit and per collect
@@ -100,6 +101,10 @@ class EngineAdvanceJobsSpec extends AnyFunSuite {
       s"result stages of ${shape.resultTasks} tasks, over $Partitions partitions")
     // Every delta nets through the exchange: no by-key aggregation shuffle.
     assert(aggregating.isEmpty, s"aggregating shuffles in the action: $aggregating")
+    // No Catalyst query between feed and drain: every RDD of the action
+    // is the maintained nodes' own (a frame edge ran 20+ SQL operators).
+    val sql = TestSpark.sqlRdds(lineage)
+    assert(sql.isEmpty, s"SQL-built RDDs in the action: ${sql.mkString(", ")}")
 
     // A late COUNT subscriber: its replay of the whole history is one
     // driver-built feed per attribute, and one action for its state

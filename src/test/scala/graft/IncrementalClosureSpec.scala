@@ -26,8 +26,7 @@ class IncrementalClosureSpec extends AnyFunSuite {
   /** One signed batch through the ingest entry: (src, dst) → diff. */
   private def signed(inc: IncrementalClosure,
       deltas: Seq[((Long, Long), Long)], t: Long): Map[(Long, Long), Long] =
-    inc.advanceSignedRdd(spark.sparkContext.parallelize(deltas, 2), t).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+    inc.advanceSignedRdd(spark.sparkContext.parallelize(deltas, 2)).collect().toMap
 
   /** A batch of additions (distinct edges, +1 each). */
   private def add(inc: IncrementalClosure, edges: Seq[(Long, Long)],

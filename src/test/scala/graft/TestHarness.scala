@@ -74,27 +74,53 @@ object TestSpark {
     }
   }
 
-  /** The shuffles of every `CommitLedger` action `body` runs that carry
-    * an aggregator or a map-side combine (a by-key aggregation). */
-  def aggregatingShufflesOf(body: => Unit): Seq[org.apache.spark.ShuffleDependency[_, _, _]] = {
-    val found = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.ShuffleDependency[_, _, _]]
+  /** Every RDD in the lineage of every `CommitLedger` action `body` runs
+    * (down to checkpointed cuts). */
+  def actionRddsOf(body: => Unit): Seq[org.apache.spark.rdd.RDD[_]] = {
+    val found = scala.collection.mutable.LinkedHashMap.empty[Int, org.apache.spark.rdd.RDD[_]]
     graft.streaming.CommitLedger.actionProbe = { action =>
-      val seen = scala.collection.mutable.HashSet.empty[Int]
       val stack = scala.collection.mutable.Stack[org.apache.spark.rdd.RDD[_]](action)
       while (stack.nonEmpty) {
         val r = stack.pop()
-        if (seen.add(r.id)) r.dependencies.foreach { d =>
-          d match {
-            case s: org.apache.spark.ShuffleDependency[_, _, _]
-                if s.aggregator.isDefined || s.mapSideCombine => found += s
-            case _ => ()
-          }
-          stack.push(d.rdd)
+        if (!found.contains(r.id)) {
+          found(r.id) = r
+          r.dependencies.foreach(d => stack.push(d.rdd))
         }
       }
     }
     try body finally graft.streaming.CommitLedger.actionProbe = null
-    found.toSeq
+    found.values.toSeq
+  }
+
+  /** The shuffles among `rdds`' dependencies that carry an aggregator or
+    * a map-side combine (a by-key aggregation). */
+  def aggregatingShuffles(rdds: Seq[org.apache.spark.rdd.RDD[_]])
+      : Seq[org.apache.spark.ShuffleDependency[_, _, _]] =
+    rdds.flatMap(_.dependencies.collect {
+      case s: org.apache.spark.ShuffleDependency[_, _, _]
+          if s.aggregator.isDefined || s.mapSideCombine => s
+    })
+
+  /** The RDDs among `rdds` that an SQL query built: an
+    * `org.apache.spark.sql` class, or an operation scope (or enclosing
+    * scope) named after a physical operator — SQL operators run under
+    * capitalized node names ("Project", "Exchange", "Scan ..."), RDD
+    * methods under their own lower-case names. */
+  def sqlRdds(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Seq[String] = {
+    val scopeOf = classOf[org.apache.spark.rdd.RDD[_]].getMethod("scope")
+    def names(scope: Option[AnyRef]): List[String] = scope match {
+      case Some(s) =>
+        s.getClass.getMethod("name").invoke(s).asInstanceOf[String] ::
+          names(s.getClass.getMethod("parent").invoke(s).asInstanceOf[Option[AnyRef]])
+      case None => Nil
+    }
+    rdds.flatMap { r =>
+      val scopes = names(scopeOf.invoke(r).asInstanceOf[Option[AnyRef]])
+      if (r.getClass.getName.startsWith("org.apache.spark.sql.") ||
+          scopes.exists(n => n.nonEmpty && n.head.isUpper))
+        Some(s"${r.getClass.getSimpleName}[${scopes.mkString(" < ")}]")
+      else None
+    }
   }
 
   /** `spark.sql.autoBroadcastJoinThreshold`, the byte gate every

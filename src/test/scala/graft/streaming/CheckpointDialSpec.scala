@@ -53,13 +53,13 @@ class CheckpointDialSpec extends AnyFunSuite {
     def run(): Seq[(Long, Long, Long)] = {
       val inc = new IncrementalClosure(spark, partitions = 2)
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      def drainOf(df: org.apache.spark.sql.DataFrame): Unit =
-        out ++= df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      def drainOf(d: org.apache.spark.rdd.RDD[((Long, Long), Long)], t: Long): Unit =
+        out ++= d.collect().map { case ((s, e), _) => (s, e, t) }
       def batch(deltas: ((Long, Long), Long)*) =
         spark.sparkContext.parallelize(deltas, 2)
-      drainOf(inc.advanceSignedRdd(batch(((1L, 2L), 1L), ((2L, 3L), 1L)), 0L))
-      drainOf(inc.advanceSignedRdd(batch(((3L, 4L), 1L)), 1L))
-      drainOf(inc.advanceSignedRdd(batch(((2L, 3L), -1L)), 2L))
+      drainOf(inc.advanceSignedRdd(batch(((1L, 2L), 1L), ((2L, 3L), 1L))), 0L)
+      drainOf(inc.advanceSignedRdd(batch(((3L, 4L), 1L))), 1L)
+      drainOf(inc.advanceSignedRdd(batch(((2L, 3L), -1L))), 2L)
       out.toSeq.sorted
     }
     val base = run()
