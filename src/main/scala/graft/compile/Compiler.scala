@@ -74,45 +74,6 @@ object Compiler extends Serializable {
       val gg = if (g == 0) 1L else g
       (sign * num / gg, sign * den / gg)
     }
-
-  /** interleave(values, constants) — the pull path layout
-    * (`src/plan/pull.rs:53-79`); `LinearRows.interleave` is its per-row
-    * twin on the maintained path. */
-  private[graft] def pullInterleave(
-      cols: Seq[(Column, ValueKind)],
-      consts: Seq[String]): Seq[(Column, ValueKind)] =
-    if (cols.isEmpty || consts.isEmpty) cols
-    else {
-      val total = cols.size + consts.size
-      val out = mutable.ArrayBuffer.empty[(Column, ValueKind)]
-      var (nv, nc) = (0, 0)
-      (0 until total).foreach { i =>
-        if (i % 2 == 0) { out += cols(nv); nv += 1 }
-        else { out += ((lit(consts(nc)), KAid)); nc += 1 }
-      }
-      out.toSeq
-    }
-
-  /** Output columns of one pull-level branch over `inputCols`: an
-    * attribute branch (`attr = Some((name, kind, valueColumn))`) or the
-    * synthetic db__id branch retaining the child eid (`attr = None` —
-    * `src/plan/pull.rs:211-230`). */
-  private[graft] def pullBranchCols(
-      inputCols: Seq[(Column, ValueKind)], pathAttrs: Seq[String],
-      cardMany: Boolean,
-      attr: Option[(String, ValueKind, Column)]): Seq[(Column, ValueKind)] = {
-    val path = pullInterleave(inputCols, pathAttrs)
-    attr match {
-      case Some((a, kind, vCol)) =>
-        val base = if (pathAttrs.isEmpty || cardMany) path else path.dropRight(1)
-        base ++ Seq((lit(a), KAid), (Variant.encode(vCol, kind), KVariant))
-      case None =>
-        val base = path.dropRight(1)
-        val eidCol = path.last
-        base ++ Seq(
-          (lit("db__id"), KAid), (Variant.encode(eidCol._1, eidCol._2), KVariant))
-    }
-  }
 }
 
 /** Compiles the `Plan` algebra to DataFrames — the analog of the reference's
@@ -1584,49 +1545,23 @@ class Compiler(
     Rel(outVars, outVars.map(l.kindOf), result, unit = true)
   }
 
-  /** TRUNCATE / ADD / SUBTRACT — `src/plan/transform.rs:86-192`. */
+  /** TRUNCATE / ADD / SUBTRACT — the shared arithmetic
+    * ([[graft.streaming.LinearRows.Arith]]) as one column. */
   private def transform(
       rel: Rel, tvars: Seq[Int], resultVar: Int, fn: Fn,
       consts: Seq[Option[Value]]): Rel = {
     val operands = tvars.map(rel.colOf)
-    val constNums: Seq[Long] = consts.flatten.collect { case Value.VNumber(n) => n }
-    val (newCol, kind) = fn match {
-      case Fn.TRUNCATE =>
-        val interval = consts.lift(1).flatten match {
-          case Some(Value.VString(s)) => s
-          case None                   => ":hour"
-          case other                  => sys.error(s"TRUNCATE interval must be a string, got $other")
-        }
-        val modVal = interval match {
-          case ":minute" => 60000L
-          case ":hour"   => 3600000L
-          case ":day"    => 86400000L
-          case ":week"   => 604800000L
-          case other     => sys.error(s"unknown TRUNCATE interval $other")
-        }
-        val t = operands.head
-        (t - (t % lit(modVal)), KInstant)
-      case Fn.ADD =>
-        val all = operands ++ constNums.map(lit(_))
-        (all.reduce(_ + _), KNumber)
-      case Fn.SUBTRACT =>
-        // The reference doubles the minuend (constants(0) if present, else
-        // the first variable) then subtracts ALL vars and ALL constants —
-        // including the minuend's own occurrence — so the net effect is
-        // minuend - (everything else), positionally exact even when other
-        // operands equal the minuend's value (src/plan/transform.rs:146-192).
-        val minuend: Column = consts.lift(0).flatten match {
-          case Some(Value.VNumber(m)) => lit(m)
-          case Some(other) => sys.error(s"SUBTRACT minuend must be a number, got $other")
-          case None        => operands.head
-        }
-        val subtrahends = operands ++ constNums.map(lit(_))
-        (subtrahends.foldLeft(minuend + minuend)(_ - _), KNumber)
-    }
+    val a = graft.streaming.LinearRows.arith(fn, consts, operands.size)
+    def term(x: Either[Int, Long]): Column = x.fold(operands, lit(_))
+    val newCol =
+      if (a.mod > 0L) operands.head - (operands.head % lit(a.mod))
+      else a.terms.tail.foldLeft(term(a.terms.head._2)) { case (acc, (plus, x)) =>
+        if (plus) acc + term(x) else acc - term(x)
+      }
     val n = rel.vars.length
     val df = rel.df.select(
       (rel.vars.indices.map(i => col(c(i))) :+ newCol.as(c(n)) :+ col(W)): _*)
-    Rel(rel.vars :+ resultVar, rel.kinds :+ kind, df, unit = rel.unit)
+    Rel(rel.vars :+ resultVar, rel.kinds :+ a.kind, df, unit = rel.unit)
   }
 
   private def rationalCol(num: Column, den: Column): Column =
@@ -1962,48 +1897,50 @@ class Compiler(
     Some(projectTo(rel, target))
   }
 
-  /** Single pull level — `src/plan/pull.rs:94-237`. The maintained path
-    * decorates per row with `LinearRows.pullBranch`, its twin. */
+  /** Single pull level — `src/plan/pull.rs:94-237`: the layouts of
+    * [[graft.streaming.LinearRows.pullBranch]] as columns, so the
+    * maintained path decorates each row exactly as this compiles. */
   private def pullLevel(
       input: Rel, pullVar: Int, pullAttrs: Seq[String],
       pathAttrs: Seq[String], cardMany: Boolean): Rel = {
-
-    val inputCols: Seq[(Column, ValueKind)] =
-      input.vars.indices.map(i => (col(c(i)), input.kinds(i)))
+    import graft.streaming.LinearRows.{Cell, Col, Enc, Lit, interleave, pullBranch}
+    val n = input.vars.length
+    // The pulled value, column `n` of a branch's layout, is `_pv`.
+    def column(cell: Cell): Column = cell match {
+      case Col(i)    => if (i < n) col(c(i)) else col("_pv")
+      case Lit(v)    => lit(v)
+      case Enc(e, k) => Variant.encode(column(e), k)
+    }
+    def select(df: DataFrame, cells: Seq[(Cell, ValueKind)], w: Column) =
+      df.select(cells.zipWithIndex.map { case ((cell, _), i) => column(cell).as(c(i)) } :+
+        w.as(W): _*)
 
     if (pullAttrs.isEmpty) {
       if (pathAttrs.isEmpty) input
       else {
-        val inter = Compiler.pullInterleave(inputCols, pathAttrs)
-        val df = input.df.select(
-          inter.zipWithIndex.map { case ((cc, _), i) => cc.as(c(i)) } :+ col(W): _*)
-        Rel(inter.indices.map(i => -(i + 1)), inter.map(_._2), df, unit = input.unit)
+        val inter = interleave(input.kinds, pathAttrs)
+        Rel(inter.indices.map(i => -(i + 1)), inter.map(_._2),
+          select(input.df, inter, col(W)), unit = input.unit)
       }
     } else {
       val eIdx = input.idx(pullVar)
       val branches: Seq[DataFrame] = pullAttrs.map { a =>
         val attrDf = source.collection(a)
           .select(col("e").as("_pe"), col("v").as("_pv"), col(W).as("_pw"))
-        val joined = input.df.join(attrDf, col(c(eIdx)) === col("_pe"))
-        val outCols = Compiler.pullBranchCols(inputCols, pathAttrs, cardMany,
-          Some((a, source.kind(a), col("_pv"))))
-        joined.select(
-          outCols.zipWithIndex.map { case ((cc, _), i) => cc.as(c(i)) } :+
-            (col(W) * col("_pw")).as(W): _*)
+        select(input.df.join(attrDf, col(c(eIdx)) === col("_pe")),
+          pullBranch(input.kinds, pathAttrs, cardMany, Some((a, source.kind(a)))),
+          col(W) * col("_pw"))
       }
 
       val withDbId: Seq[DataFrame] =
         if (pathAttrs.isEmpty || cardMany) branches
-        else {
-          val outCols = Compiler.pullBranchCols(inputCols, pathAttrs, cardMany, None)
-          branches :+ input.df.select(
-            outCols.zipWithIndex.map { case ((cc, _), i) => cc.as(c(i)) } :+ col(W): _*)
-        }
+        else branches :+ select(input.df,
+          pullBranch(input.kinds, pathAttrs, cardMany, None), col(W))
 
       val unioned = withDbId.reduce(_ unionAll _)
       val arity = unioned.columns.length - 1
-      val pathKinds = Compiler.pullBranchCols(inputCols, pathAttrs, cardMany,
-        Some((pullAttrs.head, source.kind(pullAttrs.head), lit(null)))).map(_._2)
+      val pathKinds = pullBranch(input.kinds, pathAttrs, cardMany,
+        Some((pullAttrs.head, source.kind(pullAttrs.head)))).map(_._2)
       // Weight-1 input × weight-1 attributes ⇒ weight-1 paths.
       Rel((0 until arity).map(i => -(i + 1)), pathKinds, unioned,
         unit = input.unit && pullAttrs.forall(source.unit))

@@ -3,6 +3,7 @@ package graft.engine
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.compile.{Compiler, Rel}
@@ -807,11 +808,14 @@ object Engine {
 
   private final case class RealBits(bits: Long)
 
-  /** The value Spark's `groupBy` outputs for a [[deepNative]] cell: NaN
-    * canonical, -0.0 as 0.0, nested sequences alike. */
+  /** The value Spark's `groupBy` outputs for a cell: NaN canonical,
+    * -0.0 as 0.0, inside structs and sequences alike. */
   private[graft] def normalizeReals(v: Any): Any = v match {
     case d: Double => if (d.isNaN) Double.NaN else d + 0.0
     case f: Float  => if (f.isNaN) Float.NaN else f + 0.0f
+    case r: GenericRowWithSchema =>
+      new GenericRowWithSchema(r.toSeq.map(normalizeReals).toArray, r.schema)
+    case r: Row => Row.fromSeq(r.toSeq.map(normalizeReals))
     case s: scala.collection.Seq[_] => s.map(normalizeReals).toSeq
     case other => other
   }

@@ -125,7 +125,8 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
       val added = addFresh(fresh)
       val retr = RddKernel.subtract(removed, Seq(added))
       val asserted = RddKernel.subtract(added, Seq(removed))
-      signed(retr, -1L).union(signed(asserted, 1L))
+      retr.map(new DistributedClosure.Signed(-1L))
+        .union(asserted.map(new DistributedClosure.Signed(1L)))
     } finally net.unpersist(blocking = false)
   }
 
@@ -331,9 +332,6 @@ class DistributedClosure(spark: SparkSession, partitions: Int = 32) {
     }
     if (hits.isEmpty) sc.emptyRDD[(Tup, Null)] else sc.union(hits)
   }
-
-  private def signed(rdd: RDD[(Tup, Null)], diff: Long): RDD[(Tup, Long)] =
-    rdd.map { case (e, _) => (e, diff) }
 }
 
 object DistributedClosure {
@@ -341,6 +339,13 @@ object DistributedClosure {
   private type Tup = (Long, Long)
   private type Adj = HashMap[Long, Array[Long]]
   private type TSet = HashSet[Tup]
+
+  /** A closure pair as a signed diff of weight `diff` (named: no
+    * per-advance closure clean). */
+  private[streaming] final class Signed(diff: Long)
+      extends (((Tup, Null)) => (Tup, Long)) with Serializable {
+    def apply(d: (Tup, Null)): (Tup, Long) = (d._1, diff)
+  }
 
   // ---- index merges (top-level: tasks never capture the operator) ----
 

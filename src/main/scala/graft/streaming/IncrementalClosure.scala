@@ -144,7 +144,8 @@ class IncrementalClosure(
     val added = addFresh(adds)
     val retr = RddKernel.subtract(removed, Seq(added))
     val asserted = RddKernel.subtract(added, Seq(removed))
-    signed(retr, -1L).union(signed(asserted, 1L))
+    retr.map(new DistributedClosure.Signed(-1L))
+      .union(asserted.map(new DistributedClosure.Signed(1L)))
   }
 
   /** Mutate state with genuinely fresh additions; return the new closure
@@ -415,9 +416,6 @@ class IncrementalClosure(
     (RddKernel.assertPartitioned(
       out.mapPartitions(_.map(t => (t, null: Null))), part), n)
   }
-
-  private def signed(rdd: RDD[(Tup, Null)], diff: Long): RDD[(Tup, Long)] =
-    rdd.map { case (e, _) => (e, diff) }
 }
 
 object IncrementalClosure {

@@ -200,13 +200,10 @@ class IncrementalQuery(
   private def compileLinear(p: Plan, children: Map[String, Node]): LinearRows.Lin = {
     import LinearRows._
     def scan(a: String, steps: Step*) = Seq(Branch(a, child = false, steps.toVector, 1L))
-    def test(pred: Predicate, l: (Opnd, ValueKind), r: (Opnd, ValueKind)) = {
-      UnmaintainablePlan.require(comparable(l._2, r._2),
-        s"comparison of ${l._2} with ${r._2} needs a cast")
-      Test(pred, l._1, r._1)
-    }
+    def test(pred: Predicate, l: (Opnd, ValueKind), r: (Opnd, ValueKind)) =
+      comparison(pred, l._1, l._2.dataType, r._1, r._2.dataType)
     def col(i: Int, k: ValueKind) = (Opnd(i, null), k)
-    def const(v: Value) = (Opnd(-1, native(v)), ValueKind.of(v))
+    def const(v: Value) = (Opnd(-1, v.native), ValueKind.of(v))
     p match {
       case Plan.MatchA(e, a, v) if e == v =>
         Lin(Seq(e), Seq(ValueKind.KEid), scan(a,
@@ -252,7 +249,7 @@ class IncrementalQuery(
       case Plan.PullAll(_, pas) =>
         // [e a v] for every attribute — src/plan/pull.rs:288-358.
         Lin(Seq(-1, -2, -3), Seq(ValueKind.KEid, ValueKind.KAid, ValueKind.KVariant),
-          pas.flatMap(a => scan(a, Layout(Array(Col(0), Lit(a), Enc(1, kinds(a)))))))
+          pas.flatMap(a => scan(a, Layout(Array(Col(0), Lit(a), Enc(Col(1), kinds(a)))))))
       case Plan.PullLevel(_, s, _, _, pathAttrs, _) =>
         val in = compileLinear(s, children)
         if (pathAttrs.isEmpty) in
@@ -281,7 +278,7 @@ class IncrementalQuery(
         val deltas: Map[Int, DataFrame] =
           attrBindings.zipWithIndex.flatMap { case (b, i) =>
             attrDeltas.get(b.a).map(d => i -> spark.createDataFrame(
-              d.map { case (t, w) => Row.fromSeq(t :+ w) }, StructType(Seq(StructField("e", LongType, false),
+              d.map(ToRow), StructType(Seq(StructField("e", LongType, false),
                 StructField("v", kinds(b.a).dataType, true),
                 StructField("diff", LongType, false)))))
           }.toMap
@@ -740,12 +737,11 @@ class IncrementalQuery(
         if (n == 0L) noDiff
         else {
           chooseStore(n)
-          val edges = ed.map { case (t, w) =>
-            ((t(0).asInstanceOf[Long], t(1).asInstanceOf[Long]), w) }
+          val edges = ed.map(ToEdge)
           val out =
             if (distributedCl != null) distributedCl.advanceSignedRdd(edges)
             else broadcastCl.advanceSignedRdd(edges)
-          out.map { case ((s, d), w) => (Seq(s, d), w) }
+          out.map(FromEdge)
         }
       }
   }
@@ -810,7 +806,7 @@ class IncrementalQuery(
     * discipline — a batch recomputes the old/new products of exactly
     * the entities it touches, partition-locally, one O(delta) shuffle
     * per side), then the batch compiler's decoration
-    * ([[LinearRows.pullBranch]], `Compiler.pullBranchCols` per row)
+    * ([[LinearRows.pullBranch]], the layout the batch `pullLevel` selects)
     * applied to the join diffs; the synthetic db__id branch is linear
     * in the child. Output is the exact diff of the batch `pullLevel`
     * relation (multiset: child weight × attribute weight). */
@@ -871,7 +867,7 @@ class IncrementalQuery(
                 (cIt.next(), aIt.next()), dcIt, daIt)
             Iterator.single((newA, out))
           }
-          aCell.commit(stepped).map { case (l, r, w) => (l :+ r(1), w) }.mapPartitions(rs)
+          aCell.commit(stepped).map(WithPulled).mapPartitions(rs)
         }
         val eIdxK = Seq(eIdx) // local: no node capture in the closure
         // Nothing reads this commit's output; the ledger still
@@ -895,12 +891,8 @@ class IncrementalQuery(
     val attrs: Set[String] = paths.flatMap(_.attrs).toSet
     def advance(attrDeltas: Map[String, Delta]): Delta =
       if (!touched(attrDeltas)) noDiff
-      else unionAll(paths.map { p =>
-        val ks = p.nodeKinds.toArray
-        p.advance(attrDeltas).map { case (t, w) =>
-          (Seq(t.indices.map(i => LinearRows.encode(t(i), ks(i)))), w)
-        }
-      })
+      else unionAll(paths.map(p =>
+        p.advance(attrDeltas).map(new PackPath(p.nodeKinds.toArray))))
   }
 
   // ---- Plan → node tree ----------------------------------------------
@@ -2467,10 +2459,8 @@ class IncrementalQuery(
     }
     val raw = root.advance(attrDeltas)
     if (!consolidate) raw
-    else Exchange.net(raw.map(d => (d._1.map(graft.engine.Engine.groupKey), d)),
-      new SeqKeyPartitioner(shufflePartitions),
-      (a: (Tup, Long), b: (Tup, Long)) => (a._1, a._2 + b._2))
-      .flatMap { case (_, (t, w)) => if (w == 0L) None else Some((t.map(canonCell), w)) }
+    else Exchange.net(raw.map(GroupKeyed), new SeqKeyPartitioner(shufflePartitions),
+      SumWeights).flatMap(Netted)
   }
 
   /** [[advanceDeltas]] over frames — the frame edge of callers that hold
@@ -2500,7 +2490,7 @@ class IncrementalQuery(
   /** Diffs of this query's output as a frame `(c0..cn, _w)` — where rows
     * leave the engine (sink frames, the frame API). */
   def frameOf(d: Delta): DataFrame =
-    spark.createDataFrame(d.map { case (t, w) => Row.fromSeq(t :+ w) }, StructType(
+    spark.createDataFrame(d.map(ToRow), StructType(
       root.nodeKinds.zipWithIndex.map { case (k, i) =>
         StructField(Rel.c(i),
           if (root.pathArray) ArrayType(k.dataType) else k.dataType, true)
@@ -2661,16 +2651,53 @@ object IncrementalQuery {
     }
   }
 
-  /** A value as Spark's `groupBy` outputs it: NaN canonical and -0.0 as
-    * 0.0, also inside structs and arrays. */
-  private def canonCell(v: Any): Any = v match {
-    case d: Double => if (d.isNaN) Double.NaN else d + 0.0
-    case r: org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema =>
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-        r.toSeq.map(canonCell).toArray, r.schema)
-    case r: Row => Row.fromSeq(r.toSeq.map(canonCell))
-    case s: scala.collection.Seq[_] => s.map(canonCell).toSeq
-    case other => other
+  /** A diff keyed by its tuple under grouping equality. */
+  private object GroupKeyed extends (((Tup, Long)) => (Tup, (Tup, Long))) with Serializable {
+    def apply(d: (Tup, Long)): (Tup, (Tup, Long)) = (d._1.map(graft.engine.Engine.groupKey), d)
+  }
+
+  private object SumWeights
+      extends (((Tup, Long), (Tup, Long)) => (Tup, Long)) with Serializable {
+    def apply(a: (Tup, Long), b: (Tup, Long)): (Tup, Long) = (a._1, a._2 + b._2)
+  }
+
+  /** A netted diff as `groupBy` outputs it (reals normalized), or
+    * nothing at weight 0. */
+  private object Netted
+      extends (((Tup, (Tup, Long))) => Option[(Tup, Long)]) with Serializable {
+    def apply(d: (Tup, (Tup, Long))): Option[(Tup, Long)] = {
+      val (t, w) = d._2
+      if (w == 0L) None else Some((t.map(graft.engine.Engine.normalizeReals), w))
+    }
+  }
+
+  /** A tuple and weight as a frame row `(c0..cn, diff)`. */
+  private object ToRow extends (((Tup, Long)) => Row) with Serializable {
+    def apply(d: (Tup, Long)): Row = Row.fromSeq(d._1 :+ d._2)
+  }
+
+  /** A binary long tuple as a closure edge, and back. */
+  private object ToEdge
+      extends (((Tup, Long)) => ((Long, Long), Long)) with Serializable {
+    def apply(d: (Tup, Long)): ((Long, Long), Long) =
+      ((d._1(0).asInstanceOf[Long], d._1(1).asInstanceOf[Long]), d._2)
+  }
+  private object FromEdge
+      extends ((((Long, Long), Long)) => (Tup, Long)) with Serializable {
+    def apply(d: ((Long, Long), Long)): (Tup, Long) = (Seq(d._1._1, d._1._2), d._2)
+  }
+
+  /** A pull join diff `(child row, (e, v), w)` as the child row with the
+    * pulled value appended. */
+  private object WithPulled extends (((Tup, Tup, Long)) => (Tup, Long)) with Serializable {
+    def apply(d: (Tup, Tup, Long)): (Tup, Long) = (d._1 :+ d._2(1), d._3)
+  }
+
+  /** A path's tuple packed as one array<variant> cell (`Plan.Pull`). */
+  private final class PackPath(ks: Array[ValueKind])
+      extends (((Tup, Long)) => (Tup, Long)) with Serializable {
+    def apply(d: (Tup, Long)): (Tup, Long) =
+      (Seq(d._1.indices.map(i => LinearRows.encode(d._1(i), ks(i)))), d._2)
   }
 
   /** Partitioned static-arrangement index of the linear-recursion
@@ -2832,8 +2859,6 @@ object IncrementalQuery {
 
   private[streaming] type WMap = scala.collection.immutable.HashMap[Seq[Any], Long]
   private[streaming] type GMap = scala.collection.immutable.HashMap[Seq[Any], WMap]
-  private val emptyW: WMap = scala.collection.immutable.HashMap.empty
-  private val emptyG: GMap = scala.collection.immutable.HashMap.empty
 
   /** Indexed threshold: state = row → net weight (zeros dropped); emits
     * ±1 exactly at support zero-crossings (`Compiler.distinctify`'s

@@ -3,8 +3,10 @@ package graft.streaming
 import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericRowWithSchema}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{Fn, Predicate, Value, ValueKind, Variant}
 import graft.streaming.IncrementalQuery.Tup
@@ -14,10 +16,13 @@ import graft.streaming.IncrementalQuery.Tup
   * once into [[LinearRows.Step]]s that a partition applies to each
   * signed tuple. Each step reproduces the batch compiler's operator on
   * one row under Catalyst's semantics (three-valued comparisons, SQL
-  * double ordering, binary string order, null-propagating arithmetic),
-  * so a zone's delta is the compiled plan's delta without a query plan.
+  * double ordering, binary string order, the non-ANSI implicit casts,
+  * null-propagating arithmetic), so a zone's delta is the compiled
+  * plan's delta without a query plan. The pull layouts and the
+  * transform arithmetic are defined here once; the batch compiler
+  * builds its columns from them.
   */
-private[streaming] object LinearRows {
+private[graft] object LinearRows {
 
   /** One per-row step: the row after it, or null when it drops the row. */
   sealed trait Step extends Serializable {
@@ -28,29 +33,43 @@ private[streaming] object LinearRows {
   sealed trait Cell extends Serializable
   final case class Col(i: Int) extends Cell
   final case class Lit(v: Any) extends Cell
-  /** Column `i` as a variant struct of kind `k`. */
-  final case class Enc(i: Int, k: ValueKind) extends Cell
+  /** Cell `c` as a variant struct of kind `k`. */
+  final case class Enc(c: Cell, k: ValueKind) extends Cell
 
   /** Re-lays the row: projection, scan shapes and pull decorations. */
   final case class Layout(cells: Array[Cell]) extends Step {
     def apply(r: Array[Any]): Array[Any] = {
       val out = new Array[Any](cells.length)
       var i = 0
-      while (i < cells.length) {
-        out(i) = cells(i) match {
-          case Col(j)    => r(j)
-          case Lit(v)    => v
-          case Enc(j, k) => encode(r(j), k)
-        }
-        i += 1
-      }
+      while (i < cells.length) { out(i) = cell(cells(i), r); i += 1 }
       out
+    }
+    private def cell(c: Cell, r: Array[Any]): Any = c match {
+      case Col(j)    => r(j)
+      case Lit(v)    => v
+      case Enc(e, k) => encode(cell(e, r), k)
     }
   }
 
-  /** A comparison operand: a column, or a constant. */
-  final case class Opnd(col: Int, const: Any) {
-    def of(r: Array[Any]): Any = if (col >= 0) r(col) else const
+  /** Catalyst's implicit, non-ANSI cast of a value from `from` to `to`
+    * (a string that does not parse becomes null), evaluated by
+    * Catalyst's own interpreted `Cast`. */
+  final class Coerce(from: DataType, to: DataType) extends Serializable {
+    private val cast = Cast(BoundReference(0, from, nullable = true), to, None, EvalMode.LEGACY)
+    def apply(v: Any): Any =
+      if (v == null) null
+      else cast.eval(InternalRow(v match {
+        case s: String => UTF8String.fromString(s)
+        case other     => other
+      }))
+  }
+
+  /** A comparison operand: a column (cast when `cast` is set), or a
+    * constant. */
+  final case class Opnd(col: Int, const: Any, cast: Coerce = null) {
+    def of(r: Array[Any]): Any =
+      if (col < 0) const else if (cast == null) r(col) else cast(r(col))
+    def castTo(c: Coerce): Opnd = if (col < 0) Opnd(-1, c(const)) else copy(cast = c)
   }
 
   /** Keeps rows whose comparison holds; a null operand drops the row. */
@@ -74,40 +93,97 @@ private[streaming] object LinearRows {
     }
   }
 
-  /** Appends `Σplus − Σminus + const` over long columns (null if any
-    * operand is null): ADD and SUBTRACT. */
-  final case class LongSum(plus: Array[Int], minus: Array[Int], const: Long)
-      extends Step {
-    def apply(r: Array[Any]): Array[Any] = {
-      var acc = const
-      var nul = false
-      var i = 0
-      while (i < plus.length) {
-        val v = r(plus(i)); if (v == null) nul = true else acc += v.asInstanceOf[Long]; i += 1
-      }
-      i = 0
-      while (i < minus.length) {
-        val v = r(minus(i)); if (v == null) nul = true else acc -= v.asInstanceOf[Long]; i += 1
-      }
-      appended(r, if (nul) null else acc)
+  /** `l pred r` over operands of types `lt` and `rt` after Catalyst's
+    * implicit casts: a string meeting another atomic type is cast to
+    * that type, and a boolean meeting a number under `=` or `!=` is
+    * cast to the number. Other mixed types do not analyse. */
+  def comparison(pred: Predicate, l: Opnd, lt: DataType, r: Opnd, rt: DataType): Test = {
+    def atomic(t: DataType) = numeric(t) || t == StringType || t == BooleanType
+    val eq = pred == Predicate.EQ || pred == Predicate.NEQ
+    if (lt == rt || numeric(lt) && numeric(rt)) Test(pred, l, r)
+    else if (lt == StringType && atomic(rt) || eq && lt == BooleanType && numeric(rt))
+      Test(pred, l.castTo(new Coerce(lt, rt)), r)
+    else if (rt == StringType && atomic(lt) || eq && rt == BooleanType && numeric(lt))
+      Test(pred, l, r.castTo(new Coerce(rt, lt)))
+    else UnmaintainablePlan.reject(s"comparison of $lt with $rt does not analyse")
+  }
+
+  /** A TRANSFORM's arithmetic (`src/plan/transform.rs:86-192`) over its
+    * operands: `t − t % mod` of the first operand when `mod > 0`
+    * (TRUNCATE), else a left fold of signed terms, each an operand index
+    * (`Left`) or a long constant (`Right`). ADD adds every operand and
+    * constant; SUBTRACT adds the minuend (constants(0) if present, else
+    * the first operand) twice, then subtracts every operand and every
+    * constant, the minuend's own occurrence included. */
+  final case class Arith(mod: Long, terms: Seq[(Boolean, Either[Int, Long])], kind: ValueKind)
+
+  def arith(fn: Fn, consts: Seq[Option[Value]], operands: Int): Arith = {
+    val nums = consts.flatten.collect { case Value.VNumber(n) => n }
+    val ops = (0 until operands).map(Left(_))
+    fn match {
+      case Fn.TRUNCATE =>
+        val mod = consts.lift(1).flatten match {
+          case Some(Value.VString(":minute")) => 60000L
+          case Some(Value.VString(":hour")) | None => 3600000L
+          case Some(Value.VString(":day"))    => 86400000L
+          case Some(Value.VString(":week"))   => 604800000L
+          case Some(Value.VString(other))     => sys.error(s"unknown TRUNCATE interval $other")
+          case other => sys.error(s"TRUNCATE interval must be a string, got $other")
+        }
+        Arith(mod, Seq.empty, ValueKind.KInstant)
+      case Fn.ADD =>
+        require(operands + nums.size > 0, "ADD needs an operand")
+        Arith(0L, (ops ++ nums.map(Right(_))).map(x => (true, x)), ValueKind.KNumber)
+      case Fn.SUBTRACT =>
+        val minuend: Either[Int, Long] = consts.lift(0).flatten match {
+          case Some(Value.VNumber(m)) => Right(m)
+          case Some(other) => sys.error(s"SUBTRACT minuend must be a number, got $other")
+          case None        => Left(0)
+        }
+        Arith(0L, Seq((true, minuend), (true, minuend)) ++
+          (ops ++ nums.map(Right(_))).map(x => (false, x)), ValueKind.KNumber)
     }
   }
 
-  /** Appends `t − t % mod` of long column `i`: TRUNCATE. */
-  final case class Truncate(i: Int, mod: Long) extends Step {
-    def apply(r: Array[Any]): Array[Any] = {
-      val v = r(i)
-      appended(r, if (v == null) null else {
-        val t = v.asInstanceOf[Long]; t - t % mod
-      })
+  /** Appends an [[Arith]] over columns `ops` under Catalyst's arithmetic:
+    * long unless a side is double, a string operand cast to double, null
+    * if any operand is null. */
+  final case class Transform(a: Arith, ops: Array[Int], casts: Array[Coerce]) extends Step {
+    private def opnd(i: Int, r: Array[Any]): Any =
+      if (casts(i) == null) r(ops(i)) else casts(i)(r(ops(i)))
+    private def term(x: Either[Int, Long], r: Array[Any]): Any = x match {
+      case Left(i)  => opnd(i, r)
+      case Right(c) => c
     }
-  }
-
-  private def appended(r: Array[Any], v: Any): Array[Any] = {
-    val out = java.util.Arrays.copyOf(r.asInstanceOf[Array[AnyRef]], r.length + 1)
-      .asInstanceOf[Array[Any]]
-    out(r.length) = v
-    out
+    def apply(r: Array[Any]): Array[Any] = {
+      val v =
+        if (a.mod > 0L) {
+          val t = opnd(0, r)
+          val m = a.mod
+          t match {
+            case null      => null
+            case x: Long   => x - x % m
+            case x: Double => x - x % m
+          }
+        } else {
+          var acc = term(a.terms.head._2, r)
+          val it = a.terms.iterator.drop(1)
+          while (acc != null && it.hasNext) {
+            val (plus, x) = it.next()
+            acc = (acc, term(x, r)) match {
+              case (_, null)          => null
+              case (p: Long, q: Long) => if (plus) p + q else p - q
+              case (p: Number, q: Number) =>
+                if (plus) p.doubleValue + q.doubleValue else p.doubleValue - q.doubleValue
+            }
+          }
+          acc
+        }
+      val out = java.util.Arrays.copyOf(r.asInstanceOf[Array[AnyRef]], r.length + 1)
+        .asInstanceOf[Array[Any]]
+      out(r.length) = v
+      out
+    }
   }
 
   /** A zone branch's rows: its steps in order, then its sign. */
@@ -168,19 +244,7 @@ private[streaming] object LinearRows {
     java.lang.Boolean.compare(i < x.length, j < y.length)
   }
 
-  /** Whether Catalyst compares values of these kinds without a cast
-    * the row form does not reproduce: equal types, or long and double. */
-  def comparable(a: ValueKind, b: ValueKind): Boolean =
-    a.dataType == b.dataType || (numeric(a) && numeric(b))
-
-  private def numeric(k: ValueKind): Boolean =
-    k.dataType == LongType || k.dataType == DoubleType
-
-  /** A plan constant as the row form holds it. */
-  def native(v: Value): Any = v match {
-    case Value.VRational(n, d) => Row(n, d)
-    case other                 => other.native
-  }
+  private def numeric(t: DataType): Boolean = t == LongType || t == DoubleType
 
   /** [[Variant.encode]] of one value. */
   def encode(v: Any, k: ValueKind): Any = {
@@ -224,8 +288,24 @@ private[streaming] object LinearRows {
     def rows: Rows = new Rows(steps.toArray, sign)
   }
 
+  /** The TRANSFORM step over `kinds`-typed operand columns `ops`, with
+    * its result kind: long and double operands as they are, a string
+    * operand cast to double, as Catalyst's arithmetic does. */
+  def transform(ops: Seq[Int], kinds: Seq[ValueKind], fn: Fn,
+      consts: Seq[Option[Value]]): (Step, ValueKind) = {
+    val a = arith(fn, consts, ops.size)
+    val casts = ops.map { i =>
+      kinds(i).dataType match {
+        case t if numeric(t) => null
+        case StringType      => new Coerce(StringType, DoubleType)
+        case t => UnmaintainablePlan.reject(s"transform $fn over a $t operand does not analyse")
+      }
+    }
+    (Transform(a, ops.toArray, casts.toArray), a.kind)
+  }
+
   /** The pull path layout `interleave(columns, constants)` over a row of
-    * `kinds` (`Compiler.pullInterleave`): a column, a constant, and so on. */
+    * `kinds` (`src/plan/pull.rs:53-79`): a column, a constant, and so on. */
   def interleave(kinds: Seq[ValueKind], consts: Seq[String]): Seq[(Cell, ValueKind)] = {
     val cols = kinds.indices.map(i => (Col(i): Cell, kinds(i)))
     if (cols.isEmpty || consts.isEmpty) cols
@@ -235,61 +315,20 @@ private[streaming] object LinearRows {
   }
 
   /** One pull-level branch over a child row of `kinds`
-    * (`Compiler.pullBranchCols`): an attribute branch, whose pulled value
-    * sits at column `kinds.length` with kind `attr._2`, or the db__id
-    * branch (`attr = None`). */
+    * (`src/plan/pull.rs:94-237`): an attribute branch, whose pulled
+    * value sits at column `kinds.length` with kind `attr._2`, or the
+    * synthetic db__id branch retaining the child eid (`attr = None`,
+    * `src/plan/pull.rs:211-230`). */
   def pullBranch(kinds: Seq[ValueKind], pathAttrs: Seq[String], cardMany: Boolean,
       attr: Option[(String, ValueKind)]): Seq[(Cell, ValueKind)] = {
     val path = interleave(kinds, pathAttrs)
-    def enc(c: Cell, k: ValueKind): (Cell, ValueKind) = (c match {
-      case Col(i) => Enc(i, k)
-      case Lit(v) => Lit(encode(v, k))
-      case e      => e
-    }, ValueKind.KVariant)
     attr match {
       case Some((a, k)) =>
         val base = if (pathAttrs.isEmpty || cardMany) path else path.dropRight(1)
-        base ++ Seq((Lit(a), ValueKind.KAid), enc(Col(kinds.length), k))
+        base ++ Seq((Lit(a), ValueKind.KAid), (Enc(Col(kinds.length), k), ValueKind.KVariant))
       case None =>
         path.dropRight(1) ++ Seq((Lit("db__id"), ValueKind.KAid),
-          enc(path.last._1, path.last._2))
-    }
-  }
-
-  /** The TRANSFORM step over `kinds`-typed operand columns `ops`
-    * (`Compiler.transform`), with its result kind. */
-  def transform(ops: Seq[Int], kinds: Seq[ValueKind], fn: Fn,
-      consts: Seq[Option[Value]]): (Step, ValueKind) = {
-    UnmaintainablePlan.require(ops.forall(i => kinds(i).dataType == LongType),
-      s"transform $fn over non-long operands ${ops.map(kinds)}")
-    val nums = consts.flatten.collect { case Value.VNumber(n) => n }
-    fn match {
-      case Fn.TRUNCATE =>
-        val interval = consts.lift(1).flatten match {
-          case Some(Value.VString(s)) => s
-          case None                   => ":hour"
-          case other => sys.error(s"TRUNCATE interval must be a string, got $other")
-        }
-        val mod = interval match {
-          case ":minute" => 60000L
-          case ":hour"   => 3600000L
-          case ":day"    => 86400000L
-          case ":week"   => 604800000L
-          case other     => sys.error(s"unknown TRUNCATE interval $other")
-        }
-        (Truncate(ops.head, mod), ValueKind.KInstant)
-      case Fn.ADD =>
-        require(ops.nonEmpty || nums.nonEmpty, "ADD needs an operand")
-        (LongSum(ops.toArray, Array.empty, nums.sum), ValueKind.KNumber)
-      case Fn.SUBTRACT =>
-        // minuend + minuend − every operand and every constant
-        // (`src/plan/transform.rs:146-192`).
-        val step = consts.lift(0).flatten match {
-          case Some(Value.VNumber(m)) => LongSum(Array.empty, ops.toArray, 2 * m - nums.sum)
-          case Some(other) => sys.error(s"SUBTRACT minuend must be a number, got $other")
-          case None => LongSum(Array(ops.head, ops.head), ops.toArray, -nums.sum)
-        }
-        (step, ValueKind.KNumber)
+          (Enc(path.last._1, path.last._2), ValueKind.KVariant))
     }
   }
 }

@@ -706,6 +706,27 @@ class BiMaintainedSpec extends AnyFunSuite {
       s"R kept ${bm.controlPlaneStats("resultRows")} rows after every fact was retracted")
   }
 
+  test("numeric plans over an attribute whose first datom comes after the first advance") {
+    // Until its first datom reveals an attribute's kind, a standing builds
+    // over a placeholder string kind, and rebuilds when the kind arrives.
+    // The placeholder build must compile numeric comparisons and
+    // arithmetic as Catalyst does (implicit casts), not reject them.
+    val history = Seq(BD(1, ":bm/x", 0, 0, 0, 1),
+      BD(1, ":bm/y", 2, 1, 1, 1), BD(2, ":bm/y", 3, 1, 0, 1),
+      BD(1, ":bm/y", 2, 2, 2, -1), BD(3, ":bm/y", 5, 2, 1, 1))
+    val y = Plan.MatchA(0, ":bm/y", 1)
+    val plans = Seq(
+      "filter" -> Plan.Filter(Seq(1), Predicate.GT, y, Seq(None, Some(Value.num(2)))),
+      "match" -> Plan.MatchAV(0, ":bm/y", Value.num(2)),
+      "transform" -> Plan.Transform(Seq(1), 2, y, Fn.ADD, Seq(Some(Value.num(10)))),
+      "truncate" -> Plan.Transform(Seq(1), 2, y, Fn.TRUNCATE, Seq.empty))
+    for ((label, plan) <- plans) {
+      val (ref, got) = drive(history, InputSemantics.Raw, plan)
+      assert(got.nonEmpty, label)
+      assert(got == ref, s"$label: maintained $got vs reference $ref")
+    }
+  }
+
   test("a NaN fact retracts under Raw and Distinct on both stores (one dictionary code per NaN)") {
     // The store interns values under grouping equality: with boxed `==`
     // every NaN took a fresh code, so a retraction never met its
